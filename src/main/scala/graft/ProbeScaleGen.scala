@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derives a 10× fixture ("sf1") from sf0.1 for the uniform scale sweep
-  * (docs/PERF.md): the per-gate probes (ProbeLsh/ProbeAnn/ProbeCC/…)
-  * validate chosen shapes in isolation, but compounding effects — block
-  * store pressure across many staged frames, caps crossing over to their
-  * distributed fallbacks, join outputs growing with density² — only show
-  * up when the ACTUAL gates run on uniformly bigger data. Replication is
+  * (docs/PERF.md): per-gate probes validate chosen shapes in isolation,
+  * but compounding effects — block store pressure across many staged
+  * frames, caps crossing over to their distributed fallbacks, join
+  * outputs growing with density² — only show up when the ACTUAL gates
+  * run on uniformly bigger data. Replication is
   * NOT naive: 10 exact copies of every doc/vector would turn the
   * near-dup and ANN gates into degenerate clusters-of-ten, measuring a
   * workload no real 10× corpus has. Instead each replica r (1..9):
@@ -32,14 +32,7 @@ object ProbeScaleGen {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/sf1"
     val reps = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs under
+  * [[Harness]]'s session, so it checks the plans Bench times. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -11,16 +11,7 @@ object Verify {
     // local iteration (the driver always runs the full set).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // free checkpoint blocks from completed queries (see Bench.scala)
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     graft.core.FixtureGuard.report(spark, sfDir, "verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

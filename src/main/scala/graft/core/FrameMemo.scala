@@ -35,7 +35,7 @@ object FrameMemo {
     new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
 
   // persistent-RDD ids created by memoized builds, per session: the bench's
-  // between-gate block-store sweep (Bench.scala) unpersists every OTHER
+  // between-gate block-store sweep (Harness.sweep) unpersists every OTHER
   // persistent RDD — per-gate localCheckpoints are garbage once the gate's
   // runs finish, but memo blocks are shared across gates and unpersisting a
   // localCheckpoint'd RDD makes its data unrecoverable (lineage truncated)
@@ -70,7 +70,9 @@ object FrameMemo {
       val df = build.localCheckpoint(true)
       val secs = (System.nanoTime() - t0) / 1e9
       val newIds = s.sparkContext.getPersistentRDDs.keySet.diff(before)
-      owned.put(s, ownedRddIds(s) ++ newIds)
+      // atomic merge: a concurrent build's ids must not be lost from the
+      // keep set, or the sweep would unpersist a live memo checkpoint
+      owned.updateWith(s)(prev => Some(prev.getOrElse(Set.empty[Int]) ++ newIds))
       System.err.println(f"[memo] $key built in $secs%.2f s")
       df
     })

@@ -103,15 +103,6 @@ object Dedup {
     // session for the whole family
     graft.core.FrameMemo.cached(s, s"c2bands:$d")(bandsOfSig(mhSig(s, d)))
 
-  /** The band path over any (doc_id, text) frame — shared by the gate
-    * and [[graft.ProbeLsh]] so the probe measures the production kernel.
-    */
-  private[graft] def bandsOf(docFrame: DataFrame): DataFrame =
-    bandsOfSig(docFrame
-      .where(expr(s"size($wordsSpark) >= 3"))
-      .select(col("doc_id"),
-        graft.functions.MinHashSig(col("text"), nLanes).as("mh")))
-
   /** Band keys over a prebuilt (doc_id, mh) signature frame. */
   private def bandsOfSig(sig: DataFrame): DataFrame = {
     val bandKeys = (0 until nBands).map { b =>
@@ -489,9 +480,9 @@ object Dedup {
     * at real near-dup thresholds (≥0.8) fewer tables give full recall at
     * a fraction of the candidates. At 100 TB the (table, bucket) key is
     * the shuffle key and candidate count is O(Σ bucket²), never O(n²).
-    * Regime note (ProbeEmbLsh, docs/PERF.md): the b-table OR-construction
-    * ships each vector b times — the right trade for the NEAR-EXACT
-    * regime (designCos ≥ 0.95, b ≈ 20); as the design threshold drops, b
+    * Regime note (docs/PERF.md): the b-table OR-construction ships
+    * each vector b times — the right trade for the NEAR-EXACT regime
+    * (designCos ≥ 0.95, b ≈ 20); as the design threshold drops, b
     * explodes (0.8 → b≈80 at policy plane counts) and the sub-0.8
     * semantic regime belongs to C38's IVF-bucketed dedup, where the
     * bucket set is trained centroids and each vector ships once.)
@@ -554,10 +545,10 @@ object Dedup {
       nTables, nPlanes, cosMin)
 
   /** The occupied LSH buckets of a normalized (vec_id, nv) frame — the
-    * kernel's only shuffle, shared by the gate and [[graft.ProbeEmbLsh]].
+    * kernel's only shuffle.
     */
-  private[graft] def c20Buckets(e: DataFrame,
-                                nTables: Int, nPlanes: Int): DataFrame = {
+  private def c20Buckets(e: DataFrame,
+                         nTables: Int, nPlanes: Int): DataFrame = {
     // all table keys from ONE codegen'd expression over the flattened
     // plane matrix — the inline per-table expression form broke janino's
     // method-size limits once the scale policy picked dozens of tables

@@ -1853,9 +1853,6 @@ object TextAnalysis {
   /** Labeled corpus with the word array still attached (c43Scored drops
     * it; training needs both the verdict and the features in one pass).
     */
-  /** Probe-visible alias of [[c103Labeled]] (ProbeC103 stage timing). */
-  def c103LabeledProbe(s: SparkSession, d: String): DataFrame = c103Labeled(s, d)
-
   private def c103Labeled(s: SparkSession, d: String): DataFrame = {
     val stopList = c43Stop.map(t => s"'$t'").mkString("(", ", ", ")")
     // The corpus parquet is bytes-tiny relative to the tokenize + battery
