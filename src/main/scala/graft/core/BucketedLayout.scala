@@ -32,38 +32,22 @@ object BucketedLayout {
   /** Bucket count at test scale; production = table-bytes / ~256 MB. */
   val buckets = 8
 
-  private def tableName(which: String, dir: String): String =
-    s"graft_bucketed_${which}_" +
-      FixtureGuard.stateKey(dir, "orders", "lineitem")
-
-  /** Materialize orders + lineitem bucketed and sorted by the order key.
-    * Idempotent per (session, dir): the catalog entry is the marker.
+  /** One side of the orders/lineitem pair, bucketed and sorted by `key`,
+    * staged once per fixture snapshot ([[Staged.table]]).
     */
-  def materialize(spark: SparkSession, dir: String): (String, String) = {
-    val ot = tableName("orders", dir)
-    val lt = tableName("lineitem", dir)
-    val base = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_bucketed").getAbsolutePath
-    if (!spark.catalog.tableExists(ot)) {
-      Tables.orders(spark, dir)
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-        .repartition(buckets, col("o_orderkey"))
-        .write.mode("overwrite")
-        .option("path", s"$base/$ot")
-        .bucketBy(buckets, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(ot)
-    }
-    if (!spark.catalog.tableExists(lt)) {
-      Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_quantity"))
-        .repartition(buckets, col("l_orderkey"))
-        .write.mode("overwrite")
-        .option("path", s"$base/$lt")
-        .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(lt)
-    }
-    (ot, lt)
-  }
+  private def bucketed(spark: SparkSession, which: String, dir: String,
+                       rows: => DataFrame, key: String): String =
+    Staged.table(spark, s"bucketed_$which", 1, dir, "orders", "lineitem")(
+      Staged.Bucketed(buckets, key, key), rows.repartition(buckets, col(key)))
+
+  /** Materialize orders + lineitem bucketed and sorted by the order key. */
+  def materialize(spark: SparkSession, dir: String): (String, String) = (
+    bucketed(spark, "orders", dir, Tables.orders(spark, dir)
+      .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice")),
+      "o_orderkey"),
+    bucketed(spark, "lineitem", dir, Tables.lineitem(spark, dir)
+      .select(col("l_orderkey"), col("l_extendedprice"), col("l_quantity")),
+      "l_orderkey"))
 
   /** The audited join: orders⋈lineitem on the bucket key, then a
     * per-order aggregate on the SAME key — both reuse the bucketing, so
@@ -101,28 +85,22 @@ object BucketedLayout {
     * match inclusive (ts >= order time) — exactly ASOF `>=`; the right
     * side is pre-deduped to one row per (k, t), as B18.
     */
-  def materializeAsof(spark: SparkSession, dir: String): String = {
-    val mt = tableName("asof", dir)
-    if (!spark.catalog.tableExists(mt)) {
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_bucketed").getAbsolutePath
-      val e = Tables.events(spark, dir)
-        .select(col("user_id").cast("bigint").as("k"), col("ts").as("t"),
-          lit(1).as("tag"), col("event_id"), lit(null).cast("bigint").as("ok"))
-      val o = Tables.orders(spark, dir)
-        .select(col("o_custkey").cast("bigint").as("k"),
-          col("o_orderdate").cast("timestamp").as("t"), col("o_orderkey"))
-        .groupBy(col("k"), col("t")).agg(max(col("o_orderkey")).as("ok"))
-        .select(col("k"), col("t"), lit(0).as("tag"),
-          lit(null).cast("bigint").as("event_id"), col("ok"))
-      e.unionAll(o)
-        .repartition(buckets, col("k"))
-        .write.mode("overwrite")
-        .option("path", s"$base/$mt")
-        .bucketBy(buckets, "k").sortBy("k", "t", "tag")
-        .saveAsTable(mt)
-    }
-    mt
+  def materializeAsof(spark: SparkSession, dir: String): String =
+    Staged.table(spark, "bucketed_asof", 1, dir, "events", "orders")(
+      Staged.Bucketed(buckets, "k", "k", "t", "tag"),
+      asofRows(spark, dir).repartition(buckets, col("k")))
+
+  private def asofRows(spark: SparkSession, dir: String): DataFrame = {
+    val e = Tables.events(spark, dir)
+      .select(col("user_id").cast("bigint").as("k"), col("ts").as("t"),
+        lit(1).as("tag"), col("event_id"), lit(null).cast("bigint").as("ok"))
+    val o = Tables.orders(spark, dir)
+      .select(col("o_custkey").cast("bigint").as("k"),
+        col("o_orderdate").cast("timestamp").as("t"), col("o_orderkey"))
+      .groupBy(col("k"), col("t")).agg(max(col("o_orderkey")).as("ok"))
+      .select(col("k"), col("t"), lit(0).as("tag"),
+        lit(null).cast("bigint").as("event_id"), col("ok"))
+    e.unionAll(o)
   }
 
   /** The audited as-of: window over the sorted bucketed scan. The final

@@ -42,9 +42,9 @@ object FixtureGuard {
     md.digest().map("%02x".format(_)).mkString.take(16)
   }
 
-  /** Key for a PERSISTED cross-run state artifact (the C47/C67
-    * state-table convention): dir + the [[fingerprint]] of every source
-    * table the artifact derives from. A key on the dir STRING alone
+  /** Key for a PERSISTED cross-run state artifact — the `<key>` of every
+    * [[Staged]] path: dir + the [[fingerprint]] of every source table the
+    * artifact derives from. A key on the dir STRING alone
     * serves stale state after an in-place regeneration — and unlike the
     * session-local memos, disk artifacts outlive the JVM, so no cache
     * sweep can save you (observed: a band index built from a discarded

@@ -7,9 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * capped trigram postings (C4/C56), the positional 8-gram shingle stream
   * (C24/C40/C70), the MinHash band index (C2/C18/C47/C67/C98) — and each
   * independently re-derived it from the corpus. In a deployment these ARE
-  * persisted tables built once per corpus snapshot; locally we memoize
-  * the `localCheckpoint`ed frame per (session, key) so one session builds
-  * each of them once.
+  * persisted tables built once per corpus snapshot (what [[Staged]] does
+  * for the on-disk state); locally we memoize the `localCheckpoint`ed
+  * frame per (session, key) so one session builds each of them once.
   *
   * Keys include the session identity: checkpoint blocks die with their
   * session, so a frame cached under a stopped session is never returned
@@ -23,8 +23,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * allocation. It is the right LOCAL-bench staging primitive (no
   * filesystem round-trip); on a real cluster each of these sites is the
   * same pattern with a different materialization: a persisted staged
-  * table (write + read back, exactly what [[cached]] models) or
-  * `checkpoint()` to reliable storage.
+  * table (write + read back through [[Staged]], exactly what [[cached]]
+  * models) or `checkpoint()` to reliable storage.
   */
 object FrameMemo {
   // keyed on the SESSION OBJECT (reference equality — SparkSession doesn't

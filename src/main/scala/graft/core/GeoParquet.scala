@@ -93,12 +93,6 @@ object GeoParquet {
   private def micros(t: java.sql.Timestamp): java.lang.Long =
     if (t == null) null else t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
 
-  /** Staged file path for a fixture dir — content-fingerprinted so an
-    * in-place regeneration can never serve a stale file.
-    */
-  def stagedPath(dir: String): String =
-    s"/tmp/graft_geoparquet_${FixtureGuard.fingerprint(dir, "events")}/items.parquet"
-
   private val mapper = new ObjectMapper()
 
   /** The `geo` footer JSON (GeoParquet 1.1): primary geometry column in
@@ -157,48 +151,56 @@ object GeoParquet {
       .named("geoparquet_items")
   }
 
-  /** Write the GeoParquet file for a fixture dir if not already staged.
+  /** Stage the GeoParquet file for a fixture dir.
     * Geometry: even id_num → WKB Point(lon, lat); odd → WKB Polygon of
     * the deterministic footprint box (exercising both decode branches).
     * Returns the file path.
     */
   def stage(spark: SparkSession, dir: String): String = synchronized {
-    val file = stagedPath(dir)
-    val f = new java.io.File(file)
-    if (f.exists()) return file
-    f.getParentFile.mkdirs()
-
-    val rows = Tables.items(spark, dir)
-      .select(col("id"), col("id_num"), col("collection"), col("datetime"),
-        col("start_datetime"), col("end_datetime"), col("value"),
-        col("user_id"), col("lon"), col("lat"))
-      .orderBy(col("id_num"))
-      .collect()
-
-    // file-level bbox over every geometry's envelope (first pass — the
-    // footer metadata must be final at writer close; the DISTRIBUTED
-    // writer in [[export]] folds it single-pass via finalizeWrite instead)
-    var (w, s, e, n) = (Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
-    val tmp = new java.io.File(file + ".tmp")
-    if (tmp.exists()) tmp.delete()
-    rows.foreach { r =>
-      val (_, (x0, y0, x1, y1)) =
+    stageFile(spark, dir, "geoparquet", "items.parquet", lit(true), { r =>
+      val (shape, (x0, y0, x1, y1)) =
         rowGeom(r.getLong(1), r.getLong(7), r.getDouble(8), r.getDouble(9))
-      w = math.min(w, x0); s = math.min(s, y0); e = math.max(e, x1); n = math.max(n, y1)
-    }
-
-    val real = ExampleParquetWriter.builder(new Path(tmp.getAbsolutePath))
-      .withType(schema)
-      .withExtraMetaData(java.util.Collections.singletonMap("geo", geoJson((w, s, e, n))))
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    val factory = new SimpleGroupFactory(schema)
-    try rows.foreach(r => real.write(rowGroup(factory, r)))
-    finally real.close()
-    if (!tmp.renameTo(f))
-      throw new java.io.IOException(s"could not move $tmp to $f")
-    file
+      (Wkb.encode(shape), Array(x0, y0, x1, y1))
+    }, geoJson)
   }
+
+  /** Stage a single-file GeoParquet fixture `file` under the [[Staged]]
+    * dir `name`: the items matching `keep` in id_num order, each row's
+    * WKB geometry and envelope rendered by `geom`, the `geo` footer by
+    * `geo` from the file bbox. Driver-side fixture tooling, so the
+    * footer bbox is folded over every envelope before the writer opens
+    * (the DISTRIBUTED writer in [[export]] folds it single-pass via
+    * finalizeWrite instead). Returns the file path.
+    */
+  private def stageFile(spark: SparkSession, dir: String, name: String, file: String,
+      keep: org.apache.spark.sql.Column,
+      geom: org.apache.spark.sql.Row => (Array[Byte], Array[Double]),
+      geo: ((Double, Double, Double, Double)) => String): String =
+    Staged(name, 1, dir, "events") { p =>
+      val rows = Tables.items(spark, dir)
+        .select(col("id"), col("id_num"), col("collection"), col("datetime"),
+          col("start_datetime"), col("end_datetime"), col("value"),
+          col("user_id"), col("lon"), col("lat"))
+        .where(keep)
+        .orderBy(col("id_num"))
+        .collect()
+      require(rows.nonEmpty, s"no fixture items for $file")
+      val shapes = rows.map(geom)
+      var (w, s, e, n) = (Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
+      shapes.foreach { case (_, env) =>
+        w = math.min(w, env(0)); s = math.min(s, env(1))
+        e = math.max(e, env(2)); n = math.max(n, env(3))
+      }
+      val real = ExampleParquetWriter.builder(new Path(s"$p/$file"))
+        .withType(schema)
+        .withExtraMetaData(java.util.Collections.singletonMap("geo", geo((w, s, e, n))))
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .build()
+      val factory = new SimpleGroupFactory(schema)
+      try rows.zip(shapes).foreach { case (r, (wkb, env)) =>
+        real.write(itemGroup(factory, r, wkb, env))
+      } finally real.close()
+    } + s"/$file"
 
   // ------------------------------------------------------------- export
   // The WRITE side of the reference's data plane: its corpus IS one
@@ -295,17 +297,6 @@ object GeoParquet {
       new GeoWriteSupport(schema)
   }
 
-  /** Exported directory for a fixture dir — content-fingerprinted like
-    * [[stagedPath]] so an in-place regeneration cannot serve stale files.
-    * `tag` distinguishes shard strategies ("s" = id-hash, "z" = spatial).
-    */
-  // layout v4: footers carry the `graft` sidecar (collection + datetime
-  // extremes + detected id_num sortedness) — versioned path so memoized
-  // older exports regenerate
-  // layout v5 (r12): the sidecar also carries per-file id_num extremes
-  def exportPath(dir: String, shards: Int = 1, tag: String = "s"): String =
-    s"/tmp/graft_geoparquet_export_${FixtureGuard.fingerprint(dir, "events")}_v5$tag$shards"
-
   /** Per-row geometry: even id_num → Point, odd → footprint Polygon (the
     * stage() convention, so export and fixture file agree) + its envelope.
     */
@@ -325,12 +316,20 @@ object GeoParquet {
     */
   private def rowGroup(factory: SimpleGroupFactory, r: org.apache.spark.sql.Row)
       : org.apache.parquet.example.data.Group = {
-    val idNum = r.getLong(1); val userId = r.getLong(7)
-    val lon = r.getDouble(8); val lat = r.getDouble(9)
-    val (shape, (x0, y0, x1, y1)) = rowGeom(idNum, userId, lon, lat)
+    val (shape, (x0, y0, x1, y1)) =
+      rowGeom(r.getLong(1), r.getLong(7), r.getDouble(8), r.getDouble(9))
+    itemGroup(factory, r, Wkb.encode(shape), Array(x0, y0, x1, y1))
+  }
+
+  /** The items-view columns of `r` (id … lat, in the writers' select
+    * order) plus a WKB geometry and its envelope → one Group of [[schema]].
+    */
+  private def itemGroup(factory: SimpleGroupFactory, r: org.apache.spark.sql.Row,
+                        wkb: Array[Byte], env: Array[Double])
+      : org.apache.parquet.example.data.Group = {
     val g = factory.newGroup()
     g.append("id", r.getString(0))
-    g.append("id_num", idNum)
+    g.append("id_num", r.getLong(1))
     g.append("collection", r.getString(2))
     val dt = micros(r.getAs[java.sql.Timestamp](3))
     if (dt != null) g.append("datetime", dt.longValue())
@@ -339,51 +338,45 @@ object GeoParquet {
     val ed = micros(r.getAs[java.sql.Timestamp](5))
     if (ed != null) g.append("end_datetime", ed.longValue())
     g.append("value", r.getDouble(6))
-    g.append("user_id", userId)
-    g.append("lon", lon)
-    g.append("lat", lat)
+    g.append("user_id", r.getLong(7))
+    g.append("lon", r.getDouble(8))
+    g.append("lat", r.getDouble(9))
     val bb = g.addGroup("bbox")
-    bb.append("xmin", x0); bb.append("ymin", y0)
-    bb.append("xmax", x1); bb.append("ymax", y1)
-    g.append("geometry", org.apache.parquet.io.api.Binary.fromConstantByteArray(
-      Wkb.encode(shape)))
+    bb.append("xmin", env(0)); bb.append("ymin", env(1))
+    bb.append("xmax", env(2)); bb.append("ymax", env(3))
+    g.append("geometry", org.apache.parquet.io.api.Binary.fromConstantByteArray(wkb))
     g
   }
 
   /** Write the per-collection GeoParquet catalog (the reference's layout)
     * for a fixture dir, distributed: shuffle on (collection, shard), one
     * file per (collection, shard) written by whichever task owns the run
-    * — single pass, footer bbox folded during the write. Idempotent per
-    * (fixture fingerprint, shards); `_SUCCESS` marks a completed export.
+    * — single pass, footer bbox folded during the write. Staged per
+    * (fixture, tag, shards); `tag` distinguishes shard strategies ("s" =
+    * id-hash, "z" = spatial).
     */
+  // layout v4: footers carry the `graft` sidecar (collection + datetime
+  // extremes + detected id_num sortedness); v5 (r12): the sidecar also
+  // carries per-file id_num extremes
   def export(spark: SparkSession, dir: String, shards: Int = 1,
              shardCol: Option[org.apache.spark.sql.Column] = None,
              tag: String = "s"): String = synchronized {
     require(shards >= 1, s"shards must be >= 1, got $shards")
-    val out = exportPath(dir, shards, tag)
-    val done = new java.io.File(out, "_SUCCESS")
-    if (done.exists()) return out
-    val root = new java.io.File(out)
-    if (root.exists()) {  // incomplete previous attempt — restart clean
-      root.listFiles().foreach(_.delete()); root.delete()
+    Staged(s"geoparquet_export_$tag$shards", 5, dir, "events") { out =>
+      new java.io.File(out).mkdirs()
+      // default shard = id-hash (uniform); a spatial caller passes a
+      // z-bucket column instead so each file's footprint (⇒ footer bbox)
+      // stays TIGHT and the catalog prunes (see searchBboxPruned)
+      val sc = shardCol.getOrElse(pmod(col("id_num"), lit(shards.toLong)))
+      Tables.items(spark, dir)
+        .select(col("id"), col("id_num"), col("collection"), col("datetime"),
+          col("start_datetime"), col("end_datetime"), col("value"),
+          col("user_id"), col("lon"), col("lat"),
+          sc.cast("long").as("shard"))
+        .repartition(col("collection"), col("shard"))
+        .sortWithinPartitions(col("collection"), col("shard"), col("id_num"))
+        .foreachPartition(writeShardRun(out, 10, rowGroup) _)
     }
-    root.mkdirs()
-    val nShards = shards
-    val outPath = out
-    // default shard = id-hash (uniform); a spatial caller passes a
-    // z-bucket column instead so each file's footprint (⇒ footer bbox)
-    // stays TIGHT and the catalog prunes (see searchBboxPruned)
-    val sc = shardCol.getOrElse(pmod(col("id_num"), lit(nShards.toLong)))
-    Tables.items(spark, dir)
-      .select(col("id"), col("id_num"), col("collection"), col("datetime"),
-        col("start_datetime"), col("end_datetime"), col("value"),
-        col("user_id"), col("lon"), col("lat"),
-        sc.cast("long").as("shard"))
-      .repartition(col("collection"), col("shard"))
-      .sortWithinPartitions(col("collection"), col("shard"), col("id_num"))
-      .foreachPartition(writeShardRun(outPath, 10, rowGroup) _)
-    done.createNewFile()
-    out
   }
 
   /** Task body shared by [[export]] and [[compact]]: stream a sorted run
@@ -598,27 +591,9 @@ object GeoParquet {
     */
   private def passGroup(factory: SimpleGroupFactory, r: org.apache.spark.sql.Row)
       : org.apache.parquet.example.data.Group = {
-    val g = factory.newGroup()
-    g.append("id", r.getString(0))
-    g.append("id_num", r.getLong(1))
-    g.append("collection", r.getString(2))
-    val dt = micros(r.getAs[java.sql.Timestamp](3))
-    if (dt != null) g.append("datetime", dt.longValue())
-    val sd = micros(r.getAs[java.sql.Timestamp](4))
-    if (sd != null) g.append("start_datetime", sd.longValue())
-    val ed = micros(r.getAs[java.sql.Timestamp](5))
-    if (ed != null) g.append("end_datetime", ed.longValue())
-    g.append("value", r.getDouble(6))
-    g.append("user_id", r.getLong(7))
-    g.append("lon", r.getDouble(8))
-    g.append("lat", r.getDouble(9))
     val b = r.getStruct(10)
-    val bb = g.addGroup("bbox")
-    bb.append("xmin", b.getDouble(0)); bb.append("ymin", b.getDouble(1))
-    bb.append("xmax", b.getDouble(2)); bb.append("ymax", b.getDouble(3))
-    g.append("geometry", org.apache.parquet.io.api.Binary.fromConstantByteArray(
-      r.getAs[Array[Byte]](11)))
-    g
+    itemGroup(factory, r, r.getAs[Array[Byte]](11),
+      Array(b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3)))
   }
 
   /** Catalog COMPACTION (the 100 TB maintenance op — many small shard
@@ -633,26 +608,20 @@ object GeoParquet {
   def compact(spark: SparkSession, inDir: String, dir: String, toShards: Int,
               shardCol: org.apache.spark.sql.Column,
               tag: String = "c"): String = synchronized {
-    val out = exportPath(dir, toShards, tag)
-    val done = new java.io.File(out, "_SUCCESS")
-    if (done.exists()) return out
-    val root = new java.io.File(out)
-    if (root.exists()) { root.listFiles().foreach(_.delete()); root.delete() }
-    root.mkdirs()
-    val outPath = out
-    spark.read.parquet(inDir)
-      .select(col("id"), col("id_num"), col("collection"),
-        col("datetime").cast("timestamp").as("datetime"),
-        col("start_datetime").cast("timestamp").as("start_datetime"),
-        col("end_datetime").cast("timestamp").as("end_datetime"),
-        col("value"), col("user_id"), col("lon"), col("lat"),
-        col("bbox"), col("geometry"),
-        shardCol.cast("long").as("shard"))
-      .repartition(col("collection"), col("shard"))
-      .sortWithinPartitions(col("collection"), col("shard"), col("id_num"))
-      .foreachPartition(writeShardRun(outPath, 12, passGroup) _)
-    done.createNewFile()
-    out
+    Staged(s"geoparquet_export_$tag$toShards", 5, dir, "events") { out =>
+      new java.io.File(out).mkdirs()
+      spark.read.parquet(inDir)
+        .select(col("id"), col("id_num"), col("collection"),
+          col("datetime").cast("timestamp").as("datetime"),
+          col("start_datetime").cast("timestamp").as("start_datetime"),
+          col("end_datetime").cast("timestamp").as("end_datetime"),
+          col("value"), col("user_id"), col("lon"), col("lat"),
+          col("bbox"), col("geometry"),
+          shardCol.cast("long").as("shard"))
+        .repartition(col("collection"), col("shard"))
+        .sortWithinPartitions(col("collection"), col("shard"), col("id_num"))
+        .foreachPartition(writeShardRun(out, 12, passGroup) _)
+    }
   }
 
   /** Footer `geo` bboxes of every file in an exported directory, keyed by
@@ -914,82 +883,34 @@ object GeoParquet {
     mapper.writeValueAsString(root)
   }
 
-  def stagedUtmPath(dir: String, zone: Int, south: Boolean = false): String = {
-    val hemi = if (south) "s" else ""
-    s"/tmp/graft_geoparquet_${FixtureGuard.fingerprint(dir, "events")}/items_utm$zone$hemi.parquet"
-  }
-
   /** Stage a PROJECTED GeoParquet file: the fixture items inside `zone`'s
     * 6° band, every geometry vertex FORWARD-projected to UTM metres
     * ([[graft.spatial.Utm.forward]]), covering bbox in metres, PROJJSON
     * EPSG:326zz — the file a real satellite archive hands the engine.
-    * Fixture-build time, content-fingerprinted like [[stage]].
+    * Fixture-build time, staged like [[stage]].
     */
   def stageUtm(spark: SparkSession, dir: String, zone: Int = 33,
                south: Boolean = false): String = synchronized {
-    val file = stagedUtmPath(dir, zone, south)
-    val f = new java.io.File(file)
-    if (f.exists()) return file
-    f.getParentFile.mkdirs()
     val cm = graft.spatial.Utm.centralMeridian(zone)
+    val hemi = if (south) "s" else ""
     // a SOUTH (327zz) file additionally windows to southern latitudes —
     // the false-northing branch a real S-hemisphere archive exercises
-    val rows = Tables.items(spark, dir)
-      .select(col("id"), col("id_num"), col("collection"), col("datetime"),
-        col("start_datetime"), col("end_datetime"), col("value"),
-        col("user_id"), col("lon"), col("lat"))
-      .where(col("lon") >= cm - 3.0 && col("lon") < cm + 3.0 &&
-        (if (south) col("lat") < -1.5 else lit(true)))
-      .orderBy(col("id_num"))
-      .collect()
-    require(rows.nonEmpty, s"no fixture items inside UTM zone $zone")
-    var (w, s, e, n) = (Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
-    val utmShapes = rows.map { r =>
-      val (shape, _) = rowGeom(r.getLong(1), r.getLong(7), r.getDouble(8), r.getDouble(9))
-      val wkb = graft.spatial.Utm.wkbFromCrs84(
-        graft.spatial.Wkb.encode(shape), zone, south)
-      val env = graft.spatial.Wkb.envelope(wkb)
-      w = math.min(w, env(0)); s = math.min(s, env(1))
-      e = math.max(e, env(2)); n = math.max(n, env(3))
-      (wkb, env)
-    }
-    val tmp = new java.io.File(file + ".tmp")
-    if (tmp.exists()) tmp.delete()
-    val real = ExampleParquetWriter.builder(new Path(tmp.getAbsolutePath))
-      .withType(schema)
-      .withExtraMetaData(java.util.Collections.singletonMap(
-        "geo", geoJsonUtm((w, s, e, n), zone, south)))
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    val factory = new SimpleGroupFactory(schema)
-    try rows.zip(utmShapes).foreach { case (r, (wkb, env)) =>
-      val g = factory.newGroup()
-      g.append("id", r.getString(0))
-      g.append("id_num", r.getLong(1))
-      g.append("collection", r.getString(2))
-      val dt = micros(r.getAs[java.sql.Timestamp](3))
-      if (dt != null) g.append("datetime", dt.longValue())
-      val sd = micros(r.getAs[java.sql.Timestamp](4))
-      if (sd != null) g.append("start_datetime", sd.longValue())
-      val ed = micros(r.getAs[java.sql.Timestamp](5))
-      if (ed != null) g.append("end_datetime", ed.longValue())
-      g.append("value", r.getDouble(6))
-      g.append("user_id", r.getLong(7))
-      g.append("lon", r.getDouble(8))
-      g.append("lat", r.getDouble(9))
-      val bb = g.addGroup("bbox")
-      bb.append("xmin", env(0)); bb.append("ymin", env(1))
-      bb.append("xmax", env(2)); bb.append("ymax", env(3))
-      g.append("geometry", org.apache.parquet.io.api.Binary.fromConstantByteArray(wkb))
-      real.write(g)
-    } finally real.close()
-    if (!tmp.renameTo(f))
-      throw new java.io.IOException(s"could not move $tmp to $f")
-    file
+    stageFile(spark, dir, s"geoparquet_utm$zone$hemi", s"items_utm$zone$hemi.parquet",
+      col("lon") >= cm - 3.0 && col("lon") < cm + 3.0 &&
+        (if (south) col("lat") < -1.5 else lit(true)),
+      projected(graft.spatial.Utm.wkbFromCrs84(_, zone, south)),
+      geoJsonUtm(_, zone, south))
   }
 
-  def stagedMercatorPath(dir: String): String =
-    s"/tmp/graft_geoparquet_${FixtureGuard.fingerprint(dir, "events")}/items_3857.parquet"
+  /** A row's CRS84 geometry forward-projected by `forward`, with the
+    * envelope in the projected metres.
+    */
+  private def projected(forward: Array[Byte] => Array[Byte])(r: org.apache.spark.sql.Row)
+      : (Array[Byte], Array[Double]) = {
+    val (shape, _) = rowGeom(r.getLong(1), r.getLong(7), r.getDouble(8), r.getDouble(9))
+    val wkb = forward(Wkb.encode(shape))
+    (wkb, Wkb.envelope(wkb))
+  }
 
   /** Stage an EPSG:3857 GeoParquet file: every fixture item whose
     * geometry fits the projection's ±85.05° validity band (a web-map
@@ -998,63 +919,11 @@ object GeoParquet {
     * vertices forward-projected to Pseudo-Mercator metres
     * ([[graft.spatial.Mercator3857.forward]]), covering bbox in metres,
     * PROJJSON EPSG:3857 — the file every web-map tile pipeline hands
-    * the engine. Fixture-build time, content-fingerprinted like
-    * [[stage]].
+    * the engine. Fixture-build time, staged like [[stage]].
     */
   def stageMercator(spark: SparkSession, dir: String): String = synchronized {
-    val file = stagedMercatorPath(dir)
-    val f = new java.io.File(file)
-    if (f.exists()) return file
-    f.getParentFile.mkdirs()
-    val rows = Tables.items(spark, dir)
-      .select(col("id"), col("id_num"), col("collection"), col("datetime"),
-        col("start_datetime"), col("end_datetime"), col("value"),
-        col("user_id"), col("lon"), col("lat"))
-      .where(abs(col("lat")) <= 83.9)
-      .orderBy(col("id_num"))
-      .collect()
-    require(rows.nonEmpty, "no fixture items inside the 3857 validity band")
-    var (w, s, e, n) = (Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
-    val mercShapes = rows.map { r =>
-      val (shape, _) = rowGeom(r.getLong(1), r.getLong(7), r.getDouble(8), r.getDouble(9))
-      val wkb = graft.spatial.Mercator3857.wkbFromCrs84(graft.spatial.Wkb.encode(shape))
-      val env = graft.spatial.Wkb.envelope(wkb)
-      w = math.min(w, env(0)); s = math.min(s, env(1))
-      e = math.max(e, env(2)); n = math.max(n, env(3))
-      (wkb, env)
-    }
-    val tmp = new java.io.File(file + ".tmp")
-    if (tmp.exists()) tmp.delete()
-    val real = ExampleParquetWriter.builder(new Path(tmp.getAbsolutePath))
-      .withType(schema)
-      .withExtraMetaData(java.util.Collections.singletonMap(
-        "geo", geoJsonProjected((w, s, e, n), "WGS 84 / Pseudo-Mercator", 3857)))
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    val factory = new SimpleGroupFactory(schema)
-    try rows.zip(mercShapes).foreach { case (r, (wkb, env)) =>
-      val g = factory.newGroup()
-      g.append("id", r.getString(0))
-      g.append("id_num", r.getLong(1))
-      g.append("collection", r.getString(2))
-      val dt = micros(r.getAs[java.sql.Timestamp](3))
-      if (dt != null) g.append("datetime", dt.longValue())
-      val sd = micros(r.getAs[java.sql.Timestamp](4))
-      if (sd != null) g.append("start_datetime", sd.longValue())
-      val ed = micros(r.getAs[java.sql.Timestamp](5))
-      if (ed != null) g.append("end_datetime", ed.longValue())
-      g.append("value", r.getDouble(6))
-      g.append("user_id", r.getLong(7))
-      g.append("lon", r.getDouble(8))
-      g.append("lat", r.getDouble(9))
-      val bb = g.addGroup("bbox")
-      bb.append("xmin", env(0)); bb.append("ymin", env(1))
-      bb.append("xmax", env(2)); bb.append("ymax", env(3))
-      g.append("geometry", org.apache.parquet.io.api.Binary.fromConstantByteArray(wkb))
-      real.write(g)
-    } finally real.close()
-    if (!tmp.renameTo(f))
-      throw new java.io.IOException(s"could not move $tmp to $f")
-    file
+    stageFile(spark, dir, "geoparquet_3857", "items_3857.parquet", abs(col("lat")) <= 83.9,
+      projected(graft.spatial.Mercator3857.wkbFromCrs84),
+      geoJsonProjected(_, "WGS 84 / Pseudo-Mercator", 3857))
   }
 }

@@ -46,24 +46,18 @@ object IncrementalState {
   def appendBatchPartials(batch: DataFrame, path: String): Unit =
     aggPartials(batch).write.mode("append").partitionBy("slice").parquet(path)
 
-  /** Materialize the state table (idempotent per dir; tests pass their
-    * own path + slice filter to exercise the append path).
+  /** Materialize the state table, staged once per fixture snapshot. */
+  def materialize(spark: SparkSession, dir: String): String =
+    Staged("state", 1, dir, "orders")(
+      partials(spark, dir).write.partitionBy("slice").parquet(_))
+
+  /** The nightly append: add the partials of the slices matching
+    * `slicePred` to the state table at `path`.
     */
-  def materialize(spark: SparkSession, dir: String,
-                  path: String = null, slicePred: String = null): String = {
-    val p = Option(path).getOrElse {
-      val key = FixtureGuard.stateKey(dir, "orders")
-      new java.io.File(sys.props("java.io.tmpdir"), s"graft_state_$key").getAbsolutePath
-    }
-    val exists = path == null && new java.io.File(p, "_SUCCESS").exists()
-    if (!exists) {
-      val st = partials(spark, dir)
-      val sliced = Option(slicePred).map(st.where).getOrElse(st)
-      sliced.write.mode(if (path == null) "overwrite" else "append")
-        .partitionBy("slice").parquet(p)
-    }
-    p
-  }
+  def appendSlices(spark: SparkSession, dir: String, path: String,
+                   slicePred: String): Unit =
+    partials(spark, dir).where(slicePred)
+      .write.mode("append").partitionBy("slice").parquet(path)
 
   /** B26: state COMPACTION — merge-at-rest, the small-files answer for
     * this table. D11's streaming appends leave one partial file per
@@ -150,24 +144,16 @@ object IncrementalState {
       .groupBy(col("slice"), col("n_name"))
       .agg(count(lit(1)).as("n"), sum(col("cents")).as("c"))
 
-  /** Materialize the join-view state (idempotent per dir; tests pass
-    * their own path + slice filter for the append walk).
-    */
-  def b35Materialize(spark: SparkSession, dir: String,
-                     path: String = null, slicePred: String = null): String = {
-    val p = Option(path).getOrElse {
-      val key = "b35" + FixtureGuard.stateKey(dir, "orders", "customer", "nation")
-      new java.io.File(sys.props("java.io.tmpdir"), s"graft_state_$key").getAbsolutePath
-    }
-    val exists = path == null && new java.io.File(p, "_SUCCESS").exists()
-    if (!exists) {
-      val st = b35Partials(spark, dir)
-      val sliced = Option(slicePred).map(st.where).getOrElse(st)
-      sliced.write.mode(if (path == null) "overwrite" else "append")
-        .partitionBy("slice").parquet(p)
-    }
-    p
-  }
+  /** Materialize the join-view state, staged once per fixture snapshot. */
+  def b35Materialize(spark: SparkSession, dir: String): String =
+    Staged("state_b35", 1, dir, "orders", "customer", "nation")(
+      b35Partials(spark, dir).write.partitionBy("slice").parquet(_))
+
+  /** [[appendSlices]] for the join-view state. */
+  def b35AppendSlices(spark: SparkSession, dir: String, path: String,
+                      slicePred: String): Unit =
+    b35Partials(spark, dir).where(slicePred)
+      .write.mode("append").partitionBy("slice").parquet(path)
 
   def b35MergedFrom(spark: SparkSession, statePath: String): DataFrame =
     spark.read.parquet(statePath)

@@ -21,28 +21,16 @@ import org.apache.spark.sql.functions._
   */
 object PartitionedLayout {
 
-  private def tableName(dir: String): String =
-    "graft_part_orders_" + FixtureGuard.stateKey(dir, "orders")
-
-  /** Materialize orders partitioned by month slice (idempotent per
-    * (session, dir); catalog entry is the marker).
+  /** Materialize orders partitioned by month slice, staged once per
+    * fixture snapshot ([[Staged.table]]); returns the table name.
     */
-  def materialize(spark: SparkSession, dir: String): String = {
-    val t = tableName(dir)
-    val base = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_partitioned").getAbsolutePath
-    if (!spark.catalog.tableExists(t)) {
+  def materialize(spark: SparkSession, dir: String): String =
+    Staged.table(spark, "part_orders", 1, dir, "orders")(
+      Staged.Partitioned("slice"),
       Tables.orders(spark, dir)
         .select(col("o_orderkey"),
           expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("slice"))
-        .write.mode("overwrite")
-        .option("path", s"$base/$t")
-        .partitionBy("slice")
-        .saveAsTable(t)
-    }
-    t
-  }
+          date_format(col("o_orderdate"), "yyyy-MM").as("slice")))
 
   /** The month dimension — derived distinct slices with a quarter
     * attribute the query filters on. Small by construction (one row per
@@ -94,20 +82,17 @@ object PartitionedLayout {
   private val b39Cut = "1995-01"
 
   def b39MergeSchemaRead(spark: SparkSession, dir: String): DataFrame = {
-    val key = "b39" + FixtureGuard.stateKey(dir, "orders")
-    val base = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_evolved_$key").getAbsolutePath
-    if (!new java.io.File(s"$base/v2/_SUCCESS").exists()) {
+    val base = Staged("evolved", 1, dir, "orders") { p =>
       val src = Tables.orders(spark, dir)
         .select(col("o_orderkey"),
           expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
           col("o_orderstatus").as("status"),
           date_format(col("o_orderdate"), "yyyy-MM").as("slice"))
       src.where(col("slice") < b39Cut).select(col("o_orderkey"), col("cents"))
-        .write.mode("overwrite").parquet(s"$base/v1")
+        .write.parquet(s"$p/v1")
       src.where(col("slice") >= b39Cut)
         .select(col("o_orderkey"), col("cents"), col("status"))
-        .write.mode("overwrite").parquet(s"$base/v2")
+        .write.parquet(s"$p/v2")
     }
     spark.read.option("mergeSchema", "true").parquet(s"$base/v1", s"$base/v2")
       .groupBy(coalesce(col("status"), lit("pre-evolution")).as("status"))

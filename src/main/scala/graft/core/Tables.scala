@@ -18,27 +18,17 @@ object Tables {
   /** Resolved-plan cache: `spark.read.parquet` re-lists files and re-reads
     * the footer schema on every call — a fixed per-query tax that dominates
     * small benchmarks and is pure waste at any scale (a production catalog
-    * caches its FileIndex the same way). Keyed per session so test/driver
-    * sessions don't share plans. Caches the PLAN, not data — no .cache().
+    * caches its FileIndex the same way). Keyed on the SESSION OBJECT, like
+    * [[FrameMemo]], so test/driver sessions never share plans. Caches the
+    * PLAN, not data — no .cache().
     */
   private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // evict plans owned by STOPPED sessions: they can never be hit again
-    // (and an identityHashCode reuse must not hand back a dead plan)
-    planCache.entrySet().removeIf(e =>
-      e.getValue.sparkSession.sparkContext.isStopped)
-    val key = (System.identityHashCode(spark), s"$dir/$name.parquet")
-    val df = planCache.computeIfAbsent(key, k => spark.read.parquet(k._2))
-    if (df.sparkSession eq spark) df
-    else {
-      // identityHashCode collision with a (live) different session — key
-      // collisions are resolved in favor of the caller's session
-      val fresh = spark.read.parquet(key._2)
-      planCache.put(key, fresh)
-      fresh
-    }
+    planCache.keySet().removeIf(_._1.sparkContext.isStopped)
+    planCache.computeIfAbsent((spark, s"$dir/$name.parquet"), k => spark.read.parquet(k._2))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
@@ -80,12 +70,13 @@ object Tables {
     * come from the FileIndex, whose listing [[load]] already memoizes).
     */
   private val scanWidthCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), Integer]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Integer]()
 
-  private def scanWidth(s: SparkSession, d: String, name: String): Int =
-    scanWidthCache.computeIfAbsent(
-      (System.identityHashCode(s), s"$d/$name"),
+  private def scanWidth(s: SparkSession, d: String, name: String): Int = {
+    scanWidthCache.keySet().removeIf(_._1.sparkContext.isStopped)
+    scanWidthCache.computeIfAbsent((s, s"$d/$name"),
       _ => load(s, d, name).rdd.getNumPartitions)
+  }
 
   /** [[documents]] rebalanced across cores BEFORE an expensive per-doc
     * projection (the c26/c103 doctrine, shared): the corpus parquet is

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staged, Tables}
 import TextExprs._
 
 /** C1-C5: deduplication operators (SURVEY.md §2.C).
@@ -744,11 +744,9 @@ object Dedup {
     *  2. a session-local memo of the read-back frame so repeated
     *     consumers in one session don't re-open the files.
     */
-  private[graft] def c18StatePath(d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    new java.io.File(sys.props("java.io.tmpdir"), s"graft_clusters_$key")
-      .getAbsolutePath
-  }
+  private[graft] def c18StatePath(d: String): String =
+    Staged.path("clusters", c18StateVersion, d, "documents")
+  private final val c18StateVersion = 1
 
   // session-local memo via FrameMemo (r13): the former private
   // ConcurrentHashMap was keyed on the DIR alone, so (a) a new session
@@ -757,9 +755,8 @@ object Dedup {
   // only FrameMemo-owned blocks) unpersisted it mid-sweep
   def c18DupClusters(s: SparkSession, d: String): DataFrame =
     graft.core.FrameMemo.cached(s, s"c18clusters:$d") {
-      val p = c18StatePath(d)
-      if (!new java.io.File(p, "_SUCCESS").exists())
-        c18DupClustersCompute(s, d).write.mode("overwrite").parquet(p)
+      val p = Staged("clusters", c18StateVersion, d, "documents")(
+        c18DupClustersCompute(s, d).write.parquet(_))
       s.read.parquet(p).orderBy(col("doc_id"))
     }
 
@@ -1247,20 +1244,12 @@ object Dedup {
     * strategies, one answer); PlanAuditSpec pins the bucketed scan and
     * the exchange count.
     */
-  private def c72HistTable(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    val t = s"graft_bucketed_histfps_$key"
-    if (!s.catalog.tableExists(t)) {
-      val base = new java.io.File(
-        sys.props("java.io.tmpdir"), "graft_bucketed").getAbsolutePath
+  private def c72HistTable(s: SparkSession, d: String): String =
+    Staged.table(s, "bucketed_histfps", 1, d, "documents")(
+      Staged.Bucketed(8, "fp", "fp"),
       c47Fps(s, d).where(col("doc_id") < c47Split)
         .select(col("fp")).distinct()
-        .repartition(8, col("fp"))
-        .write.mode("overwrite").option("path", s"$base/$t")
-        .bucketBy(8, "fp").sortBy("fp").saveAsTable(t)
-    }
-    t
-  }
+        .repartition(8, col("fp")))
 
   def c72IncrementalDedupBucketed(s: SparkSession, d: String): DataFrame = {
     val hist = s.table(c72HistTable(s, d))
@@ -1376,20 +1365,18 @@ object Dedup {
     * spec pins latest ≡ the merge, v1 ≡ the pre-merge history state,
     * and idempotence.
     */
-  private[graft] def c67VersionsPath(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_clusterversions_$key").getAbsolutePath
-  }
+  // both versions land in ONE staged build: a JVM killed between the two
+  // appends leaves no table, never a v1-only one served as "latest"
+  private[graft] def c67VersionsPath(s: SparkSession, d: String): String =
+    Staged("clusterversions", 1, d, "documents") { root =>
+      s.read.parquet(c67StatePath(s, d)).withColumn("version", lit(1))
+        .write.partitionBy("version").parquet(root)
+      c67IncrementalClusters(s, d).withColumn("version", lit(2))
+        .write.mode("append").partitionBy("version").parquet(root)
+    }
 
   def c67CompactState(s: SparkSession, d: String): DataFrame = {
     val root = c67VersionsPath(s, d)
-    if (!new java.io.File(s"$root/version=1").exists())
-      s.read.parquet(c67StatePath(s, d)).withColumn("version", lit(1))
-        .write.mode("append").partitionBy("version").parquet(root)
-    if (!new java.io.File(s"$root/version=2").exists())
-      c67IncrementalClusters(s, d).withColumn("version", lit(2))
-        .write.mode("append").partitionBy("version").parquet(root)
     val latest = s.read.parquet(root)
       .agg(max(col("version"))).head().getInt(0)
     s.read.parquet(root).where(col("version") === latest)
@@ -1495,18 +1482,13 @@ object Dedup {
       .where(expr("size(w) >= 3"))
       .select(col("doc_id"), col("source"), expr(fpSpark).as("fp"))
 
-  private def c47StatePath(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_dedupstate_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists())
+  private def c47StatePath(s: SparkSession, d: String): String =
+    Staged("dedupstate", 1, d, "documents")(
       c47Fps(s, d)
         .where(col("doc_id") < c47Split)
         .select((col("doc_id") / 100).cast("bigint").as("slice"), col("fp"))
         .distinct()
-        .write.mode("overwrite").partitionBy("slice").parquet(p)
-    p
-  }
+        .write.partitionBy("slice").parquet(_))
 
   def c47IncrementalDedup(s: SparkSession, d: String): DataFrame = {
     val histFps = s.read.parquet(c47StatePath(s, d)).select(col("fp")).distinct()
@@ -1569,19 +1551,14 @@ object Dedup {
       java.lang.Long.valueOf(n * 4 / 5)
     })
 
-  private[graft] def c67StatePath(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_clusterstate_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists()) {
+  private[graft] def c67StatePath(s: SparkSession, d: String): String =
+    Staged("clusterstate", 1, d, "documents") { p =>
       val histPairs = pairsFromBands(
         s.read.parquet(c67BucketStatePath(s, d)))
       ccMinLabel(histPairs.union(histPairs.select(col("d2"), col("d1"))))
         .select(col("node").as("doc_id"), col("lab").as("cluster"))
-        .write.mode("overwrite").parquet(p)
+        .write.parquet(p)
     }
-    p
-  }
 
   /** History's persisted BUCKET INDEX (doc_id, band, bkey) — D18's
     * bucket-state table in batch form: history documents are signed ONCE
@@ -1590,15 +1567,9 @@ object Dedup {
     * derives from the same index, so the two state tables can't disagree
     * on the pair set.
     */
-  private[graft] def c67BucketStatePath(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_bucketstate_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists())
-      c2Bands(s, d).where(col("doc_id") < c67SplitFor(s, d))
-        .write.mode("overwrite").parquet(p)
-    p
-  }
+  private[graft] def c67BucketStatePath(s: SparkSession, d: String): String =
+    Staged("bucketstate", 1, d, "documents")(
+      c2Bands(s, d).where(col("doc_id") < c67SplitFor(s, d)).write.parquet(_))
 
   def c67IncrementalClusters(s: SparkSession, d: String): DataFrame = {
     val oldState = s.read.parquet(c67StatePath(s, d)) // doc_id, cluster

@@ -7,7 +7,7 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staged, Tables}
 
 /** C12: multimodal binary-column pipeline (SURVEY.md §2.C).
   *
@@ -138,10 +138,7 @@ object Multimodal {
     * measure — decode cost and header-parse cost, not fixture synthesis.
     */
   def mediaParquet(s: SparkSession, d: String): DataFrame = synchronized {
-    val path = s"/tmp/graft_media_${graft.core.FixtureGuard.stateKey(d, "documents")}"
-    if (!new java.io.File(path, "_SUCCESS").exists())
-      mediaTable(s, d).write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+    s.read.parquet(Staged("media", 1, d, "documents")(mediaTable(s, d).write.parquet(_)))
   }
 
   /** The batched decode pipeline: partition-local batching (the shape a
@@ -372,8 +369,7 @@ object Multimodal {
     */
   def audioParquet(s: SparkSession, d: String): DataFrame = synchronized {
     import s.implicits._
-    val path = s"/tmp/graft_audio_${graft.core.FixtureGuard.stateKey(d, "documents")}"
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    s.read.parquet(Staged("audio", 1, d, "documents")(
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .repartition(s.sparkContext.defaultParallelism)
         .mapPartitions { ids =>
@@ -381,8 +377,7 @@ object Multimodal {
             val n = nSamplesOf(id)
             Audio(id, makeWav(id, n), c88Rate, n)
           }
-        }.write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+        }.write.parquet(_)))
   }
 
   def c88AudioDecode(s: SparkSession, d: String): DataFrame = {
@@ -500,13 +495,11 @@ object Multimodal {
 
   def videoParquet(s: SparkSession, d: String): DataFrame = synchronized {
     import s.implicits._
-    val path = s"/tmp/graft_video_${graft.core.FixtureGuard.stateKey(d, "documents")}"
-    if (!new java.io.File(path, "_SUCCESS").exists())
+    s.read.parquet(Staged("video", 1, d, "documents")(
       Tables.documents(s, d).select(col("doc_id")).as[Long]
         .repartition(s.sparkContext.defaultParallelism)
         .mapPartitions(_.map(id => Video(id, makeVideo(id), nFramesOf(id))))
-        .write.mode("overwrite").parquet(path)
-    s.read.parquet(path)
+        .write.parquet(_)))
   }
 
   def c89VideoSample(s: SparkSession, d: String): DataFrame = {

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staged, Tables}
 import TextExprs._
 
 /** C8-C11: text analysis operators for an LLM training-data pipeline,
@@ -266,13 +266,10 @@ object TextAnalysis {
     * Plan-audited: the serving plan reads no `text` column and no
     * documents.parquet — index tables only.
     */
-  private[graft] def c78IndexPath(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
+  private[graft] def c78IndexPath(s: SparkSession, d: String): String =
     // v2: postings carry POSITIONS (C79's phrase serving); C78's
     // tf-only query prunes the column away (plan-audited)
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_invindex_v2_$key").getAbsolutePath
-    if (!new java.io.File(s"$root/meta", "_SUCCESS").exists()) {
+    Staged("invindex", 2, d, "documents") { root =>
       val postings = docs(s, d)
         .select(col("doc_id"), posexplode(expr(wordsSpark)).as(Seq("p", "w")))
         .where(col("w") =!= "")
@@ -281,15 +278,13 @@ object TextAnalysis {
           sort_array(collect_list(col("p"))).as("positions"))
       postings
         .repartition(col("w")).sortWithinPartitions(col("w"), col("doc_id"))
-        .write.mode("overwrite").parquet(s"$root/postings")
+        .write.parquet(s"$root/postings")
       postings.groupBy(col("w"))
         .agg(countDistinct(col("doc_id")).as("df"))
-        .write.mode("overwrite").parquet(s"$root/terms")
+        .write.parquet(s"$root/terms")
       docs(s, d).agg(count(lit(1)).as("n"))
-        .write.mode("overwrite").parquet(s"$root/meta")
+        .write.parquet(s"$root/meta")
     }
-    root
-  }
 
   /** The index-serving score plan over a postings frame (w, doc_id, tf)
     * and a 1-row stats frame (n, df_0..df_k): per-doc tf pivoted to
@@ -950,17 +945,11 @@ object TextAnalysis {
   // Last sidecar written by c87CompressionRatio; read lazily by c87Sql so
   // the oracle dumped AFTER the Verify query loop points at this run's
   // per-doc deflate frame (Verify.scala evaluates oracleSql post-loop).
-  @volatile private[graft] var c87SidecarPath: String = "/tmp/graft_c87_bytes_unset"
+  @volatile private[graft] var c87SidecarPath: String = "unset"
 
   def c87CompressionRatio(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // keyed on a CONTENT fingerprint of the input files (not the dir
-    // string): an in-place fixture regeneration or a sanitized-path
-    // collision (sf0.1 vs sf0_1) gets a fresh sidecar, never stale bytes
-    val path = "/tmp/graft_c87_bytes_" +
-      graft.core.FixtureGuard.fingerprint(d, "documents")
-    c87SidecarPath = path
-    if (!new java.io.File(path, "_SUCCESS").exists()) {
+    val path = Staged("c87_bytes", 1, d, "documents") { p =>
       docs(s, d).select(col("doc_id"), col("source"), col("text"))
         .as[(Long, String, String)]
         .mapPartitions { it =>
@@ -974,8 +963,9 @@ object TextAnalysis {
             (id, src, bytes.length.toLong, comp)
           }
         }.toDF("doc_id", "source", "raw_bytes", "comp_bytes")
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(p)
     }
+    c87SidecarPath = path
     s.read.parquet(path)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1403,20 +1393,15 @@ object TextAnalysis {
     * job. C37/C41/C42 read it instead of re-running the merge loop per
     * query: train once, tokenize forever (the oracle still RE-TRAINS
     * from scratch in SQL each time — the independent check is
-    * unchanged). Idempotent per dir (B24's materialize pattern); the
-    * fixture dirs are immutable so the artifact can't go stale.
+    * unchanged). Staged once per corpus snapshot (B24's materialize
+    * pattern).
     */
-  private def c32Dictionary(s: SparkSession, d: String): DataFrame = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_tokenizer_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists()) {
+  private def c32Dictionary(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Staged("tokenizer", 1, d, "documents") { p =>
       val (_, vocab) = c32Train(s, d)
       vocab.select(col("w"), expr(s"size($c32Symbols)").cast("long").as("n_tok"))
-        .write.mode("overwrite").parquet(p)
-    }
-    s.read.parquet(p)
-  }
+        .write.parquet(p)
+    })
 
   // ------------------- C50 versioned tokenizer artifact state table
   /** C50: the tokenizer artifact as a VERSIONED state table — the
@@ -1445,21 +1430,18 @@ object TextAnalysis {
   private[graft] def c50Retrain(corpus: DataFrame): DataFrame =
     c50Dict(c32TrainOn(corpus)._2)
 
-  private[graft] def c50Materialize(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "documents")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_tokver1_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists()) {
+  private[graft] def c50Materialize(s: SparkSession, d: String): String =
+    Staged("tokver", 1, d, "documents") { p =>
       // v1: the corpus as of the first build; v2: a later full retrain.
-      // Each append is a new partition — nothing existing is rewritten.
+      // Each append is a new partition — nothing existing is rewritten;
+      // both land in ONE staged build, so a JVM killed between them
+      // leaves no table, never a v1-only one served as "latest".
       Seq(1 -> docs(s, d).where(col("doc_id") % 2 === 0), 2 -> docs(s, d))
         .foreach { case (v, corpus) =>
           c50Retrain(corpus).withColumn("version", lit(v))
             .write.mode("append").partitionBy("version").parquet(p)
         }
     }
-    p
-  }
 
   def c50TokenizerVersions(s: SparkSession, d: String): DataFrame = {
     val st = s.read.parquet(c50Materialize(s, d))

@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Staged, Tables}
 import graft.cql.{Cql, Cql2Text}
 import graft.spatial.Geo
 
@@ -1038,19 +1038,18 @@ object StacSearch {
   // private[graft]: the layout spec audits THESE dirs instead of re-deriving
   // the key (r11 ADVICE — a drifted re-derivation inspects the wrong dir)
   private[graft] def a63Paths(s: SparkSession, d: String): (String, String) = {
-    val key = graft.core.FixtureGuard.stateKey(d, "events")
-    val lp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_itemszlayout_$key").getAbsolutePath
-    val mp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_itemsmanifest_$key").getAbsolutePath
-    if (!new java.io.File(lp, "_SUCCESS").exists())
-      graft.core.ItemsLayout.materializeZOrdered(items(s, d), zCellColumn, lp,
-        numFiles = 16)
-    if (!new java.io.File(mp, "_SUCCESS").exists())
-      graft.core.ItemsLayout.coveringManifest(s, lp)
-        .write.mode("overwrite").parquet(mp)
-    (lp, mp)
+    val lp = Staged("itemszlayout", 1, d, "events")(
+      graft.core.ItemsLayout.materializeZOrdered(items(s, d), zCellColumn, _,
+        numFiles = 16))
+    (lp, manifestOf(s, "itemsmanifest", d, lp))
   }
+
+  /** The covering manifest of a COMMITTED layout dir — staged after the
+    * layout, because its rows name the layout's files by path.
+    */
+  private def manifestOf(s: SparkSession, name: String, d: String, lp: String): String =
+    Staged(name, 1, d, "events")(
+      graft.core.ItemsLayout.coveringManifest(s, lp).write.parquet(_))
 
   /** Manifest-selected data files for a bbox (exposed for the spec's
     * pruning audit).
@@ -1100,18 +1099,10 @@ object StacSearch {
     * files are actually skipped on the temporal layout.
     */
   private[graft] def a64Paths(s: SparkSession, d: String): (String, String) = {
-    val key = graft.core.FixtureGuard.stateKey(d, "events")
-    val lp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_itemstlayout_$key").getAbsolutePath
-    val mp = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_itemstmanifest_$key").getAbsolutePath
-    if (!new java.io.File(lp, "_SUCCESS").exists())
+    val lp = Staged("itemstlayout", 1, d, "events")(
       graft.core.ItemsLayout.materializeSorted(items(s, d),
-        coalesce(col("datetime"), col("start_datetime")), lp, numFiles = 16)
-    if (!new java.io.File(mp, "_SUCCESS").exists())
-      graft.core.ItemsLayout.coveringManifest(s, lp)
-        .write.mode("overwrite").parquet(mp)
-    (lp, mp)
+        coalesce(col("datetime"), col("start_datetime")), _, numFiles = 16))
+    (lp, manifestOf(s, "itemstmanifest", d, lp))
   }
 
   private[graft] def a64CandidateFiles(s: SparkSession, d: String,
@@ -1990,11 +1981,11 @@ object StacSearch {
     * writer, footer, decoder, or covering column is a value mismatch.
     * Gate-internal requires pin the metadata plane (version, CRS, types).
     */
-  @volatile private var a75Path: String = "/tmp/graft_geoparquet_unset/items.parquet"
+  @volatile private var a75Path: String = "unset"
 
   def a75GeoparquetIngest(s: SparkSession, d: String): DataFrame = {
     val (df, meta) = graft.core.GeoParquet.ingestItems(s, d)
-    a75Path = graft.core.GeoParquet.stagedPath(d)
+    a75Path = graft.core.GeoParquet.stage(s, d)
     require(meta.version == "1.1.0" && meta.primaryColumn == "geometry" &&
       meta.crsAuthority == "OGC" && meta.crsCode == "CRS84" &&
       meta.geometryTypes == Seq("Point", "Polygon"),
@@ -2038,7 +2029,7 @@ object StacSearch {
     * (λ = x/R, φ = 2·atan(exp(y/R)) − π/2 — monotone per axis, so the
     * bbox corners map to the envelope corners).
     */
-  @volatile private var a96Path: String = "/tmp/graft_geoparquet_unset/items_3857.parquet"
+  @volatile private var a96Path: String = "unset"
 
   def a96MercatorIngest(s: SparkSession, d: String): DataFrame = {
     val file = graft.core.GeoParquet.stageMercator(s, d)
@@ -2073,7 +2064,7 @@ object StacSearch {
   }
 
   // -------------------------------- A82 distributed GeoParquet EXPORT
-  @volatile private var a82Dir: String = "/tmp/graft_geoparquet_export_unset"
+  @volatile private var a82Dir: String = "unset"
 
   /** A82: the WRITE side of the reference's data plane — its corpus IS a
     * per-collection GeoParquet catalog (database_logic.py:831-853 scans
@@ -2111,7 +2102,7 @@ object StacSearch {
   }
 
   // ---------------------- A85 spatially-sharded catalog + footer prune
-  @volatile private var a85Dir: String = "/tmp/graft_geoparquet_export_unset"
+  @volatile private var a85Dir: String = "unset"
 
   /** A85: the catalog completes into a SPATIAL INDEX — export with
     * Z-BUCKET sharding (shard = level-6 z-cell bucket, so each file's
@@ -2156,7 +2147,7 @@ object StacSearch {
   }
 
   // ------------- A87 catalog DataSource V2: plan-time footer prune
-  @volatile private var a87Dir: String = "/tmp/graft_geoparquet_export_unset"
+  @volatile private var a87Dir: String = "unset"
   private val a87Checked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -2208,7 +2199,7 @@ object StacSearch {
   }
 
   // ----- A89 collection + datetime FILE prune on the catalog DSv2 (r11)
-  @volatile private var a89Dir: String = "/tmp/graft_geoparquet_export_unset"
+  @volatile private var a89Dir: String = "unset"
   private val a89Checked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -2271,8 +2262,8 @@ object StacSearch {
        |ORDER BY id""".stripMargin
 
   // ------------------------------------ A86 catalog compaction
-  @volatile private var a86SrcDir: String = "/tmp/graft_geoparquet_export_unset"
-  @volatile private var a86Dir: String = "/tmp/graft_geoparquet_export_unset"
+  @volatile private var a86SrcDir: String = "unset"
+  @volatile private var a86Dir: String = "unset"
 
   /** A86: catalog COMPACTION — the 100 TB maintenance op (many small
     * shard files merged into few, Z locality preserved): reads the A85
@@ -3091,17 +3082,16 @@ object StacSearch {
     * `spark.read.schema(...).json`, the typed parse extracts the self
     * link from the links array, and the tiny parsed catalog broadcast-
     * joins onto the live derived extents exactly like A26. The config
-    * directory is written once (idempotent marker) — it models the
+    * directory is staged once — it models the
     * deploy-time artifact the reference mounts; a control plane is
     * driver-side by nature and |collections|-sized, never a data scan.
     * Oracle: re-derives every parsed field from the same VALUES list —
     * the file → JSON → typed-row path must land exactly where the
     * literal path does.
     */
-  private def a65ConfigDir(): String = {
-    val p = new java.io.File(sys.props("java.io.tmpdir"), "graft_collectionjson_v1")
-    if (!new java.io.File(p, "_DONE").exists()) {
-      p.mkdirs()
+  private def a65ConfigDir(d: String): String =
+    Staged("collectionjson", 1, d) { p =>
+      new java.io.File(p).mkdirs()
       collectionMeta.foreach { case (c, t, l, de) =>
         val json =
           s"""{"id":"$c","title":"$t","license":"$l","description":"$de",""" +
@@ -3111,17 +3101,13 @@ object StacSearch {
         java.nio.file.Files.write(
           new java.io.File(p, s"$c.json").toPath, json.getBytes("UTF-8"))
       }
-      java.nio.file.Files.write(
-        new java.io.File(p, "_DONE").toPath, Array.emptyByteArray)
     }
-    p.getAbsolutePath
-  }
 
   def a65CollectionJsonIngest(s: SparkSession, d: String): DataFrame = {
     val schema = "id STRING, title STRING, license STRING, description STRING, " +
       "stac_version STRING, keywords ARRAY<STRING>, " +
       "links ARRAY<STRUCT<rel: STRING, href: STRING>>"
-    val meta = s.read.schema(schema).json(a65ConfigDir() + "/*.json")
+    val meta = s.read.schema(schema).json(a65ConfigDir(d) + "/*.json")
       .select(col("id").as("collection"), col("title"), col("license"),
         col("description"), col("stac_version"),
         // CSV-stringified for the gate: the driver's pandas compare cannot
@@ -3243,24 +3229,18 @@ object StacSearch {
         min(col("lon")).as("west"), max(col("lon")).as("east"),
         min(col("lat")).as("south"), max(col("lat")).as("north"))
 
-  /** Materialize the extent-state table (idempotent per dir; the spec
-    * passes its own path + slice filter to drive the append path).
+  /** Materialize the extent-state table, staged once per fixture snapshot. */
+  def a54Materialize(s: SparkSession, d: String): String =
+    Staged("extents", 1, d, "events")(
+      a54ExtentPartials(s, d).write.partitionBy("slice").parquet(_))
+
+  /** The nightly append: add the extent partials of the slices matching
+    * `slicePred` to the extent-state table at `path`.
     */
-  def a54Materialize(s: SparkSession, d: String,
-                     path: String = null, slicePred: String = null): String = {
-    val p = Option(path).getOrElse {
-      val key = graft.core.FixtureGuard.stateKey(d, "events")
-      new java.io.File(sys.props("java.io.tmpdir"), s"graft_extents_$key").getAbsolutePath
-    }
-    val exists = path == null && new java.io.File(p, "_SUCCESS").exists()
-    if (!exists) {
-      val st = a54ExtentPartials(s, d)
-      val sliced = Option(slicePred).map(st.where).getOrElse(st)
-      sliced.write.mode(if (path == null) "overwrite" else "append")
-        .partitionBy("slice").parquet(p)
-    }
-    p
-  }
+  def a54AppendSlices(s: SparkSession, d: String, path: String,
+                      slicePred: String): Unit =
+    a54ExtentPartials(s, d).where(slicePred)
+      .write.mode("append").partitionBy("slice").parquet(path)
 
   /** Merge-on-read: the served directory — identical output (and oracle)
     * to [[a26Collections]].
@@ -3313,14 +3293,9 @@ object StacSearch {
         date_format(coalesce(col("datetime"), col("start_datetime")), "yyyy-MM"))
       .groupBy(col("slice"), col("collection")))
 
-  def a55Materialize(s: SparkSession, d: String): String = {
-    val key = graft.core.FixtureGuard.stateKey(d, "events")
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_queryables_$key").getAbsolutePath
-    if (!new java.io.File(p, "_SUCCESS").exists())
-      a55StatPartials(s, d).write.mode("overwrite").partitionBy("slice").parquet(p)
-    p
-  }
+  def a55Materialize(s: SparkSession, d: String): String =
+    Staged("queryables", 1, d, "events")(
+      a55StatPartials(s, d).write.partitionBy("slice").parquet(_))
 
   def a55QueryablesIncremental(s: SparkSession, d: String): DataFrame =
     s.read.parquet(a55Materialize(s, d))

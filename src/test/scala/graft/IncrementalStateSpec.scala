@@ -22,9 +22,9 @@ class IncrementalStateSpec extends AnyFunSuite {
       .select(col("slice")).distinct().collect().map(_.getString(0)).sorted
     val last = slices.last
     val tmp = java.nio.file.Files.createTempDirectory("graft_state_append").toString
-    IncrementalState.materialize(s, sf, tmp, s"slice < '$last'")
+    IncrementalState.appendSlices(s, sf, tmp, s"slice < '$last'")
     // day 2: append ONLY the newest slice's partials
-    IncrementalState.materialize(s, sf, tmp, s"slice = '$last'")
+    IncrementalState.appendSlices(s, sf, tmp, s"slice = '$last'")
 
     val merged = IncrementalState.mergedFrom(s, tmp).collect()
     assert(merged.sameElements(direct))
@@ -46,8 +46,8 @@ class IncrementalStateSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_state_b35").toString
     // day 1: every slice but the newest; day 2: ONLY the newest month is
     // joined against the dims and appended — history never re-joined
-    IncrementalState.b35Materialize(s, sf, tmp, s"slice < '$last'")
-    IncrementalState.b35Materialize(s, sf, tmp, s"slice = '$last'")
+    IncrementalState.b35AppendSlices(s, sf, tmp, s"slice < '$last'")
+    IncrementalState.b35AppendSlices(s, sf, tmp, s"slice = '$last'")
 
     val merged = IncrementalState.b35MergedFrom(s, tmp).collect()
     assert(merged.sameElements(direct))

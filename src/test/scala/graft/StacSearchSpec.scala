@@ -79,8 +79,8 @@ class StacSearchSpec extends AnyFunSuite {
     assert(slices.size >= 2, s"need >= 2 slices, got ${slices.toSeq}")
     val last = slices.last
     val tmp = java.nio.file.Files.createTempDirectory("graft_extents_append").toString
-    StacSearch.a54Materialize(s, sf, tmp, s"slice < '$last'")   // day 1
-    StacSearch.a54Materialize(s, sf, tmp, s"slice = '$last'")   // day 2: append
+    StacSearch.a54AppendSlices(s, sf, tmp, s"slice < '$last'")   // day 1
+    StacSearch.a54AppendSlices(s, sf, tmp, s"slice = '$last'")   // day 2: append
     val merged = StacSearch.a54MergedFrom(s, tmp).collect()
     assert(merged.sameElements(direct))
   }
