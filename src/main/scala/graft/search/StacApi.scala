@@ -1,6 +1,10 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, GenericRowWithSchema, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -333,9 +337,6 @@ object StacApi {
     user :+ ("id" -> false)
   }
 
-  private def orderCols(sorts: Seq[(String, Boolean)]): Seq[Column] =
-    sorts.map { case (f, desc) => if (desc) col(f).desc else col(f).asc }
-
   /** Keyset predicate: strict lexicographic "after (v1..vn)" under the
     * given sort directions — row-value comparison unrolled to an OR-chain
     * whose leading conjuncts are sargable (they push down and prune).
@@ -380,17 +381,16 @@ object StacApi {
   def searchOn(items: DataFrame, p: SearchParams): SearchResult = {
     val filtered = plan(items, p)
     val sorts = sortCols(filtered, p)
-    val sorted = applyFields(filtered, p, sorts).orderBy(orderCols(sorts): _*)
-    val numMatched = if (p.withCount) filtered.count() else -1L
-    pageOf(sorted, sorts, p, filtered, numMatched)
+    page(applyFields(filtered, p, sorts), sorts, p)
   }
 
   /** One search page with each item serialized as its full STAC Feature
     * JSON (A20's codegen'd document projection) — the HTTP layer's
     * /search body. Same filter plan, same sort/keyset machinery as
-    * [[search]]; the document column rides the page instead of the raw
-    * item columns, so serialization is distributed (per-row codegen),
-    * never a driver loop over the page.
+    * [[search]]. The pass reads only the columns the document needs plus
+    * the sort columns; the document is then projected over the page rows
+    * as a local relation (evaluated on the driver, no job), so JSON work
+    * is bounded by `limit`, never by the match count.
     */
   def searchFeatures(spark: SparkSession, dir: String,
                      p: SearchParams): (Array[String], Long, Option[String]) =
@@ -403,52 +403,96 @@ object StacApi {
                        p: SearchParams): (Array[String], Long, Option[String]) = {
     val filtered = plan(items, p)
     val sorts = sortCols(filtered, p)
-    val sorted = StacSearch.featureFrameOn(filtered)
-      .orderBy(orderCols(sorts): _*)
-    val numMatched = if (p.withCount) filtered.count() else -1L
-    val r = pageOf(sorted, sorts, p, filtered, numMatched)
-    (r.items.map(row => row.getString(row.fieldIndex("_feature"))),
-      r.numMatched, r.nextToken)
+    val cols = (StacSearch.featureCols ++ sorts.map(_._1)).distinct
+    val r = page(filtered.select(cols.map(col): _*), sorts, p)
+    val feats =
+      if (r.items.isEmpty) Array.empty[String]
+      else StacSearch.featureFrameOn(filtered.sparkSession.createDataFrame(
+          java.util.Arrays.asList(r.items: _*), r.items.head.schema))
+        .select(col("_feature")).collect().map(_.getString(0))
+    (feats, r.numMatched, r.nextToken)
   }
 
-  /** The shared pager: keyset (scale default) / offset (compat) over an
-    * already-sorted frame; `filtered` supplies sort-field types for
-    * token decode.
+  /** The pager: decodes the token, then [[topK]] answers the count and
+    * the page in one pass. `off:` tokens continue as offsets; a first or
+    * `ks:` page emits a keyset token.
     */
-  private def pageOf(sorted: DataFrame, sorts: Seq[(String, Boolean)],
-                     p: SearchParams, filtered: DataFrame,
-                     numMatched: Long): SearchResult =
-    p.token match {
+  private def page(frame: DataFrame, sorts: Seq[(String, Boolean)],
+                   p: SearchParams): SearchResult = {
+    val (after, off, offsetToken) = p.token match {
+      case None => (None, 0, false)
       case Some(t) if t.startsWith("ks:") =>
-        val vals = decodeKeyset(t.drop(3), sorts, filtered)
-        val page = sorted.where(keysetAfter(sorts, vals)).limit(p.limit + 1).collect()
-        result(page, sorts, p, numMatched)
-      case Some(t) if t.startsWith("off:") =>
-        val off = t.drop(4).toInt
-        val page = sorted.offset(off).limit(p.limit + 1).collect()
-        resultOffset(page, p, numMatched, off)
-      case None =>
-        // first page: emit a keyset token (scale path) by default
-        val page = sorted.limit(p.limit + 1).collect()
-        result(page, sorts, p, numMatched)
-      case Some(other) =>
-        throw new IllegalArgumentException(s"bad token: $other")
+        (Some(keysetAfter(sorts, decodeKeyset(t.drop(3), sorts, frame))), 0, false)
+      case Some(t) if t.startsWith("off:") => (None, decodeOffset(t.drop(4), p.limit), true)
+      case Some(other) => throw new IllegalArgumentException(s"bad token: $other")
     }
-
-  private def result(page: Array[Row], sorts: Seq[(String, Boolean)],
-                     p: SearchParams, matched: Long): SearchResult = {
-    val items = page.take(p.limit)
+    val (matched, top) = topK(frame, sorts, after, off + p.limit + 1, p.withCount)
+    val rows = top.drop(off)
+    val items = rows.take(p.limit)
     val next =
-      if (page.length <= p.limit) None
+      if (rows.length <= p.limit) None
+      else if (offsetToken) Some(s"off:${off + p.limit}")
       else Some("ks:" + encodeKeyset(items.last, sorts))
-    SearchResult(items, matched, next)
+    SearchResult(items, if (p.withCount) matched else -1L, next)
   }
 
-  private def resultOffset(page: Array[Row], p: SearchParams,
-                           matched: Long, off: Int): SearchResult = {
-    val items = page.take(p.limit)
-    val next = if (page.length <= p.limit) None else Some(s"off:${off + p.limit}")
-    SearchResult(items, matched, next)
+  /** ONE Spark job over the executed plan of `frame`: each partition
+    * counts every row and keeps, in a bounded heap, its best `k` rows
+    * under `sorts` (asc = nulls first, desc = nulls last — the order of
+    * `Column.asc`/`desc`) among those that pass `after`; the driver merges
+    * the heaps (TakeOrderedAndProjectExec's shape). `after` only limits
+    * which rows may enter the page: with a count it is evaluated per row,
+    * without one it filters (and prunes) the scan.
+    */
+  private def topK(frame: DataFrame, sorts: Seq[(String, Boolean)],
+                   after: Option[Column], k: Int,
+                   withCount: Boolean): (Long, Array[Row]) = {
+    // flag = the ordinal of the page-candidate column, -1 when every row is one
+    val (scanned, flag) = after match {
+      case Some(a) if withCount =>
+        (frame.withColumn(pageFlag, coalesce(a, lit(false))), frame.schema.length)
+      case Some(a) => (frame.where(a), -1)
+      case None => (frame, -1)
+    }
+    val qe = scanned.queryExecution
+    val out = qe.executedPlan.output
+    val ord = new LazilyGeneratedOrdering(sorts.map { case (f, desc) =>
+      SortOrder(out.find(_.name == f).get, if (desc) Descending else Ascending)
+    }, out)
+    val parts = SQLExecution.withNewExecutionId(qe, Some("search page")) {
+      qe.toRdd.mapPartitions { it =>
+        val heap = new java.util.PriorityQueue[InternalRow](ord.reverse)
+        var n = 0L
+        it.foreach { r =>
+          n += 1
+          if (flag < 0 || r.getBoolean(flag)) {
+            if (heap.size < k) heap.add(r.copy())
+            else if (ord.lt(r, heap.peek())) { heap.poll(); heap.add(r.copy()) }
+          }
+        }
+        Iterator.single((n, heap.toArray(Array.empty[InternalRow])))
+      }.collect()
+    }
+    val schema = frame.schema
+    val conv = schema.fields.map(f => CatalystTypeConverters.createToScalaConverter(f.dataType))
+    val rows = parts.flatMap(_._2).sorted(ord).take(k).map { r =>
+      new GenericRowWithSchema(Array.tabulate[Any](conv.length)(i =>
+        conv(i)(r.get(i, schema(i).dataType))), schema): Row
+    }
+    (parts.map(_._1).sum, rows)
+  }
+
+  private val pageFlag = "__graft_page_candidate"
+
+  /** `off:<n>`: a non-negative offset whose page bound `n + limit + 1`
+    * fits an Int (it sizes the pager's heap).
+    */
+  private def decodeOffset(s: String, limit: Int): Int = {
+    val off = s.toInt
+    if (off < 0) throw new IllegalArgumentException(s"bad token: negative offset $off")
+    if (off.toLong + limit + 1 > Int.MaxValue)
+      throw new IllegalArgumentException(s"bad token: offset $off + limit $limit is too large")
+    off
   }
 
   /** NULL sort-key values encode as a dedicated sentinel so keyset
@@ -466,7 +510,11 @@ object StacApi {
                            df: DataFrame): Seq[Option[Any]] = {
     import org.apache.spark.sql.types._
     val types = df.schema.fields.map(f => f.name -> f.dataType).toMap
-    s.split(ksSep, -1).toSeq.zip(sorts).map { case (v, (f, _)) =>
+    val vals = s.split(ksSep, -1).toSeq
+    if (vals.length != sorts.length)
+      throw new IllegalArgumentException(
+        s"bad token: ${vals.length} keyset values for ${sorts.length} sort fields")
+    vals.zip(sorts).map { case (v, (f, _)) =>
       if (v == ksNull) None
       else Some(types(f) match {
         case LongType      => v.toLong

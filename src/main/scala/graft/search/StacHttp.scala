@@ -26,10 +26,13 @@ import org.apache.spark.sql.{Row, SparkSession}
   *   - `GET  /queryables`, `/collections/{id}/queryables`  filter schema
   *
   * Design: every handler is a THIN codec — parse request → SearchParams →
-  * [[StacApi.searchFeatures]] (whose page rows carry the codegen'd A20
-  * Feature document, so serialization is distributed; the driver only
-  * concatenates page-sized strings). GET `filter` defaults to cql2-TEXT
-  * per OGC API-Features Part 3 (`filter-lang=cql2-json` switches), POST
+  * [[StacApi.searchFeatures]] (one Spark job counts the matches and keeps
+  * the page; the A20 Feature document is projected over the page rows
+  * only). Collection existence is the store's id set
+  * ([[TxnStore.collectionExists]]); only routes that return a collection
+  * document run the computed-extents query. GET `filter` defaults to
+  * cql2-TEXT per OGC API-Features Part 3 (`filter-lang=cql2-json`
+  * switches), POST
   * bodies go through the A62 codec — both languages land on the one CQL2
   * AST. The fields extension prunes the DOCUMENT here (include wins,
   * id/collection protected — the same pinned rules StacApi.applyFields
@@ -126,7 +129,7 @@ object StacHttp {
             case None    => notFound(ex, s"Collection $c does not exist")
           }
         case ("GET", List("collections", c, "items")) =>
-          if (collectionNode(spark, dir, store, c).isEmpty)
+          if (!store.collectionExists(c))
             notFound(ex, s"Collection $c does not exist")
           else
             json(ex, 200, featureCollection(itemsFrame,
@@ -143,7 +146,7 @@ object StacHttp {
         // ------------- transactions (r12): the reference's declared-but-
         // stubbed surface (database_logic.py:1049-1187), mounted for real
         case ("POST", List("collections", c, "items")) =>
-          if (collectionNode(spark, dir, store, c).isEmpty)
+          if (!store.collectionExists(c))
             notFound(ex, s"Collection $c does not exist")
           else {
             val f = store.createItem(c, body())
@@ -157,24 +160,21 @@ object StacHttp {
           store.deleteItem(c, itemId)
           noContent(ex)
         case ("POST", List("collections")) =>
-          val id = store.createCollection(body(),
-            cid => baseCollectionExists(spark, dir, cid))
+          val id = store.createCollection(body())
           collectionNode(spark, dir, store, id) match {
             case Some(n) => json(ex, 201, n)
             case None    => json(ex, 201, mapper.createObjectNode().put("id", id))
           }
         case ("PUT", List("collections", c)) =>
-          store.updateCollection(c, body(),
-            cid => baseCollectionExists(spark, dir, cid))
+          store.updateCollection(c, body())
           json(ex, 200, collectionNode(spark, dir, store, c).get)
         case ("DELETE", List("collections", c)) =>
-          store.deleteCollection(c,
-            cid => baseCollectionExists(spark, dir, cid))
+          store.deleteCollection(c)
           noContent(ex)
         case ("GET", List("sortables")) =>
           raw(ex, 200, StacSearch.sortables(itemsFrame))
         case ("GET", List("collections", c, "sortables")) =>
-          if (collectionNode(spark, dir, store, c).isEmpty)
+          if (!store.collectionExists(c))
             notFound(ex, s"Collection $c does not exist")
           else raw(ex, 200, StacSearch.sortables(
             itemsFrame
@@ -182,7 +182,7 @@ object StacHttp {
         case ("GET", List("aggregations")) =>
           json(ex, 200, aggregationsDoc())
         case ("GET", List("collections", c, "aggregations")) =>
-          if (collectionNode(spark, dir, store, c).isEmpty)
+          if (!store.collectionExists(c))
             notFound(ex, s"Collection $c does not exist")
           else json(ex, 200, aggregationsDoc())
         case ("GET", List("aggregate")) =>
@@ -198,7 +198,7 @@ object StacHttp {
           json(ex, 200, aggregateNode(itemsFrame,
             SearchParams.fromSearchBody(b), names))
         case ("GET", List("collections", c, "aggregate")) =>
-          if (collectionNode(spark, dir, store, c).isEmpty)
+          if (!store.collectionExists(c))
             notFound(ex, s"Collection $c does not exist")
           else json(ex, 200, aggregateNode(itemsFrame,
             paramsFromQuery(q).copy(collections = Seq(c)),
@@ -206,7 +206,7 @@ object StacHttp {
         case ("GET", List("queryables")) =>
           raw(ex, 200, StacSearch.queryables(itemsFrame))
         case ("GET", List("collections", c, "queryables")) =>
-          if (collectionNode(spark, dir, store, c).isEmpty)
+          if (!store.collectionExists(c))
             notFound(ex, s"Collection $c does not exist")
           else raw(ex, 200, StacSearch.queryables(
             itemsFrame
@@ -442,13 +442,6 @@ object StacHttp {
       }
     }
     o
-  }
-
-  private def baseCollectionExists(spark: SparkSession, dir: String,
-                                   c: String): Boolean = {
-    import org.apache.spark.sql.functions.col
-    StacApi.collections(spark, dir).where(col("collection") === c)
-      .limit(1).collect().nonEmpty
   }
 
   /** A posted collection document, served back with the engine's

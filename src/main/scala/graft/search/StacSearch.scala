@@ -712,6 +712,10 @@ object StacSearch {
   private[search] def featureFrameOn(df: DataFrame): DataFrame =
     withEnvelope(df).withColumn("_feature", featureJsonCol)
 
+  /** The items columns [[featureFrameOn]] reads. */
+  private[search] val featureCols: Seq[String] =
+    Seq("id", "id_num", "collection", "datetime", "lon", "lat", "value", "user_id")
+
   /** Raw Feature JSON (unit-tested by parsing in StacSearchSpec). */
   def a20FeatureJson(s: SparkSession, d: String): DataFrame =
     withEnvelope(items(s, d)).orderBy(col("id")).limit(20)

@@ -26,17 +26,18 @@ import graft.core.Tables
   * Model: an in-memory LATEST-REVISION map per (collection, item id) —
   * exactly the A56 changelog compacted at append time (each HTTP write
   * is one revision; later ingest wins; deletes are tombstones). Serving
-  * is [[itemsView]]: the immutable base corpus ANTI-JOINED on a
-  * broadcast of the touched keys (tiny by construction — the overlay is
-  * session-scale), UNIONED with the live overlay rows in the items
-  * schema. Every read route on the server goes through this view, so a
-  * created item is searchable the moment the POST returns.
+  * is [[itemsView]]: the immutable base corpus MASKED by a filter on the
+  * touched keys (tiny by construction — the overlay is session-scale),
+  * UNIONED with the live overlay rows in the items schema. Every read
+  * route on the server goes through this view, so a created item is
+  * searchable the moment the POST returns.
   *
   * Scale note: the base side stays the full distributed plan (filters
-  * still push into the scan; the anti-join broadcasts |touched| keys);
-  * only the overlay — bounded by what one API session wrote — lives on
-  * the driver. A write volume that outgrows memory belongs to the
-  * D40/D42 streaming-ingest path, not an HTTP session.
+  * still push into the scan; the mask is a per-row predicate, so a read
+  * after a write is still one job); only the overlay — bounded by what
+  * one API session wrote — lives on the driver. A write volume that
+  * outgrows memory belongs to the D40/D42 streaming-ingest path, not an
+  * HTTP session.
   */
 final class TxnStore(spark: SparkSession, dir: String) {
   private val mapper = new ObjectMapper()
@@ -61,6 +62,13 @@ final class TxnStore(spark: SparkSession, dir: String) {
     itemsSchema("datetime").dataType == TimestampNTZType
   private lazy val baseMaxIdNum: Long =
     Tables.items(spark, dir).agg(max(col("id_num"))).head().getLong(0)
+  /** The base corpus's collection ids: one job on first use, then pinned
+    * for the store's life like [[baseMaxIdNum]] and the file listing
+    * `Tables.load` pins.
+    */
+  private lazy val baseCollections: Set[String] =
+    Tables.items(spark, dir).select(col("collection")).distinct()
+      .collect().map(_.getString(0)).toSet
 
   /** Fresh EVEN id_num above every base id (even = Point-geometry branch
     * throughout the fixture conventions; monotone = ingest order, the
@@ -97,6 +105,9 @@ final class TxnStore(spark: SparkSession, dir: String) {
 
   /** The items frame every read route serves: base minus purged
     * collections minus touched keys, plus the live overlay revisions.
+    * The touched keys mask the base as
+    * `NOT coalesce(OR_c (collection = c AND id IN ids(c)), false)`; the
+    * coalesce keeps base rows with null keys, as an anti-join would.
     */
   def itemsView(): DataFrame = {
     val base0 = Tables.items(spark, dir)
@@ -106,15 +117,11 @@ final class TxnStore(spark: SparkSession, dir: String) {
       else base0.where(!col("collection").isin(purged: _*))
     val revs = itemRevs.readOnlySnapshot().toSeq
     if (revs.isEmpty) return base
-    val touched = spark.createDataFrame(
-      revs.map { case ((c, i), _) => Row(c, i) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("collection",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.StringType))))
+    val touched = revs.map(_._1).groupBy(_._1).toSeq.sortBy(_._1).map { case (c, keys) =>
+      col("collection") === c && col("id").isin(keys.map(_._2).sorted: _*)
+    }.reduce(_ || _)
     val live = revs.collect { case (_, ItemRev(false, f)) => rowOf(f) }
-    val masked = base.join(broadcast(touched), Seq("collection", "id"), "left_anti")
+    val masked = base.where(!coalesce(touched, lit(false)))
     if (live.isEmpty) masked
     else masked.unionByName(spark.createDataFrame(live.asJava, itemsSchema))
   }
@@ -144,6 +151,14 @@ final class TxnStore(spark: SparkSession, dir: String) {
       case None if purgedBase.contains(c) => None
       case None => baseFields(c, id)
     }
+
+  /** Whether collection `c` exists: created or re-created in the overlay,
+    * or in the base corpus and not deleted — no extents query.
+    */
+  def collectionExists(c: String): Boolean = collRevs.get(c) match {
+    case Some(CollRev(deleted, _)) => !deleted
+    case None => baseCollections.contains(c) && !purgedBase.contains(c)
+  }
 
   def collectionDeleted(c: String): Boolean =
     collRevs.get(c).exists(_.deleted)
@@ -295,30 +310,20 @@ final class TxnStore(spark: SparkSession, dir: String) {
     n
   }
 
-  def createCollection(body: String, existsInBase: String => Boolean): String =
+  def createCollection(body: String): String =
     synchronized {
       val n = collectionDocNode(body)
       val id = Option(n.get("id")).map(_.asText).filter(_.nonEmpty)
         .getOrElse(throw new IllegalArgumentException("collection must carry an id"))
-      val existing = collRevs.get(id) match {
-        case Some(CollRev(false, _)) => true
-        case Some(CollRev(true, _)) => false // deleted → re-creatable
-        case None => existsInBase(id) && !purgedBase.contains(id)
-      }
-      if (existing) throw new TxnConflict(s"Collection $id already exists")
+      // a deleted collection is re-creatable
+      if (collectionExists(id)) throw new TxnConflict(s"Collection $id already exists")
       collRevs.put(id, CollRev(deleted = false, body))
       id
     }
 
-  def updateCollection(id: String, body: String,
-                       existsInBase: String => Boolean): Unit = synchronized {
+  def updateCollection(id: String, body: String): Unit = synchronized {
     collectionDocNode(body)
-    val exists = collRevs.get(id) match {
-      case Some(CollRev(false, _)) => true
-      case Some(CollRev(true, _)) => false
-      case None => existsInBase(id) && !purgedBase.contains(id)
-    }
-    if (!exists) throw new TxnMissing(s"Collection $id does not exist")
+    if (!collectionExists(id)) throw new TxnMissing(s"Collection $id does not exist")
     collRevs.put(id, CollRev(deleted = false, body))
   }
 
@@ -326,14 +331,9 @@ final class TxnStore(spark: SparkSession, dir: String) {
     * (database_logic.py:1155-1175 — "all of its items are also cleaned
     * up... avoiding orphaned items").
     */
-  def deleteCollection(id: String, existsInBase: String => Boolean): Unit =
+  def deleteCollection(id: String): Unit =
     synchronized {
-      val exists = collRevs.get(id) match {
-        case Some(CollRev(false, _)) => true
-        case Some(CollRev(true, _)) => false
-        case None => existsInBase(id) && !purgedBase.contains(id)
-      }
-      if (!exists) throw new TxnMissing(s"Collection $id does not exist")
+      if (!collectionExists(id)) throw new TxnMissing(s"Collection $id does not exist")
       collRevs.put(id, CollRev(deleted = true, "{}"))
       itemRevs.keys.filter(_._1 == id).foreach(itemRevs.remove)
       purgedBase.put(id, ())

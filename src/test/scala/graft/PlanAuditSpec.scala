@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.ops.Analytics
-import graft.search.StacSearch
+import graft.search.{SearchParams, SortBy, StacApi, StacSearch}
 
 /** Physical-plan audits (SURVEY.md §5): the 100 TB guarantees are plan
   * shapes, so they're asserted, not eyeballed.
@@ -648,5 +648,20 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(graft.ops.Similarity.c38Lanes(8, 16) == 1)
     assert(graft.ops.Similarity.c38Lanes(10000, 16) >
       graft.ops.Similarity.c38Lanes(32, 16))
+  }
+
+  test("serving: a Feature search is ONE pass that builds no JSON and " +
+      "reads no props — the document is projected over the page only") {
+    val ran = JobCount(s)(StacApi.searchFeaturesOn(Tables.items(s, sf),
+      SearchParams(collections = Seq("click", "view"),
+        sortBy = Seq(SortBy("datetime", desc = true)), limit = 10)))
+    assert(ran.result._1.length == 10)
+    assert(ran.jobs == 1, ran)
+    val scans = ran.plans.filter(_.contains("ReadSchema"))
+    assert(scans.size == 1, ran.plans.mkString("\n----\n"))
+    val p = scans.head
+    assert(!p.contains("to_json"), p)
+    assert(!p.split('\n').exists(l => l.contains("ReadSchema") && l.contains("props")), p)
+    assert(p.split('\n').exists(l => l.contains("ReadSchema") && l.contains("user_id")), p)
   }
 }

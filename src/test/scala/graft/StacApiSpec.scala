@@ -1,10 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.search.{SearchParams, SortBy, StacApi}
+import graft.search.{SearchParams, SortBy, StacApi, StacSearch, TxnStore}
 
 class StacApiSpec extends AnyFunSuite {
   private val s = TestSpark.spark
@@ -478,5 +479,136 @@ class StacApiSpec extends AnyFunSuite {
     val b = StacApi.search(s, sf, SearchParams(intersects = SearchParams.geoJson(gj), limit = 1_000_000, withCount = false))
     val idsA = a.items.map(_.getAs[String]("id")).toSeq
     assert(idsA.nonEmpty && idsA == b.items.map(_.getAs[String]("id")).toSeq)
+  }
+
+  // -------- the one-pass pager against the two-step reference: a sorted
+  // offset/limit collect for the page plus a separate count
+
+  /** (ids, numMatched, next token) of one reference page at `off`. */
+  private def referencePage(items: DataFrame, p: SearchParams, off: Int,
+                            offsetToken: Boolean): (Seq[String], Long, Option[String]) = {
+    val filtered = StacApi.plan(items, p)
+    val schema = filtered.columns.toSeq
+    val sorts = p.sortBy.flatMap(sb =>
+      StacSearch.resolveField(sb.field, schema).map(_ -> sb.desc)) :+ ("id" -> false)
+    val rows = filtered.orderBy(sorts.map { case (f, d) => if (d) col(f).desc else col(f).asc }: _*)
+      .offset(off).limit(p.limit + 1).collect()
+    val items0 = rows.take(p.limit)
+    def keyset(r: Row): String = sorts.map { case (f, _) =>
+      Option(r.get(r.fieldIndex(f))).map(_.toString).getOrElse("\u0002")
+    }.mkString("\u0001")
+    val next =
+      if (rows.length <= p.limit) None
+      else if (offsetToken) Some(s"off:${off + p.limit}")
+      else Some("ks:" + keyset(items0.last))
+    (items0.map(_.getAs[String]("id")).toSeq,
+      if (p.withCount) filtered.count() else -1L, next)
+  }
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** First, `ks:` and `off:` pages of `p` through both StacApi paths,
+    * each against the reference.
+    */
+  private def assertPagesMatch(items: DataFrame, p: SearchParams, offAt: Int): Unit = {
+    val first = StacApi.searchOn(items, p)
+    val firstRef = referencePage(items, p, 0, offsetToken = false)
+    val pages = Seq((None, 0, false), (Some(s"off:$offAt"), offAt, true)) ++
+      first.nextToken.map(t => (Some(t), p.limit, false))
+    pages.foreach { case (token, off, offsetToken) =>
+      val q = p.copy(token = token)
+      val ref = referencePage(items, q, off, offsetToken)
+      val typed = StacApi.searchOn(items, q)
+      assert((typed.items.map(_.getAs[String]("id")).toSeq, typed.numMatched,
+        typed.nextToken) == ref, s"typed $q")
+      if (q.include.isEmpty && q.exclude.isEmpty) {
+        val (docs, matched, next) = StacApi.searchFeaturesOn(items, q)
+        val ids = docs.map(d => mapper.readTree(d).get("id").asText).toSeq
+        assert((ids, matched, next) == ref, s"features $q")
+      }
+    }
+    assert(first.nextToken == firstRef._3)
+  }
+
+  private val sortCases = Seq(
+    Nil,
+    Seq(SortBy("datetime")),
+    Seq(SortBy("datetime", desc = true)),
+    Seq(SortBy("datetime"), SortBy("properties.value", desc = true)))
+
+  test("one-pass pager ≡ plan + orderBy/offset/limit + count: first, ks: " +
+      "and off: pages over seeded searches") {
+    val rng = new scala.util.Random(1017)
+    val all = Seq("click", "view", "purchase", "error", "signup")
+    val items = Tables.items(s, sf)
+    (0 until 8).foreach { i =>
+      val colls = rng.shuffle(all).take(1 + rng.nextInt(3))
+      val bbox = if (rng.nextBoolean()) Some((-150.5, -70.5, 150.5, 70.5)) else None
+      val p = SearchParams(collections = colls, bbox = bbox,
+        sortBy = sortCases(i % sortCases.size), limit = 2 + rng.nextInt(20),
+        withCount = i % 3 != 2)
+      assertPagesMatch(items, p, rng.nextInt(40))
+    }
+    // limit = 1, and a limit above the match count (no next token)
+    assertPagesMatch(items, SearchParams(collections = Seq("view"),
+      sortBy = sortCases(2), limit = 1), 3)
+    val few = SearchParams(ids = Seq("1", "2", "3", "4"), sortBy = sortCases(3), limit = 50)
+    assert(StacApi.searchOn(items, few).nextToken.isEmpty)
+    assertPagesMatch(items, few, 1)
+    // fields include and exclude on the typed path
+    assertPagesMatch(items, SearchParams(collections = Seq("click"),
+      sortBy = sortCases(3), include = Seq("properties.value"), limit = 6), 5)
+    assertPagesMatch(items, SearchParams(collections = Seq("click"),
+      sortBy = sortCases(2), exclude = Seq("props", "datetime"), limit = 6), 5)
+  }
+
+  test("one-pass pager ≡ the reference over a TxnStore overlay view with a " +
+      "created, a patched and a deleted item") {
+    val store = new TxnStore(s, sf)
+    def idOf(c: String): String = Tables.items(s, sf).where(col("collection") === c)
+      .orderBy(col("id")).select("id").head().getString(0)
+    val (patched, deleted) = (idOf("view"), idOf("purchase"))
+    store.createItem("click", """{"type":"Feature","id":"ovl-1","geometry":
+      |{"type":"Point","coordinates":[1.5,2.5]},"properties":
+      |{"datetime":"2024-01-09T10:00:00","value":77.25,"user_id":3}}""".stripMargin)
+    store.patchItem("view", patched, """{"properties":{"value":999.5}}""")
+    store.deleteItem("purchase", deleted)
+    val view = store.itemsView()
+    val ids = view.select("id").collect().map(_.getString(0)).toSet
+    assert(ids.contains("ovl-1") && !ids.contains(deleted))
+    assert(view.where(col("id") === patched).select("value").head().getDouble(0) == 999.5)
+    assert(view.count() == Tables.items(s, sf).count())
+    sortCases.zipWithIndex.foreach { case (sorts, i) =>
+      assertPagesMatch(view, SearchParams(collections = Seq("click", "view", "purchase"),
+        sortBy = sorts, limit = 4 + i, withCount = i != 1), 2 + i)
+    }
+  }
+
+  test("searchFeaturesOn runs ONE Spark job per page — first, ks: and off: — " +
+      "with and without an overlay write") {
+    val store = new TxnStore(s, sf)
+    val p = SearchParams(collections = Seq("click", "view"),
+      sortBy = Seq(SortBy("datetime", desc = true)), limit = 5)
+    def jobsPerPage(): Seq[Int] = {
+      val items = store.itemsView()
+      val ks = StacApi.searchFeaturesOn(items, p)._3
+      assert(ks.exists(_.startsWith("ks:")))
+      Seq(None, ks, Some("off:7")).map(t =>
+        JobCount(s)(StacApi.searchFeaturesOn(items, p.copy(token = t))).jobs)
+    }
+    assert(jobsPerPage() == Seq(1, 1, 1))
+    store.createItem("click", """{"type":"Feature","id":"jobs-1","geometry":
+      |{"type":"Point","coordinates":[1.5,2.5]},"properties":{"value":5.0}}""".stripMargin)
+    assert(store.hasItemChanges)
+    assert(jobsPerPage() == Seq(1, 1, 1))
+  }
+
+  test("malformed page tokens are typed errors: negative or oversized " +
+      "offsets, a keyset with the wrong field count") {
+    val p = SearchParams(collections = Seq("click"), sortBy = Seq(SortBy("value", desc = true)))
+    Seq("off:-5", "off:2147483647", "ks:12.5", "ks:1\u00012\u00013", "nope")
+      .foreach { t =>
+        intercept[IllegalArgumentException](StacApi.search(s, sf, p.copy(token = Some(t))))
+      }
   }
 }

@@ -329,6 +329,22 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(code2 == 400)
     val (code3, _) = get("/no/such/route")
     assert(code3 == 404)
+    // malformed page tokens: a negative offset, an offset whose page bound
+    // overflows an Int, a keyset token with the wrong field count
+    Seq("/search?token=off:-5", "/search?token=off:2147483647",
+      "/search?sortby=-value&token=ks:12.5").foreach { path =>
+      val (c, e) = get(path)
+      assert(c == 400 && e.get("code").asText == "BadRequest", s"$path: $e")
+    }
+  }
+
+  test("/collections/{id}/items runs ONE Spark job once the collection set " +
+      "is filled; an unknown collection is a 404 with no job") {
+    assert(get("/collections/view/items?limit=3")._1 == 200) // fills the set
+    val items = JobCount(s)(get("/collections/view/items?limit=3"))
+    assert(items.result._1 == 200 && items.jobs == 1, items)
+    val unknown = JobCount(s)(get("/collections/nope/items"))
+    assert(unknown.result._1 == 404 && unknown.jobs == 0, unknown)
   }
 
   test("transactions (r12): create → search → patch → delete over real " +
