@@ -24,7 +24,7 @@ object Bench {
       // (c89 2.6 → 1.2 s) but costs ~0.2 s on EVERY gate (full sweep
       // 124 → 163 s): the async unpersist storm and post-GC warmup tax
       // the next gate's timed run. The targeted sweep is the better trade.
-      Harness.sweep(spark, graft.core.FrameMemo.ownedRddIds(spark))
+      Harness.sweep(spark)
       name -> best.getOrElse(-1.0)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }

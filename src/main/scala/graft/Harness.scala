@@ -94,13 +94,14 @@ object Harness {
     * localCheckpoint blocks are garbage once its runs finish, but they stay
     * until a driver GC lets ContextCleaner collect them, and storage from
     * early gates taxed late gates 4-14× mid-sweep. Everything persistent
-    * outside `keep` is unpersisted — FrameMemo frames are shared across
-    * gates, and unpersisting a localCheckpoint'd RDD makes it unrecoverable,
-    * so callers pass the memo's blocks as the keep set. The expected
-    * "locally checkpointed … cannot be recomputed" WARN per RDD is silenced
-    * for the sweep only.
+    * is unpersisted except the blocks memoized frames hold
+    * ([[core.Memo.ownedRddIds]]): those are shared across gates, and
+    * unpersisting a localCheckpoint'd RDD makes it unrecoverable. The
+    * expected "locally checkpointed … cannot be recomputed" WARN per RDD
+    * is silenced for the sweep only.
     */
-  def sweep(spark: SparkSession, keep: Set[Int]): Unit = {
+  def sweep(spark: SparkSession): Unit = {
+    val keep = core.Memo.ownedRddIds(spark)
     val logger = "org.apache.spark.rdd.MapPartitionsRDD"
     val prev = LogManager.getLogger(logger).getLevel
     Configurator.setLevel(logger, Level.ERROR)
@@ -187,7 +188,7 @@ object Harness {
           jobs.drain().foreach(println)
         })
         println(best.fold(s"== $gate FAILED")(b => f"== $gate best: $b%.2f s"))
-        sweep(spark, core.FrameMemo.ownedRddIds(spark))
+        sweep(spark)
       }
     }
 

@@ -15,20 +15,16 @@ import org.apache.spark.sql.functions._
   * pruning always applies.
   */
 object Tables {
-  /** Resolved-plan cache: `spark.read.parquet` re-lists files and re-reads
-    * the footer schema on every call — a fixed per-query tax that dominates
-    * small benchmarks and is pure waste at any scale (a production catalog
-    * caches its FileIndex the same way). Keyed on the SESSION OBJECT, like
-    * [[FrameMemo]], so test/driver sessions never share plans. Caches the
-    * PLAN, not data — no .cache().
+  /** The table's resolved plan, memoized per session ([[Memo]]):
+    * `spark.read.parquet` re-lists files and re-reads the footer schema on
+    * every call — a fixed per-query tax that dominates small benchmarks
+    * and is pure waste at any scale (a production catalog caches its
+    * FileIndex the same way). So a session pins the listing it first
+    * sees. Caches the PLAN, not data — no .cache().
     */
-  private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // evict plans owned by STOPPED sessions: they can never be hit again
-    planCache.keySet().removeIf(_._1.sparkContext.isStopped)
-    planCache.computeIfAbsent((spark, s"$dir/$name.parquet"), k => spark.read.parquet(k._2))
+    val path = s"$dir/$name.parquet"
+    Memo(spark, s"table:$path")(spark.read.parquet(path))
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
@@ -69,14 +65,8 @@ object Tables {
     * costs one physical planning of the scan (no job runs — partitions
     * come from the FileIndex, whose listing [[load]] already memoizes).
     */
-  private val scanWidthCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Integer]()
-
-  private def scanWidth(s: SparkSession, d: String, name: String): Int = {
-    scanWidthCache.keySet().removeIf(_._1.sparkContext.isStopped)
-    scanWidthCache.computeIfAbsent((s, s"$d/$name"),
-      _ => load(s, d, name).rdd.getNumPartitions)
-  }
+  private def scanWidth(s: SparkSession, d: String, name: String): Int =
+    Memo(s, s"scanwidth:$d/$name")(load(s, d, name).rdd.getNumPartitions)
 
   /** [[documents]] rebalanced across cores BEFORE an expensive per-doc
     * projection (the c26/c103 doctrine, shared): the corpus parquet is

@@ -83,7 +83,7 @@ object Dedup {
   // it): at deployment the candidate-pair frame is a persisted artifact
   // right next to the bucket index
   private[ops] def c2Pairs(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"c2pairs:$d")(
+    graft.core.Memo.frame(s, s"c2pairs:$d")(
       pairsFromBands(c2Bands(s, d)))
 
   /** Per-document LSH band keys `(doc_id, band, bkey)` — C2's bucket
@@ -97,11 +97,11 @@ object Dedup {
     * bucket-state table); C67 probes it with an increment.
     */
   private def c2Bands(s: SparkSession, d: String): DataFrame =
-    // staged once per session (FrameMemo): the persisted bucket index is
+    // staged once per session (core.Memo): the persisted bucket index is
     // consumed by C2, C18, C47, C67 and C98's calibration; derives from
     // the staged signature frame so the MinHashSig kernel runs once per
     // session for the whole family
-    graft.core.FrameMemo.cached(s, s"c2bands:$d")(bandsOfSig(mhSig(s, d)))
+    graft.core.Memo.frame(s, s"c2bands:$d")(bandsOfSig(mhSig(s, d)))
 
   /** Band keys over a prebuilt (doc_id, mh) signature frame. */
   private def bandsOfSig(sig: DataFrame): DataFrame = {
@@ -118,7 +118,7 @@ object Dedup {
     * reads the raw lanes.
     */
   private[ops] def mhSig(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"mhsig:$d")(
+    graft.core.Memo.frame(s, s"mhsig:$d")(
       Tables.documents(s, d)
         .where(expr(s"size($wordsSpark) >= 3"))
         .select(col("doc_id"),
@@ -298,11 +298,11 @@ object Dedup {
       .agg(array_sort(collect_list(col("doc_id"))).as("ds"))
       .where(size(col("ds")) <= dfCap)
 
-  /** The corpus postings, staged once per session (FrameMemo) — C4 and
+  /** The corpus postings, staged once per session (core.Memo) — C4 and
     * C56 read the same table.
     */
   private def corpusPostings(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"postings:$d")(
+    graft.core.Memo.frame(s, s"postings:$d")(
       cappedPostings(Tables.documents(s, d)))
 
   def c4DedupJaccard(s: SparkSession, d: String): DataFrame = {
@@ -646,9 +646,9 @@ object Dedup {
     // transform-lambda form pays an interpreted md5 expression tree per
     // shingle and was 2.6× the oracle at sf0.1 (parity asserted in
     // GraftFunctionsSpec; the oracle still computes the HOF form).
-    // FrameMemo: one build per session — C24, C40 and C70's distinct
+    // core.Memo: one build per session — C24, C40 and C70's distinct
     // projection all read the same staged shingle table.
-    graft.core.FrameMemo.cached(s, s"p8grams:$d")(
+    graft.core.Memo.frame(s, s"p8grams:$d")(
       Tables.documentsRebalanced(s, d) // kernel off the 1-partition scan
         .where(expr(s"size($wordsSpark) >= $passageLen"))
         .select(col("doc_id"), posexplode(
@@ -748,13 +748,12 @@ object Dedup {
     Staged.path("clusters", c18StateVersion, d, "documents")
   private final val c18StateVersion = 1
 
-  // session-local memo via FrameMemo (r13): the former private
-  // ConcurrentHashMap was keyed on the DIR alone, so (a) a new session
-  // could be handed a frame whose checkpoint blocks died with the old
-  // one, and (b) the bench's between-gate block-store sweep (which keeps
-  // only FrameMemo-owned blocks) unpersisted it mid-sweep
+  // session-local memo via core.Memo: a map keyed on the DIR alone would
+  // (a) hand a new session a frame whose checkpoint blocks died with the
+  // old one, and (b) lose the frame to the bench's between-gate
+  // block-store sweep, which keeps only blocks that memo frames hold
   def c18DupClusters(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"c18clusters:$d") {
+    graft.core.Memo.frame(s, s"c18clusters:$d") {
       val p = Staged("clusters", c18StateVersion, d, "documents")(
         c18DupClustersCompute(s, d).write.parquet(_))
       s.read.parquet(p).orderBy(col("doc_id"))
@@ -1540,16 +1539,14 @@ object Dedup {
     * a larger fixture, inverting the workload the operator models). The
     * oracle is the full-corpus closure, so gate correctness is split-
     * independent; only the work distribution depends on it. Memoized per
-    * dir (the probe is one stats-only max over doc_id).
+    * session (the probe is one stats-only max over doc_id), so it agrees
+    * with the documents listing the session's c67 state derives from.
     */
-  private val c67SplitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[graft] def c67SplitFor(s: SparkSession, d: String): Long =
-    c67SplitMemo.computeIfAbsent(d, _ => {
+    graft.core.Memo(s, s"c67split:$d") {
       val n = Tables.documents(s, d).agg(max(col("doc_id"))).head().getLong(0) + 1
-      java.lang.Long.valueOf(n * 4 / 5)
-    })
+      n * 4 / 5
+    }
 
   private[graft] def c67StatePath(s: SparkSession, d: String): String =
     Staged("clusterstate", 1, d, "documents") { p =>
@@ -1793,7 +1790,7 @@ object Dedup {
       .select(col("d1"), col("d2"),
         expr(s"CAST(size(filter(zip_with(mh1, mh2, (a, b) -> a = b), x -> x)) " +
           s"* 10000 DIV $nLanes AS BIGINT)").as("est_bp"))
-    val gr = graft.core.FrameMemo.cached(s, s"c98grams:$d") {
+    val gr = graft.core.Memo.frame(s, s"c98grams:$d") {
       val docsIn = pairs.select(explode(array(col("d1"), col("d2"))).as("doc_id"))
         .distinct()
       Tables.documents(s, d).join(docsIn, "doc_id")

@@ -780,7 +780,7 @@ object Similarity {
     * previous centroid.
     */
   private[graft] def trainCentroids(s: SparkSession, d: String): Array[Array[Double]] =
-    centroidsMemo.getOrElseUpdate(memoKey(d), trainCentroidsUncached(s, d))
+    graft.core.Memo(s, s"centroids:$d")(trainCentroidsUncached(s, d))
 
   private def trainCentroidsUncached(s: SparkSession, d: String): Array[Array[Double]] = {
     val sample = kmSample(s, d)
@@ -978,24 +978,13 @@ object Similarity {
     * size), re-sorted to vec_id order for the sequential accumulators.
     */
   // Trainer memo: sample + trained artifacts are pure functions of the
-  // fixture CONTENT, and seven ANN gates each re-derive them — cache per
-  // (dir + file fingerprint) so the sample collect job and the Lloyd
-  // loops run once per corpus snapshot, not once per gate, and data
-  // regenerated in place under the same path can never serve stale
-  // centroids/codebooks (r9 ADVICE). In a real deployment this is the
-  // persisted codebook/centroid artifact table (C50's shape).
-  private val kmSampleMemo =
-    new scala.collection.concurrent.TrieMap[String, Array[(Long, Array[Double])]]
-  private val centroidsMemo =
-    new scala.collection.concurrent.TrieMap[String, Array[Array[Double]]]
-  private val pqMemo =
-    new scala.collection.concurrent.TrieMap[String, Array[Array[Array[Double]]]]
-
-  private def memoKey(d: String): String =
-    d + ":" + graft.core.FixtureGuard.fingerprint(d, "embeddings")
-
+  // fixture content, and seven ANN gates each re-derive them — memoized
+  // per session (core.Memo), so the sample collect job and the Lloyd
+  // loops run once per session over the listing Tables.load pins, not
+  // once per gate. In a real deployment this is the persisted
+  // codebook/centroid artifact table (C50's shape).
   private[graft] def kmSample(s: SparkSession, d: String): Array[(Long, Array[Double])] =
-    kmSampleMemo.getOrElseUpdate(memoKey(d),
+    graft.core.Memo(s, s"kmsample:$d")(
       prepared(s, d)
         .orderBy(md5(concat(lit("km:"), col("vec_id").cast("string"))), col("vec_id"))
         .limit(kmSampleCap)
@@ -1004,7 +993,7 @@ object Similarity {
         .sortBy(_._1))
 
   private[ops] def trainPq(s: SparkSession, d: String): Array[Array[Array[Double]]] =
-    pqMemo.getOrElseUpdate(memoKey(d), trainPqOn(kmSample(s, d)))
+    graft.core.Memo(s, s"pq:$d")(trainPqOn(kmSample(s, d)))
 
   /** The per-subspace Lloyd loop over an arbitrary 64-dim sample — raw
     * vectors for C33, coarse-assignment residuals for C35.

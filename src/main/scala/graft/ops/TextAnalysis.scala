@@ -2319,7 +2319,7 @@ object TextAnalysis {
     * consumed by every downstream split decision.
     */
   private def c104Memo(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"c104buckets:$d")(
+    graft.core.Memo.frame(s, s"c104buckets:$d")(
       c104BucketsWith(s, d, c104BroadcastMaxVocab))
 
   def c104NgramLm(s: SparkSession, d: String): DataFrame =
@@ -2367,10 +2367,10 @@ object TextAnalysis {
   // unigram counts, bigram counts; in a deployment these are the
   // persisted model tables every scoring job (batch or stream) joins
   private def c104CorpusTok(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"c104tok:$d")(c104TokOf(docs(s, d)))
+    graft.core.Memo.frame(s, s"c104tok:$d")(c104TokOf(docs(s, d)))
 
   private def c104Uni(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"c104uni:$d")(
+    graft.core.Memo.frame(s, s"c104uni:$d")(
       docs(s, d)
         .select(col("doc_id"), expr(wordsSpark).as("w"))
         .where(expr("size(w) >= 2"))
@@ -2379,7 +2379,7 @@ object TextAnalysis {
         .groupBy(col("uh")).agg(count(lit(1)).as("cu")))
 
   private def c104Big(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"c104big:$d")(
+    graft.core.Memo.frame(s, s"c104big:$d")(
       c104CorpusTok(s, d).groupBy(col("hb")).agg(count(lit(1)).as("cb")))
 
   /** Score a token stream against the trained tables — the join+agg

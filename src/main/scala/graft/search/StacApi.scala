@@ -80,27 +80,28 @@ object SearchParams {
   def fromSearchBody(json: String): SearchParams = {
     val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
     import scala.jdk.CollectionConverters._
+    type Node = com.fasterxml.jackson.databind.JsonNode
     def node(f: String) = Option(m.get(f)).filterNot(_.isNull)
-    def strs(f: String): Seq[String] =
-      node(f).map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
-    val bbox = node("bbox").map { b =>
-      val a = b.elements().asScala.map(_.asDouble).toIndexedSeq
-      // the reference rejects malformed bboxes with a 400/422
-      // (tests/api/test_api.py:206-212) — mirror that contract with a
-      // typed error instead of an index crash
-      if (a.length != 4 && a.length != 6)
-        throw new IllegalArgumentException(
-          s"bbox must have 4 (2D) or 6 (3D) coordinates, got ${a.length}")
-      if (a.length == 6) (a(0), a(1), a(3), a(4)) else (a(0), a(1), a(2), a(3))
+    // a member of the wrong JSON type is a 400, never silently ignored:
+    // Jackson iterates a non-array as empty, which would widen the search
+    def elements(n: Node, f: String): Seq[Node] = {
+      if (!n.isArray) throw new IllegalArgumentException(s"$f must be a JSON array")
+      n.elements().asScala.toSeq
     }
-    val sorts = node("sortby").map(_.elements().asScala.map { sn =>
-      SortBy(sn.get("field").asText,
-        Option(sn.get("direction")).exists(_.asText == "desc"))
-    }.toSeq).getOrElse(Nil)
+    def strs(f: String): Seq[String] =
+      node(f).map(elements(_, f).map(_.asText)).getOrElse(Nil)
+    val bbox = node("bbox").map(b => bboxOf(elements(b, "bbox").map(_.asDouble).toIndexedSeq))
+    val sorts = node("sortby").map(elements(_, "sortby").map { sn =>
+      val field = Option(sn.get("field")).filter(_.isTextual).getOrElse(
+        throw new IllegalArgumentException("each sortby entry needs a string \"field\""))
+      SortBy(field.asText, Option(sn.get("direction")).exists(_.asText == "desc"))
+    }).getOrElse(Nil)
     val fieldsNode = node("fields")
+    if (fieldsNode.exists(!_.isObject))
+      throw new IllegalArgumentException("fields must be a JSON object")
     def fieldList(k: String): Seq[String] =
-      fieldsNode.flatMap(fn => Option(fn.get(k)))
-        .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
+      fieldsNode.flatMap(fn => Option(fn.get(k)).filterNot(_.isNull))
+        .map(elements(_, s"fields.$k").map(_.asText)).getOrElse(Nil)
     SearchParams(
       collections = strs("collections"),
       ids = strs("ids"),
@@ -116,6 +117,18 @@ object SearchParams {
       token = node("token").map(_.asText),
       include = fieldList("include"),
       exclude = fieldList("exclude"))
+  }
+
+  /** A 2D (4) or 3D (6, elevation dropped per the STAC spec) bbox as
+    * (minx, miny, maxx, maxy). The reference rejects malformed bboxes with
+    * a 400/422 (tests/api/test_api.py:206-212), so any other arity is an
+    * IllegalArgumentException rather than an index crash.
+    */
+  private[search] def bboxOf(a: IndexedSeq[Double]): (Double, Double, Double, Double) = {
+    if (a.length != 4 && a.length != 6)
+      throw new IllegalArgumentException(
+        s"bbox must have 4 (2D) or 6 (3D) coordinates, got ${a.length}")
+    if (a.length == 6) (a(0), a(1), a(3), a(4)) else (a(0), a(1), a(2), a(3))
   }
 
   /** Flat polygon ring [x0,y0,x1,y1,…] (closure vertex optional) →

@@ -250,13 +250,8 @@ object StacHttp {
     * cql2-TEXT unless `filter-lang=cql2-json`.
     */
   private[search] def paramsFromQuery(q: Map[String, String]): SearchParams = {
-    val bbox = q.get("bbox").map { s =>
-      val a = s.split(",").map(_.trim.toDouble).toIndexedSeq
-      if (a.length != 4 && a.length != 6)
-        throw new IllegalArgumentException(
-          s"bbox must have 4 (2D) or 6 (3D) coordinates, got ${a.length}")
-      if (a.length == 6) (a(0), a(1), a(3), a(4)) else (a(0), a(1), a(2), a(3))
-    }
+    val bbox = q.get("bbox").map(s =>
+      SearchParams.bboxOf(s.split(",").map(_.trim.toDouble).toIndexedSeq))
     val fields = q.get("fields").map(csv).getOrElse(Nil)
     val (excF, incF) = fields.partition(_.startsWith("-"))
     val sorts = q.get("sortby").map(csv).getOrElse(Nil).map {

@@ -2150,10 +2150,23 @@ object StacSearch {
        |ORDER BY id""".stripMargin
   }
 
+  /** The catalog gates' skip requirement: some file must be
+    * footer-pruned, or sharding or pushdown is broken. Read off the scan's
+    * own explain accounting once per (session, exported catalog) —
+    * planning the query twice per call just to parse the same constant
+    * out of it is pure gate overhead. A failed check is not memoized.
+    */
+  private def requirePruned(s: SparkSession, gate: String, out: String,
+                            df: DataFrame, failure: String): Unit =
+    graft.core.Memo(s, s"${gate}checked:$out") {
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      val m = """footer-pruned files (\d+)/(\d+)""".r.findFirstMatchIn(plan)
+      require(m.exists(g => g.group(1).toInt < g.group(2).toInt), s"$failure:\n$plan")
+    }
+
   // ------------- A87 catalog DataSource V2: plan-time footer prune
   @volatile private var a87Dir: String = "unset"
-  private val a87Checked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** A87: the A85 footer prune moved INTO THE PLANNER — the catalog read
     * as a DataSource V2 (`graft.sources.GeoCatalogSource`): the SAME
@@ -2175,16 +2188,8 @@ object StacSearch {
     val df = s.read.format("graft.sources.GeoCatalogSource").load(out)
       .where(col("bbox.xmin") <= e && col("bbox.xmax") >= w &&
         col("bbox.ymin") <= n && col("bbox.ymax") >= so)
-    // the skip check reads the scan's own explain accounting — once per
-    // exported catalog (planning the query twice per call just to parse
-    // the same constant out of it is pure gate overhead)
-    if (a87Checked.add(out)) {
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      val m = """footer-pruned files (\d+)/(\d+)""".r.findFirstMatchIn(plan)
-      require(m.exists(g => g.group(1).toInt < g.group(2).toInt),
-        s"planner prune skipped nothing — spatial sharding or pushdown broken:\n$plan")
-    }
+    requirePruned(s, "a87", out, df,
+      "planner prune skipped nothing — spatial sharding or pushdown broken")
     df.select(col("id"), col("collection"),
         col("bbox.xmin").as("xmin"), col("bbox.ymin").as("ymin"),
         col("bbox.xmax").as("xmax"), col("bbox.ymax").as("ymax"))
@@ -2204,8 +2209,6 @@ object StacSearch {
 
   // ----- A89 collection + datetime FILE prune on the catalog DSv2 (r11)
   @volatile private var a89Dir: String = "unset"
-  private val a89Checked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** A89: the catalog prune completed beyond bbox (r10 verdict Missing
     * #2) — the reference routes per-collection scans by FILE
@@ -2242,13 +2245,7 @@ object StacSearch {
           col("start_datetime") <= tsn(a89Hi) && col("end_datetime") >= tsn(a89Lo))
     val df = s.read.format("graft.sources.GeoCatalogSource").load(out)
       .where(col("collection").isin("click", "view") && dtPred)
-    if (a89Checked.add(out)) {
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      val m = """footer-pruned files (\d+)/(\d+)""".r.findFirstMatchIn(plan)
-      require(m.exists(g => g.group(1).toInt < g.group(2).toInt),
-        s"collection+datetime prune skipped nothing:\n$plan")
-    }
+    requirePruned(s, "a89", out, df, "collection+datetime prune skipped nothing")
     df.select(col("id"), col("collection"),
         col("datetime").cast("timestamp").as("datetime"),
         col("start_datetime").cast("timestamp").as("start_datetime"),
@@ -2460,14 +2457,14 @@ object StacSearch {
     featureJsonFrame(s, d).select(col("id"), col("f"))
 
   /** The serialized feature corpus (id, id_num, f), staged once per
-    * session (FrameMemo): A43's ingest round-trip and A57's tolerant
+    * session (core.Memo): A43's ingest round-trip and A57's tolerant
     * ingest both pay the full-corpus serialize otherwise. Sorted by id
     * BELOW the serialize per the a43Source doctrine; the checkpoint
     * materializes partitions in that order, so consumers relying on the
     * global id order (a43's deterministic output) keep it.
     */
   private def featureJsonFrame(s: SparkSession, d: String): DataFrame =
-    graft.core.FrameMemo.cached(s, s"featjson:$d")(
+    graft.core.Memo.frame(s, s"featjson:$d")(
       withEnvelope(items(s, d)).orderBy(col("id"))
         .select(col("id"), col("id_num"), featureJsonCol.as("f")))
 

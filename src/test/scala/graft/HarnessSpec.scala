@@ -41,11 +41,11 @@ class HarnessSpec extends AnyFunSuite {
     Configurator.setLevel(name, Level.INFO)
     try {
       val sc = s.sparkContext
-      val keep = sc.getPersistentRDDs.keySet.toSet
       val rdd = sc.parallelize(1 to 10).map(_ * 2).cache()
       rdd.count()
       assert(sc.getPersistentRDDs.contains(rdd.id))
-      Harness.sweep(s, keep)
+      assert(!graft.core.Memo.ownedRddIds(s).contains(rdd.id))
+      Harness.sweep(s)
       assert(!sc.getPersistentRDDs.contains(rdd.id))
       assert(LogManager.getLogger(name).getLevel == Level.INFO)
     } finally Configurator.setLevel(name, original)

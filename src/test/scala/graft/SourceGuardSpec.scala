@@ -11,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *    use the catalog as a marker.
   *  - The computed-extents collections query runs only where a collection
   *    document is returned, never as a per-request existence check.
+  *  - In-memory caches have one home: outside `core/Memo.scala`, only the
+  *    named owners of non-cache state hold a concurrent map.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val forbidden = Seq("\"_SUCCESS\"", "\"_DONE\"", "java.io.tmpdir",
@@ -59,6 +61,21 @@ class SourceGuardSpec extends AnyFunSuite {
       if !(f.getName == "StacApi.scala" && owner == "collections")
       if !(f.getName == "StacSearch.scala" && owner.matches("a\\d+\\w*"))
     } yield s"${f.getPath}:${n + 1}: in $owner: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("only core/Memo.scala holds an in-memory cache map") {
+    val files = sources(new File("src/main"))
+    assert(files.exists(_.getPath.endsWith("core/Memo.scala")), "not run from the repo root")
+    // the write overlay's revision maps, the job log's listener
+    // bookkeeping and the listing-signature-checked footer memo
+    val owners = Seq("core/Memo.scala", "search/TxnStore.scala", "graft/Harness.scala",
+      "core/GeoParquet.scala")
+    val hits = for {
+      f <- files if !owners.exists(f.getPath.endsWith)
+      (line, n) <- lines(f).zipWithIndex
+      token <- Seq("TrieMap", "ConcurrentHashMap") if line.contains(token)
+    } yield s"${f.getPath}:${n + 1}: $token"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -336,6 +336,15 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (c, e) = get(path)
       assert(c == 400 && e.get("code").asText == "BadRequest", s"$path: $e")
     }
+    // POST /search members of the wrong JSON type: a string where an
+    // array belongs, a non-array include list, sortby entries with no
+    // field or not in an array
+    Seq("""{"collections":"click"}""", """{"ids":"5"}""",
+      """{"fields":{"include":"id"}}""", """{"sortby":[{"direction":"desc"}]}""",
+      """{"sortby":{"field":"value"}}""").foreach { body =>
+      val (c, e) = post("/search", body)
+      assert(c == 400 && e.get("code").asText == "BadRequest", s"$body: $e")
+    }
   }
 
   test("/collections/{id}/items runs ONE Spark job once the collection set " +
