@@ -147,8 +147,6 @@ object Harness {
 
   /** docs/PLANS.md: one plan per caption, the plan shapes worth keeping in view. */
   private val planCaptions = Seq(
-    "a22_combined_search" -> "Flagship search: every filter pushed, TakeOrderedAndProject page",
-    "a18_count" -> "numMatched: count over pruned columns only",
     "a35_footprint_intersects" -> "Box-footprint ∩ concave polygon: envelope prune + codegen'd exact kernel",
     "b5_star_join" -> "Star join: all dimensions broadcast",
     "b18_asof_join" -> "As-of join: union-merge, ONE shuffle+sort, running last() window",

@@ -738,10 +738,6 @@ object GeoParquet {
     })._2
   }
 
-  /** Per-file row counts — see [[footerInfo]]. */
-  def footerRowCounts(out: String): Map[String, Long] =
-    footerInfo(out).map { case (k, f) => k -> f.rows }
-
   def readGeoMeta(file: String): GeoMeta = {
     val in = HadoopInputFile.fromPath(new Path(file), sharedConf)
     val reader = ParquetFileReader.open(in)

@@ -524,12 +524,6 @@ object Dedup {
     math.max(1, math.ceil(math.log1p(-targetRecall) / math.log1p(-pTable)).toInt)
   }
 
-  /** Fully adaptive form: both knobs derived from the corpus size. */
-  def c20DedupEmbeddingLshAdaptive(s: SparkSession, d: String, n: Long): DataFrame = {
-    val planes = c20PlanesFor(n)
-    c20DedupEmbeddingLsh(s, d, c20TablesFor(planes), planes)
-  }
-
   private[graft] def c20Plane(t: Int, j: Int): Array[Double] =
     Array.tabulate(64)(i => ((TextExprs.h64Local(s"tb${t}_$j:$i") % 2001L) - 1000L) / 1000.0)
 
@@ -813,20 +807,11 @@ object Dedup {
     }
   }
 
-  /** Union-find with path compression over a collected edge list —
-    * union-by-min keeps every root the component's minimum node id, so
-    * after full compression `find(node)` IS the min label the
-    * distributed loop converges to (same output, one Spark job).
-    */
-  private[graft] def ccMinLabelDriver(edges: DataFrame): DataFrame = {
-    val s = edges.sparkSession
-    import s.implicits._
-    val es = edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
-    ccUnionFind(es, edges)
-  }
-
   /** Driver path over already-collected edge rows (the ccMinLabel probe —
-    * saves the second collect and the count job of the two-step form).
+    * saves the second collect and the count job of the two-step form):
+    * union-find with path compression — union-by-min keeps every root the
+    * component's minimum node id, so after full compression `find(node)`
+    * IS the min label the distributed loop converges to.
     */
   private def ccMinLabelDriverOn(rows: Array[org.apache.spark.sql.Row],
                                  edges: DataFrame): DataFrame =

@@ -54,13 +54,6 @@ object TextExprs {
   def norm2Duck(a: String): String =
     s"list_reduce(list_prepend(0.0, list_transform($a, x -> x * x)), (s, x) -> s + x)"
 
-  /** cosine(a, b) from the folds above — identical op order both engines. */
-  def cosSpark(a: String, b: String): String =
-    s"${dotSpark(a, b)} / (sqrt(${norm2Spark(a)}) * sqrt(${norm2Spark(b)}))"
-
-  def cosDuck(a: String, b: String): String =
-    s"${dotDuck(a, b)} / (sqrt(${norm2Duck(a)}) * sqrt(${norm2Duck(b)}))"
-
   /** Driver-side md5 60-bit hash — same value the engines compute; used to
     * derive deterministic constants (LSH hyperplanes) at plan-build time.
     */

@@ -31,6 +31,8 @@ final case class SortBy(field: String, desc: Boolean = false)
 final case class SearchParams(
     collections: Seq[String] = Nil,
     ids: Seq[String] = Nil,
+    // (west, south, east, north). west > east means the box crosses the
+    // antimeridian (RFC 7946 §5.2): lon >= west OR lon <= east.
     bbox: Option[(Double, Double, Double, Double)] = None,
     // ANY GeoJSON geometry (Point/MultiPoint/LineString/MultiLineString/
     // Polygon incl. holes/MultiPolygon/GeometryCollection) — the same
@@ -202,7 +204,7 @@ object StacApi {
     if (p.collections.nonEmpty) df = df.where(col("collection").isin(p.collections: _*))
     if (p.ids.nonEmpty) df = df.where(col("id").isin(p.ids: _*))
     p.bbox.foreach { case (w, s, e, n) =>
-      df = df.where(Geo.bboxContains(col("lon"), col("lat"), w, s, e, n))
+      df = df.where(Geo.bboxContainsWrap(col("lon"), col("lat"), w, s, e, n))
     }
     p.intersects.foreach { shape =>
       df = df.where(Geo.intersectsShape(col("lon"), col("lat"), shape))
@@ -330,13 +332,26 @@ object StacApi {
     }
   }
 
-  /** Reference datetime forms (database_logic.py:224-347). */
-  def datetimePredicate(dt: String): Column = dt.split("/", -1) match {
-    case Array(t)         => StacSearch.dtExact(t)
-    case Array(a, "..")   => StacSearch.dtOpenStart(a)
-    case Array("..", b)   => StacSearch.dtOpenEnd(b)
-    case Array(a, b)      => StacSearch.dtRange(a, b)
-    case _ => throw new IllegalArgumentException(s"bad datetime: $dt")
+  /** Reference datetime forms (database_logic.py:224-347); the DuckDB
+    * twins are StacSearch's `dt*Sql`. Interval-only items (datetime
+    * NULL) match by their [start_datetime, end_datetime]:
+    *  - `t`: datetime = t, or t inside the interval (:261-273);
+    *  - `a/b`: datetime in [a, b], or the interval overlaps it (:279-292);
+    *  - `a/..`: datetime >= a, or the interval ends at or after a (:293-302);
+    *  - `../b`: datetime <= b, or the interval starts at or before b (:303-312).
+    */
+  def datetimePredicate(dt: String): Column = {
+    def ts(t: String): Column = lit(t).cast("timestamp")
+    val (d, start, end) = (col("datetime"), col("start_datetime"), col("end_datetime"))
+    dt.split("/", -1) match {
+      case Array(t) =>
+        d === ts(t) || (d.isNull && start <= ts(t) && end >= ts(t))
+      case Array(a, "..") => d >= ts(a) || (d.isNull && end >= ts(a))
+      case Array("..", b) => d <= ts(b) || (d.isNull && start <= ts(b))
+      case Array(a, b) =>
+        (d >= ts(a) && d <= ts(b)) || (d.isNull && start <= ts(b) && end >= ts(a))
+      case _ => throw new IllegalArgumentException(s"bad datetime: $dt")
+    }
   }
 
   /** Sort columns with the reference's always-appended `id ASC` tiebreak

@@ -5,11 +5,20 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Staged, Tables}
 import graft.cql.{Cql, Cql2Text}
-import graft.spatial.Geo
+import graft.spatial.{Geo, Shape}
 
 /** A-series: the reference's STAC search surface re-expressed Spark-first
-  * (SURVEY.md §2.A). Each capability is a composable `Column` planner plus
-  * the identical predicate in ANSI SQL for the DuckDB oracle.
+  * (SURVEY.md §2.A), each gate paired with the identical query in ANSI SQL
+  * for the DuckDB oracle.
+  *
+  * A gate that is a reference search states it once, as a [[SearchParams]]
+  * value, and runs it through the server's own code: [[StacApi.plan]] for
+  * unbounded result sets and aggregations, [[StacApi.searchOn]] (via
+  * `searchPage`) for pages and counts. So the oracle certifies the
+  * predicate composition, name resolution, sort and pager that
+  * `GET/POST /search` serve. Gates that exercise another physical path
+  * (layouts, footprints, per-row batteries, documents, ingest, the catalog
+  * source, state) build their own plan; SourceGuardSpec lists them.
   *
   * Reference behavior being preserved (cf. /root/reference/stac_fastapi/
   * duckdb/database_logic.py):
@@ -34,40 +43,47 @@ object StacSearch {
 
   private def ts(t: String): Column = lit(t).cast("timestamp")
 
-  // ------------------------------------------------- datetime semantics
-  /** Exact datetime match: `datetime = t` OR, for interval-only items
-    * (datetime NULL), containment of t in [start, end]
-    * (database_logic.py:261-273).
+  /** The items view's column surface, for static oracle-side resolution
+    * (the Spark side resolves against the live frame's schema — same
+    * names by construction, [[graft.core.Tables.items]]).
     */
-  def dtExact(t: String): Column =
-    col("datetime") === ts(t) ||
-      (col("datetime").isNull && col("start_datetime") <= ts(t) && col("end_datetime") >= ts(t))
+  private val itemsCols = Seq("id", "id_num", "collection", "datetime",
+    "start_datetime", "end_datetime", "lon", "lat", "value", "user_id", "props")
 
+  /** A page of `p` through the server's pager ([[StacApi.searchOn]]),
+    * framed as a local relation with the searched frame's schema (an empty
+    * page is an empty frame), and the search's numMatched. The gate's
+    * projection rides in `p.include`, so the pager's column pruning is
+    * certified too.
+    */
+  private def searchPage(s: SparkSession, d: String, p: SearchParams): (DataFrame, Long) = {
+    val it = items(s, d)
+    val r = StacApi.searchOn(it, p)
+    val schema = StacApi.applyFields(StacApi.plan(it, p), p).schema
+    (s.createDataFrame(java.util.Arrays.asList(r.items: _*), schema), r.numMatched)
+  }
+
+  // ------------------------------------------------- datetime semantics
+  /** Oracle twins of [[StacApi.datetimePredicate]]'s four forms
+    * (database_logic.py:224-347). Exact: `datetime = t` OR, for
+    * interval-only items (datetime NULL), containment of t in
+    * [start, end] (:261-273).
+    */
   def dtExactSql(t: String): String =
     s"(datetime = TIMESTAMP '$t' OR (datetime IS NULL AND start_datetime <= TIMESTAMP '$t' AND end_datetime >= TIMESTAMP '$t'))"
 
   /** Closed range [lo, hi]: datetime in range OR null-datetime items whose
     * interval OVERLAPS the search range (database_logic.py:279-292).
     */
-  def dtRange(lo: String, hi: String): Column =
-    (col("datetime") >= ts(lo) && col("datetime") <= ts(hi)) ||
-      (col("datetime").isNull && col("start_datetime") <= ts(hi) && col("end_datetime") >= ts(lo))
-
   def dtRangeSql(lo: String, hi: String): String =
     s"((datetime >= TIMESTAMP '$lo' AND datetime <= TIMESTAMP '$hi') OR " +
       s"(datetime IS NULL AND start_datetime <= TIMESTAMP '$hi' AND end_datetime >= TIMESTAMP '$lo'))"
 
   /** Open-ended `t/..` (database_logic.py:293-302). */
-  def dtOpenStart(t: String): Column =
-    col("datetime") >= ts(t) || (col("datetime").isNull && col("end_datetime") >= ts(t))
-
   def dtOpenStartSql(t: String): String =
     s"(datetime >= TIMESTAMP '$t' OR (datetime IS NULL AND end_datetime >= TIMESTAMP '$t'))"
 
   /** Open-ended `../t` (database_logic.py:303-312). */
-  def dtOpenEnd(t: String): Column =
-    col("datetime") <= ts(t) || (col("datetime").isNull && col("start_datetime") <= ts(t))
-
   def dtOpenEndSql(t: String): String =
     s"(datetime <= TIMESTAMP '$t' OR (datetime IS NULL AND start_datetime <= TIMESTAMP '$t'))"
 
@@ -137,7 +153,7 @@ object StacSearch {
 
   // --------------------------------------------------------- A1/A2/A3
   def a1ScanCollection(s: SparkSession, d: String): DataFrame =
-    items(s, d).where(col("collection") === "click")
+    StacApi.plan(items(s, d), SearchParams(collections = Seq("click")))
       .select(projCols: _*).orderBy(col("id"))
 
   val a1Sql: String = Tables.withItems(
@@ -148,7 +164,7 @@ object StacSearch {
     * scale is partition pruning over a collection-partitioned table.
     */
   def a2MultiCollection(s: SparkSession, d: String): DataFrame =
-    items(s, d).where(col("collection").isin("click", "error"))
+    StacApi.plan(items(s, d), SearchParams(collections = Seq("click", "error")))
       .select(projCols: _*).orderBy(col("id"))
 
   val a2Sql: String = Tables.withItems(
@@ -157,7 +173,7 @@ object StacSearch {
   private val idList = Seq("1", "2", "3", "5", "8", "13", "21", "34", "55", "89")
 
   def a3IdsFilter(s: SparkSession, d: String): DataFrame =
-    items(s, d).where(col("id").isin(idList: _*))
+    StacApi.plan(items(s, d), SearchParams(ids = idList))
       .select(projCols: _*).orderBy(col("id"))
 
   val a3Sql: String = Tables.withItems(
@@ -173,14 +189,14 @@ object StacSearch {
   private val dtProj = Seq("id", "collection", "datetime", "start_datetime", "end_datetime")
 
   def a5DatetimeExact(s: SparkSession, d: String): DataFrame =
-    items(s, d).where(dtExact(tExact))
+    StacApi.plan(items(s, d), SearchParams(datetime = Some(tExact)))
       .select(dtProj.map(col): _*).orderBy(col("id"))
 
   val a5Sql: String = Tables.withItems(
     s"SELECT ${dtProj.mkString(", ")} FROM items WHERE ${dtExactSql(tExact)} ORDER BY id")
 
   def a6DatetimeRange(s: SparkSession, d: String): DataFrame =
-    items(s, d).where(dtRange(tLo, tHi))
+    StacApi.plan(items(s, d), SearchParams(datetime = Some(s"$tLo/$tHi")))
       .select(dtProj.map(col): _*).orderBy(col("id"))
 
   val a6Sql: String = Tables.withItems(
@@ -189,9 +205,9 @@ object StacSearch {
   /** Both open-range forms in one gate query, tagged. */
   def a7DatetimeOpen(s: SparkSession, d: String): DataFrame = {
     val it = items(s, d)
-    val openStart = it.where(dtOpenStart(tLate))
+    val openStart = StacApi.plan(it, SearchParams(datetime = Some(s"$tLate/..")))
       .select(lit("t_dotdot").as("form") +: dtProj.map(col): _*)
-    val openEnd = it.where(dtOpenEnd(tEarly))
+    val openEnd = StacApi.plan(it, SearchParams(datetime = Some(s"../$tEarly")))
       .select(lit("dotdot_t").as("form") +: dtProj.map(col): _*)
     openStart.unionAll(openEnd).orderBy(col("form"), col("id"))
   }
@@ -207,8 +223,7 @@ object StacSearch {
   private val bbox = (-90.5, -45.25, 90.5, 45.25) // (west, south, east, north)
 
   def a8Bbox(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(Geo.bboxContains(col("lon"), col("lat"), bbox._1, bbox._2, bbox._3, bbox._4))
+    StacApi.plan(items(s, d), SearchParams(bbox = Some(bbox)))
       .select(projCols: _*).orderBy(col("id"))
 
   val a8Sql: String = Tables.withItems(
@@ -234,13 +249,8 @@ object StacSearch {
       |  "limit": 25,
       |  "some_future_extension": {"ignored": true}}""".stripMargin
 
-  def a62SearchBody(s: SparkSession, d: String): DataFrame = {
-    val p = SearchParams.fromSearchBody(a62Body)
-    StacApi.plan(items(s, d), p)
-      .select(projCols: _*)
-      .orderBy(col("value").desc, col("id").asc) // body sort + id tiebreak
-      .limit(p.limit)
-  }
+  def a62SearchBody(s: SparkSession, d: String): DataFrame =
+    searchPage(s, d, SearchParams.fromSearchBody(a62Body).copy(include = proj))._1
 
   val a62Sql: String = Tables.withItems(
     s"""SELECT $projSql FROM items
@@ -267,19 +277,9 @@ object StacSearch {
       |"properties__user_id": {"neq": 7},
       |"id": {"startsWith": "1"}}""".stripMargin
 
-  /** The items view's column surface, for static oracle-side resolution
-    * (the Spark side resolves against the live frame's schema — same
-    * names by construction, [[graft.core.Tables.items]]).
-    */
-  private val itemsCols = Seq("id", "id_num", "collection", "datetime",
-    "start_datetime", "end_datetime", "lon", "lat", "value", "user_id", "props")
-
-  def a66StacqlQuery(s: SparkSession, d: String): DataFrame = {
-    val p = SearchParams.fromSearchBody(
-      s"""{"query": $a66Query, "limit": 40}""")
-    StacApi.plan(items(s, d), p)
-      .select(projCols: _*).orderBy(col("id")).limit(p.limit)
-  }
+  def a66StacqlQuery(s: SparkSession, d: String): DataFrame =
+    searchPage(s, d, SearchParams.fromSearchBody(
+      s"""{"query": $a66Query, "limit": 40}""").copy(include = proj))._1
 
   val a66Sql: String = Tables.withItems(
     s"SELECT $projSql FROM items WHERE " +
@@ -291,17 +291,16 @@ object StacSearch {
     * plain comparison silently gets wrong: a STAC search bbox with
     * west > east (here 150 → −150, a Pacific strip) means the box
     * CROSSES 180°, so the longitude predicate is the DISJUNCTION of the
-    * two half-ranges, not an empty range. [[Geo.bboxContainsWrap]]
-    * routes both cases (degenerating to the plain form when
-    * west ≤ east, gated by a8); still a scan-level predicate — the OR
-    * of two range tests stays pushable and codegen'd.
+    * two half-ranges, not an empty range. [[StacApi.plan]] compiles every
+    * `bbox` with [[Geo.bboxContainsWrap]], which routes both cases
+    * (degenerating to the plain form when west ≤ east, gated by a8); still
+    * a scan-level predicate — the OR of two range tests stays pushable and
+    * codegen'd.
     */
   private val amBbox = (150.141, -60.223, -150.139, 60.177)
 
   def a61BboxAntimeridian(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(Geo.bboxContainsWrap(col("lon"), col("lat"),
-        amBbox._1, amBbox._2, amBbox._3, amBbox._4))
+    StacApi.plan(items(s, d), SearchParams(bbox = Some(amBbox)))
       .select(projCols: _*).orderBy(col("id"))
 
   val a61Sql: String = Tables.withItems(
@@ -318,24 +317,24 @@ object StacSearch {
     50.139, -34.731)
 
   def a9Intersects(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(Geo.intersectsPolygon(col("lon"), col("lat"), hexagon))
+    StacApi.plan(items(s, d), SearchParams(intersects = SearchParams.ring(hexagon)))
       .select(projCols: _*).orderBy(col("id"))
 
   val a9Sql: String = Tables.withItems(
     s"SELECT $projSql FROM items WHERE ${Geo.convexIntersectsSql("lon", "lat", hexagon)} ORDER BY id")
 
   // ------------------------------------------------------ A10..A15 CQL2
-  /** Each gate query round-trips real cql2-json through the parser, then
-    * compiles the SAME AST to both a Catalyst Column (Spark plan) and ANSI
-    * SQL (oracle) — divergence in either backend fails the gate.
+  /** Each gate query sends real cql2-json as the search `filter`, which
+    * [[StacApi.plan]] parses, resolves against the live schema and
+    * compiles to a Catalyst Column; the oracle renders the SAME parsed AST
+    * to ANSI SQL — divergence in either backend fails the gate.
     */
   private def cqlQuery(json: String): ((SparkSession, String) => DataFrame, String) = {
-    val ast = Cql.parseJson(json)
     val fn = (s: SparkSession, d: String) =>
-      items(s, d).where(ast.toColumn).select(projCols: _*).orderBy(col("id"))
+      StacApi.plan(items(s, d), SearchParams(filter = Some(json)))
+        .select(projCols: _*).orderBy(col("id"))
     val sql = Tables.withItems(
-      s"SELECT $projSql FROM items WHERE ${ast.toSql} ORDER BY id")
+      s"SELECT $projSql FROM items WHERE ${Cql.parseJson(json).toSql} ORDER BY id")
     (fn, sql)
   }
 
@@ -594,34 +593,35 @@ object StacSearch {
 
   // -------------------------------------------------- A16..A19 shape ops
   /** Multi-field sort, always id ASC tiebreak (database_logic.py:661-696).
-    * LIMITed, so planned as TakeOrderedAndProject — per-partition top-k +
-    * merge of k, never a global sort (the 100 TB-safe plan).
+    * The pager's one pass keeps a per-partition top-k heap and merges the
+    * heaps, never a global sort (the 100 TB-safe shape).
     */
   def a16Sort(s: SparkSession, d: String): DataFrame =
-    items(s, d).select(projCols: _*)
-      .orderBy(col("value").desc, col("id").asc).limit(50)
+    searchPage(s, d, SearchParams(sortBy = Seq(SortBy("value", desc = true)),
+      limit = 50, include = proj))._1
 
   val a16Sql: String = Tables.withItems(
     s"SELECT $projSql FROM items ORDER BY value DESC, id ASC LIMIT 50")
 
-  /** Offset-token pagination, kept for reference parity (the reference
-    * fetches limit+1 to probe for a next page, database_logic.py:921-955;
-    * the probe row is a LIMIT arithmetic detail, not a plan shape).
+  /** Offset-token pagination, kept for reference parity: the pager's
+    * `off:` token (the reference fetches limit+1 to probe for a next page,
+    * database_logic.py:921-955; so does the pager's heap).
     */
   def a17Paginate(s: SparkSession, d: String): DataFrame =
-    items(s, d).select(projCols: _*).orderBy(col("id")).offset(100).limit(25)
+    searchPage(s, d, SearchParams(limit = 25, token = Some("off:100"), include = proj))._1
 
   val a17Sql: String = Tables.withItems(
     s"SELECT $projSql FROM items ORDER BY id LIMIT 25 OFFSET 100")
 
-  /** numMatched: same filter subtree, COUNT over pruned columns — reads no
-    * data columns beyond the filter's (database_logic.py:698-770).
+  /** numMatched (database_logic.py:698-770): the pager counts every row
+    * that passes the search's filter in the same pass as the page.
     */
-  def a18Count(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(col("collection").isin("click", "purchase") && dtRange(tLo, tHi) &&
-        Geo.bboxContains(col("lon"), col("lat"), bbox._1, bbox._2, bbox._3, bbox._4))
-      .agg(count(lit(1)).as("matched"))
+  def a18Count(s: SparkSession, d: String): DataFrame = {
+    val matched = StacApi.searchOn(items(s, d), SearchParams(
+      collections = Seq("click", "purchase"), datetime = Some(s"$tLo/$tHi"),
+      bbox = Some(bbox), limit = 1, include = Seq("id"))).numMatched
+    s.createDataFrame(Seq(Tuple1(matched))).toDF("matched")
+  }
 
   val a18Sql: String = Tables.withItems(
     s"""SELECT COUNT(*) AS matched FROM items
@@ -632,8 +632,7 @@ object StacSearch {
     * partition-pruned collection scan; LIMIT 1.
     */
   def a19ItemLookup(s: SparkSession, d: String): DataFrame =
-    items(s, d).where(col("id") === "43")
-      .select(projCols: _*).limit(1)
+    searchPage(s, d, SearchParams(ids = Seq("43"), limit = 1, include = proj))._1
 
   val a19Sql: String = Tables.withItems(
     s"SELECT $projSql FROM items WHERE id = '43' LIMIT 1")
@@ -785,18 +784,17 @@ object StacSearch {
     * the reference's full search path in one plan
     * (tests/api/test_api.py:77-90).
     */
-  private val a22Cql = Cql.parseJson(
-    """{"between":[{"property":"value"},20.5,400.5]}""")
+  private val a22Filter = """{"between":[{"property":"value"},20.5,400.5]}"""
+  private val a22Cql = Cql.parseJson(a22Filter)
 
   def a22CombinedSearch(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(col("collection").isin("click", "view", "purchase"))
-      .where(dtRange("2024-01-05 00:00:00", "2024-01-28 00:00:00"))
-      .where(Geo.bboxContains(col("lon"), col("lat"), -120.5, -60.5, 120.5, 60.5))
-      .where(a22Cql.toColumn)
-      .select(projCols: _*)
-      .orderBy(col("value").desc, col("id").asc)
-      .offset(10).limit(25)
+    searchPage(s, d, SearchParams(
+      collections = Seq("click", "view", "purchase"),
+      datetime = Some("2024-01-05 00:00:00/2024-01-28 00:00:00"),
+      bbox = Some((-120.5, -60.5, 120.5, 60.5)),
+      filter = Some(a22Filter),
+      sortBy = Seq(SortBy("value", desc = true)),
+      limit = 25, token = Some("off:10"), include = proj))._1
 
   val a22Sql: String = Tables.withItems(
     s"""SELECT $projSql FROM items
@@ -807,9 +805,9 @@ object StacSearch {
        |ORDER BY value DESC, id ASC LIMIT 25 OFFSET 10""".stripMargin)
 
   // ----------------- A71 typed-endpoint page walk (item collection)
-  /** A71: the TYPED API gated by the oracle — every other A-gate drives
-    * the planner directly; this one walks `GET /collections/{id}/items`
-    * the way a client does: [[StacApi.search]] page 1 (collections +
+  /** A71: a two-page walk through the typed API. Where the other paged
+    * gates fetch one page, this one walks `GET /collections/{id}/items`
+    * the way a client does: [[StacApi.searchOn]] page 1 (collections +
     * datetime + sort), take the RETURNED keyset token, fetch page 2
     * through it, and emit page 2 plus the API's numMatched. The oracle
     * re-derives page 2 as OFFSET/LIMIT under the same total order
@@ -825,17 +823,14 @@ object StacSearch {
       collections = Seq("click", "view"),
       datetime = Some("2024-01-05 00:00:00/2024-01-28 00:00:00"),
       sortBy = Seq(SortBy("properties.value", desc = true)),
-      limit = 20)
+      limit = 20,
+      include = Seq("id", "collection", "value"))
     // page 1 is only walked for its token — don't pay numMatched twice
-    val p1 = StacApi.search(s, d, params.copy(withCount = false))
+    val p1 = StacApi.searchOn(items(s, d), params.copy(withCount = false))
     val token = p1.nextToken.getOrElse(
       throw new IllegalStateException("page 1 not full — fixture too small"))
-    val p2 = StacApi.search(s, d, params.copy(token = Some(token)))
-    val rows = java.util.Arrays.asList(p2.items: _*)
-    s.createDataFrame(rows, p2.items.head.schema)
-      .select(col("id"), col("collection"), col("value"))
-      .withColumn("matched", lit(p2.numMatched))
-      .orderBy(col("id"))
+    val (page2, matched) = searchPage(s, d, params.copy(token = Some(token)))
+    page2.withColumn("matched", lit(matched))
   }
 
   val a71Sql: String = Tables.withItems(
@@ -1125,7 +1120,7 @@ object StacSearch {
     val pruned =
       if (files.isEmpty) graft.core.ItemsLayout.read(s, lp).limit(0)
       else s.read.parquet(files: _*)
-    pruned.where(dtRange(tLo, tHi))
+    pruned.where(StacApi.datetimePredicate(s"$tLo/$tHi"))
       .select(dtProj.map(col): _*).orderBy(col("id"))
   }
 
@@ -1195,8 +1190,7 @@ object StacSearch {
     * (OR of half-plane tests), so kernel bugs can't hide.
     */
   def a33IntersectsConcave(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(Geo.intersectsGeom(col("lon"), col("lat"), concaveGeom))
+    StacApi.plan(items(s, d), SearchParams(intersects = Some(Shape.PolyS(concaveGeom))))
       .select(projCols: _*).orderBy(col("id"))
 
   val a33Sql: String = Tables.withItems(
@@ -1221,8 +1215,7 @@ object StacSearch {
     * independent half-plane forms: (in A AND NOT in hole) OR in B.
     */
   def a34IntersectsMultipolygon(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(Geo.intersectsGeom(col("lon"), col("lat"), multiPolyGeom))
+    StacApi.plan(items(s, d), SearchParams(intersects = Some(Shape.PolyS(multiPolyGeom))))
       .select(projCols: _*).orderBy(col("id"))
 
   val a34Sql: String = Tables.withItems(
@@ -1269,42 +1262,34 @@ object StacSearch {
       |]}""".stripMargin)
 
   // ----------------------------------- A37 property resolution / A38 fields
-  /** The items view's column names — static (used to resolve oracle SQL at
-    * object init; the Spark side resolves against the live schema).
-    */
-  private val itemsSchema = Seq("id", "id_num", "collection", "datetime", "start_datetime",
-    "end_datetime", "lon", "lat", "value", "user_id", "props")
-
   /** A37: CQL2 filters referencing `properties.value` / `properties__user_id`
     * name variants resolve against the schema (database_logic.py:640-644,
     * 880) — round-1 graft only resolved variants in the sort path.
     */
-  private val a37Ast = Cql.parseJson(
+  private val a37Filter =
     """{"and":[
       |  {">":[{"property":"properties.value"},150.5]},
       |  {"<=":[{"property":"properties__user_id"},120]},
       |  {"<>":[{"property":"collection"},"error"]}
-      |]}""".stripMargin)
+      |]}""".stripMargin
+  private val a37Ast = Cql.parseJson(a37Filter)
 
-  def a37CqlPropertyResolve(s: SparkSession, d: String): DataFrame = {
-    val it = items(s, d)
-    it.where(Cql.resolve(a37Ast, it.columns.toSeq).toColumn)
+  def a37CqlPropertyResolve(s: SparkSession, d: String): DataFrame =
+    StacApi.plan(items(s, d), SearchParams(filter = Some(a37Filter)))
       .select(projCols: _*).orderBy(col("id"))
-  }
 
   val a37Sql: String = Tables.withItems(
-    s"SELECT $projSql FROM items WHERE ${Cql.resolve(a37Ast, itemsSchema).toSql} ORDER BY id")
+    s"SELECT $projSql FROM items WHERE ${Cql.resolve(a37Ast, itemsCols).toSql} ORDER BY id")
 
   /** A38: fields extension — include/exclude as a PLAN-level computed
     * projection (column pruning reaches the scan), via the typed API's
     * [[StacApi.applyFields]].
     */
-  def a38Fields(s: SparkSession, d: String): DataFrame =
-    StacApi.applyFields(
-      items(s, d).where(col("collection") === "view"),
-      SearchParams(collections = Seq("view"),
-        include = Seq("properties.value", "datetime")))
-      .orderBy(col("id"))
+  def a38Fields(s: SparkSession, d: String): DataFrame = {
+    val p = SearchParams(collections = Seq("view"),
+      include = Seq("properties.value", "datetime"))
+    StacApi.applyFields(StacApi.plan(items(s, d), p), p).orderBy(col("id"))
+  }
 
   val a38Sql: String = Tables.withItems(
     """SELECT id, collection, value, datetime FROM items
@@ -1346,19 +1331,13 @@ object StacSearch {
     * plain negation is exact; AND'd with a value predicate so the gate
     * exercises disjoint inside a filter tree, not alone.
     */
-  private val a72Ast = Cql.parseJson(
+  private val (a72Fn, a72Sql) = cqlQuery(
     """{"and":[
       |  {"s_disjoint":[{"property":"geometry"},
       |    {"type":"Polygon","coordinates":[[[-120.137,-50.223],[60.139,-50.223],
       |     [60.139,40.177],[-120.137,40.177],[-120.137,-50.223]]]}]},
       |  {">":[{"property":"value"},30.5]}
       |]}""".stripMargin)
-
-  def a72CqlDisjoint(s: SparkSession, d: String): DataFrame =
-    items(s, d).where(a72Ast.toColumn).select(projCols: _*).orderBy(col("id"))
-
-  val a72Sql: String = Tables.withItems(
-    s"SELECT $projSql FROM items WHERE ${a72Ast.toSql} ORDER BY id")
 
   /** A73: CQL2 S_WITHIN on the FOOTPRINT — "scenes completely covered by
     * my AOI" (the clipping-free-processing predicate: a scene fully
@@ -2672,7 +2651,7 @@ object StacSearch {
   private val a53Ast = graft.cql.FreeText.parse(a53Q, Seq("collection", "props"))
 
   def a53FreeText(s: SparkSession, d: String): DataFrame =
-    items(s, d).where(a53Ast.toColumn)
+    StacApi.plan(items(s, d), SearchParams(filterAst = Some(a53Ast)))
       .select(projCols: _*).orderBy(col("id"))
 
   val a53Sql: String = Tables.withItems(
@@ -2755,8 +2734,7 @@ object StacSearch {
     * filter prunes row groups before any aggregation happens.
     */
   def a46GridAgg(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(Geo.bboxContains(col("lon"), col("lat"), bbox._1, bbox._2, bbox._3, bbox._4))
+    StacApi.plan(items(s, d), SearchParams(bbox = Some(bbox)))
       .withColumn("zcell", zCellColumn)
       .groupBy(col("zcell"))
       .agg(count(lit(1)).as("n_items"),
@@ -2799,8 +2777,7 @@ object StacSearch {
   def a58MosaicBest(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byCell = Window.partitionBy(col("zcell"))
-    items(s, d)
-      .where(Geo.bboxContains(col("lon"), col("lat"), bbox._1, bbox._2, bbox._3, bbox._4))
+    StacApi.plan(items(s, d), SearchParams(bbox = Some(bbox)))
       .withColumn("zcell", zCellColumn)
       .withColumn("rk", row_number().over(byCell.orderBy(col("value").desc, col("id"))))
       .withColumn("n_items", count(lit(1)).over(byCell))
@@ -2865,8 +2842,7 @@ object StacSearch {
     * items (null datetime) land in a `__none__` month bucket.
     */
   def a31Facets(s: SparkSession, d: String): DataFrame = {
-    val f = items(s, d)
-      .where(Geo.bboxContains(col("lon"), col("lat"), bbox._1, bbox._2, bbox._3, bbox._4))
+    val f = StacApi.plan(items(s, d), SearchParams(bbox = Some(bbox)))
       .withColumn("month_b", coalesce(
         date_format(date_trunc("month", col("datetime")), "yyyy-MM"), lit("__none__")))
     f.cube(col("collection"), col("month_b"))
@@ -2909,9 +2885,7 @@ object StacSearch {
     * a NULL bucket that would collide with the rollup rows.
     */
   def a70AggBundle(s: SparkSession, d: String): DataFrame = {
-    val base = items(s, d)
-      .where(Geo.bboxContains(col("lon"), col("lat"),
-        bbox._1, bbox._2, bbox._3, bbox._4))
+    val base = StacApi.plan(items(s, d), SearchParams(bbox = Some(bbox)))
       .select(col("collection"),
         date_format(date_trunc("month",
           coalesce(col("datetime"), col("start_datetime"))), "yyyy-MM")
@@ -3405,7 +3379,8 @@ object StacSearch {
   private val (a50Fn, a50Sql) = {
     val ast = Cql2Text.parse(a50Text)
     val fn = (s: SparkSession, d: String) =>
-      items(s, d).where(ast.toColumn).select(projCols: _*).orderBy(col("id"))
+      StacApi.plan(items(s, d), SearchParams(filterAst = Some(ast)))
+        .select(projCols: _*).orderBy(col("id"))
     (fn, Tables.withItems(
       s"SELECT $projSql FROM items WHERE ${ast.toSql} ORDER BY id"))
   }
@@ -3419,8 +3394,7 @@ object StacSearch {
     * |months × collections| partials, never items.
     */
   def a49DatetimeHistogram(s: SparkSession, d: String): DataFrame =
-    items(s, d)
-      .where(col("collection").isin("click", "view", "error"))
+    StacApi.plan(items(s, d), SearchParams(collections = Seq("click", "view", "error")))
       .withColumn("month", expr("date_trunc('MONTH', coalesce(datetime, start_datetime))"))
       .groupBy(col("month"), col("collection"))
       .agg(count(lit(1)).as("n_items"),
@@ -3656,7 +3630,7 @@ object StacSearch {
     "a37_cql2_property_resolve"   -> (a37CqlPropertyResolve _),
     "a38_fields"                  -> (a38Fields _),
     "a39_footprint_cql"           -> (a39FootprintCql _),
-    "a72_cql2_s_disjoint"         -> (a72CqlDisjoint _),
+    "a72_cql2_s_disjoint"         -> a72Fn,
     "a74_cql2_t_interval"         -> a74Fn,
     "a76_cql2_allen"              -> (a76CqlAllen _),
     "a80_cql2_accenti"            -> (a80CqlAccenti _),

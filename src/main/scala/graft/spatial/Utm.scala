@@ -47,14 +47,6 @@ object Utm {
   /** Zone central meridian, degrees (zone 1 → -177, …, zone 60 → 177). */
   def centralMeridian(zone: Int): Double = -183.0 + 6.0 * zone
 
-  /** The UTM zone containing a longitude (the plain 6° rule; the Norway
-    * and Svalbard exceptions are a mapping-agency convention about which
-    * zone to PUBLISH in, not a property of the projection — any zone
-    * projects any point).
-    */
-  def zoneOf(lon: Double): Int =
-    math.min(60, math.max(1, (math.floor((lon + 180.0) / 6.0) + 1).toInt))
-
   /** (lon°, lat°) → (easting m, northing m) in `zone` (south = 327xx
     * false northing).
     */

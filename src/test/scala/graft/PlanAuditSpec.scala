@@ -88,9 +88,18 @@ class PlanAuditSpec extends AnyFunSuite {
       p.split('\n').count(_.contains("BroadcastHashJoin")) >= 2, p)
   }
 
-  test("b7 + a16: global top-k plans as TakeOrderedAndProject, not a global sort") {
+  /** Runs a paged gate and materializes its frame: the jobs and SQL
+    * plans it opened.
+    */
+  private def ranGate(gate: String) =
+    JobCount(s)(StacSearch.queries(gate)(s, sf).collect())
+
+  test("b7 + a16: global top-k plans as TakeOrderedAndProject, not a global sort; " +
+      "the a16 page is the pager's one job") {
     assert(plan(Analytics.queries("b7_topk")(s, sf)).contains("TakeOrderedAndProject"))
-    assert(plan(StacSearch.queries("a16_sort")(s, sf)).contains("TakeOrderedAndProject"))
+    val a16 = ranGate("a16_sort")
+    assert(a16.result.length == 50)
+    assert(a16.jobs == 1, a16)
   }
 
   test("b2: aggregate is partial (map-side) before the exchange") {
@@ -111,14 +120,18 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("EqualTo(event_type,click)"), p)
   }
 
-  test("a22 flagship: collections + CQL2 filters reach the parquet scan; " +
-      "sort+page is TakeOrderedAndProject; props column pruned") {
-    val p = plan(StacSearch.queries("a22_combined_search")(s, sf))
+  test("a22 flagship: collections + CQL2 filters reach the parquet scan of the " +
+      "search page; sort+page is one job; props column pruned") {
+    val ran = ranGate("a22_combined_search")
+    assert(ran.jobs == 1, ran)
+    // the pager's "search page" execution is the only one that scans
+    val scans = ran.plans.filter(_.contains("ReadSchema"))
+    assert(scans.size == 1, ran.plans.mkString("\n----\n"))
+    val p = scans.head
     assert(p.contains("In(event_type, [click,purchase,view])"), p)
     assert(p.contains("GreaterThanOrEqual(value,20.5)"), p)
     assert(p.contains("LessThanOrEqual(value,400.5)"), p)
-    assert(p.contains("TakeOrderedAndProject"), p)
-    assert(p.split('\n').exists(l => l.contains("ReadSchema") && !l.contains("props")), p)
+    assert(!p.split('\n').exists(l => l.contains("ReadSchema") && l.contains("props")), p)
   }
 
   test("b8: approx_count_distinct (HLL) within 5% of exact") {

@@ -13,6 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    document is returned, never as a per-request existence check.
   *  - In-memory caches have one home: outside `core/Memo.scala`, only the
   *    named owners of non-cache state hold a concurrent map.
+  *  - STAC search has one compiler: an a-gate runs its search through
+  *    `StacApi`, or is named in `stacExempt` with the reason it builds
+  *    its own plan.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val forbidden = Seq("\"_SUCCESS\"", "\"_DONE\"", "java.io.tmpdir",
@@ -61,6 +64,97 @@ class SourceGuardSpec extends AnyFunSuite {
       if !(f.getName == "StacApi.scala" && owner == "collections")
       if !(f.getName == "StacSearch.scala" && owner.matches("a\\d+\\w*"))
     } yield s"${f.getPath}:${n + 1}: in $owner: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  /** The a-gates that exercise a physical path other than the server's
+    * search, each with the reason.
+    */
+  private val stacExempt: Map[String, String] = {
+    val layout = "layout prune: the stored-column pushdown the server does not run"
+    val footprint = "reads footprint or derived columns the served items view lacks"
+    val battery = "per-row battery: the AST is a projection, not a filter"
+    val document = "a document, not a search"
+    val ingest = "ingest or export path"
+    val catalog = "reads the GeoParquet catalog source, not the items view"
+    val state = "serves a merged state table, not the items view"
+    Map(
+      "a23_keyset_paginate" -> ("pins the pushable id_num keyset; the server's keyset " +
+        "ends in the derived id = CAST(event_id AS STRING), which cannot push"),
+      "a24_zcurve_cells" -> layout, "a29_envelope_overlap" -> layout,
+      "a30_zrange_scan" -> layout, "a63_covering_index" -> layout,
+      "a64_manifest_datetime" -> layout,
+      "a35_footprint_intersects" -> footprint, "a39_footprint_cql" -> footprint,
+      "a41_footprint_shapes" -> footprint, "a52_cql2_arrays" -> footprint,
+      "a73_cql2_s_within" -> footprint, "a78_within_concave" -> footprint,
+      "a88_polygon_footprint" -> footprint, "a95_line_footprint" -> footprint,
+      "a76_cql2_allen" -> battery, "a77_cql2_spatial_rel" -> battery,
+      "a80_cql2_accenti" -> battery, "a81_cql2_bbox" -> battery,
+      "a83_cql2_fuzz" -> battery, "a84_cql2_fuzz_spatial" -> battery,
+      "a20_serialize" -> document, "a26_collections" -> document,
+      "a48_queryables_stats" -> document, "a51_collection_search" -> document,
+      "a54_collections_incremental" -> document, "a55_queryables_incremental" -> document,
+      "a65_collection_json" -> document, "a67_collections_changelog" -> document,
+      "a42_wkb_roundtrip" -> ingest, "a43_item_ingest" -> ingest,
+      "a57_tolerant_ingest" -> ingest, "a75_geoparquet_ingest" -> ingest,
+      "a82_geoparquet_export" -> ingest, "a96_mercator_ingest" -> ingest,
+      "a85_catalog_pruned_search" -> catalog, "a86_catalog_compact" -> catalog,
+      "a87_catalog_source" -> catalog, "a89_catalog_coldt_prune" -> catalog,
+      "a56_upsert_search" -> state, "a60_time_travel" -> state,
+      "a68_merge_patch" -> state,
+      "a59_acquisition_gaps" -> "whole-view analytics with no search predicate")
+  }
+
+  test("every a-gate searches through StacApi or is a named exemption") {
+    val unknown = stacExempt.keySet.diff(graft.search.StacSearch.queries.keySet)
+    assert(unknown.isEmpty, s"exempt gates not in StacSearch.queries: $unknown")
+    val src = lines(new File("src/main/scala/graft/search/StacSearch.scala"))
+    // gate name → the function the queries map binds it to
+    val mapStart = src.indexWhere(_.contains("val queries: Map["))
+    assert(mapStart >= 0, "StacSearch.queries not found")
+    val entry = """"(a\d+_\w+)"\s*->\s*\(?(\w+)""".r
+    val gates = src.drop(mapStart).takeWhile(_.trim != ")")
+      .flatMap(entry.findFirstMatchIn(_)).map(m => m.group(1) -> m.group(2)).toMap
+    assert(gates.keySet == graft.search.StacSearch.queries.keySet, gates.keySet)
+    // a member's body: its first line up to the next line at member indent
+    val member = """^  (?:private(?:\[\w+\])? )?(def|val) \(?(\w+)""".r
+    val defs = src.flatMap(member.findFirstMatchIn(_))
+      .filter(_.group(1) == "def").map(_.group(2)).toSet
+    def body(name: String): Seq[String] = {
+      val i = src.indexWhere(l => member.findFirstMatchIn(l).exists(_.group(2) == name))
+      assert(i >= 0, s"no definition of $name")
+      src(i) +: src.drop(i + 1).takeWhile(l => !l.matches("  \\S.*|\\S.*"))
+    }
+    // the body plus every StacSearch def it reaches
+    def reach(fn: String): Seq[(String, String)] = {
+      var seen = Set(fn)
+      var todo = List(fn)
+      var out = Vector.empty[(String, String)]
+      while (todo.nonEmpty) {
+        val f = todo.head
+        todo = todo.tail
+        val ls = body(f)
+        out ++= ls.map(f -> _)
+        val called = ls.flatMap("""\w+""".r.findAllIn(_)).filter(defs).toSet.diff(seen)
+        seen ++= called
+        todo ++= called
+      }
+      out
+    }
+    val forbidden = Seq(
+      """Geo\.(bboxContains|intersects)\w*(?<!Sql)\(""".r,
+      """(?<![\w.])dt(Exact|Range|OpenStart|OpenEnd)\(""".r,
+      """\.toColumn\b""".r,
+      """\.where\(col\("(collection|id)"\)""".r)
+    val viaApi = """StacApi\.(plan|applyFields|searchOn|search)\(""".r
+    val hits = for {
+      (gate, fn) <- gates.toSeq.sorted if !stacExempt.contains(gate)
+      reached = reach(fn)
+      hit <- (if (reached.exists(l => viaApi.findFirstIn(l._2).isDefined)) Nil
+              else Seq(s"$gate: never calls StacApi")) ++
+        reached.collect { case (f, l) if forbidden.exists(_.findFirstIn(l).isDefined) =>
+          s"$gate: in $f: ${l.trim}" }
+    } yield hit
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -21,7 +21,7 @@ class StacApiSpec extends AnyFunSuite {
     val got = StacApi.search(s, sf, p)
     val expected = Tables.items(s, sf)
       .where(col("collection").isin("click", "view"))
-      .where(graft.search.StacSearch.dtRange("2024-01-05 00:00:00", "2024-01-28 00:00:00"))
+      .where(StacApi.datetimePredicate("2024-01-05 00:00:00/2024-01-28 00:00:00"))
       .where(col("lon") >= -120.5 && col("lon") <= 120.5 &&
         col("lat") >= -60.5 && col("lat") <= 60.5)
       .where(col("value") >= 50.0)
@@ -242,6 +242,20 @@ class StacApiSpec extends AnyFunSuite {
       SearchParams.fromSearchBody("""{"bbox": [-66, -16, -60]}""")
     }
     assert(ex.getMessage.contains("bbox"))
+  }
+
+  test("bbox with west > east crosses the antimeridian: numMatched ≡ a61 at sf0.01") {
+    val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+    val (w, so, e, n) = (150.141, -60.223, -150.139, 60.177)
+    val r = StacApi.search(s, sf01, SearchParams(bbox = Some((w, so, e, n))))
+    val a61 = StacSearch.queries("a61_bbox_antimeridian")(s, sf01).count()
+    // the two half-ranges, written out by hand
+    val direct = Tables.items(s, sf01)
+      .where((col("lon") >= w || col("lon") <= e) && col("lat") >= so && col("lat") <= n)
+      .count()
+    assert(a61 > 0)
+    assert(r.numMatched == a61)
+    assert(direct == a61)
   }
 
   test("ids + intersects + sort-field resolution") {

@@ -97,6 +97,14 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(f0.has("geometry") && f0.has("properties") && f0.has("assets"))
   }
 
+  test("GET /search bbox with west > east crosses the antimeridian") {
+    val (code, doc) = get("/search?bbox=150,-60,-150,60")
+    assert(code == 200)
+    val typed = StacApi.search(s, sf, SearchParams(bbox = Some((150.0, -60.0, -150.0, 60.0))))
+    assert(doc.get("numberMatched").asLong > 0)
+    assert(doc.get("numberMatched").asLong == typed.numMatched)
+  }
+
   test("GET /search next-link href walks page 2 AS ADVERTISED ≡ the typed walk") {
     val (_, p1) = get("/search?collections=click&limit=4")
     val next = p1.get("links").get(0)
