@@ -27,17 +27,6 @@ object Dedup {
       "transform(slice(ds, i + 1, size(ds) - i), y -> " +
       "struct(element_at(ds, i) AS d1, y AS d2))))"
 
-  /** One row per gram occurrence. The array expression is INLINED into the
-    * explode: Generate over a PROJECTED array column doesn't collapse the
-    * intermediate Project, and the un-collapsed shape measured 12× slower
-    * (4.2s vs 0.34s for the 260k-gram explode at sf0.1).
-    */
-  private def gramRows(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .withColumn("w", expr(wordsSpark))
-      .where(expr("size(w) >= 3"))
-      .select(col("doc_id"), explode(expr(trigramsSpark)).as("gram"))
-
   private val gramsDuck: String =
     s"""SELECT doc_id, $trigramsDuck AS g
        |  FROM (SELECT doc_id, $wordsDuck AS w FROM documents)

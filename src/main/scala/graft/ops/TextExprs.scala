@@ -41,16 +41,10 @@ object TextExprs {
     "list_transform(range(1, len(w) - 1), i -> w[i]||' '||w[i+1]||' '||w[i+2])"
 
   /** Sequential double dot product of two DOUBLE arrays. */
-  def dotSpark(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> x * y), CAST(0 AS DOUBLE), (s, x) -> s + x)"
-
   def dotDuck(a: String, b: String): String =
     s"list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> $a[i] * $b[i])), (s, x) -> s + x)"
 
   /** Sequential sum of squares (vector norm²). */
-  def norm2Spark(a: String): String =
-    s"aggregate($a, CAST(0 AS DOUBLE), (s, x) -> s + x * x)"
-
   def norm2Duck(a: String): String =
     s"list_reduce(list_prepend(0.0, list_transform($a, x -> x * x)), (s, x) -> s + x)"
 

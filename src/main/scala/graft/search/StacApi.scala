@@ -176,27 +176,11 @@ object StacApi {
   def collections(spark: SparkSession, dir: String): DataFrame =
     StacSearch.a26Collections(spark, dir)
 
-  /** /collections with the reference's pagination contract
-    * (database_logic.py:58-107: `token` = the id of the last collection
-    * seen, `limit` = page size; returns the page plus the next token).
-    * The reference walks its directory and SIMULATES the token (always
-    * returns None, database_logic.py:104-105); this twin implements the
-    * documented contract for real — keyset on the collection id, so a
-    * token is a sargable filter (never an offset scan) over the derived
-    * collections frame. Matches `search`'s page shape: fetch limit+1 to
-    * decide whether a next page exists without a count.
+  /** [[collections]] over an explicit items frame — the HTTP server's
+    * directory over its served view, so extents follow the items it serves.
     */
-  def collectionsPage(spark: SparkSession, dir: String,
-                      token: Option[String], limit: Int): (Array[Row], Option[String]) = {
-    val base = collections(spark, dir) // already ordered by collection
-    val after = token.map(t => base.where(col("collection") > lit(t))).getOrElse(base)
-    val page = after.limit(limit + 1).collect()
-    val items = page.take(limit)
-    val next =
-      if (page.length <= limit) None
-      else Some(items.last.getString(items.last.fieldIndex("collection")))
-    (items, next)
-  }
+  def collectionsOn(items: DataFrame): DataFrame =
+    StacSearch.a26CollectionsOn(items)
 
   /** Filter-only plan: every search parameter as a Catalyst predicate. */
   def plan(items: DataFrame, p: SearchParams): DataFrame = {
@@ -241,18 +225,30 @@ object StacApi {
     if (p.include.isEmpty && p.exclude.isEmpty) df
     else {
       val schema = df.schema.fieldNames.toSeq
-      val inc = p.include.flatMap(f => StacSearch.resolveField(f, schema))
-      // include WINS over exclude on conflict (STAC Fields extension
-      // semantics), and id/collection are never excludable (STAC minimum)
-      val protectedFields = Set("id", "collection") ++ inc
-      val exc = p.exclude.flatMap(f => StacSearch.resolveField(f, schema)).toSet
-        .diff(protectedFields)
-      val sortFields = sorts.map(_._1)
-      val base = if (inc.nonEmpty) Seq("id", "collection") ++ inc else schema
-      val kept = (base.filterNot(exc.contains) ++ sortFields)
-        .distinct.filter(schema.contains)
-      df.select(kept.map(col): _*)
+      def resolved(fs: Seq[String]): Seq[Seq[String]] =
+        fs.flatMap(f => StacSearch.resolveField(f, schema)).map(Seq(_))
+      val kept = fieldsKeep(schema.map(Seq(_)), resolved(p.include), resolved(p.exclude))
+        .map(_.head)
+      df.select((kept ++ sorts.map(_._1)).distinct.map(col): _*)
     }
+  }
+
+  /** The fields extension's keep rule over member paths (a column is a
+    * one-step path, a Feature property is `properties` / name): with an
+    * include list only the STAC minimum (type, id, collection) and the
+    * included paths are kept, else every member is; then the excluded
+    * paths go, except id, collection and any path also included — include
+    * WINS over exclude on conflict. A path keeps or drops everything under
+    * it. [[applyFields]] applies it to columns, StacSearch's Feature
+    * projection to document members.
+    */
+  private[search] def fieldsKeep(members: Seq[Seq[String]], include: Seq[Seq[String]],
+                                 exclude: Seq[Seq[String]]): Seq[Seq[String]] = {
+    val required = Seq(Seq("id"), Seq("collection"))
+    val wanted = Seq("type") +: (required ++ include)
+    val dropped = exclude.filterNot((required ++ include).contains)
+    members.filter(m => (include.isEmpty || wanted.exists(m.startsWith(_))) &&
+      !dropped.exists(m.startsWith(_)))
   }
 
   /** The aggregations this deployment advertises (name → data_type) —
@@ -412,20 +408,13 @@ object StacApi {
     page(applyFields(filtered, p, sorts), sorts, p)
   }
 
-  /** One search page with each item serialized as its full STAC Feature
-    * JSON (A20's codegen'd document projection) — the HTTP layer's
-    * /search body. Same filter plan, same sort/keyset machinery as
-    * [[search]]. The pass reads only the columns the document needs plus
-    * the sort columns; the document is then projected over the page rows
-    * as a local relation (evaluated on the driver, no job), so JSON work
-    * is bounded by `limit`, never by the match count.
-    */
-  def searchFeatures(spark: SparkSession, dir: String,
-                     p: SearchParams): (Array[String], Long, Option[String]) =
-    searchFeaturesOn(Tables.items(spark, dir), p)
-
-  /** [[searchFeatures]] over an explicit items frame (r12 — the
-    * transaction overlay's serving path).
+  /** One search page with each item serialized as its STAC Feature JSON
+    * (A20's codegen'd document projection, fields applied inside it) —
+    * the HTTP layer's /search body. Same filter plan, same sort/keyset
+    * machinery as [[searchOn]]. The pass reads only the columns the
+    * document needs plus the sort columns; the document is then projected
+    * over the page rows as a local relation (evaluated on the driver, no
+    * job), so JSON work is bounded by `limit`, never by the match count.
     */
   def searchFeaturesOn(items: DataFrame,
                        p: SearchParams): (Array[String], Long, Option[String]) = {
@@ -436,7 +425,7 @@ object StacApi {
     val feats =
       if (r.items.isEmpty) Array.empty[String]
       else StacSearch.featureFrameOn(filtered.sparkSession.createDataFrame(
-          java.util.Arrays.asList(r.items: _*), r.items.head.schema))
+          java.util.Arrays.asList(r.items: _*), r.items.head.schema), p.include, p.exclude)
         .select(col("_feature")).collect().map(_.getString(0))
     (feats, r.numMatched, r.nextToken)
   }

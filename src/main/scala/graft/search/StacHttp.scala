@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import com.fasterxml.jackson.databind.util.RawValue
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Row, SparkSession}
 
@@ -25,19 +26,18 @@ import org.apache.spark.sql.{Row, SparkSession}
   *   - `GET  /collections/{id}/items/{itemId}`   one item (404 JSON when absent)
   *   - `GET  /queryables`, `/collections/{id}/queryables`  filter schema
   *
-  * Design: every handler is a THIN codec — parse request → SearchParams →
-  * [[StacApi.searchFeatures]] (one Spark job counts the matches and keeps
-  * the page; the A20 Feature document is projected over the page rows
-  * only). Collection existence is the store's id set
-  * ([[TxnStore.collectionExists]]); only routes that return a collection
-  * document run the computed-extents query. GET `filter` defaults to
-  * cql2-TEXT per OGC API-Features Part 3 (`filter-lang=cql2-json`
-  * switches), POST
-  * bodies go through the A62 codec — both languages land on the one CQL2
-  * AST. The fields extension prunes the DOCUMENT here (include wins,
-  * id/collection protected — the same pinned rules StacApi.applyFields
-  * applies to columns; the column path stays the scale win for typed
-  * consumers, the document path is what HTTP clients observe).
+  * Design: every handler is a THIN codec — it decodes the request, calls
+  * [[StacApi]] or the [[TxnStore]] overlay, and encodes what they return;
+  * no search policy lives here and no document is parsed back. A search
+  * page is [[StacApi.searchFeaturesOn]] (one Spark job counts the matches
+  * and keeps the page; the A20 Feature document, with the fields
+  * extension applied inside the projection, is built over the page rows
+  * only) and each Feature string is written out as built. Collection
+  * existence is the store's id set ([[TxnStore.collectionExists]]); the
+  * collections directory is A26's computed-extents query over the
+  * served view. GET `filter` defaults to cql2-TEXT per OGC API-Features
+  * Part 3 (`filter-lang=cql2-json` switches), POST bodies go through the
+  * A62 codec — both languages land on the one CQL2 AST.
   *
   * Reference: stac_fastapi/duckdb/app.py (route mount), core.py via
   * stac-fastapi (landing/conformance shapes).
@@ -88,7 +88,7 @@ object StacHttp {
   def start(spark: SparkSession, dir: String, port: Int = 0): Server = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     val store = new TxnStore(spark, dir)
-    server.createContext("/", (ex: HttpExchange) => handle(spark, dir, store, ex))
+    server.createContext("/", (ex: HttpExchange) => handle(store, ex))
     // a small pool: handlers run Spark actions, which parallelize
     // internally — the pool only bounds concurrent REQUESTS
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
@@ -98,8 +98,7 @@ object StacHttp {
   }
 
   // ------------------------------------------------------- dispatch
-  private def handle(spark: SparkSession, dir: String, store: TxnStore,
-                     ex: HttpExchange): Unit =
+  private def handle(store: TxnStore, ex: HttpExchange): Unit =
     try {
       val path = ex.getRequestURI.getPath.stripSuffix("/") match {
         case "" => "/"
@@ -122,9 +121,9 @@ object StacHttp {
           json(ex, 200, featureCollection(itemsFrame, p, Map.empty,
             "/search", post = true))
         case ("GET", List("collections")) =>
-          json(ex, 200, collectionsPage(spark, dir, store, q))
+          json(ex, 200, collectionsPage(directory(store), q))
         case ("GET", List("collections", c)) =>
-          collectionNode(spark, dir, store, c) match {
+          directory(store).collectFirst { case (`c`, n) => n } match {
             case Some(n) => json(ex, 200, n)
             case None    => notFound(ex, s"Collection $c does not exist")
           }
@@ -140,8 +139,7 @@ object StacHttp {
             SearchParams(collections = Seq(c), ids = Seq(itemId), limit = 1,
               withCount = false))
           if (feats.isEmpty) notFound(ex, s"Item $itemId does not exist")
-          else json(ex, 200,
-            mapper.readTree(feats.head).asInstanceOf[ObjectNode])
+          else raw(ex, 200, feats.head)
 
         // ------------- transactions (r12): the reference's declared-but-
         // stubbed surface (database_logic.py:1049-1187), mounted for real
@@ -160,14 +158,13 @@ object StacHttp {
           store.deleteItem(c, itemId)
           noContent(ex)
         case ("POST", List("collections")) =>
-          val id = store.createCollection(body())
-          collectionNode(spark, dir, store, id) match {
-            case Some(n) => json(ex, 201, n)
-            case None    => json(ex, 201, mapper.createObjectNode().put("id", id))
-          }
+          val b = body()
+          val id = store.createCollection(b)
+          json(ex, 201, createdCollectionJson(id, b))
         case ("PUT", List("collections", c)) =>
-          store.updateCollection(c, body())
-          json(ex, 200, collectionNode(spark, dir, store, c).get)
+          val b = body()
+          store.updateCollection(c, b)
+          json(ex, 200, createdCollectionJson(c, b))
         case ("DELETE", List("collections", c)) =>
           store.deleteCollection(c)
           noContent(ex)
@@ -177,8 +174,7 @@ object StacHttp {
           if (!store.collectionExists(c))
             notFound(ex, s"Collection $c does not exist")
           else raw(ex, 200, StacSearch.sortables(
-            itemsFrame
-              .where(org.apache.spark.sql.functions.col("collection") === c)))
+            StacApi.plan(itemsFrame, SearchParams(collections = Seq(c)))))
         case ("GET", List("aggregations")) =>
           json(ex, 200, aggregationsDoc())
         case ("GET", List("collections", c, "aggregations")) =>
@@ -209,8 +205,7 @@ object StacHttp {
           if (!store.collectionExists(c))
             notFound(ex, s"Collection $c does not exist")
           else raw(ex, 200, StacSearch.queryables(
-            itemsFrame
-              .where(org.apache.spark.sql.functions.col("collection") === c)))
+            StacApi.plan(itemsFrame, SearchParams(collections = Seq(c)))))
         case _ => notFound(ex, s"Not Found: $path")
       }
     } catch {
@@ -321,8 +316,7 @@ object StacHttp {
     val o = mapper.createObjectNode()
     o.put("type", "FeatureCollection")
     val fa = o.withArray[ArrayNode]("features")
-    feats.foreach(f => fa.add(pruneFields(mapper.readTree(f).asInstanceOf[ObjectNode],
-      p.include, p.exclude)))
+    feats.foreach(f => fa.addRawValue(new RawValue(f)))
     if (matched >= 0) o.put("numberMatched", matched)
     o.put("numberReturned", feats.length)
     val links = o.withArray[ArrayNode]("links")
@@ -390,51 +384,40 @@ object StacHttp {
     o
   }
 
-  private def collectionsPage(spark: SparkSession, dir: String,
-                              store: TxnStore,
+  /** The collections directory over the served view: A26's computed
+    * extents over `store.itemsView()` (so items written over HTTP move
+    * their collection's extent), with a collection document created or
+    * updated over HTTP in place of its derived row; sorted by id.
+    */
+  private def directory(store: TxnStore): Seq[(String, ObjectNode)] = {
+    val docs = store.createdCollections.toMap
+    val derived = StacApi.collectionsOn(store.itemsView()).collect().toSeq
+      .map(r => r.getString(r.fieldIndex("collection")) -> r)
+      .filterNot { case (id, _) => docs.contains(id) }
+      .map { case (id, r) => id -> collectionJson(r) }
+    (derived ++ docs.map { case (id, doc) => id -> createdCollectionJson(id, doc) })
+      .sortBy(_._1)
+  }
+
+  /** One /collections page under the reference's token contract
+    * (database_logic.py:58-107): `token` = the id of the last collection
+    * seen, `limit` = page size; a next link when more remain.
+    */
+  private def collectionsPage(entries: Seq[(String, ObjectNode)],
                               q: Map[String, String]): ObjectNode = {
     val limit = clampLimit(q.get("limit").map(_.toInt).getOrElse(10))
+    val after = q.get("token").fold(entries)(t => entries.dropWhile(_._1 <= t))
+    val page = after.take(limit)
     val o = mapper.createObjectNode()
     val ca = o.withArray[ArrayNode]("collections")
-    if (!store.hasCollectionChanges) {
-      // base-only: the keyset-paged directory, unchanged
-      val (rows, next) = StacApi.collectionsPage(spark, dir, q.get("token"), limit)
-      rows.foreach(r => ca.add(collectionJson(r)))
-      val links = o.withArray[ArrayNode]("links")
-      next.foreach { t =>
-        val l = links.addObject()
-        l.put("rel", "next"); l.put("type", "application/json")
-        l.put("href", s"/collections?token=${java.net.URLEncoder.encode(t, UTF_8)}")
-        l.put("token", t)
-      }
-    } else {
-      // overlay mode: merge the base directory with the created/deleted
-      // roster, then page it under the SAME token contract as the base
-      // path (token = the id of the last collection seen, keyset on the
-      // id order)
-      val base = StacApi.collections(spark, dir).collect()
-        .filterNot { r =>
-          val id = r.getString(r.fieldIndex("collection"))
-          store.collectionDeleted(id) || store.createdCollection(id).isDefined
-        }.map(r => r.getString(r.fieldIndex("collection")) -> collectionJson(r))
-      val created = store.createdCollections.map { case (id, doc) =>
-        id -> createdCollectionJson(id, doc)
-      }
-      val merged = (base ++ created).sortBy(_._1)
-      val after = q.get("token") match {
-        case Some(t) => merged.dropWhile(_._1 <= t)
-        case None    => merged
-      }
-      val page = after.take(limit)
-      page.foreach { case (_, n) => ca.add(n) }
-      val links = o.withArray[ArrayNode]("links")
-      if (after.size > limit) {
-        val t = page.last._1
-        val l = links.addObject()
-        l.put("rel", "next"); l.put("type", "application/json")
-        l.put("href", s"/collections?token=${java.net.URLEncoder.encode(t, UTF_8)}")
-        l.put("token", t)
-      }
+    page.foreach { case (_, n) => ca.add(n) }
+    val links = o.withArray[ArrayNode]("links")
+    if (after.size > limit) {
+      val t = page.last._1
+      val l = links.addObject()
+      l.put("rel", "next"); l.put("type", "application/json")
+      l.put("href", s"/collections?token=${java.net.URLEncoder.encode(t, UTF_8)}")
+      l.put("token", t)
     }
     o
   }
@@ -449,18 +432,6 @@ object StacHttp {
     o.put("id", id)
     if (!o.has("links")) o.withArray[ArrayNode]("links")
     o
-  }
-
-  private def collectionNode(spark: SparkSession, dir: String,
-                             store: TxnStore, c: String): Option[ObjectNode] = {
-    import org.apache.spark.sql.functions.col
-    if (store.collectionDeleted(c)) None
-    else store.createdCollection(c) match {
-      case Some(doc) => Some(createdCollectionJson(c, doc))
-      case None =>
-        StacApi.collections(spark, dir).where(col("collection") === c)
-          .collect().headOption.map(collectionJson)
-    }
   }
 
   /** A26's derived directory row → STAC Collection JSON: static metadata
@@ -493,61 +464,6 @@ object StacHttp {
     val items = links.addObject()
     items.put("rel", "items"); items.put("href", str("self_href") + "/items")
     o
-  }
-
-  // --------------------------------------------- fields (document side)
-  private val topLevel = Set("id", "type", "geometry", "bbox", "collection",
-    "links", "assets", "properties", "stac_version", "stac_extensions")
-
-  private def fieldPath(name: String): List[String] = {
-    val n = name.replace("properties__", "properties.")
-    if (n.startsWith("properties.")) List("properties", n.drop("properties.".length))
-    else if (topLevel.contains(n)) List(n)
-    else List("properties", n)
-  }
-
-  /** Document-side fields extension, same pinned rules as the column
-    * side (StacApi.applyFields): include WINS over exclude,
-    * id/collection are never excludable; an include list keeps
-    * {type, id, collection} + the listed paths.
-    */
-  private[search] def pruneFields(doc: ObjectNode, include: Seq[String],
-                                  exclude: Seq[String]): ObjectNode = {
-    if (include.isEmpty && exclude.isEmpty) return doc
-    val inc = include.map(fieldPath)
-    val protectedPaths = Set(List("id"), List("collection")) ++ inc
-    val exc = exclude.map(fieldPath).filterNot(protectedPaths.contains)
-    if (inc.nonEmpty) {
-      val keep = Set(List("type"), List("id"), List("collection")) ++ inc
-      val out = mapper.createObjectNode()
-      keep.toSeq.sortBy(_.mkString(".")).foreach {
-        case List(f) =>
-          // set's generic return infers Nothing in foreach position →
-          // runtime ClassCastException; pin the type parameter
-          Option(doc.get(f)).foreach(v => out.set[ObjectNode](f, v))
-        case List(p, f) =>
-          Option(doc.get(p)).collect { case po: ObjectNode => po }
-            .flatMap(po => Option(po.get(f)))
-            .foreach { v =>
-              val tgt = Option(out.get(p))
-                .collect { case on: ObjectNode => on }
-                .getOrElse(out.putObject(p))
-              tgt.set[ObjectNode](f, v)
-            }
-        case _ => ()
-      }
-      prune(out, exc)
-    } else prune(doc, exc)
-  }
-
-  private def prune(doc: ObjectNode, exc: Seq[List[String]]): ObjectNode = {
-    exc.foreach {
-      case List(f) => doc.remove(f)
-      case List(p, f) =>
-        Option(doc.get(p)).collect { case po: ObjectNode => po.remove(f) }
-      case _ => ()
-    }
-    doc
   }
 
   // --------------------------------------------------------- plumbing

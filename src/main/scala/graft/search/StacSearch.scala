@@ -97,56 +97,47 @@ object StacSearch {
   /** A21 queryables: JSON-schema of filterable fields, derived from the
     * live DataFrame schema instead of the reference's static hand-written
     * map (filter_client.py:15-58) — new columns become queryable without
-    * code changes.
+    * code changes. Columns with no scalar JSON type are `object`s.
     */
-  def queryables(df: DataFrame): String = {
-    import org.apache.spark.sql.types._
-    def jsonType(t: DataType): String = t match {
-      case _: StringType => "string"
-      case _: BooleanType => "boolean"
-      case _: IntegerType | _: LongType | _: ShortType | _: ByteType => "integer"
-      case _: FloatType | _: DoubleType | _: DecimalType => "number"
-      case _: TimestampType | _: DateType => "string"
-      case _ => "object"
-    }
-    val props = df.schema.fields.map { f =>
-      val fmt = f.dataType match {
-        case _: TimestampType | _: DateType => ""","format":"date-time""""
-        case _ => ""
-      }
-      s""""${f.name}":{"type":"${jsonType(f.dataType)}"$fmt}"""
-    }.mkString(",")
-    s"""{"$$schema":"https://json-schema.org/draft/2020-12/schema","type":"object","properties":{$props}}"""
-  }
+  def queryables(df: DataFrame): String =
+    schemaDoc(df.schema.fields.toSeq.map(f => (f, scalarType(f.dataType).getOrElse("object"))))
 
   /** A69 sortables: the Sort-extension companion of A21's queryables —
     * the JSON document advertising which fields a client may pass to
     * `sortby` (OGC API Records sortables / STAC sort conformance).
-    * Derived from the live schema like A21, with the honest contract:
-    * a field is sortable iff it is an ORDERABLE SCALAR the keyset-token
-    * codec can encode (string/integer/number/timestamp/boolean) — array,
-    * map, struct, and binary columns are omitted, so everything this
-    * document advertises actually pages correctly through the typed API
-    * (StacSearchSpec drives every advertised field through a search).
+    * The queryables document limited to the ORDERABLE SCALARS the
+    * keyset-token codec can encode (string/integer/number/timestamp/
+    * boolean) — array, map, struct, and binary columns are omitted, so
+    * everything this document advertises actually pages correctly through
+    * the typed API (StacSearchSpec drives every advertised field through
+    * a search).
     */
-  def sortables(df: DataFrame): String = {
+  def sortables(df: DataFrame): String =
+    schemaDoc(df.schema.fields.toSeq.flatMap(f => scalarType(f.dataType).map(f -> _)))
+
+  private def scalarType(t: org.apache.spark.sql.types.DataType): Option[String] = {
     import org.apache.spark.sql.types._
-    def jsonType(t: DataType): Option[String] = t match {
+    t match {
       case _: StringType => Some("string")
       case _: BooleanType => Some("boolean")
       case _: IntegerType | _: LongType | _: ShortType | _: ByteType => Some("integer")
       case _: FloatType | _: DoubleType | _: DecimalType => Some("number")
       case _: TimestampType | _: DateType => Some("string")
-      case _ => None // not orderable/tokenizable — not advertised
+      case _ => None
     }
-    val props = df.schema.fields.flatMap { f =>
-      jsonType(f.dataType).map { jt =>
-        val fmt = f.dataType match {
-          case _: TimestampType | _: DateType => ""","format":"date-time""""
-          case _ => ""
-        }
-        s""""${f.name}":{"type":"$jt"$fmt}"""
+  }
+
+  /** The JSON-schema document over (field, JSON type); date-time fields
+    * carry `"format":"date-time"`.
+    */
+  private def schemaDoc(fields: Seq[(org.apache.spark.sql.types.StructField, String)]): String = {
+    import org.apache.spark.sql.types._
+    val props = fields.map { case (f, jt) =>
+      val fmt = f.dataType match {
+        case _: TimestampType | _: DateType => ""","format":"date-time""""
+        case _ => ""
       }
+      s""""${f.name}":{"type":"$jt"$fmt}"""
     }.mkString(",")
     s"""{"$$schema":"https://json-schema.org/draft/2020-12/schema","type":"object","properties":{$props}}"""
   }
@@ -663,8 +654,15 @@ object StacSearch {
     * codegen'd expression). `to_json` can't hold a per-row variant struct
     * (Point vs Polygon coordinates differ in shape), so the geometry
     * member is spliced in as raw JSON text ahead of the uniform remainder.
+    *
+    * The fields extension happens HERE: a member (or a property) the
+    * `include`/`exclude` lists leave out is never projected, under
+    * [[StacApi.fieldsKeep]]'s rule. Document paths resolve as
+    * `properties.x` / `properties__x` → property x; a bare name is the
+    * top-level member of that name if the Feature has one, else a
+    * property. With no fields every member is projected.
     */
-  private def featureJsonCol: Column = {
+  private def featureJsonCol(include: Seq[String], exclude: Seq[String]): Column = {
     val selfHref = concat(lit("https://example.com/collections/"), col("collection"),
       lit("/items/"), col("id").cast("string"))
     // stac_extensions passthrough (utilities.py:224 — defaults to []) and
@@ -673,56 +671,84 @@ object StacSearch {
     // point items carry neither (nulls drop out of to_json, mirroring the
     // reference's skip-None loop).
     val isArea = col("id_num") % 2 === 1
-    val rest = to_json(struct(
-      lit("Feature").as("type"),
-      lit("1.0.0").as("stac_version"),
-      when(isArea, array(
+    def iso(c: String): Column =
+      concat(date_format(col(c), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), lit("Z")).as(c)
+    val members: Seq[(String, Column)] = Seq(
+      "type" -> lit("Feature").as("type"),
+      "stac_version" -> lit("1.0.0").as("stac_version"),
+      "stac_extensions" -> when(isArea, array(
         lit("https://stac-extensions.github.io/projection/v1.1.0/schema.json")))
         .otherwise(array().cast("array<string>")).as("stac_extensions"),
-      col("id"),
-      col("collection"),
-      when(col("id_num") % 2 === 0, array(col("lon"), col("lat"), col("lon"), col("lat")))
+      "id" -> col("id"),
+      "collection" -> col("collection"),
+      "bbox" -> when(col("id_num") % 2 === 0,
+        array(col("lon"), col("lat"), col("lon"), col("lat")))
         .otherwise(array(col("xmin"), col("ymin"), col("xmax"), col("ymax"))).as("bbox"),
-      struct(
+      "assets" -> struct(
         struct(concat(selfHref, lit("/data.tif")).as("href"),
           lit("image/tiff").as("type")).as("data")).as("assets"),
-      array(
+      "links" -> array(
         struct(lit("self").as("rel"), selfHref.as("href")),
         struct(lit("collection").as("rel"),
           concat(lit("https://example.com/collections/"), col("collection")).as("href"))
-      ).as("links"),
-      struct(
-        concat(date_format(col("datetime"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), lit("Z"))
-          .as("datetime"),
-        col("value"), col("user_id"),
-        when(isArea, lit(4326)).as("proj:epsg"),
-        // proj:shape is [height, width] (row-major raster convention)
-        when(isArea, array(((col("id_num") * 7) % 64 + 16).cast("int"),
-          (col("id_num") % 64 + 16).cast("int"))).as("proj:shape")).as("properties")
-    ))
-    concat(lit("{\"geometry\":"), graft.spatial.WkbGeoJson(wkbCol),
+      ).as("links"))
+    // interval-only items carry start/end and no datetime; to_json drops
+    // the null ones, as the reference moves every non-null column in
+    val properties: Seq[(String, Column)] = Seq(
+      "datetime" -> iso("datetime"),
+      "start_datetime" -> iso("start_datetime"),
+      "end_datetime" -> iso("end_datetime"),
+      "value" -> col("value"),
+      "user_id" -> col("user_id"),
+      "proj:epsg" -> when(isArea, lit(4326)).as("proj:epsg"),
+      // proj:shape is [height, width] (row-major raster convention)
+      "proj:shape" -> when(isArea, array(((col("id_num") * 7) % 64 + 16).cast("int"),
+        (col("id_num") % 64 + 16).cast("int"))).as("proj:shape"))
+    val leaves = ("geometry" +: members.map(_._1)).map(Seq(_)) ++
+      properties.map(p => Seq("properties", p._1))
+    def path(name: String): Seq[String] = {
+      val n = name.replace("properties__", "properties.")
+      if (n.startsWith("properties.")) Seq("properties", n.drop("properties.".length))
+      else if (leaves.exists(_.head == n)) Seq(n)
+      else Seq("properties", n)
+    }
+    val kept = StacApi.fieldsKeep(leaves, include.map(path), exclude.map(path)).toSet
+    val props = properties.collect { case (n, c) if kept(Seq("properties", n)) => c }
+    val rest = to_json(struct(
+      members.collect { case (n, c) if kept(Seq(n)) => c } ++
+        (if (props.isEmpty) Nil else Seq(struct(props: _*).as("properties"))): _*))
+    if (!kept(Seq("geometry"))) rest
+    else concat(lit("{\"geometry\":"), graft.spatial.WkbGeoJson(wkbCol),
       lit(","), substring(rest, 2, Int.MaxValue))
   }
 
   /** Any items-view frame → the same frame + its `_feature` STAC JSON
-    * column (A20's document projection) — the serving path StacApi
-    * .searchFeatures pages over.
+    * column (A20's document projection).
     */
   private[search] def featureFrameOn(df: DataFrame): DataFrame =
-    withEnvelope(df).withColumn("_feature", featureJsonCol)
+    featureFrameOn(df, Nil, Nil)
+
+  /** [[featureFrameOn]] with the fields extension's include/exclude lists
+    * applied inside the projection — the document StacApi.searchFeaturesOn
+    * serves.
+    */
+  private[search] def featureFrameOn(df: DataFrame, include: Seq[String],
+                                     exclude: Seq[String]): DataFrame =
+    withEnvelope(df).withColumn("_feature", featureJsonCol(include, exclude))
 
   /** The items columns [[featureFrameOn]] reads. */
   private[search] val featureCols: Seq[String] =
-    Seq("id", "id_num", "collection", "datetime", "lon", "lat", "value", "user_id")
+    Seq("id", "id_num", "collection", "datetime", "start_datetime", "end_datetime",
+      "lon", "lat", "value", "user_id")
 
   /** Raw Feature JSON (unit-tested by parsing in StacSearchSpec). */
   def a20FeatureJson(s: SparkSession, d: String): DataFrame =
     withEnvelope(items(s, d)).orderBy(col("id")).limit(20)
-      .select(col("id"), featureJsonCol.as("feature"))
+      .select(col("id"), featureJsonCol(Nil, Nil).as("feature"))
 
   def a20Serialize(s: SparkSession, d: String): DataFrame =
     withEnvelope(items(s, d)).orderBy(col("id")).limit(20)
-      .select(col("id"), col("id_num"), featureJsonCol.as("f"))
+      .select(col("id"), col("id_num"), featureJsonCol(Nil, Nil).as("f"))
       .select(col("id"),
         get_json_object(col("f"), "$.type").as("f_type"),
         get_json_object(col("f"), "$.stac_version").as("f_version"),
@@ -2445,7 +2471,7 @@ object StacSearch {
   private def featureJsonFrame(s: SparkSession, d: String): DataFrame =
     graft.core.Memo.frame(s, s"featjson:$d")(
       withEnvelope(items(s, d)).orderBy(col("id"))
-        .select(col("id"), col("id_num"), featureJsonCol.as("f")))
+        .select(col("id"), col("id_num"), featureJsonCol(Nil, Nil).as("f")))
 
   def a43ItemIngest(s: SparkSession, d: String): DataFrame = {
     val src = a43Source(s, d)
@@ -3012,10 +3038,17 @@ object StacSearch {
     * catalog still appear, metadata-null (left join), like the
     * reference's fallback for absent collection.json files.
     */
-  def a26Collections(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+  def a26Collections(s: SparkSession, d: String): DataFrame =
+    a26CollectionsOn(items(s, d))
+
+  /** [[a26Collections]] over an explicit items frame (the HTTP server's
+    * served view).
+    */
+  private[search] def a26CollectionsOn(items: DataFrame): DataFrame = {
+    val spark = items.sparkSession
+    import spark.implicits._
     val meta = collectionMeta.toDF("collection", "title", "license", "description")
-    items(s, d).groupBy(col("collection"))
+    items.groupBy(col("collection"))
       .agg(count(lit(1)).as("n_items"),
         min(col("datetime")).as("t_min"), max(col("datetime")).as("t_max"),
         min(col("lon")).as("west"), max(col("lon")).as("east"),

@@ -78,7 +78,6 @@ final class TxnStore(spark: SparkSession, dir: String) {
     ((baseMaxIdNum >> 1) + seq.incrementAndGet() + 1L) << 1
 
   def hasItemChanges: Boolean = itemRevs.nonEmpty || purgedBase.nonEmpty
-  def hasCollectionChanges: Boolean = collRevs.nonEmpty
 
   // ------------------------------------------------------ serving view
   private def tsValue(t: Option[LocalDateTime]): Any = t match {
@@ -160,10 +159,7 @@ final class TxnStore(spark: SparkSession, dir: String) {
     case None => baseCollections.contains(c) && !purgedBase.contains(c)
   }
 
-  def collectionDeleted(c: String): Boolean =
-    collRevs.get(c).exists(_.deleted)
-  def createdCollection(c: String): Option[String] =
-    collRevs.get(c).collect { case CollRev(false, doc) => doc }
+  /** The collection documents created or updated over HTTP, by id. */
   def createdCollections: Seq[(String, String)] =
     collRevs.readOnlySnapshot().toSeq.collect {
       case (id, CollRev(false, doc)) => (id, doc)

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Staged state has one home: outside `core/Staged.scala`, no main
   *    source may gate on a marker file, pick its own temp directory or
   *    use the catalog as a marker.
-  *  - The computed-extents collections query runs only where a collection
-  *    document is returned, never as a per-request existence check.
+  *  - The computed-extents collections query runs only in the server's
+  *    one collections directory, never as a per-request existence check.
+  *  - The HTTP layer is a codec: StacHttp builds no Spark plan.
   *  - In-memory caches have one home: outside `core/Memo.scala`, only the
   *    named owners of non-cache state hold a concurrent map.
   *  - STAC search has one compiler: an a-gate runs its search through
@@ -41,13 +42,13 @@ class SourceGuardSpec extends AnyFunSuite {
   private def lines(f: File): Vector[String] =
     scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toVector)
 
-  test("only collectionsPage and collectionNode call the extents query in search/") {
+  test("only the served directory calls the extents query in search/") {
     val files = sources(new File("src/main/scala/graft/search"))
     assert(files.exists(_.getName == "StacHttp.scala"), "not run from the repo root")
-    val call = """(StacApi\.collections|a26Collections)\(""".r
-    // inside StacApi the alias is called bare
-    val bare = """(?<![.\w])collections\(""".r
-    val definition = """\bdef\s+(collections|a26Collections)\(""".r
+    val call = """(StacApi\.collections\w*|a26Collections\w*)\(""".r
+    // inside StacApi the aliases are called bare
+    val bare = """(?<![.\w])collections\w*\(""".r
+    val definition = """\bdef\s+(collections\w*|a26Collections\w*)\(""".r
     val enclosing = """\bdef\s+(\w+)""".r
     val hits = for {
       f <- files
@@ -58,12 +59,24 @@ class SourceGuardSpec extends AnyFunSuite {
       if definition.findFirstIn(line).isEmpty
       owner = ls.take(n).reverseIterator.flatMap(enclosing.findFirstMatchIn(_))
         .map(_.group(1)).nextOption().getOrElse("")
-      // allowed: the two serving sites, StacApi's alias for the query,
-      // and the batch oracle gates (a<n>…) that derive the directory
-      if !Set("collectionsPage", "collectionNode")(owner)
-      if !(f.getName == "StacApi.scala" && owner == "collections")
+      // allowed: the server's one directory, StacApi's aliases for the
+      // query, and the batch oracle gates (a<n>…) that derive the directory
+      if !(f.getName == "StacHttp.scala" && owner == "directory")
+      if !(f.getName == "StacApi.scala" && owner.startsWith("collections"))
       if !(f.getName == "StacSearch.scala" && owner.matches("a\\d+\\w*"))
     } yield s"${f.getPath}:${n + 1}: in $owner: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("StacHttp.scala builds no Spark plan: it decodes, calls StacApi/TxnStore, encodes") {
+    val f = new File("src/main/scala/graft/search/StacHttp.scala")
+    assert(f.exists, "not run from the repo root")
+    // spark.sql.functions however imported, and the filter operator
+    val plan = """\bfunctions\b|\.where\(""".r
+    val hits = for {
+      (line, n) <- lines(f).zipWithIndex
+      token <- plan.findFirstIn(line)
+    } yield s"${f.getPath}:${n + 1}: $token"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -449,40 +449,6 @@ class StacApiSpec extends AnyFunSuite {
     assert(viaBody.intersects == SearchParams.geoJson(gj))
   }
 
-  test("collections pagination: token walk over /collections ≡ offset slices " +
-      "(the reference's get_all_collections contract, database_logic.py:58-107)") {
-    val full = StacApi.collections(s, sf).collect() // ordered by collection
-    assert(full.length >= 3) // fixture has 5 collections
-
-    // walk with limit=2: pages must tile `full` exactly, in order
-    val limit = 2
-    var token: Option[String] = None
-    var pages = Seq.empty[Array[org.apache.spark.sql.Row]]
-    var guard = 0
-    while ({
-      val (page, next) = StacApi.collectionsPage(s, sf, token, limit)
-      pages :+= page
-      token = next
-      guard += 1
-      assert(guard <= 10, "pagination did not terminate")
-      next.isDefined
-    }) ()
-
-    // every page but the last is exactly `limit` rows; none is empty
-    assert(pages.init.forall(_.length == limit) && pages.last.nonEmpty)
-    // concatenated walk ≡ the full ordered directory (the offset oracle)
-    val walked = pages.flatten.map(_.getAs[String]("collection")).toSeq
-    assert(walked == full.map(_.getAs[String]("collection")).toSeq)
-    // and each page individually ≡ the offset slice at its position
-    pages.zipWithIndex.foreach { case (page, i) =>
-      val slice = full.slice(i * limit, i * limit + limit).map(_.getAs[String]("collection")).toSeq
-      assert(page.map(_.getAs[String]("collection")).toSeq == slice)
-    }
-    // limit beyond the directory: one page, no token
-    val (all, none) = StacApi.collectionsPage(s, sf, None, full.length + 10)
-    assert(all.length == full.length && none.isEmpty)
-  }
-
   test("intersects param: ring() convenience ≡ geoJson() Polygon of the same ring") {
     val hex = Array(80.137, 10.223, 50.139, 55.177, -9.861, 55.177,
       -39.859, 10.223, -9.861, -34.731, 50.139, -34.731)

@@ -4,14 +4,18 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.net.URLEncoder
 import java.nio.charset.StandardCharsets.UTF_8
+import java.time.Instant
+
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
-import graft.search.{SearchParams, StacApi, StacHttp}
+import graft.search.{SearchParams, SortBy, StacApi, StacHttp}
 
 /** The HTTP layer exercised over real sockets (JDK HttpClient against the
   * JDK HttpServer): every route the reference's FastAPI app mounts, each
@@ -29,12 +33,20 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = { server = StacHttp.start(s, sf) }
   override def afterAll(): Unit = if (server != null) server.stop()
 
-  private def get(path: String): (Int, JsonNode) = {
+  private def getRaw(path: String): (Int, String) = {
     val r = client.send(
       HttpRequest.newBuilder(URI.create(server.base + path)).GET().build(),
       HttpResponse.BodyHandlers.ofString())
-    (r.statusCode(), mapper.readTree(r.body()))
+    (r.statusCode(), r.body())
   }
+
+  private def get(path: String): (Int, JsonNode) = {
+    val (code, body) = getRaw(path)
+    (code, mapper.readTree(body))
+  }
+
+  private def features(d: JsonNode): Seq[JsonNode] = d.get("features").elements().asScala.toSeq
+  private def ids(d: JsonNode): Seq[String] = features(d).map(_.get("id").asText)
 
   private def post(path: String, body: String): (Int, JsonNode) = {
     val r = client.send(
@@ -203,9 +215,98 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!g.has("assets"))
   }
 
+  test("fields in the projection: members, properties, name variants and the " +
+      "POST body shape the document, never the search") {
+    val q = "/search?collections=click&limit=7"
+    val (_, plain) = get(q)
+    assert(features(plain).size == 7)
+    def sameSearch(d: JsonNode, what: String): Unit = {
+      assert(d.get("numberMatched").asLong == plain.get("numberMatched").asLong, what)
+      assert(ids(d) == ids(plain), what)
+    }
+    /** Each plain Feature with only `members` kept, then `edit` applied. */
+    def expected(members: Seq[String])(edit: ObjectNode => Unit): Seq[JsonNode] =
+      features(plain).map { f =>
+        val o = f.deepCopy[ObjectNode]()
+        if (members.nonEmpty) o.retain(members: _*)
+        edit(o)
+        o
+      }
+    val minimum = Seq("type", "id", "collection")
+    // include geometry / bbox: the STAC minimum plus the member
+    Seq("geometry", "bbox").foreach { m =>
+      val (c, d) = get(s"$q&fields=$m")
+      assert(c == 200)
+      sameSearch(d, m)
+      assert(features(d) == expected(minimum :+ m)(_ => ()), m)
+    }
+    // exclude properties: every other member stays as it was
+    val (_, np) = get(s"$q&fields=-properties")
+    sameSearch(np, "-properties")
+    assert(features(np) == expected(Nil)(_.remove("properties")))
+    // include properties, exclude properties.value: the value goes
+    val (_, pv) = get(s"$q&fields=properties,-properties.value")
+    sameSearch(pv, "properties,-properties.value")
+    val withoutValue = expected(minimum :+ "properties")(
+      _.get("properties").asInstanceOf[ObjectNode].remove("value"))
+    assert(features(pv) == withoutValue)
+    // properties__value names the same property as properties.value
+    val (_, v1) = get(s"$q&fields=properties__value")
+    val (_, v2) = get(s"$q&fields=properties.value")
+    sameSearch(v1, "properties__value")
+    assert(features(v1) == features(v2))
+    assert(features(v1) == expected(minimum :+ "properties")(
+      _.get("properties").asInstanceOf[ObjectNode].retain("value")))
+    // the POST body's fields object ≡ the GET form
+    val (pc, pb) = post("/search", """{"collections":["click"],"limit":7,""" +
+      """"fields":{"include":["properties"],"exclude":["properties.value"]}}""")
+    assert(pc == 200)
+    sameSearch(pb, "POST fields")
+    assert(features(pb) == withoutValue)
+  }
+
+  test("GET /search and the item route send each Feature as StacApi built it, " +
+      "byte for byte") {
+    val p = SearchParams(collections = Seq("view"), limit = 6,
+      sortBy = Seq(SortBy("value", desc = true)))
+    val (feats, _, _) = StacApi.searchFeaturesOn(Tables.items(s, sf), p)
+    assert(feats.length == 6)
+    val (c, body) = getRaw("/search?collections=view&limit=6&sortby=-value")
+    assert(c == 200)
+    assert(body.contains("\"features\":[" + feats.mkString(",") + "]"), body)
+    val id = mapper.readTree(feats.head).get("id").asText
+    assert(getRaw(s"/collections/view/items/$id") == (200, feats.head))
+  }
+
+  test("interval items carry start_datetime/end_datetime; point items neither") {
+    val it = Tables.items(s, sf)
+    def instant(v: Any): Instant = v match {
+      case t: java.sql.Timestamp => t.toInstant
+      case l: java.time.LocalDateTime => l.toInstant(java.time.ZoneOffset.UTC)
+    }
+    def served(r: org.apache.spark.sql.Row): JsonNode = {
+      val (c, d) = get(s"/collections/${r.getAs[String]("collection")}/items/" +
+        r.getAs[String]("id"))
+      assert(c == 200, d)
+      d.get("properties")
+    }
+    val interval = it.where(col("id_num") % 7 === 0).orderBy(col("id")).head()
+    val ip = served(interval)
+    Seq("start_datetime", "end_datetime").foreach { f =>
+      assert(ip.has(f), ip)
+      assert(Instant.parse(ip.get(f).asText) == instant(interval.getAs[Any](f)), ip)
+    }
+    assert(!ip.has("datetime"), ip)
+    val point = it.where(col("id_num") % 7 =!= 0).orderBy(col("id")).head()
+    val pp = served(point)
+    assert(Instant.parse(pp.get("datetime").asText) == instant(point.getAs[Any]("datetime")))
+    assert(!pp.has("start_datetime") && !pp.has("end_datetime"), pp)
+  }
+
   test("/collections two-page walk tiles the directory in order") {
     val all = StacApi.collections(s, sf).collect()
       .map(r => r.getString(r.fieldIndex("collection"))).toSeq
+    assert(all.length >= 3) // the fixture has 5 collections
     val (_, p1) = get("/collections?limit=2")
     assert(p1.get("collections").size() == 2)
     val token = p1.get("links").get(0).get("token").asText
@@ -214,6 +315,34 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until p2.get("collections").size())
         .map(p2.get("collections").get(_).get("id").asText)
     assert(walked == all.take(walked.length))
+    // the whole walk (the reference's get_all_collections contract,
+    // database_logic.py:58-107): pages tile the directory in order, each
+    // is the slice at its position, every page but the last has exactly
+    // `limit` entries and none is empty
+    def dirIds(d: JsonNode): Seq[String] =
+      d.get("collections").elements().asScala.map(_.get("id").asText).toSeq
+    def nextToken(d: JsonNode): Option[String] =
+      d.get("links").elements().asScala.find(_.get("rel").asText == "next")
+        .map(_.get("token").asText)
+    val limit = 2
+    var pages = Vector.empty[Seq[String]]
+    var next: Option[String] = None
+    do {
+      val (c, d) = get(s"/collections?limit=$limit" +
+        next.fold("")(t => "&token=" + URLEncoder.encode(t, UTF_8)))
+      assert(c == 200, d)
+      pages :+= dirIds(d)
+      next = nextToken(d)
+      assert(pages.size <= all.size, "pagination did not terminate")
+    } while (next.isDefined)
+    assert(pages.flatten == all)
+    pages.zipWithIndex.foreach { case (pg, i) =>
+      assert(pg == all.slice(i * limit, i * limit + limit))
+    }
+    assert(pages.init.forall(_.size == limit) && pages.last.nonEmpty)
+    // a limit above the directory size: one page, no next link
+    val (_, one) = get(s"/collections?limit=${all.size + 10}")
+    assert(dirIds(one) == all && nextToken(one).isEmpty, one)
   }
 
   test("/collections/{id}: computed extent + metadata; 404 on unknown") {
@@ -364,6 +493,29 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(unknown.result._1 == 404 && unknown.jobs == 0, unknown)
   }
 
+  test("a created item moves its collection's temporal extent in " +
+      "/collections/{id} and the /collections listing") {
+    // a dedicated server: the write changes the served view
+    val srv = StacHttp.start(s, sf)
+    try {
+      val b = srv.base
+      val item = """{"type":"Feature","id":"tx-2030","geometry":""" +
+        """{"type":"Point","coordinates":[1.5,2.5]},""" +
+        """"properties":{"datetime":"2030-01-01T00:00:00","value":1.0}}"""
+      assert(send(b, "POST", "/collections/click/items", Some(item))._1 == 201)
+      val written = Instant.parse("2030-01-01T00:00:00Z")
+      def extentEnd(c: JsonNode): Instant =
+        Instant.parse(c.at("/extent/temporal/interval/0/1").asText)
+      val (cc, coll) = send(b, "GET", "/collections/click", None)
+      assert(cc == 200 && !extentEnd(coll).isBefore(written), coll)
+      val (dc, dir) = send(b, "GET", "/collections?limit=10000", None)
+      assert(dc == 200)
+      val listed = dir.get("collections").elements().asScala
+        .find(_.get("id").asText == "click")
+      assert(listed.exists(c => !extentEnd(c).isBefore(written)), dir)
+    } finally srv.stop()
+  }
+
   test("transactions (r12): create → search → patch → delete over real " +
       "sockets, with the reference's 404/409 contracts") {
     // a dedicated server: transactions mutate its overlay, and the other
@@ -453,7 +605,6 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (gc2, gn) = g("/collections/campaign-x")
       assert(gc2 == 200 && gn.get("title").asText == "Campaign X")
       val (dirC, dirN) = g("/collections?limit=10000")
-      import scala.jdk.CollectionConverters._
       val ids = dirN.get("collections").elements().asScala.map(_.get("id").asText).toSeq
       assert(ids.contains("campaign-x") && ids.contains("click"), ids)
       assert(dirC == 200 && ids == ids.sorted, ids)
