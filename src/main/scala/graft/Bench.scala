@@ -12,13 +12,12 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val spark = Harness.session()
     graft.core.FixtureGuard.report(spark, sfDir, "bench")
     Harness.warmUp(spark)
 
     val results = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      val best = Harness.time(spark, sfDir, name, runs)
+      val best = Harness.time(spark, sfDir, name, Harness.benchRuns)
       // NOTE (r12-opt, measured): a per-gate System.gc() here fixes the
       // occasional block-store tail inflation of individual gates
       // (c89 2.6 → 1.2 s) but costs ~0.2 s on EVERY gate (full sweep

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 import graft.functions.{DotProduct, RollingHash}
-import graft.spatial.{BoxIntersectsGeom, PointInGeom, PointInPolygon,
+import graft.spatial.{BoxRelShape, Geo, PointRelShape, Shape,
   WkbEnvelope, WkbGeoJson, WkbNumPoints, WkbPoint, WkbType}
 
 /** SQL-surface registration for graft's custom Catalyst expressions, so
@@ -29,6 +29,11 @@ import graft.spatial.{BoxIntersectsGeom, PointInGeom, PointInPolygon,
   *  - `wkb_type(binary) -> string`, `wkb_num_points(binary) -> int`
   *  - `wkb_geojson(binary) -> string` — WKB → GeoJSON text
   *  - `wkb_point(x, y) -> binary` — Point WKB encoder
+  *
+  * The three spatial functions build the intersects relation of the one
+  * point kernel ([[PointRelShape]]) or the one box kernel
+  * ([[BoxRelShape]]), so plans print `point_rel_shape` / `box_rel_shape`,
+  * and [[graft.spatial.DeriveSpatialEnvelope]] adds their envelope prune.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -70,16 +75,18 @@ object GraftFunctions {
     },
     "point_in_polygon" -> { args =>
       require(args.length == 3, "point_in_polygon(lon, lat, ring)")
-      PointInPolygon(args(0), args(1), polyOf(args(2)))
+      PointRelShape(args(0), args(1), Shape.PolyS(Array(Array(polyOf(args(2))))),
+        Geo.RelIntersects)
     },
     "point_in_geom" -> { args =>
       require(args.length == 3, "point_in_geom(lon, lat, geom)")
-      PointInGeom(args(0), args(1), geomOf(args(2), "point_in_geom"))
+      PointRelShape(args(0), args(1), Shape.PolyS(geomOf(args(2), "point_in_geom")),
+        Geo.RelIntersects)
     },
     "box_intersects_geom" -> { args =>
       require(args.length == 5, "box_intersects_geom(xmin, ymin, xmax, ymax, geom)")
-      BoxIntersectsGeom(args(0), args(1), args(2), args(3),
-        geomOf(args(4), "box_intersects_geom"))
+      BoxRelShape(args(0), args(1), args(2), args(3),
+        Shape.PolyS(geomOf(args(4), "box_intersects_geom")), Geo.RelIntersects)
     },
     "wkb_envelope" -> { args =>
       require(args.length == 1, "wkb_envelope(wkb)")

@@ -26,9 +26,22 @@ import org.apache.spark.sql.execution.ExplainMode
   * shapes on un-checkpointed kernels where it matters).
   */
 object Harness {
+  /** `env(name)` as a positive Int, or `default` when unset. Anything else
+    * throws naming the variable: a `0` would otherwise reach `local[0]` or
+    * an empty best-of-N.
+    */
+  def positiveEnv(env: Map[String, String], name: String, default: => Int): Int =
+    env.get(name).fold(default) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$name must be a positive integer, got '$v'"))
+    }
+
   /** Local cores: `SPARK_GRAFT_CPUS`, else the machine's. */
-  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors)
+  val cpus: Int =
+    positiveEnv(sys.env, "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors)
+
+  /** Bench's runs per gate: `SPARK_GRAFT_BENCH_RUNS`, else 2. */
+  lazy val benchRuns: Int = positiveEnv(sys.env, "SPARK_GRAFT_BENCH_RUNS", 2)
 
   /** The session policy. AQE is off: locally its re-planning adds ~100-300
     * ms of stage-boundary latency per query, which dominates sub-second
@@ -72,12 +85,13 @@ object Harness {
         s"sf0.001): ${e.getMessage} — measured times below include cold-JVM cost")
     }
 
-  /** Best wall seconds of `reps` runs of `gate`, or None when a run throws:
-    * a failed run is reported, never counted as a fast time. `each(r, s)`
-    * sees every completed run.
+  /** Best wall seconds of `reps` (at least 1) runs of `gate`, or None when
+    * a run throws: a failed run is reported, never counted as a fast time.
+    * `each(r, s)` sees every completed run.
     */
   def time(spark: SparkSession, sfDir: String, gate: String, reps: Int,
-           each: (Int, Double) => Unit = (_, _) => ()): Option[Double] =
+           each: (Int, Double) => Unit = (_, _) => ()): Option[Double] = {
+    require(reps >= 1, s"time needs reps >= 1, got $reps")
     try Some((1 to reps).map { r =>
       val t0 = System.nanoTime()
       run(spark, sfDir, gate)
@@ -89,6 +103,7 @@ object Harness {
       System.err.println(s"[harness] $gate failed: ${e.getMessage}")
       None
     }
+  }
 
   /** Between-gate block-store sweep, outside any timed region: a gate's own
     * localCheckpoint blocks are garbage once its runs finish, but they stay

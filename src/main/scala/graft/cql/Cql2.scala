@@ -332,10 +332,11 @@ object Cql {
     case ArrayPred(op, _, _) =>
       throw new IllegalArgumentException(s"bad array op: $op")
     case SIntersects(shape, "geometry") =>
-      graft.spatial.Geo.intersectsShape(col("lon"), col("lat"), shape)
+      graft.spatial.Geo.pointRelShapeCol(col("lon"), col("lat"), shape,
+        graft.spatial.Geo.RelIntersects)
     case SIntersects(shape, "footprint") =>
-      graft.spatial.Geo.footprintIntersectsShape(
-        col("xmin"), col("ymin"), col("xmax"), col("ymax"), shape)
+      graft.spatial.Geo.boxRelShapeCol(col("xmin"), col("ymin"),
+        col("xmax"), col("ymax"), shape, graft.spatial.Geo.RelIntersects)
     case SIntersects(_, other) =>
       throw new IllegalArgumentException(s"bad s_intersects target: $other")
     case SWithinBox(shape) =>

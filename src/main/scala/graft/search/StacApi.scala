@@ -191,7 +191,7 @@ object StacApi {
       df = df.where(Geo.bboxContainsWrap(col("lon"), col("lat"), w, s, e, n))
     }
     p.intersects.foreach { shape =>
-      df = df.where(Geo.intersectsShape(col("lon"), col("lat"), shape))
+      df = df.where(Geo.pointRelShapeCol(col("lon"), col("lat"), shape, Geo.RelIntersects))
     }
     p.datetime.foreach { dt => df = df.where(datetimePredicate(dt)) }
     // CQL2 property refs resolve properties.x / properties__x / x against

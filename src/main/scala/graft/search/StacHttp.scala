@@ -77,9 +77,16 @@ object StacHttp {
       val store: TxnStore) {
     def port: Int = http.getAddress.getPort
     def base: String = s"http://localhost:$port"
-    // shut the pool down too — its threads are non-daemon, so a stop()
-    // that leaves them running pins the JVM forever
+    // the server's threads are daemon (see start), so a JVM whose caller
+    // never reaches stop() still exits; stop() ends the dispatcher and the
+    // pool so a long-lived JVM does not keep an idle server per start
     def stop(): Unit = { http.stop(0); pool.shutdown() }
+  }
+
+  private val daemonThreads: java.util.concurrent.ThreadFactory = { r =>
+    val t = java.util.concurrent.Executors.defaultThreadFactory().newThread(r)
+    t.setDaemon(true)
+    t
   }
 
   /** Start the API over one fixture dir. `port = 0` picks an ephemeral
@@ -91,9 +98,15 @@ object StacHttp {
     server.createContext("/", (ex: HttpExchange) => handle(store, ex))
     // a small pool: handlers run Spark actions, which parallelize
     // internally — the pool only bounds concurrent REQUESTS
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4, daemonThreads)
     server.setExecutor(pool)
-    server.start()
+    // The JDK's dispatcher thread is non-daemon whatever executor is set,
+    // but it takes its daemon status from the thread that starts it. Start
+    // it from a daemon thread, so a caller that throws before stop() does
+    // not leave the JVM unable to exit.
+    val starter = daemonThreads.newThread(() => server.start())
+    starter.start()
+    starter.join()
     new Server(server, pool, store)
   }
 

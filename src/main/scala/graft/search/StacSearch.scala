@@ -1160,7 +1160,8 @@ object StacSearch {
     * columns). A bbox search becomes INTERVAL OVERLAP — four range
     * predicates that push down to parquet row-group stats exactly like
     * the point case. The exact polygon test would run as a post-filter
-    * only on envelope survivors (the PointInPolygon pattern).
+    * only on envelope survivors (the envelope-prune + exact-kernel
+    * pattern of `Geo.boxRelShapeCol`).
     */
   private def withEnvelope(df: DataFrame): DataFrame = {
     val halfW = (col("user_id") % 10).cast("double") / 10.0 + 0.1
@@ -1259,8 +1260,8 @@ object StacSearch {
     */
   def a35FootprintIntersects(s: SparkSession, d: String): DataFrame =
     withEnvelope(items(s, d))
-      .where(Geo.footprintIntersectsGeom(
-        col("xmin"), col("ymin"), col("xmax"), col("ymax"), concaveGeom))
+      .where(Geo.boxRelShapeCol(col("xmin"), col("ymin"), col("xmax"), col("ymax"),
+        Shape.PolyS(concaveGeom), Geo.RelIntersects))
       .select(col("id"), col("collection"), col("xmin"), col("ymin"),
         col("xmax"), col("ymax"))
       .orderBy(col("id"))
@@ -1592,7 +1593,7 @@ object StacSearch {
     df.select(col("id"),
       col("qx0"), col("qy0"), col("qx1"), col("qy1"),
       col("qx2"), col("qy2"), col("qx3"), col("qy3"),
-      Geo.footprintIntersectsGeom(exmin, eymin, exmax, eymax, a88RegionGeom)
+      Geo.boxRelShapeCol(exmin, eymin, exmax, eymax, a88Region, RelIntersects)
         .as("env_int"),
       rel(a88Region, RelIntersects).as("p_int"),
       (!rel(a88Region, RelIntersects)).as("p_dis"),

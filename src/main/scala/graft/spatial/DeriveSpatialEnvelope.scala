@@ -1,33 +1,36 @@
 package graft.spatial
 
-import org.apache.spark.sql.catalyst.expressions.{And, Expression,
-  GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
 
 /** Optimizer rule: DERIVE the pushable envelope predicate from the exact
-  * spatial kernels (the manual trick `Geo.intersectsPolygon` plays,
-  * promoted to a Catalyst rule so the SQL surface gets it for free).
+  * spatial kernels (the prune `Geo.pointRelShapeCol`/`boxRelShapeCol`
+  * AND in front of their kernel, promoted to a Catalyst rule so the SQL
+  * surface gets it for free).
   *
   * A user writing `WHERE point_in_polygon(lon, lat, <literal ring>)`
   * through the registered function gets a codegen'd exact test — but a
   * custom expression is opaque to the parquet source, so nothing prunes:
   * at 100 TB that's the difference between scanning every row group and
-  * skipping whole files on column min/max stats. The kernel's geometry
-  * is a plan-time constant, so its envelope is too; a point inside a
-  * polygon is inside the polygon's envelope, and a box intersecting a
-  * geometry overlaps the geometry's envelope. The rule ANDs those range
-  * predicates — plain comparisons on the kernel's own child expressions,
-  * exactly what the scan CAN push — in front of the untouched kernel.
+  * skipping whole files on column min/max stats. The kernel's shape is a
+  * plan-time constant, so its envelope is too. For every relation of
+  * both coordinate kernels ([[PointRelShape]], [[BoxRelShape]]) the rule
+  * ANDs the range predicates [[Geo.envelopePrune]] gives — plain
+  * comparisons on the kernel's own child expressions, exactly what the
+  * scan CAN push — in front of the untouched kernel. The builders use
+  * the same function, so the rule and the builders cannot disagree.
   *
   * Conservative by construction: only TOP-LEVEL CONJUNCTS are inspected
   * (a kernel under OR/NOT contributes nothing — deriving there would be
-  * wrong), only double-typed children are constrained (anything else
-  * resolves but could not have come from the builders), and derivation
-  * is idempotent — conjuncts semantically equal to an already-present
+  * wrong), only deterministic double-typed children are constrained
+  * (anything else resolves but could not have come from the builders,
+  * and a non-deterministic child would be re-evaluated to a different
+  * value), an empty literal shape derives nothing, and derivation is
+  * idempotent — conjuncts semantically equal to an already-present
   * predicate are not re-added, so the rule is a no-op at fixed point and
-  * on the hand-tuned gate paths that already carry their envelope.
+  * on the builder paths that already carry their envelope.
   *
   * Registered via `GraftExtensions` (injectOptimizerRule) and
   * `GraftFunctions.register` (experimental.extraOptimizations).
@@ -39,39 +42,15 @@ object DeriveSpatialEnvelope extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  private def envelopeOf(geom: Array[Array[Array[Double]]])
-      : (Double, Double, Double, Double) = {
-    val flat = geom.flatten.flatten
-    val xs = flat.indices.collect { case i if i % 2 == 0 => flat(i) }
-    val ys = flat.indices.collect { case i if i % 2 == 1 => flat(i) }
-    (xs.min, ys.min, xs.max, ys.max)
-  }
-
-  // deterministic only: the derived predicate re-evaluates the child
-  // expression, which for a non-deterministic input (rand-derived
-  // coordinates) would see a DIFFERENT value than the kernel does
-  private def range(e: Expression, lo: Double, hi: Double): Seq[Expression] =
-    if (e.dataType != DoubleType || !e.deterministic) Seq.empty
-    else Seq(GreaterThanOrEqual(e, Literal(lo)), LessThanOrEqual(e, Literal(hi)))
-
   /** The envelope conjuncts a single top-level conjunct implies. */
-  private def derived(e: Expression): Seq[Expression] = e match {
-    case PointInPolygon(lon, lat, poly) =>
-      val xs = poly.indices.collect { case i if i % 2 == 0 => poly(i) }
-      val ys = poly.indices.collect { case i if i % 2 == 1 => poly(i) }
-      range(lon, xs.min, xs.max) ++ range(lat, ys.min, ys.max)
-    case PointInGeom(lon, lat, geom) if geom.nonEmpty =>
-      val (w, s, east, n) = envelopeOf(geom)
-      range(lon, w, east) ++ range(lat, s, n)
-    case BoxIntersectsGeom(xmin, ymin, xmax, ymax, geom) if geom.nonEmpty =>
-      // box ∩ geom ⇒ the box overlaps the geometry's envelope
-      val (w, s, east, n) = envelopeOf(geom)
-      def ok(e: Expression) = e.dataType == DoubleType && e.deterministic
-      (if (ok(xmin)) Seq(LessThanOrEqual(xmin, Literal(east))) else Seq.empty) ++
-        (if (ok(xmax)) Seq(GreaterThanOrEqual(xmax, Literal(w))) else Seq.empty) ++
-        (if (ok(ymin)) Seq(LessThanOrEqual(ymin, Literal(n))) else Seq.empty) ++
-        (if (ok(ymax)) Seq(GreaterThanOrEqual(ymax, Literal(s))) else Seq.empty)
-    case _ => Seq.empty
+  private def derived(e: Expression): Seq[Expression] = {
+    val prune = e match {
+      case PointRelShape(lon, lat, shape, rel) => Geo.envelopePrune(Seq(lon, lat), shape, rel)
+      case BoxRelShape(xmin, ymin, xmax, ymax, shape, rel) =>
+        Geo.envelopePrune(Seq(xmin, ymin, xmax, ymax), shape, rel)
+      case _ => Seq.empty
+    }
+    prune.filter(c => c.left.dataType == DoubleType && c.left.deterministic)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {

@@ -1,7 +1,8 @@
 package graft.spatial
 
 import org.apache.spark.sql.{Column, GraftBridge}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, BinaryExpression, Expression,
+  GreaterThanOrEqual, LessThanOrEqual, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType}
@@ -15,10 +16,11 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   *
   *  - bbox intersects  → two range predicates that push down to parquet
   *    row-group min/max stats (cheap pruning before any row is read);
-  *  - polygon intersects → the same bbox prune on the polygon's envelope,
-  *    then an exact ray-cast post-filter as a codegen'd Catalyst
-  *    expression ([[PointInPolygon]]) — stays inside whole-stage codegen,
-  *    no UDF boxing.
+  *  - shape intersects → the same bbox prune on the shape's envelope
+  *    ([[Geo.envelopePrune]]), then an exact post-filter as a codegen'd
+  *    Catalyst expression — stays inside whole-stage codegen, no UDF
+  *    boxing. Every relation, intersects included, compiles to one kernel
+  *    per target: [[PointRelShape]], [[BoxRelShape]] or [[WkbRelShape]].
   */
 object Geo {
 
@@ -80,17 +82,6 @@ object Geo {
     val xs = poly.indices.collect { case i if i % 2 == 0 => poly(i) }
     val ys = poly.indices.collect { case i if i % 2 == 1 => poly(i) }
     (xs.min, ys.min, xs.max, ys.max)
-  }
-
-  /** Exact point-in-polygon with an envelope pre-filter (the pushdown-able
-    * part) AND'd in front of the codegen'd ray cast.
-    */
-  def intersectsPolygon(lon: Column, lat: Column, poly: Array[Double]): Column = {
-    val (w, s, e, n) = envelope(poly)
-    bboxContains(lon, lat, w, s, e, n) &&
-      GraftBridge.column(PointInPolygon(
-        GraftBridge.expression(lon.cast("double")),
-        GraftBridge.expression(lat.cast("double")), poly))
   }
 
   /** Oracle SQL for a CONVEX CCW polygon: conjunction of half-plane tests
@@ -195,12 +186,6 @@ object Geo {
     false
   }
 
-  /** Envelope of an arbitrary geometry (outer shells only). */
-  def geomEnvelope(geom: Array[Array[Array[Double]]]): (Double, Double, Double, Double) = {
-    val envs = geom.map(rings => envelope(rings(0)))
-    (envs.map(_._1).min, envs.map(_._2).min, envs.map(_._3).max, envs.map(_._4).max)
-  }
-
   /** Is a CCW ring convex? Used to pick the independent half-plane SQL
     * oracle form when possible.
     */
@@ -212,17 +197,6 @@ object Geo {
       val cx = ring(2 * ((i + 2) % n)); val cy = ring(2 * ((i + 2) % n) + 1)
       (bx - ax) * (cy - ay) - (by - ay) * (cx - ax) > 0
     }
-  }
-
-  /** Exact point-in-geometry with an envelope pre-filter (pushdown-able)
-    * AND'd in front of the codegen'd kernel.
-    */
-  def intersectsGeom(lon: Column, lat: Column, geom: Array[Array[Array[Double]]]): Column = {
-    val (w, s, e, n) = geomEnvelope(geom)
-    bboxContains(lon, lat, w, s, e, n) &&
-      GraftBridge.column(PointInGeom(
-        GraftBridge.expression(lon.cast("double")),
-        GraftBridge.expression(lat.cast("double")), geom))
   }
 
   /** Ray cast (even-odd parity) rendered as plain SQL — the general
@@ -321,21 +295,6 @@ object Geo {
     false
   }
 
-  /** Footprint (envelope-box columns) ∩ geometry: envelope prune against
-    * the geometry's envelope (pushdown-able ranges) AND the exact
-    * codegen'd kernel.
-    */
-  def footprintIntersectsGeom(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
-                              geom: Array[Array[Array[Double]]]): Column = {
-    val (w, s, e, n) = geomEnvelope(geom)
-    xmin <= e && xmax >= w && ymin <= n && ymax >= s &&
-      GraftBridge.column(BoxIntersectsGeom(
-        GraftBridge.expression(xmin.cast("double")),
-        GraftBridge.expression(ymin.cast("double")),
-        GraftBridge.expression(xmax.cast("double")),
-        GraftBridge.expression(ymax.cast("double")), geom))
-  }
-
   // =================================================================
   // Arbitrary GeoJSON geometry TYPES (Point, MultiPoint, LineString,
   // MultiLineString, GeometryCollection — beyond the polygon family):
@@ -420,45 +379,18 @@ object Geo {
     case Shape.CollS(parts) => parts.exists(boxIntersectsShape(xmin, ymin, xmax, ymax, _))
   }
 
-  /** Envelope of an arbitrary shape (for the pushdown-able prune). */
-  def shapeEnvelope(s: Shape): (Double, Double, Double, Double) = s match {
-    case Shape.PointS(x, y)    => (x, y, x, y)
-    case Shape.MultiPointS(ps) => envelope(ps)
-    case Shape.LinesS(paths)   =>
-      val envs = paths.map(envelope)
-      (envs.map(_._1).min, envs.map(_._2).min, envs.map(_._3).max, envs.map(_._4).max)
-    case Shape.PolyS(geom)  => geomEnvelope(geom)
-    case Shape.CollS(parts) =>
-      val envs = parts.map(shapeEnvelope)
-      (envs.map(_._1).min, envs.map(_._2).min, envs.map(_._3).max, envs.map(_._4).max)
-  }
-
-  /** Exact point ∩ shape with the envelope pre-filter AND'd in front of
-    * the codegen'd kernel. Polygon-family shapes route to the established
-    * [[PointInGeom]] kernel (identical plan to the pre-Shape path).
+  /** Envelope of an arbitrary shape (polygons by their outer shells), or
+    * None for an empty shape — the box [[envelopePrune]] is cut from.
     */
-  def intersectsShape(lon: Column, lat: Column, s: Shape): Column = s match {
-    case Shape.PolyS(geom) => intersectsGeom(lon, lat, geom)
-    case _ =>
-      val (w, so, e, n) = shapeEnvelope(s)
-      bboxContains(lon, lat, w, so, e, n) &&
-        GraftBridge.column(PointIntersectsShape(
-          GraftBridge.expression(lon.cast("double")),
-          GraftBridge.expression(lat.cast("double")), s))
-  }
-
-  /** Footprint box ∩ shape: envelope prune + codegen'd kernel. */
-  def footprintIntersectsShape(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
-                               s: Shape): Column = s match {
-    case Shape.PolyS(geom) => footprintIntersectsGeom(xmin, ymin, xmax, ymax, geom)
-    case _ =>
-      val (w, so, e, n) = shapeEnvelope(s)
-      xmin <= e && xmax >= w && ymin <= n && ymax >= so &&
-        GraftBridge.column(BoxIntersectsShape(
-          GraftBridge.expression(xmin.cast("double")),
-          GraftBridge.expression(ymin.cast("double")),
-          GraftBridge.expression(xmax.cast("double")),
-          GraftBridge.expression(ymax.cast("double")), s))
+  def shapeEnvelope(s: Shape): Option[(Double, Double, Double, Double)] = {
+    def coords(s: Shape): Array[Double] = s match {
+      case Shape.PointS(x, y)    => Array(x, y)
+      case Shape.MultiPointS(ps) => ps
+      case Shape.LinesS(paths)   => paths.flatten
+      case Shape.PolyS(geom)     => geom.flatMap(_.headOption).flatten
+      case Shape.CollS(parts)    => parts.flatMap(coords)
+    }
+    Some(coords(s)).filter(_.nonEmpty).map(envelope)
   }
 
   // =================================================================
@@ -772,10 +704,12 @@ object Geo {
     case _ => false
   }
 
-  /** Dispatch table for the relation kernels — one static entry point
-    * per target so the codegen'd expressions stay single-call.
+  /** Dispatch table for the relation kernels, intersects included — one
+    * static entry point per target so the codegen'd expressions stay
+    * single-call.
     */
   def pointRelShape(x: Double, y: Double, s: Shape, rel: Int): Boolean = rel match {
+    case RelIntersects           => pointIntersectsShape(x, y, s)
     case RelContains | RelEquals => shapeEqualsPoint(x, y, s)
     case RelTouches              => pointTouchesShape(x, y, s)
     case RelCrosses | RelOverlaps => false // a single point has no exclusive part
@@ -784,6 +718,7 @@ object Geo {
 
   def boxRelShape(xmin: Double, ymin: Double, xmax: Double, ymax: Double,
                   s: Shape, rel: Int): Boolean = rel match {
+    case RelIntersects => boxIntersectsShape(xmin, ymin, xmax, ymax, s)
     case RelContains => boxContainsShape(xmin, ymin, xmax, ymax, s)
     case RelEquals   => boxEqualsShape(xmin, ymin, xmax, ymax, s)
     case RelTouches  => boxTouchesShape(xmin, ymin, xmax, ymax, s)
@@ -793,6 +728,7 @@ object Geo {
     case other => throw new IllegalArgumentException(s"bad box rel: $other")
   }
 
+  final val RelIntersects = 0
   final val RelContains = 1
   final val RelEquals   = 2
   final val RelTouches  = 3
@@ -800,47 +736,66 @@ object Geo {
   final val RelOverlaps = 5
   final val RelWithin   = 6
 
-  /** Point-geometry DE-9IM relation as a Column: envelope prune
-    * (pushdown-able) AND the codegen'd kernel. Constant-false relations
-    * (crosses/overlaps on a point) fold to lit(false) — the SAME folds
-    * the SQL renderer applies, so the backends agree even on rows with
-    * NULL coordinates.
+  /** The one envelope rule: the pushdown-able range conjuncts a relation
+    * kernel implies on its coordinate children — (lon, lat) for a point
+    * target, (xmin, ymin, xmax, ymax) for a box. A related point lies in
+    * the shape's envelope; a related box overlaps it, lies inside it
+    * (within, equals) or covers it (contains — containment flips the
+    * prune). An empty shape implies nothing. The column builders AND it
+    * in front of their kernel and [[DeriveSpatialEnvelope]] derives it
+    * for kernels that arrive without it, so the two cannot disagree.
+    */
+  def envelopePrune(coords: Seq[Expression], s: Shape, rel: Int): Seq[BinaryComparison] =
+    shapeEnvelope(s).toSeq.flatMap { case (w, so, e, n) =>
+      def ge(c: Expression, v: Double) = GreaterThanOrEqual(c, Literal(v))
+      def le(c: Expression, v: Double) = LessThanOrEqual(c, Literal(v))
+      (coords, rel) match {
+        case (Seq(lon, lat), _) => Seq(ge(lon, w), le(lon, e), ge(lat, so), le(lat, n))
+        case (Seq(x0, y0, x1, y1), RelWithin | RelEquals) =>
+          Seq(ge(x0, w), le(x1, e), ge(y0, so), le(y1, n))
+        case (Seq(x0, y0, x1, y1), RelContains) =>
+          Seq(le(x0, w), ge(x1, e), le(y0, so), ge(y1, n))
+        case (Seq(x0, y0, x1, y1), _) =>
+          Seq(le(x0, e), ge(x1, w), le(y0, n), ge(y1, so))
+      }
+    }
+
+  /** [[envelopePrune]] AND the codegen'd kernel, which reads the
+    * coordinates cast to double.
+    */
+  private def pruned(coords: Seq[Column], s: Shape, rel: Int)(
+      kernel: Seq[Expression] => Expression): Column =
+    (envelopePrune(coords.map(GraftBridge.expression), s, rel) :+
+      kernel(coords.map(c => GraftBridge.expression(c.cast("double")))))
+      .map(GraftBridge.column).reduce(_ && _)
+
+  /** Point-geometry relation (intersects included) as a Column: the
+    * envelope prune (pushdown-able) AND the codegen'd kernel.
+    * Constant-false relations (crosses/overlaps on a point) fold to
+    * lit(false) — the SAME folds the SQL renderer applies, so the
+    * backends agree even on rows with NULL coordinates.
     */
   def pointRelShapeCol(lon: Column, lat: Column, s: Shape, rel: Int): Column =
     rel match {
       case RelCrosses | RelOverlaps => lit(false)
-      case _ =>
-        val (w, so, e, n) = shapeEnvelope(s)
-        bboxContains(lon, lat, w, so, e, n) &&
-          GraftBridge.column(PointRelShape(
-            GraftBridge.expression(lon.cast("double")),
-            GraftBridge.expression(lat.cast("double")), s, rel))
+      case _ => pruned(Seq(lon, lat), s, rel) { case Seq(x, y) => PointRelShape(x, y, s, rel) }
     }
 
-  /** Box-footprint DE-9IM relation as a Column: relation-appropriate
-    * envelope prune (containment prunes flip direction) AND the
-    * codegen'd kernel; constant folds mirror [[boxRelShapeSql]].
+  /** Box-footprint relation (intersects included) as a Column: the
+    * envelope prune AND the codegen'd kernel; constant folds mirror
+    * [[boxRelShapeSql]].
     */
   def boxRelShapeCol(xmin: Column, ymin: Column, xmax: Column, ymax: Column,
-                     s: Shape, rel: Int): Column = {
-    val (w, so, e, n) = shapeEnvelope(s)
-    def kernel = GraftBridge.column(BoxRelShape(
-      GraftBridge.expression(xmin.cast("double")),
-      GraftBridge.expression(ymin.cast("double")),
-      GraftBridge.expression(xmax.cast("double")),
-      GraftBridge.expression(ymax.cast("double")), s, rel))
+                     s: Shape, rel: Int): Column =
     rel match {
       case RelWithin | RelEquals if mergedPolys(s).isEmpty => lit(false)
       case RelOverlaps if mergedPolys(s).isEmpty => lit(false)
       case RelCrosses if shapeDim(s) >= 2 => lit(false)
-      case RelWithin | RelEquals =>
-        xmin >= w && xmax <= e && ymin >= so && ymax <= n && kernel
-      case RelContains =>
-        xmin <= w && xmax >= e && ymin <= so && ymax >= n && kernel
       case _ =>
-        xmin <= e && xmax >= w && ymin <= n && ymax >= so && kernel
+        pruned(Seq(xmin, ymin, xmax, ymax), s, rel) {
+          case Seq(a, b, c, d) => BoxRelShape(a, b, c, d, s, rel)
+        }
     }
-  }
 
   /** Point ∩ shape as oracle SQL. Point/line forms: exact cross-product
     * collinearity + coordinate bounds (constants folded here). Polygons
@@ -1648,8 +1603,6 @@ object Geo {
       !polyWithinGeom(a, polys) && !polyWithinGeom(polys, a)
   }
 
-  final val RelIntersects = 0
-
   /** Dispatch for the polygon-footprint relation kernel — one static
     * entry point so the codegen'd expression stays single-call.
     */
@@ -1717,7 +1670,6 @@ object Geo {
   def wkbRelShape(b: Array[Byte], s: Shape, rel: Int): Boolean =
     Wkb.toShape(b) match {
       case Shape.PolyS(geom)   => polyRelShape(geom, s, rel)
-      case Shape.PointS(x, y) if rel == RelIntersects => pointIntersectsShape(x, y, s)
       case Shape.PointS(x, y)  => pointRelShape(x, y, s, rel)
       case f                   => nonArealRelShape(f, s, rel)
     }
@@ -1853,89 +1805,6 @@ object Geo {
   }
 }
 
-/** Codegen'd exact point-in-polygon (even-odd ray cast). The polygon is a
-  * per-query constant, attached to the generated class as a reference
-  * object; evaluation is one static call per row inside whole-stage
-  * codegen (SURVEY.md §5 — "post-filters codegen'd, no UDF boxing").
-  */
-case class PointInPolygon(left: Expression, right: Expression, poly: Array[Double])
-    extends BinaryExpression {
-
-  // Inputs are cast to double at the builder (Geo.intersectsPolygon) — no
-  // ExpectsInputTypes because AbstractDataType is private[sql] in Spark 4.
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "point_in_polygon"
-
-  override protected def nullSafeEval(lon: Any, lat: Any): Any =
-    Geo.rayCast(lon.asInstanceOf[Double], lat.asInstanceOf[Double], poly)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val polyRef = ctx.addReferenceObj("poly", poly, "double[]")
-    nullSafeCodeGen(ctx, ev, (lonCode, latCode) =>
-      s"${ev.value} = graft.spatial.Geo.rayCast($lonCode, $latCode, $polyRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PointInPolygon =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd point-in-geometry for arbitrary GeoJSON shapes (Polygon with
-  * holes, MultiPolygon): per-ring even-odd ray casts combined shell-minus-
-  * holes, OR'd over polygons. The geometry is a per-query constant carried
-  * as a generated-class reference object; one static call per row inside
-  * whole-stage codegen.
-  */
-case class PointInGeom(left: Expression, right: Expression,
-                       geom: Array[Array[Array[Double]]])
-    extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "point_in_geom"
-
-  override protected def nullSafeEval(lon: Any, lat: Any): Any =
-    Geo.containsGeom(lon.asInstanceOf[Double], lat.asInstanceOf[Double], geom)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val geomRef = ctx.addReferenceObj("geom", geom, "double[][][]")
-    nullSafeCodeGen(ctx, ev, (lonCode, latCode) =>
-      s"${ev.value} = graft.spatial.Geo.containsGeom($lonCode, $latCode, $geomRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PointInGeom =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Codegen'd exact footprint-box ∩ geometry test (corner containment +
-  * vertex-in-box + edge crossings) for non-point item geometries: the
-  * envelope columns (xmin/ymin/xmax/ymax) are the item's stored footprint
-  * bound; the query geometry is a constant reference object.
-  */
-case class BoxIntersectsGeom(first: Expression, second: Expression,
-                             third: Expression, fourth: Expression,
-                             geom: Array[Array[Array[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "box_intersects_geom"
-
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    Geo.boxIntersectsGeom(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double], geom)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val geomRef = ctx.addReferenceObj("geom", geom, "double[][][]")
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${ev.value} = graft.spatial.Geo.boxIntersectsGeom($a, $b, $c, $d, $geomRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): BoxIntersectsGeom =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
 /** Arbitrary GeoJSON geometry beyond the polygon family — the internal
   * form [[graft.cql.Cql.SIntersects]] carries (the reference accepts any
   * GeoJSON type via ST_GeomFromGeoJSON, database_logic.py:437-441).
@@ -2058,34 +1927,12 @@ object Shape {
   }
 }
 
-/** Codegen'd exact point ∩ arbitrary-shape test (Point/MultiPoint equality,
-  * on-segment for lines, shell-minus-holes parity for polygons). The shape
-  * is a per-query constant reference object; one static call per row
-  * inside whole-stage codegen.
-  */
-case class PointIntersectsShape(left: Expression, right: Expression, shape: Shape)
-    extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "point_intersects_shape"
-
-  override protected def nullSafeEval(lon: Any, lat: Any): Any =
-    Geo.pointIntersectsShape(lon.asInstanceOf[Double], lat.asInstanceOf[Double], shape)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val shapeRef = ctx.addReferenceObj("shape", shape, "graft.spatial.Shape")
-    nullSafeCodeGen(ctx, ev, (lonCode, latCode) =>
-      s"${ev.value} = graft.spatial.Geo.pointIntersectsShape($lonCode, $latCode, $shapeRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PointIntersectsShape =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Codegen'd DE-9IM relation of the item POINT geometry vs a constant
-  * shape (contains/equals/touches/crosses/overlaps — [[Geo.RelContains]]
-  * codes). One static call per row inside whole-stage codegen.
+  * shape — the one point kernel: intersects (ray-cast parity for
+  * polygons, equality and on-segment for the rest) and
+  * contains/equals/touches/crosses/overlaps, by [[Geo.RelIntersects]]
+  * code. The shape is a per-query reference object; one static call per
+  * row inside whole-stage codegen, no UDF boxing (SURVEY.md §5).
   */
 case class PointRelShape(left: Expression, right: Expression,
                          shape: Shape, rel: Int)
@@ -2109,7 +1956,9 @@ case class PointRelShape(left: Expression, right: Expression,
 }
 
 /** Codegen'd DE-9IM relation of the item's footprint BOX vs a constant
-  * shape (within/contains/equals/touches/crosses/overlaps).
+  * shape — the one box kernel: intersects (corner containment,
+  * vertex-in-box, edge crossings) and within/contains/equals/touches/
+  * crosses/overlaps.
   */
 case class BoxRelShape(first: Expression, second: Expression,
                        third: Expression, fourth: Expression,
@@ -2132,31 +1981,6 @@ case class BoxRelShape(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
       newThird: Expression, newFourth: Expression): BoxRelShape =
-    copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
-}
-
-/** Codegen'd exact footprint-box ∩ arbitrary-shape test. */
-case class BoxIntersectsShape(first: Expression, second: Expression,
-                              third: Expression, fourth: Expression,
-                              shape: Shape)
-    extends org.apache.spark.sql.catalyst.expressions.QuaternaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "box_intersects_shape"
-
-  override protected def nullSafeEval(a: Any, b: Any, c: Any, d: Any): Any =
-    Geo.boxIntersectsShape(a.asInstanceOf[Double], b.asInstanceOf[Double],
-      c.asInstanceOf[Double], d.asInstanceOf[Double], shape)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val shapeRef = ctx.addReferenceObj("shape", shape, "graft.spatial.Shape")
-    nullSafeCodeGen(ctx, ev, (a, b, c, d) =>
-      s"${ev.value} = graft.spatial.Geo.boxIntersectsShape($a, $b, $c, $d, $shapeRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression, newFourth: Expression): BoxIntersectsShape =
     copy(first = newFirst, second = newSecond, third = newThird, fourth = newFourth)
 }
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.spatial.Geo
+import graft.spatial.{Geo, Shape}
 
 class GeoSpec extends AnyFunSuite {
 
@@ -20,13 +20,14 @@ class GeoSpec extends AnyFunSuite {
     assert(Geo.envelope(tri) == ((0.0, -2.0, 4.0, 5.0)))
   }
 
-  test("codegen'd PointInPolygon agrees with half-plane convex form on data") {
+  test("codegen'd PointRelShape intersects agrees with half-plane convex form on data") {
     val s = TestSpark.spark
     val items = Tables.items(s, TestSpark.sf)
     val hex = Array(80.137, 10.223, 50.139, 55.177, -9.861, 55.177,
       -39.859, 10.223, -9.861, -34.731, 50.139, -34.731)
     val viaRayCast = items
-      .where(Geo.intersectsPolygon(col("lon"), col("lat"), hex))
+      .where(Geo.pointRelShapeCol(col("lon"), col("lat"),
+        Shape.PolyS(Array(Array(hex))), Geo.RelIntersects))
       .select("id").collect().map(_.getString(0)).toSet
     val viaHalfPlanes = items
       .where(Geo.convexIntersectsColumn(col("lon"), col("lat"), hex))
@@ -142,12 +143,13 @@ class GeoSpec extends AnyFunSuite {
     assert(!Geo.boxIntersectsGeom(30.0, 30.0, 40.0, 40.0, geom))
   }
 
-  test("codegen'd PointInGeom agrees with interpreted kernel on data") {
+  test("codegen'd PointRelShape intersects agrees with interpreted containsGeom on data") {
     val s = TestSpark.spark
     val items = Tables.items(s, TestSpark.sf)
     val geom = Array(Array(concaveRing))
     val viaExpr = items
-      .where(Geo.intersectsGeom(col("lon"), col("lat"), geom))
+      .where(Geo.pointRelShapeCol(col("lon"), col("lat"), Shape.PolyS(geom),
+        Geo.RelIntersects))
       .select("id").collect().map(_.getString(0)).toSet
     val viaDriver = items.select("id", "lon", "lat").collect()
       .filter(r => Geo.containsGeom(r.getDouble(1), r.getDouble(2), geom))
@@ -157,8 +159,6 @@ class GeoSpec extends AnyFunSuite {
   }
 
   // ---------------------------------------- non-polygon Shape kernels
-
-  import graft.spatial.Shape
 
   test("pointIntersectsShape: Point/MultiPoint equality, on-segment, collection") {
     assert(Geo.pointIntersectsShape(1.5, 2.5, Shape.PointS(1.5, 2.5)))
@@ -214,7 +214,7 @@ class GeoSpec extends AnyFunSuite {
     assert(!Geo.boxIntersectsShape(0.5, 0.5, 3.0, 1.5, Shape.PointS(0.0, 1.0)))
   }
 
-  test("codegen'd PointIntersectsShape / BoxIntersectsShape agree with driver kernels on data") {
+  test("codegen'd PointRelShape / BoxRelShape intersects agree with driver kernels on data") {
     val s = TestSpark.spark
     val items = Tables.items(s, TestSpark.sf)
     // vertical strip polyline + the concave polygon in one collection
@@ -222,7 +222,7 @@ class GeoSpec extends AnyFunSuite {
       Shape.LinesS(Array(Array(-150.0, -80.0, -100.0, 80.0, -60.0, -50.0))),
       Shape.PolyS(Array(Array(concaveRing)))))
     val viaExpr = items
-      .where(Geo.intersectsShape(col("lon"), col("lat"), shape))
+      .where(Geo.pointRelShapeCol(col("lon"), col("lat"), shape, Geo.RelIntersects))
       .select("id").collect().map(_.getString(0)).toSet
     val viaDriver = items.select("id", "lon", "lat").collect()
       .filter(r => Geo.pointIntersectsShape(r.getDouble(1), r.getDouble(2), shape))
@@ -234,8 +234,8 @@ class GeoSpec extends AnyFunSuite {
       .withColumn("xmin", col("lon") - 1.5).withColumn("xmax", col("lon") + 1.5)
       .withColumn("ymin", col("lat") - 0.8).withColumn("ymax", col("lat") + 0.8)
     val viaBoxExpr = boxes
-      .where(Geo.footprintIntersectsShape(
-        col("xmin"), col("ymin"), col("xmax"), col("ymax"), shape))
+      .where(Geo.boxRelShapeCol(
+        col("xmin"), col("ymin"), col("xmax"), col("ymax"), shape, Geo.RelIntersects))
       .select("id").collect().map(_.getString(0)).toSet
     val viaBoxDriver = boxes.select("id", "xmin", "ymin", "xmax", "ymax").collect()
       .filter(r => Geo.boxIntersectsShape(
@@ -663,7 +663,7 @@ class GeoSpec extends AnyFunSuite {
 
   test("degenerate (zero-area) polygons DECIDE interior relations as " +
       "false instead of throwing (r11: DSv2-written WKB is arbitrary)") {
-    import graft.spatial.Geo
+    import graft.spatial.{Geo, Shape}
     // all vertices collinear — a ring with no interior
     val flat: Array[Array[Array[Double]]] =
       Array(Array(Array(0.0, 0.0, 2.0, 0.0, 4.0, 0.0)))

@@ -50,4 +50,40 @@ class HarnessSpec extends AnyFunSuite {
       assert(LogManager.getLogger(name).getLevel == Level.INFO)
     } finally Configurator.setLevel(name, original)
   }
+
+  test("numeric env values: a positive Int or the default; 0, -1 and abc fail naming the variable") {
+    for (name <- Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_BENCH_RUNS")) {
+      assert(Harness.positiveEnv(Map.empty, name, 7) == 7)
+      assert(Harness.positiveEnv(Map(name -> "3"), name, 7) == 3)
+      for (bad <- Seq("0", "-1", "abc")) {
+        val e = intercept[IllegalArgumentException](
+          Harness.positiveEnv(Map(name -> bad), name, 7))
+        assert(e.getMessage.contains(name) && e.getMessage.contains(bad), e.getMessage)
+      }
+    }
+    assert(Harness.benchRuns >= 1)
+  }
+
+  test("time: reps below 1 throw rather than report a failed gate") {
+    var ran = 0
+    intercept[IllegalArgumentException](
+      Harness.time(s, TestSpark.sf, "a22_combined_search", 0, (_, _) => ran += 1))
+    assert(ran == 0)
+  }
+
+  test("four SPARK_GRAFT_* values are settable") {
+    val name = "SPARK_GRAFT_[A-Z_]+".r
+    def sources(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) sources(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+      }
+    val files = sources(new java.io.File("src/main"))
+    assert(files.nonEmpty, "not run from the repo root")
+    val names = files.flatMap { f =>
+      scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(src =>
+        name.findAllIn(src.mkString).toVector)
+    }.toSet
+    assert(names == Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_BENCH_RUNS", "SPARK_GRAFT_BENCH_OUT"), names)
+  }
 }

@@ -162,6 +162,30 @@ object KernelProps extends Properties("kernels") {
         Geo.boxIntersectsShape(x0, y0, x1, y1, p) == closedIn
     }
 
+  // the intersects relation of the unified kernels is, by construction,
+  // the intersects kernel it replaced — same IEEE arithmetic, same rows
+  property("pointRelShape(PolyS([[ring]]), intersects) == rayCast(ring)") =
+    forAll(convexPoly, Gen.chooseNum(0.0, 1.0), Gen.chooseNum(0.0, 1.0)) { (ring, fx, fy) =>
+      // points drawn from the ring's envelope, so both outcomes occur
+      val (w, s, e, n) = Geo.envelope(ring)
+      val (x, y) = (w + fx * (e - w), s + fy * (n - s))
+      Geo.pointRelShape(x, y, PolyS(Array(Array(ring))), Geo.RelIntersects) ==
+        Geo.rayCast(x, y, ring)
+    }
+
+  property("boxRelShape(PolyS(g), intersects) == boxIntersectsGeom(g)") =
+    forAll(footBoxG, Gen.listOfN(2, convexPoly)) { case ((x0, y0, x1, y1), rings) =>
+      val g = rings.map(r => Array(r)).toArray
+      Geo.boxRelShape(x0, y0, x1, y1, PolyS(g), Geo.RelIntersects) ==
+        Geo.boxIntersectsGeom(x0, y0, x1, y1, g)
+    }
+
+  property("wkbRelShape(point WKB, intersects) == pointIntersectsShape") =
+    forAll(shapeGen, lonG, latG) { (s, x, y) =>
+      Geo.wkbRelShape(Wkb.encode(PointS(x, y)), s, Geo.RelIntersects) ==
+        Geo.pointIntersectsShape(x, y, s)
+    }
+
   property("boxWithinGeom == all-corners-in-every-half-plane on convex " +
       "rings (independent convex formulation)") =
     forAll(footBoxG, convexPoly) { case ((x0, y0, x1, y1), ring) =>

@@ -17,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - STAC search has one compiler: an a-gate runs its search through
   *    `StacApi`, or is named in `stacExempt` with the reason it builds
   *    its own plan.
+  *  - Spatial predicates have one kernel per geometry target: the
+  *    Catalyst expressions in `spatial/Geo.scala` are the point, box and
+  *    WKB relation kernels, intersects included.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val forbidden = Seq("\"_SUCCESS\"", "\"_DONE\"", "java.io.tmpdir",
@@ -155,7 +158,7 @@ class SourceGuardSpec extends AnyFunSuite {
       out
     }
     val forbidden = Seq(
-      """Geo\.(bboxContains|intersects)\w*(?<!Sql)\(""".r,
+      """Geo\.(bboxContains|intersects|pointRelShapeCol)\w*(?<!Sql)\(""".r,
       """(?<![\w.])dt(Exact|Range|OpenStart|OpenEnd)\(""".r,
       """\.toColumn\b""".r,
       """\.where\(col\("(collection|id)"\)""".r)
@@ -184,5 +187,15 @@ class SourceGuardSpec extends AnyFunSuite {
       token <- Seq("TrieMap", "ConcurrentHashMap") if line.contains(token)
     } yield s"${f.getPath}:${n + 1}: $token"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("spatial/Geo.scala declares one relation kernel per geometry target") {
+    val f = new File("src/main/scala/graft/spatial/Geo.scala")
+    assert(f.exists, "not run from the repo root")
+    // a case class whose declaration extends a Catalyst *Expression
+    val decl = """(?m)^(?:final )?case class (\w+)\([^)]*\)\s*extends\s+[\w.]*Expression\b""".r
+    val kernels = decl.findAllMatchIn(lines(f).mkString("\n")).map(_.group(1)).toVector
+    assert(kernels.toSet == Set("PointRelShape", "BoxRelShape", "WkbRelShape") &&
+      kernels.size == 3, kernels)
   }
 }

@@ -1,11 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 
-import graft.spatial.Geo
+import graft.spatial.{BoxRelShape, Geo, PointRelShape, Shape}
 
 /** DeriveSpatialEnvelope — the optimizer rule that promotes the manual
   * envelope-prefilter trick to the SQL surface: a literal-geometry kernel
@@ -15,6 +15,8 @@ import graft.spatial.Geo
 class SpatialEnvelopeRuleSpec extends AnyFunSuite {
   private val s = TestSpark.spark
   private val ring = "array(10.0d,-20.0d, 60.0d,-20.0d, 60.0d,30.0d, 10.0d,30.0d)"
+  private val square =
+    Shape.PolyS(Array(Array(Array(10.0, -20.0, 60.0, -20.0, 60.0, 30.0, 10.0, 30.0))))
 
   private def optimized(df: DataFrame): String =
     df.queryExecution.optimizedPlan.toString
@@ -47,8 +49,7 @@ class SpatialEnvelopeRuleSpec extends AnyFunSuite {
       pushed.contains("LessThanOrEqual(lat,30.0"), phys)
     // exact semantics untouched: equals the hand-built envelope+kernel path
     val want = s.read.parquet(pts)
-      .where(Geo.intersectsPolygon(col("lon"), col("lat"),
-        Array(10.0, -20.0, 60.0, -20.0, 60.0, 30.0, 10.0, 30.0)))
+      .where(Geo.pointRelShapeCol(col("lon"), col("lat"), square, Geo.RelIntersects))
       .select(col("id")).collect().map(_.getString(0)).sorted.toSeq
     val got = df.collect().map(_.getString(0)).sorted.toSeq
     assert(got == want && got.nonEmpty)
@@ -58,8 +59,7 @@ class SpatialEnvelopeRuleSpec extends AnyFunSuite {
       "re-derived, and repeated optimization reaches a fixed point") {
     GraftFunctions.register(s)
     val df = s.read.parquet(pts)
-      .where(Geo.intersectsPolygon(col("lon"), col("lat"),
-        Array(10.0, -20.0, 60.0, -20.0, 60.0, 30.0, 10.0, 30.0)))
+      .where(Geo.pointRelShapeCol(col("lon"), col("lat"), square, Geo.RelIntersects))
     val opt = optimized(df)
     // exactly one copy of each envelope bound — no duplicate conjuncts
     assert("""\(lon#\d+ >= 10\.0\)""".r.findAllIn(opt).size == 1, opt)
@@ -121,5 +121,60 @@ class SpatialEnvelopeRuleSpec extends AnyFunSuite {
     // xmin <= E, xmax >= W, ymin <= N, ymax >= S
     assert(opt.contains("<= 60.0") && opt.contains(">= 10.0") &&
       opt.contains("<= 30.0") && opt.contains(">= -20.0"), opt)
+  }
+
+  /** Box footprints with PHYSICAL bound columns: each point's 2 × 2 box. */
+  private lazy val boxes: String = {
+    val dir = java.nio.file.Files.createTempDirectory("envrule_box").toString
+    s.read.parquet(pts).select(col("id"),
+      (col("lon") - 1.0).as("xmin"), (col("lat") - 1.0).as("ymin"),
+      (col("lon") + 1.0).as("xmax"), (col("lat") + 1.0).as("ymax"))
+      .write.mode("overwrite").parquet(dir)
+    dir
+  }
+
+  private def ids(df: DataFrame): Set[String] =
+    df.select("id").collect().map(_.getString(0)).toSet
+
+  test("a bare BoxRelShape within kernel gains the containment ranges; rows are unchanged") {
+    GraftFunctions.register(s)
+    val Seq(x0, y0, x1, y1) = Seq("xmin", "ymin", "xmax", "ymax")
+      .map(c => GraftBridge.expression(col(c)))
+    val df = s.read.parquet(boxes).where(GraftBridge.column(
+      BoxRelShape(x0, y0, x1, y1, square, Geo.RelWithin)))
+    val opt = optimized(df)
+    // within: xmin >= W, xmax <= E, ymin >= S, ymax <= N
+    Seq("""\(xmin#\d+ >= 10\.0\)""", """\(xmax#\d+ <= 60\.0\)""",
+      """\(ymin#\d+ >= -20\.0\)""", """\(ymax#\d+ <= 30\.0\)""")
+      .foreach(p => assert(p.r.findAllIn(opt).size == 1, s"$p in $opt"))
+    val want = s.read.parquet(boxes).collect().collect {
+      case r if Geo.boxRelShape(r.getDouble(1), r.getDouble(2), r.getDouble(3),
+        r.getDouble(4), square, Geo.RelWithin) => r.getString(0)
+    }.toSet
+    assert(ids(df) == want && want.nonEmpty)
+  }
+
+  test("a bare PointRelShape touches kernel gains the envelope ranges; rows are unchanged") {
+    GraftFunctions.register(s)
+    val df = s.read.parquet(pts).where(GraftBridge.column(PointRelShape(
+      GraftBridge.expression(col("lon")), GraftBridge.expression(col("lat")),
+      square, Geo.RelTouches)))
+    val opt = optimized(df)
+    Seq("""\(lon#\d+ >= 10\.0\)""", """\(lon#\d+ <= 60\.0\)""",
+      """\(lat#\d+ >= -20\.0\)""", """\(lat#\d+ <= 30\.0\)""")
+      .foreach(p => assert(p.r.findAllIn(opt).size == 1, s"$p in $opt"))
+    val want = s.read.parquet(pts).collect().collect {
+      case r if Geo.pointTouchesShape(r.getDouble(1), r.getDouble(2), square) => r.getString(0)
+    }.toSet
+    assert(ids(df) == want)
+  }
+
+  test("an empty literal geometry derives nothing and runs") {
+    GraftFunctions.register(s)
+    s.read.parquet(pts).createOrReplaceTempView("pts")
+    val df = s.sql("SELECT id FROM pts WHERE point_in_geom(lon, lat, array())")
+    val opt = optimized(df)
+    assert(!opt.contains(">=") && !opt.contains("<="), opt)
+    assert(df.collect().isEmpty)
   }
 }

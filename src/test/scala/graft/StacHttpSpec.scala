@@ -493,6 +493,19 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(unknown.result._1 == 404 && unknown.jobs == 0, unknown)
   }
 
+  test("the server's threads are daemon: a caller that never stops it cannot pin the JVM") {
+    def live(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet
+    val before = live()
+    val srv = StacHttp.start(s, sf)
+    try {
+      assert(send(srv.base, "GET", "/conformance", None)._1 == 200)
+      val started = live() -- before
+      assert(started.exists(_.getName == "HTTP-Dispatcher"), started)
+      val pinning = started.filterNot(_.isDaemon).map(_.getName)
+      assert(pinning.isEmpty, pinning)
+    } finally srv.stop()
+  }
+
   test("a created item moves its collection's temporal extent in " +
       "/collections/{id} and the /collections listing") {
     // a dedicated server: the write changes the served view
