@@ -2,7 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, GenericRowWithSchema, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, GenericRowWithSchema, NullsLast, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
@@ -365,14 +365,12 @@ object StacApi {
     * given sort directions — row-value comparison unrolled to an OR-chain
     * whose leading conjuncts are sargable (they push down and prune).
     *
-    * NULL-aware, matching Spark's null ordering exactly (asc → nulls
-    * FIRST, desc → nulls LAST), so pages containing null sort keys (e.g.
+    * NULL-aware under the pager's order, nulls LAST in both directions
+    * (DuckDB's default), so pages containing null sort keys (e.g.
     * interval-only items under a datetime sort) neither drop rows nor
     * re-read them:
-    *  - asc after value v:  x IS NOT NULL AND x > v   (nulls already seen)
-    *  - asc after NULL:     x IS NOT NULL             (all values follow)
-    *  - desc after value v: x IS NULL OR x < v        (nulls still follow)
-    *  - desc after NULL:    false                     (tiebreak fields only)
+    *  - after value v: x IS NULL OR x > v (asc) / x < v (desc)
+    *  - after NULL:    false              (tiebreak fields only)
     */
   private def keysetAfter(sorts: Seq[(String, Boolean)], last: Seq[Option[Any]]): Column =
     sorts.indices.map { i =>
@@ -383,11 +381,9 @@ object StacApi {
         }
       }.foldLeft(lit(true))(_ && _)
       val (f, desc) = sorts(i)
-      val after = (last(i), desc) match {
-        case (Some(v), false) => col(f).isNotNull && col(f) > lit(v)
-        case (Some(v), true)  => col(f).isNull || col(f) < lit(v)
-        case (None, false)    => col(f).isNotNull
-        case (None, true)     => lit(false)
+      val after = last(i) match {
+        case Some(v) => col(f).isNull || (if (desc) col(f) < lit(v) else col(f) > lit(v))
+        case None    => lit(false)
       }
       eqPrefix && after
     }.reduce(_ || _)
@@ -455,8 +451,8 @@ object StacApi {
 
   /** ONE Spark job over the executed plan of `frame`: each partition
     * counts every row and keeps, in a bounded heap, its best `k` rows
-    * under `sorts` (asc = nulls first, desc = nulls last — the order of
-    * `Column.asc`/`desc`) among those that pass `after`; the driver merges
+    * under `sorts` (nulls last in both directions, as `asc_nulls_last`
+    * and `desc` order) among those that pass `after`; the driver merges
     * the heaps (TakeOrderedAndProjectExec's shape). `after` only limits
     * which rows may enter the page: with a count it is evaluated per row,
     * without one it filters (and prunes) the scan.
@@ -474,7 +470,7 @@ object StacApi {
     val qe = scanned.queryExecution
     val out = qe.executedPlan.output
     val ord = new LazilyGeneratedOrdering(sorts.map { case (f, desc) =>
-      SortOrder(out.find(_.name == f).get, if (desc) Descending else Ascending)
+      SortOrder(out.find(_.name == f).get, if (desc) Descending else Ascending, NullsLast, Seq.empty)
     }, out)
     val parts = SQLExecution.withNewExecutionId(qe, Some("search page")) {
       qe.toRdd.mapPartitions { it =>

@@ -32,8 +32,9 @@ import org.apache.spark.sql.{Row, SparkSession}
   * page is [[StacApi.searchFeaturesOn]] (one Spark job counts the matches
   * and keeps the page; the A20 Feature document, with the fields
   * extension applied inside the projection, is built over the page rows
-  * only) and each Feature string is written out as built. Collection
-  * existence is the store's id set ([[TxnStore.collectionExists]]); the
+  * only) and each Feature string is written out as built; a write
+  * answers with the document the store returns. Collection existence is
+  * one store check ([[TxnStore.requireCollection]], a 404); the
   * collections directory is A26's computed-extents query over the
   * served view. GET `filter` defaults to cql2-TEXT per OGC API-Features
   * Part 3 (`filter-lang=cql2-json` switches), POST bodies go through the
@@ -141,12 +142,10 @@ object StacHttp {
             case None    => notFound(ex, s"Collection $c does not exist")
           }
         case ("GET", List("collections", c, "items")) =>
-          if (!store.collectionExists(c))
-            notFound(ex, s"Collection $c does not exist")
-          else
-            json(ex, 200, featureCollection(itemsFrame,
-              paramsFromQuery(q).copy(collections = Seq(c)), q,
-              s"/collections/$c/items"))
+          store.requireCollection(c)
+          json(ex, 200, featureCollection(itemsFrame,
+            paramsFromQuery(q).copy(collections = Seq(c)), q,
+            s"/collections/$c/items"))
         case ("GET", List("collections", c, "items", itemId)) =>
           val (feats, _, _) = StacApi.searchFeaturesOn(itemsFrame,
             SearchParams(collections = Seq(c), ids = Seq(itemId), limit = 1,
@@ -157,16 +156,11 @@ object StacHttp {
         // ------------- transactions (r12): the reference's declared-but-
         // stubbed surface (database_logic.py:1049-1187), mounted for real
         case ("POST", List("collections", c, "items")) =>
-          if (!store.collectionExists(c))
-            notFound(ex, s"Collection $c does not exist")
-          else {
-            val f = store.createItem(c, body())
-            json(ex, 201, store.renderFeature(f))
-          }
+          json(ex, 201, store.createItem(c, body()))
         case ("PUT", List("collections", c, "items", itemId)) =>
-          json(ex, 200, store.renderFeature(store.updateItem(c, itemId, body())))
+          json(ex, 200, store.updateItem(c, itemId, body()))
         case ("PATCH", List("collections", c, "items", itemId)) =>
-          json(ex, 200, store.renderFeature(store.patchItem(c, itemId, body())))
+          json(ex, 200, store.patchItem(c, itemId, body()))
         case ("DELETE", List("collections", c, "items", itemId)) =>
           store.deleteItem(c, itemId)
           noContent(ex)
@@ -184,16 +178,14 @@ object StacHttp {
         case ("GET", List("sortables")) =>
           raw(ex, 200, StacSearch.sortables(itemsFrame))
         case ("GET", List("collections", c, "sortables")) =>
-          if (!store.collectionExists(c))
-            notFound(ex, s"Collection $c does not exist")
-          else raw(ex, 200, StacSearch.sortables(
+          store.requireCollection(c)
+          raw(ex, 200, StacSearch.sortables(
             StacApi.plan(itemsFrame, SearchParams(collections = Seq(c)))))
         case ("GET", List("aggregations")) =>
           json(ex, 200, aggregationsDoc())
         case ("GET", List("collections", c, "aggregations")) =>
-          if (!store.collectionExists(c))
-            notFound(ex, s"Collection $c does not exist")
-          else json(ex, 200, aggregationsDoc())
+          store.requireCollection(c)
+          json(ex, 200, aggregationsDoc())
         case ("GET", List("aggregate")) =>
           json(ex, 200, aggregateNode(itemsFrame, paramsFromQuery(q),
             csv(q.getOrElse("aggregations", ""))))
@@ -207,17 +199,15 @@ object StacHttp {
           json(ex, 200, aggregateNode(itemsFrame,
             SearchParams.fromSearchBody(b), names))
         case ("GET", List("collections", c, "aggregate")) =>
-          if (!store.collectionExists(c))
-            notFound(ex, s"Collection $c does not exist")
-          else json(ex, 200, aggregateNode(itemsFrame,
+          store.requireCollection(c)
+          json(ex, 200, aggregateNode(itemsFrame,
             paramsFromQuery(q).copy(collections = Seq(c)),
             csv(q.getOrElse("aggregations", ""))))
         case ("GET", List("queryables")) =>
           raw(ex, 200, StacSearch.queryables(itemsFrame))
         case ("GET", List("collections", c, "queryables")) =>
-          if (!store.collectionExists(c))
-            notFound(ex, s"Collection $c does not exist")
-          else raw(ex, 200, StacSearch.queryables(
+          store.requireCollection(c)
+          raw(ex, 200, StacSearch.queryables(
             StacApi.plan(itemsFrame, SearchParams(collections = Seq(c)))))
         case _ => notFound(ex, s"Not Found: $path")
       }

@@ -1,16 +1,17 @@
 package graft.search
 
+import java.sql.Timestamp
 import java.time.LocalDateTime
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 import graft.core.Tables
 
@@ -25,10 +26,13 @@ import graft.core.Tables
   *
   * Model: an in-memory LATEST-REVISION map per (collection, item id) —
   * exactly the A56 changelog compacted at append time (each HTTP write
-  * is one revision; later ingest wins; deletes are tombstones). Serving
-  * is [[itemsView]]: the immutable base corpus MASKED by a filter on the
-  * touched keys (tiny by construction — the overlay is session-scale),
-  * UNIONED with the live overlay rows in the items schema. Every read
+  * is one revision; later ingest wins; deletes are tombstones). An item
+  * has one form: its items-view `Row` (the schema of `Tables.items`),
+  * decoded from the request body by [[parseFeature]] and read back by
+  * [[renderFeature]]; a base item is the row `Tables.items` returns.
+  * Serving is [[itemsView]]: the immutable base corpus MASKED by a
+  * filter on the touched keys (tiny by construction — the overlay is
+  * session-scale), UNIONED with the stored rows as they are. Every read
   * route on the server goes through this view, so a created item is
   * searchable the moment the POST returns.
   *
@@ -42,24 +46,17 @@ import graft.core.Tables
 final class TxnStore(spark: SparkSession, dir: String) {
   private val mapper = new ObjectMapper()
 
-  /** One item revision's typed fields — the items-view row shape. */
-  final case class ItemFields(id: String, idNum: Long, collection: String,
-      datetime: Option[LocalDateTime], startDt: Option[LocalDateTime],
-      endDt: Option[LocalDateTime], lon: Double, lat: Double,
-      value: Double, userId: Long, props: Option[String])
-
-  private final case class ItemRev(deleted: Boolean, fields: ItemFields)
-  private final case class CollRev(deleted: Boolean, doc: String)
-
   private val seq = new AtomicLong(0L)
-  private val itemRevs = TrieMap.empty[(String, String), ItemRev]
-  private val collRevs = TrieMap.empty[String, CollRev]
+  // latest revision per (collection, item id): its items-view row, or a
+  // tombstone (None)
+  private val itemRevs = TrieMap.empty[(String, String), Option[Row]]
+  // latest document per collection created or updated over HTTP, or a
+  // tombstone (None)
+  private val collRevs = TrieMap.empty[String, Option[String]]
   // base collections whose items were purged by DELETE /collections/{id}
   private val purgedBase = TrieMap.empty[String, Unit]
 
   private lazy val itemsSchema = Tables.items(spark, dir).schema
-  private lazy val ntz =
-    itemsSchema("datetime").dataType == TimestampNTZType
   private lazy val baseMaxIdNum: Long =
     Tables.items(spark, dir).agg(max(col("id_num"))).head().getLong(0)
   /** The base corpus's collection ids: one job on first use, then pinned
@@ -80,30 +77,8 @@ final class TxnStore(spark: SparkSession, dir: String) {
   def hasItemChanges: Boolean = itemRevs.nonEmpty || purgedBase.nonEmpty
 
   // ------------------------------------------------------ serving view
-  private def tsValue(t: Option[LocalDateTime]): Any = t match {
-    case None => null
-    case Some(ldt) => if (ntz) ldt else java.sql.Timestamp.valueOf(ldt)
-  }
-
-  private def rowOf(f: ItemFields): Row = Row.fromSeq(itemsSchema.fields.map {
-    _.name match {
-      case "id" => f.id
-      case "id_num" => f.idNum
-      case "collection" => f.collection
-      case "datetime" => tsValue(f.datetime)
-      case "start_datetime" => tsValue(f.startDt)
-      case "end_datetime" => tsValue(f.endDt)
-      case "lon" => f.lon
-      case "lat" => f.lat
-      case "value" => f.value
-      case "user_id" => f.userId
-      case "props" => f.props.orNull
-      case other => throw new IllegalStateException(s"unmapped items column $other")
-    }
-  }.toSeq)
-
   /** The items frame every read route serves: base minus purged
-    * collections minus touched keys, plus the live overlay revisions.
+    * collections minus touched keys, plus the live overlay rows.
     * The touched keys mask the base as
     * `NOT coalesce(OR_c (collection = c AND id IN ids(c)), false)`; the
     * coalesce keeps base rows with null keys, as an anti-join would.
@@ -119,57 +94,50 @@ final class TxnStore(spark: SparkSession, dir: String) {
     val touched = revs.map(_._1).groupBy(_._1).toSeq.sortBy(_._1).map { case (c, keys) =>
       col("collection") === c && col("id").isin(keys.map(_._2).sorted: _*)
     }.reduce(_ || _)
-    val live = revs.collect { case (_, ItemRev(false, f)) => rowOf(f) }
+    val live = revs.flatMap(_._2)
     val masked = base.where(!coalesce(touched, lit(false)))
     if (live.isEmpty) masked
     else masked.unionByName(spark.createDataFrame(live.asJava, itemsSchema))
   }
 
   // ------------------------------------------------------ existence
-  private def baseFields(c: String, id: String): Option[ItemFields] =
-    Tables.items(spark, dir)
-      .where(col("collection") === c && col("id") === id)
-      .limit(1).collect().headOption.map { r =>
-      def odt(f: String): Option[LocalDateTime] = Option(r.getAs[Any](f)).map {
-        case l: LocalDateTime => l
-        case t: java.sql.Timestamp => t.toLocalDateTime
-      }
-      ItemFields(r.getAs[String]("id"), r.getAs[Long]("id_num"),
-        r.getAs[String]("collection"), odt("datetime"),
-        odt("start_datetime"), odt("end_datetime"),
-        r.getAs[Double]("lon"), r.getAs[Double]("lat"),
-        r.getAs[Double]("value"), r.getAs[Long]("user_id"),
-        Option(r.getAs[String]("props")))
-    }
-
-  /** The EFFECTIVE item (overlay latest wins; base under it). */
-  def effectiveItem(c: String, id: String): Option[ItemFields] =
+  /** The EFFECTIVE item (overlay latest wins; the base row under it). */
+  private def effectiveItem(c: String, id: String): Option[Row] =
     itemRevs.get((c, id)) match {
-      case Some(ItemRev(true, _)) => None
-      case Some(ItemRev(false, f)) => Some(f)
+      case Some(rev) => rev
       case None if purgedBase.contains(c) => None
-      case None => baseFields(c, id)
+      case None =>
+        Tables.items(spark, dir).where(col("collection") === c && col("id") === id)
+          .limit(1).collect().headOption
     }
 
   /** Whether collection `c` exists: created or re-created in the overlay,
     * or in the base corpus and not deleted — no extents query.
     */
-  def collectionExists(c: String): Boolean = collRevs.get(c) match {
-    case Some(CollRev(deleted, _)) => !deleted
+  private def collectionExists(c: String): Boolean = collRevs.get(c) match {
+    case Some(doc) => doc.isDefined
     case None => baseCollections.contains(c) && !purgedBase.contains(c)
   }
+
+  /** The one existence rule of the `/collections/{c}/…` routes: a
+    * [[TxnMissing]] (404) unless collection `c` exists.
+    */
+  def requireCollection(c: String): Unit =
+    if (!collectionExists(c)) throw new TxnMissing(s"Collection $c does not exist")
 
   /** The collection documents created or updated over HTTP, by id. */
   def createdCollections: Seq[(String, String)] =
     collRevs.readOnlySnapshot().toSeq.collect {
-      case (id, CollRev(false, doc)) => (id, doc)
+      case (id, Some(doc)) => (id, doc)
     }.sortBy(_._1)
 
   // ------------------------------------------------------ feature codec
-  private def parseTs(n: com.fasterxml.jackson.databind.JsonNode,
-                      field: String): Option[LocalDateTime] =
+  private val timeCols = Seq("datetime", "start_datetime", "end_datetime")
+
+  private def parseTs(n: JsonNode, field: String): Option[Timestamp] =
     Option(n.get(field)).filterNot(_.isNull).map { v =>
-      try LocalDateTime.parse(v.asText.trim.replace(' ', 'T').stripSuffix("Z"))
+      try Timestamp.valueOf(LocalDateTime.parse(
+        v.asText.trim.replace(' ', 'T').stripSuffix("Z")))
       catch {
         case e: java.time.format.DateTimeParseException =>
           // client data error → the handler's 400 contract, never a 500
@@ -178,15 +146,24 @@ final class TxnStore(spark: SparkSession, dir: String) {
       }
     }
 
-  /** STAC Feature JSON → typed fields. Point geometry only (the items
-    * surface stores (lon, lat)); anything else is a 400.
-    */
-  private[search] def parseFeature(body: String, collection: String,
-                                   idNum: Long): ItemFields = {
-    val n = mapper.readTree(body)
-    val id = Option(n.get("id")).map(_.asText)
-      .filter(_.nonEmpty)
+  private def itemId(n: JsonNode): String =
+    Option(n.get("id")).map(_.asText).filter(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException("item must carry an id"))
+
+  /** The document under the route's item id. The body must still carry
+    * an id of its own, as a created item must.
+    */
+  private def withId(n: JsonNode, id: String): JsonNode = {
+    itemId(n)
+    n.asInstanceOf[ObjectNode].put("id", id)
+  }
+
+  /** STAC Feature JSON → its items-view row, in schema order. Point
+    * geometry only (the items surface stores (lon, lat)); anything else
+    * is a 400. Properties other than the typed columns go to `props`.
+    */
+  private[search] def parseFeature(n: JsonNode, collection: String, idNum: Long): Row = {
+    val id = itemId(n)
     val geom = Option(n.get("geometry")).filterNot(_.isNull)
       .getOrElse(throw new IllegalArgumentException("item must carry a geometry"))
     if (Option(geom.get("type")).map(_.asText).getOrElse("") != "Point")
@@ -197,47 +174,50 @@ final class TxnStore(spark: SparkSession, dir: String) {
         !cs.get(0).isNumber || !cs.get(1).isNumber)
       throw new IllegalArgumentException(
         "Point needs numeric [lon, lat] coordinates")
-    val (lon, lat) = (cs.get(0).asDouble, cs.get(1).asDouble)
     val props = Option(n.get("properties")).filterNot(_.isNull)
       .map(_.asInstanceOf[ObjectNode])
-    val dt = props.flatMap(parseTs(_, "datetime"))
-    val sd = props.flatMap(parseTs(_, "start_datetime"))
-    val ed = props.flatMap(parseTs(_, "end_datetime"))
-    val value = props.flatMap(p => Option(p.get("value"))).filterNot(_.isNull)
-      .map(_.asDouble).getOrElse(0.0)
-    val userId = props.flatMap(p => Option(p.get("user_id"))).filterNot(_.isNull)
-      .map(_.asLong).getOrElse(0L)
-    val known = Set("datetime", "start_datetime", "end_datetime", "value", "user_id")
+    def member(k: String): Option[JsonNode] =
+      props.flatMap(p => Option(p.get(k))).filterNot(_.isNull)
+    val known = timeCols.toSet ++ Set("value", "user_id")
     val extra = props.map { p =>
       val o = mapper.createObjectNode()
       p.fields().asScala.filterNot(e => known.contains(e.getKey))
-        .foreach(e => o.set[com.fasterxml.jackson.databind.JsonNode](e.getKey, e.getValue))
+        .foreach(e => o.set[JsonNode](e.getKey, e.getValue))
       o
     }.filter(_.size() > 0).map(mapper.writeValueAsString)
-    ItemFields(id, idNum, collection, dt, sd, ed, lon, lat, value, userId, extra)
+    new GenericRowWithSchema(itemsSchema.fieldNames.map {
+      case "id" => id
+      case "id_num" => idNum
+      case "collection" => collection
+      case t if timeCols.contains(t) => props.flatMap(parseTs(_, t)).orNull
+      case "lon" => cs.get(0).asDouble
+      case "lat" => cs.get(1).asDouble
+      case "value" => member("value").map(_.asDouble).getOrElse(0.0)
+      case "user_id" => member("user_id").map(_.asLong).getOrElse(0L)
+      case "props" => extra.orNull
+      case other => throw new IllegalStateException(s"unmapped items column $other")
+    }, itemsSchema)
   }
 
-  /** Typed fields → the Feature JSON the PATCH route merges over. */
-  private[search] def renderFeature(f: ItemFields): ObjectNode = {
+  /** An items-view row → the Feature JSON the write routes answer with
+    * and PATCH merges over.
+    */
+  private[search] def renderFeature(r: Row): ObjectNode = {
     val o = mapper.createObjectNode()
     o.put("type", "Feature")
-    o.put("id", f.id)
-    o.put("collection", f.collection)
+    o.put("id", r.getAs[String]("id"))
+    o.put("collection", r.getAs[String]("collection"))
     val g = o.withObject("/geometry")
     g.put("type", "Point")
-    val cs = g.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("coordinates")
-    cs.add(f.lon); cs.add(f.lat)
+    val cs = g.withArray[ArrayNode]("coordinates")
+    cs.add(r.getAs[Double]("lon")); cs.add(r.getAs[Double]("lat"))
     val p = o.withObject("/properties")
-    def ts(k: String, v: Option[LocalDateTime]): Unit = v match {
-      case Some(t) => p.put(k, t.toString)
-      case None => ()
+    timeCols.foreach { k =>
+      Option(r.getAs[Timestamp](k)).foreach(t => p.put(k, t.toLocalDateTime.toString))
     }
-    ts("datetime", f.datetime); ts("start_datetime", f.startDt)
-    ts("end_datetime", f.endDt)
-    p.put("value", f.value); p.put("user_id", f.userId)
-    f.props.foreach { js =>
-      mapper.readTree(js).fields().asScala
-        .foreach(e => p.set[com.fasterxml.jackson.databind.JsonNode](e.getKey, e.getValue))
+    p.put("value", r.getAs[Double]("value")); p.put("user_id", r.getAs[Long]("user_id"))
+    Option(r.getAs[String]("props")).foreach { js =>
+      mapper.readTree(js).fields().asScala.foreach(e => p.set[JsonNode](e.getKey, e.getValue))
     }
     o
   }
@@ -246,9 +226,7 @@ final class TxnStore(spark: SparkSession, dir: String) {
     * everything else replaces — the A68 per-field LWW doctrine as the
     * HTTP PATCH verb.
     */
-  private[search] def mergePatch(target: com.fasterxml.jackson.databind.JsonNode,
-                                 patch: com.fasterxml.jackson.databind.JsonNode)
-      : com.fasterxml.jackson.databind.JsonNode =
+  private[search] def mergePatch(target: JsonNode, patch: JsonNode): JsonNode =
     if (!patch.isObject) patch.deepCopy()
     else {
       val out =
@@ -257,49 +235,54 @@ final class TxnStore(spark: SparkSession, dir: String) {
         else mapper.createObjectNode()
       patch.fields().asScala.foreach { e =>
         if (e.getValue.isNull) out.remove(e.getKey)
-        else out.set[com.fasterxml.jackson.databind.JsonNode](
-          e.getKey, mergePatch(out.get(e.getKey), e.getValue))
+        else out.set[JsonNode](e.getKey, mergePatch(out.get(e.getKey), e.getValue))
       }
       out
     }
 
   // ------------------------------------------------------ transactions
-  def createItem(collection: String, body: String): ItemFields = synchronized {
-    val f = parseFeature(body, collection, nextIdNum())
-    if (effectiveItem(collection, f.id).isDefined)
-      throw new TxnConflict(s"Item ${f.id} already exists in collection $collection")
-    itemRevs.put((collection, f.id), ItemRev(deleted = false, f))
-    f
+  // Each write stores one row and answers with that row's document.
+  private def write(r: Row): ObjectNode = {
+    itemRevs.put((r.getAs[String]("collection"), r.getAs[String]("id")), Some(r))
+    renderFeature(r)
   }
 
-  def updateItem(collection: String, itemId: String, body: String): ItemFields =
+  private def current(collection: String, itemId: String): Row =
+    effectiveItem(collection, itemId).getOrElse(
+      throw new TxnMissing(s"Item $itemId does not exist in collection $collection"))
+
+  def createItem(collection: String, body: String): ObjectNode = synchronized {
+    requireCollection(collection)
+    val r = parseFeature(mapper.readTree(body), collection, nextIdNum())
+    val id = r.getAs[String]("id")
+    if (effectiveItem(collection, id).isDefined)
+      throw new TxnConflict(s"Item $id already exists in collection $collection")
+    write(r)
+  }
+
+  /** PUT replaces the item under a fresh id_num: its body must be a Point. */
+  def updateItem(collection: String, itemId: String, body: String): ObjectNode =
     synchronized {
-      if (effectiveItem(collection, itemId).isEmpty)
-        throw new TxnMissing(s"Item $itemId does not exist in collection $collection")
-      val f0 = parseFeature(body, collection, nextIdNum())
-      val f = f0.copy(id = itemId)
-      itemRevs.put((collection, itemId), ItemRev(deleted = false, f))
-      f
+      current(collection, itemId)
+      write(parseFeature(withId(mapper.readTree(body), itemId), collection, nextIdNum()))
     }
 
-  def patchItem(collection: String, itemId: String, patchBody: String): ItemFields =
+  /** PATCH keeps the item's id_num, so a base area item keeps its
+    * footprint, bbox and projection members.
+    */
+  def patchItem(collection: String, itemId: String, patchBody: String): ObjectNode =
     synchronized {
-      val cur = effectiveItem(collection, itemId).getOrElse(
-        throw new TxnMissing(s"Item $itemId does not exist in collection $collection"))
+      val cur = current(collection, itemId)
       val merged = mergePatch(renderFeature(cur), mapper.readTree(patchBody))
-      val f = parseFeature(mapper.writeValueAsString(merged), collection,
-        nextIdNum()).copy(id = itemId)
-      itemRevs.put((collection, itemId), ItemRev(deleted = false, f))
-      f
+      write(parseFeature(withId(merged, itemId), collection, cur.getAs[Long]("id_num")))
     }
 
   def deleteItem(collection: String, itemId: String): Unit = synchronized {
-    val cur = effectiveItem(collection, itemId).getOrElse(
-      throw new TxnMissing(s"Item $itemId does not exist in collection $collection"))
-    itemRevs.put((collection, itemId), ItemRev(deleted = true, cur))
+    current(collection, itemId)
+    itemRevs.put((collection, itemId), None)
   }
 
-  private def collectionDocNode(body: String): com.fasterxml.jackson.databind.JsonNode = {
+  private def collectionDocNode(body: String): JsonNode = {
     val n = mapper.readTree(body)
     if (n == null || !n.isObject)
       throw new IllegalArgumentException("collection body must be a JSON object")
@@ -313,14 +296,14 @@ final class TxnStore(spark: SparkSession, dir: String) {
         .getOrElse(throw new IllegalArgumentException("collection must carry an id"))
       // a deleted collection is re-creatable
       if (collectionExists(id)) throw new TxnConflict(s"Collection $id already exists")
-      collRevs.put(id, CollRev(deleted = false, body))
+      collRevs.put(id, Some(body))
       id
     }
 
   def updateCollection(id: String, body: String): Unit = synchronized {
     collectionDocNode(body)
-    if (!collectionExists(id)) throw new TxnMissing(s"Collection $id does not exist")
-    collRevs.put(id, CollRev(deleted = false, body))
+    requireCollection(id)
+    collRevs.put(id, Some(body))
   }
 
   /** delete_collection removes the collection AND its items
@@ -329,8 +312,8 @@ final class TxnStore(spark: SparkSession, dir: String) {
     */
   def deleteCollection(id: String): Unit =
     synchronized {
-      if (!collectionExists(id)) throw new TxnMissing(s"Collection $id does not exist")
-      collRevs.put(id, CollRev(deleted = true, "{}"))
+      requireCollection(id)
+      collRevs.put(id, None)
       itemRevs.keys.filter(_._1 == id).foreach(itemRevs.remove)
       purgedBase.put(id, ())
     }

@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - The computed-extents collections query runs only in the server's
   *    one collections directory, never as a per-request existence check.
   *  - The HTTP layer is a codec: StacHttp builds no Spark plan.
+  *  - The write overlay holds an item in one form: `TxnStore` declares no
+  *    case class and no timestamp-NTZ branch.
   *  - In-memory caches have one home: outside `core/Memo.scala`, only the
   *    named owners of non-cache state hold a concurrent map.
   *  - STAC search has one compiler: an a-gate runs its search through
@@ -68,6 +70,17 @@ class SourceGuardSpec extends AnyFunSuite {
       if !(f.getName == "StacApi.scala" && owner.startsWith("collections"))
       if !(f.getName == "StacSearch.scala" && owner.matches("a\\d+\\w*"))
     } yield s"${f.getPath}:${n + 1}: in $owner: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("TxnStore holds items only as items-view rows: no case class, no NTZ fork") {
+    val f = new File("src/main/scala/graft/search/TxnStore.scala")
+    assert(f.exists, "not run from the repo root")
+    val form = """\bcase\s+class\b|\bTimestampNTZType\b""".r
+    val hits = for {
+      (line, n) <- lines(f).zipWithIndex
+      token <- form.findFirstIn(line)
+    } yield s"${f.getPath}:${n + 1}: $token"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

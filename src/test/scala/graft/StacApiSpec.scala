@@ -88,7 +88,7 @@ class StacApiSpec extends AnyFunSuite {
     assert(nNull > 0)
   }
 
-  test("keyset walk under a nullable ASC multi-field sort (nulls first)") {
+  test("keyset walk under a nullable ASC multi-field sort (nulls last)") {
     val p0 = SearchParams(collections = Seq("click", "error"),
       sortBy = Seq(SortBy("datetime"), SortBy("value", desc = true)), limit = 17)
     var token: Option[String] = None
@@ -104,9 +104,31 @@ class StacApiSpec extends AnyFunSuite {
     }
     assert(seen.length == matched)
     val expected = Tables.items(s, sf).where(col("collection").isin("click", "error"))
-      .orderBy(col("datetime").asc, col("value").desc, col("id"))
+      .orderBy(col("datetime").asc_nulls_last, col("value").desc, col("id"))
       .select("id").collect().map(_.getString(0)).toVector
     assert(seen == expected)
+  }
+
+  test("sortby=datetime ascending walk ≡ ORDER BY datetime ASC NULLS LAST, id") {
+    val p0 = SearchParams(collections = Seq("view"), sortBy = Seq(SortBy("datetime")),
+      limit = 11)
+    var token: Option[String] = None
+    var seen = Vector.empty[String]
+    var done = false
+    while (!done) {
+      val r = StacApi.search(s, sf, p0.copy(token = token))
+      seen = seen ++ r.items.map(row => row.getString(row.fieldIndex("id")))
+      token = r.nextToken
+      done = token.isEmpty
+    }
+    Tables.items(s, sf).createOrReplaceTempView("nulls_last_items")
+    val expected = s.sql("SELECT id FROM nulls_last_items WHERE collection = 'view' " +
+      "ORDER BY datetime ASC NULLS LAST, id").collect().map(_.getString(0)).toVector
+    assert(seen == expected)
+    // the walk ends in the null run: interval-only items come last
+    val nulls = Tables.items(s, sf).where(col("collection") === "view" &&
+      col("datetime").isNull).select("id").collect().map(_.getString(0)).toSet
+    assert(nulls.nonEmpty && seen.takeRight(nulls.size).toSet == nulls)
   }
 
   test("fields extension: include/exclude project at plan level, id always kept") {
@@ -471,7 +493,8 @@ class StacApiSpec extends AnyFunSuite {
     val schema = filtered.columns.toSeq
     val sorts = p.sortBy.flatMap(sb =>
       StacSearch.resolveField(sb.field, schema).map(_ -> sb.desc)) :+ ("id" -> false)
-    val rows = filtered.orderBy(sorts.map { case (f, d) => if (d) col(f).desc else col(f).asc }: _*)
+    val rows = filtered.orderBy(sorts.map { case (f, d) =>
+        if (d) col(f).desc else col(f).asc_nulls_last }: _*)
       .offset(off).limit(p.limit + 1).collect()
     val items0 = rows.take(p.limit)
     def keyset(r: Row): String = sorts.map { case (f, _) =>

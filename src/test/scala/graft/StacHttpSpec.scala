@@ -529,6 +529,29 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally srv.stop()
   }
 
+  test("a value-only PATCH on a base area item keeps its geometry, bbox and " +
+      "projection members") {
+    val srv = StacHttp.start(s, sf)
+    try {
+      val area = Tables.items(s, sf).where(col("collection") === "view" &&
+        col("id_num") % 2 === 1).orderBy("id_num").select("id").head().getString(0)
+      val path = s"/collections/view/items/$area"
+      val (c0, before) = send(srv.base, "GET", path, None)
+      assert(c0 == 200 && before.at("/geometry/type").asText == "Polygon", before)
+      val proj = before.get("properties").fieldNames().asScala
+        .filter(_.startsWith("proj:")).map(k => s"/properties/$k").toSeq
+      assert(proj.nonEmpty, before)
+      val (pc, pf) = send(srv.base, "PATCH", path, Some("""{"properties":{"value":1}}"""))
+      assert(pc == 200, pf)
+      val (c1, after) = send(srv.base, "GET", path, None)
+      assert(c1 == 200)
+      (Seq("/geometry", "/bbox", "/stac_extensions") ++ proj).foreach { ptr =>
+        assert(after.at(ptr) == before.at(ptr), ptr)
+      }
+      assert(after.at("/properties/value").asDouble == 1.0, after)
+    } finally srv.stop()
+  }
+
   test("transactions (r12): create → search → patch → delete over real " +
       "sockets, with the reference's 404/409 contracts") {
     // a dedicated server: transactions mutate its overlay, and the other
