@@ -366,7 +366,7 @@ object GeoParquet {
       new java.io.File(out).mkdirs()
       // default shard = id-hash (uniform); a spatial caller passes a
       // z-bucket column instead so each file's footprint (⇒ footer bbox)
-      // stays TIGHT and the catalog prunes (see searchBboxPruned)
+      // stays TIGHT and the geocatalog scan prunes files on it
       val sc = shardCol.getOrElse(pmod(col("id_num"), lit(shards.toLong)))
       Tables.items(spark, dir)
         .select(col("id"), col("id_num"), col("collection"), col("datetime"),
@@ -500,11 +500,10 @@ object GeoParquet {
     *    see a merged row twice; a reader that plans against a listing
     *    and opens later can hit a vanished input (the standard
     *    in-place-compaction caveat of every non-MVCC file store —
-    *    snapshot isolation needs a manifest layer, which is exactly
-    *    what the A63/A64 manifests provide for deployments that need
-    *    it). [[footerInfo]] tolerates the vanish (skips and re-lists);
-    *    schedule maintenance in the ingest loop's quiet point when
-    *    batch queries run against the live directory;
+    *    snapshot isolation needs a manifest layer, which this catalog
+    *    does not have). [[footerInfo]] tolerates the vanish (skips and
+    *    re-lists); schedule maintenance in the ingest loop's quiet point
+    *    when batch queries run against the live directory;
     *  - a crash between rename and deletes leaves inputs behind — the
     *    RECOVERY SWEEP at the next call removes any file whose id is
     *    ≤ the collection's newest generation id (those rows are in the
@@ -631,31 +630,6 @@ object GeoParquet {
     */
   def footerBboxes(out: String): Map[String, Seq[Double]] =
     footerInfo(out).map { case (k, f) => k -> f.bbox }
-
-  /** Footer-driven FILE PRUNE + scan: the catalog-level analogue of
-    * parquet row-group skipping — the per-file `geo` bbox (exact, folded
-    * at write) decides membership BEFORE any data plane I/O, so a bbox
-    * search over a spatially-sharded catalog opens only the files whose
-    * footprint can match. Metadata plane is O(files) (= collections ×
-    * shards — never rows); at 100 TB this is the difference between
-    * scanning a planet and scanning a country. Returns (frame over the
-    * surviving files, files total, files read). Correctness is gated:
-    * the A85 oracle scans EVERY file, so a lossy prune is a hash break.
-    */
-  def searchBboxPruned(spark: SparkSession, out: String,
-                       w: Double, s: Double, e: Double, n: Double)
-      : (DataFrame, Int, Int) = {
-    val footers = footerBboxes(out)
-    val keep = footers.filter { case (_, b) =>
-      b(0) <= e && b(2) >= w && b(1) <= n && b(3) >= s
-    }
-    val files = keep.keys.toSeq.sorted.map(k => s"$out/$k.parquet")
-    val df =
-      if (files.isEmpty)
-        spark.read.parquet(out).limit(0) // schema-correct empty frame
-      else spark.read.parquet(files: _*)
-    (df, footers.size, keep.size)
-  }
 
   /** Read and parse the `geo` footer metadata — the metadata-plane step
     * a GeoParquet reader performs before planning the scan.

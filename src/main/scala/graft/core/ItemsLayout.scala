@@ -3,11 +3,8 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Production storage layout for the items corpus (SURVEY.md §3.1).
-  *
-  * The reference scans one GeoParquet URL per collection and UNION ALLs
-  * (database_logic.py:831-853). At 100 TB the corpus should instead be ONE
-  * dataset laid out so the query predicates become I/O pruning:
+/** Parquet layouts of the items corpus that turn search predicates into
+  * Spark's own file-source pruning (SURVEY.md §3.1):
   *
   *  - `partitionBy(collection)` — a collections filter prunes directories
   *    before any file is opened (`PartitionFilters` in the scan);
@@ -15,12 +12,16 @@ import org.apache.spark.sql.functions._
   *    min/max stats make datetime ranges skip row groups
   *    (`PushedFilters`), and the id tiebreak keeps keyset pagination
   *    aligned with the physical order;
-  *  - at larger scale add the Z-order cell (StacSearch.a24) as a second
-  *    partition level for spatial pruning.
+  *  - z-ordered: a stored z-cell column whose ranges skip row groups.
+  *
+  * FILE-level pruning of the items catalog is not here: the exported
+  * GeoParquet catalog (core/GeoParquet.export) is read through the
+  * `geocatalog` scan, whose footer prune (sources/GeoCatalogSource) is the
+  * one place a search's file set is decided.
   */
 object ItemsLayout {
 
-  /** Materialize an items DataFrame in the production layout. */
+  /** Materialize an items DataFrame partitioned by collection. */
   def materialize(items: DataFrame, path: String): Unit =
     items
       .repartition(col("collection"))
@@ -33,10 +34,9 @@ object ItemsLayout {
 
   /** Z-ordered spatial layout: the Z-cell is STORED and the data is
     * range-partitioned + sorted by it, so a bbox query's OR-of-BETWEENs
-    * over the merged z-ranges (StacSearch.zRangesSplit) prunes at BOTH
-    * levels — file skipping from the range partitioning, row-group
-    * skipping from parquet min/max stats on the sorted column. This is the
-    * 100 TB spatial layout; ItemsLayoutSpec audits the pushed filters.
+    * over the merged z-ranges (StacSearch.zRangesSplit) push down and
+    * skip row groups on parquet min/max stats of the sorted column;
+    * ItemsLayoutSpec audits the pushed filters.
     */
   def materializeZOrdered(items: DataFrame, zcell: org.apache.spark.sql.Column,
                           path: String): Unit =
@@ -44,100 +44,4 @@ object ItemsLayout {
       .repartitionByRange(col("zcell"), col("id"))
       .sortWithinPartitions(col("zcell"), col("id"))
       .write.mode("overwrite").parquet(path)
-
-  /** [[materializeZOrdered]] with an EXPLICIT file count: numFiles is the
-    * z-range partition count, i.e. the file-pruning granularity the A63
-    * covering manifest indexes at. Explicit because AQE legitimately
-    * coalesces an unnumbered repartition of a small corpus to one
-    * partition — one file = nothing to prune; in production size this at
-    * target-file-size (~1 GB) × corpus.
-    */
-  def materializeZOrdered(items: DataFrame, zcell: org.apache.spark.sql.Column,
-                          path: String, numFiles: Int): Unit =
-    items.withColumn("zcell", zcell)
-      .repartitionByRange(numFiles, col("zcell"), col("id"))
-      .sortWithinPartitions(col("zcell"), col("id"))
-      .write.mode("overwrite").parquet(path)
-
-  /** Generic sorted projection: range-partition + sort the items by an
-    * arbitrary key expression — the building block for per-dimension
-    * physical projections of one logical table (z-cell for spatial, a
-    * temporal key for datetime; a production lake keeps one layout per
-    * dominant access path and routes queries by predicate). The key is
-    * dropped after placement: the covering manifest indexes the real
-    * columns, so the layout carries no derived key column.
-    */
-  def materializeSorted(items: DataFrame, key: org.apache.spark.sql.Column,
-                        path: String, numFiles: Int): Unit =
-    items.withColumn("_sortkey", key)
-      .repartitionByRange(numFiles, col("_sortkey"), col("id"))
-      .sortWithinPartitions(col("_sortkey"), col("id"))
-      .drop("_sortkey")
-      .write.mode("overwrite").parquet(path)
-
-  /** GeoParquet-1.1-style COVERING INDEX over a materialized layout: one
-    * row per data FILE carrying its spatial envelope (xmin/ymin/xmax/
-    * ymax — GeoParquet's `covering.bbox` lifted to file granularity),
-    * datetime range, and row count. This is the manifest a scan planner
-    * consults INSTEAD of opening footers: a spatial/temporal search
-    * enumerates candidate files from the |files|-row manifest (at 100 TB
-    * that is ~10⁶ rows for ~10⁶ files — a broadcast-sized catalog read),
-    * and data I/O touches only the surviving files. Because the layout
-    * is z-ordered, a bbox's candidate set clusters into few files —
-    * the manifest turns that locality into file-level pruning the same
-    * way parquet row-group stats prune WITHIN a file (A29/A30's level).
-    * One aggregate pass over the layout builds it (`_metadata.file_path`
-    * is the engine-maintained provenance column); rebuilt only when the
-    * layout is rewritten.
-    */
-  def coveringManifest(spark: SparkSession, layoutPath: String): DataFrame =
-    manifestRows(spark.read.parquet(layoutPath))
-
-  /** Per-file covering rows for any items read (file identity from the
-    * engine-maintained `_metadata.file_path` provenance column).
-    */
-  def manifestRows(itemsRead: DataFrame): DataFrame =
-    itemsRead
-      .select(col("lon"), col("lat"), col("datetime"),
-        col("start_datetime"), col("end_datetime"),
-        col("_metadata.file_path").as("file"))
-      .groupBy(col("file"))
-      .agg(min(col("lon")).as("xmin"), max(col("lon")).as("xmax"),
-        min(col("lat")).as("ymin"), max(col("lat")).as("ymax"),
-        // min/max IGNORE nulls: dt_* cover the file's instant items,
-        // sd_min/ed_max envelope its null-datetime interval items — a
-        // temporal prune must clear BOTH (the reference's overlap
-        // semantics, database_logic.py:279-312, at file granularity);
-        // an all-null aggregate yields NULL = "no such items here"
-        min(col("datetime")).as("dt_min"), max(col("datetime")).as("dt_max"),
-        min(col("start_datetime")).as("sd_min"),
-        max(col("end_datetime")).as("ed_max"),
-        count(lit(1)).as("n_items"))
-
-  /** D29: STREAMING maintenance of the covering manifest — the
-    * foreachBatch sink of a live item feed: append the micro-batch as
-    * new data file(s) under the layout, then append EXACTLY those
-    * files' covering rows to the manifest (aggregated from the
-    * just-written files, so file identities are real). A manifest row
-    * is per-file and a data file is immutable once written, so
-    * maintenance is pure directory adds on BOTH tables — no rewrite, no
-    * streaming state beyond the tables themselves; the manifest stays
-    * exactly [[coveringManifest]] of the layout at every batch boundary
-    * (ItemsLayoutSpec proves it over a multi-batch stream, and that the
-    * A63-style manifest-pruned search over the streamed layout matches
-    * the full scan).
-    */
-  def appendBatchWithManifest(batch: DataFrame, layoutPath: String,
-                              manifestPath: String): Unit = {
-    def files(p: String): Set[String] =
-      Option(new java.io.File(p).listFiles()).toSeq.flatten
-        .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val before = files(layoutPath)
-    batch.coalesce(1).write.mode("append").parquet(layoutPath)
-    val fresh = (files(layoutPath) -- before).toSeq.sorted
-      .map(n => s"$layoutPath/$n")
-    if (fresh.nonEmpty)
-      manifestRows(batch.sparkSession.read.parquet(fresh: _*))
-        .write.mode("append").parquet(manifestPath)
-  }
 }

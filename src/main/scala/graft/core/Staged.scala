@@ -5,9 +5,9 @@ import java.nio.file.{FileSystemException, Files, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
-/** The one primitive for derived state staged on disk: layouts,
-  * manifests, state tables, tokenizer and index artifacts, media tables
-  * and GeoParquet exports.
+/** The one primitive for derived state staged on disk: layouts, state
+  * tables, tokenizer and index artifacts, media tables and GeoParquet
+  * exports.
   *
   *  - PATH: `<java.io.tmpdir>/graft_<name>_v<version>_<key>`, key =
   *    [[FixtureGuard.stateKey]] of the fixture dir and the input tables

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, GenericRowWithSchema, NullsLast, SortOrder}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Tables
 import graft.cql.Cql
@@ -115,7 +117,12 @@ object SearchParams {
       sortBy = sorts,
       // untrusted HTTP surface: non-positive → 400, huge → clamp (STAC's
       // suggested 10000 ceiling) so limit+1 can never overflow
-      limit = StacHttp.clampLimit(node("limit").map(_.asInt).getOrElse(10)),
+      limit = StacHttp.clampLimit(node("limit").map { n =>
+        // as strict as GET's `.toInt`: Jackson's asInt would truncate
+        if (!n.isIntegralNumber || !n.canConvertToInt)
+          throw new IllegalArgumentException(s"limit must be an integer, got $n")
+        n.intValue
+      }.getOrElse(10)),
       token = node("token").map(_.asText),
       include = fieldList("include"),
       exclude = fieldList("exclude"))
@@ -335,9 +342,23 @@ object StacApi {
     *  - `a/b`: datetime in [a, b], or the interval overlaps it (:279-292);
     *  - `a/..`: datetime >= a, or the interval ends at or after a (:293-302);
     *  - `../b`: datetime <= b, or the interval starts at or before b (:303-312).
+    *
+    * Each instant is parsed here, by the parser Spark's string → TIMESTAMP
+    * cast uses, so a malformed one is an IllegalArgumentException naming
+    * it rather than a cast error at execution. An instant without a zone
+    * becomes an NTZ literal cast to TIMESTAMP (the session zone applies,
+    * as it does to the string cast); one with a zone is an absolute
+    * instant.
     */
   def datetimePredicate(dt: String): Column = {
-    def ts(t: String): Column = lit(t).cast("timestamp")
+    def ts(t: String): Column = {
+      val u = UTF8String.fromString(t)
+      DateTimeUtils.stringToTimestampWithoutTimeZone(u, false)
+        .map(m => lit(DateTimeUtils.microsToLocalDateTime(m)).cast("timestamp"))
+        .orElse(DateTimeUtils.stringToTimestamp(u, java.time.ZoneOffset.UTC)
+          .map(m => lit(DateTimeUtils.microsToInstant(m))))
+        .getOrElse(throw new IllegalArgumentException(s"bad datetime instant: '$t'"))
+    }
     val (d, start, end) = (col("datetime"), col("start_datetime"), col("end_datetime"))
     dt.split("/", -1) match {
       case Array(t) =>

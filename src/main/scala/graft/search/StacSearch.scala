@@ -1041,63 +1041,29 @@ object StacSearch {
   /** Oracle: plain bbox — proves the merged range cover is a superset. */
   val a30Sql: String = a8Sql
 
-  // --------------- A63 covering-index (manifest) scan planning
-  /** A63: COVERING-INDEX scan planning — the GeoParquet-1.1 `covering.
-    * bbox` idea lifted to a file-level MANIFEST over the z-ordered items
-    * layout (ItemsLayout.coveringManifest), closing §7.15's layout item:
-    * a bbox search first prunes FILES by envelope overlap against the
-    * |files|-row manifest (a catalog read, not a data read — the
-    * driver-side file list is exactly what a table format's scan
-    * planning does), then evaluates the exact predicate only on the
-    * surviving files. Z-ordering makes the pruning effective: a compact
-    * bbox's cells land in few range partitions, so most files' envelopes
-    * miss the query box entirely (ItemsLayoutSpec asserts files are
-    * actually skipped). Gate: oracle = the SAME bbox over ALL items —
-    * equality proves the manifest prune is SOUND (no matching item lives
-    * in a skipped file) and the layout round-trip lossless. Layout +
-    * manifest materialize once per corpus snapshot (idempotent, keyed by
-    * dir — the C47/C67 state-table convention).
+  // --------------- A63 bbox search on the z-sharded catalog
+  /** A63: a bbox search over the z-sharded GeoParquet catalog (the
+    * layout A85/A87 export, [[zCatalog]]) read through the `geocatalog`
+    * scan, whose plan-time footer prune (`GeoCatalogScan.constraintOf`)
+    * decides which files the search opens. The exact point predicate is
+    * joined by the four `bbox` overlap conjuncts: every catalog row's
+    * bbox contains its (lon, lat) (`GeoParquet.rowGeom`), so they select
+    * the same rows, and they push down and prune. Z-sharding makes the
+    * prune effective: the compact gate box lands in two of eight z
+    * buckets, and the skip is required at gate time. Gate: oracle = the
+    * SAME bbox over ALL items, so equality proves the prune sound and
+    * the export lossless.
     */
   private val a63Bbox = (-175.0, -20.0, -120.0, 25.0) // compact & populated: real pruning
 
-  // private[graft]: the layout spec audits THESE dirs instead of re-deriving
-  // the key (r11 ADVICE — a drifted re-derivation inspects the wrong dir)
-  private[graft] def a63Paths(s: SparkSession, d: String): (String, String) = {
-    val lp = Staged("itemszlayout", 1, d, "events")(
-      graft.core.ItemsLayout.materializeZOrdered(items(s, d), zCellColumn, _,
-        numFiles = 16))
-    (lp, manifestOf(s, "itemsmanifest", d, lp))
-  }
-
-  /** The covering manifest of a COMMITTED layout dir — staged after the
-    * layout, because its rows name the layout's files by path.
-    */
-  private def manifestOf(s: SparkSession, name: String, d: String, lp: String): String =
-    Staged(name, 1, d, "events")(
-      graft.core.ItemsLayout.coveringManifest(s, lp).write.parquet(_))
-
-  /** Manifest-selected data files for a bbox (exposed for the spec's
-    * pruning audit).
-    */
-  private[graft] def a63CandidateFiles(s: SparkSession, d: String,
-      w: Double, so: Double, e: Double, n: Double): Seq[String] = {
-    val (_, mp) = a63Paths(s, d)
-    s.read.parquet(mp)
-      .where(col("xmin") <= e && col("xmax") >= w &&
-        col("ymin") <= n && col("ymax") >= so)
-      .select(col("file")).collect().map(_.getString(0)).toSeq.sorted
-  }
-
   def a63CoveringIndex(s: SparkSession, d: String): DataFrame = {
-    val (lp, mp) = a63Paths(s, d)
+    val out = zCatalog(s, d)
     val (w, so, e, n) = a63Bbox
-    val files = a63CandidateFiles(s, d, w, so, e, n)
-    val pruned =
-      if (files.isEmpty) graft.core.ItemsLayout.read(s, lp).limit(0)
-      else s.read.parquet(files: _*)
-    pruned
-      .where(Geo.bboxContains(col("lon"), col("lat"), w, so, e, n))
-      .select(projCols: _*).orderBy(col("id"))
+    val df = catalogScan(s, out)
+      .where(bboxOverlaps(w, so, e, n) &&
+        Geo.bboxContains(col("lon"), col("lat"), w, so, e, n))
+    requirePruned(s, "a63", out, df, "z-sharded bbox prune skipped nothing")
+    asItemsView(df, proj).orderBy(col("id"))
   }
 
   /** Oracle: the same bbox over ALL items — soundness of the file prune. */
@@ -1105,49 +1071,22 @@ object StacSearch {
     s"SELECT $projSql FROM items WHERE ${Geo.bboxContainsSql("lon", "lat",
       a63Bbox._1, a63Bbox._2, a63Bbox._3, a63Bbox._4)} ORDER BY id")
 
-  // --------------- A64 manifest DATETIME pruning (temporal layout)
-  /** A64: the covering manifest put to work on the TEMPORAL axis — and
-    * the reason a lake keeps one physical projection per dominant access
-    * path: the z-ordered layout clusters space, so every file spans the
-    * whole time range and a datetime prune would keep everything. A64
-    * materializes the items a SECOND way (range-partitioned + sorted by
-    * `coalesce(datetime, start_datetime)` — non-null for every item) and
-    * indexes it with the same manifest builder. The file-level prune
-    * carries the reference's FULL datetime-overlap semantics
-    * (database_logic.py:279-312) at file granularity: a file survives if
-    * its instant-item range [dt_min, dt_max] OR its interval-item
-    * envelope [sd_min, ed_max] overlaps the search window (null
-    * aggregate = no items of that kind = that disjunct false). The exact
-    * row predicate then runs on the survivors only. Gate oracle = A6's
-    * datetime-range search over ALL items: equality proves no instant
-    * NOR interval item was lost to the prune. ItemsLayoutSpec asserts
-    * files are actually skipped on the temporal layout.
+  // --------------- A64 datetime search on the time-sharded catalog
+  /** A64: the temporal twin of A63 — A6's datetime-overlap search over
+    * the time-sharded catalog A89 exports ([[tCatalog]]: one shard per
+    * day of month), read through the `geocatalog` scan. The predicate is
+    * the reference's full overlap semantics (database_logic.py:279-312)
+    * written over the catalog's NTZ columns ([[catalogDtRange]]), so the
+    * instant range AND the interval-overlap disjunct both prune files on
+    * the `graft` sidecar footer. The skip is required at gate time. Gate
+    * oracle = A6 over ALL items: equality proves no instant nor interval
+    * item was lost to the prune.
     */
-  private[graft] def a64Paths(s: SparkSession, d: String): (String, String) = {
-    val lp = Staged("itemstlayout", 1, d, "events")(
-      graft.core.ItemsLayout.materializeSorted(items(s, d),
-        coalesce(col("datetime"), col("start_datetime")), _, numFiles = 16))
-    (lp, manifestOf(s, "itemstmanifest", d, lp))
-  }
-
-  private[graft] def a64CandidateFiles(s: SparkSession, d: String,
-      lo: String, hi: String): Seq[String] = {
-    val (_, mp) = a64Paths(s, d)
-    s.read.parquet(mp)
-      .where(
-        coalesce(col("dt_min") <= ts(hi) && col("dt_max") >= ts(lo), lit(false)) ||
-        coalesce(col("sd_min") <= ts(hi) && col("ed_max") >= ts(lo), lit(false)))
-      .select(col("file")).collect().map(_.getString(0)).toSeq.sorted
-  }
-
   def a64ManifestDatetime(s: SparkSession, d: String): DataFrame = {
-    val (lp, _) = a64Paths(s, d)
-    val files = a64CandidateFiles(s, d, tLo, tHi)
-    val pruned =
-      if (files.isEmpty) graft.core.ItemsLayout.read(s, lp).limit(0)
-      else s.read.parquet(files: _*)
-    pruned.where(StacApi.datetimePredicate(s"$tLo/$tHi"))
-      .select(dtProj.map(col): _*).orderBy(col("id"))
+    val out = tCatalog(s, d)
+    val df = catalogScan(s, out).where(catalogDtRange(tLo, tHi))
+    requirePruned(s, "a64", out, df, "datetime prune skipped nothing")
+    asItemsView(df, dtProj).orderBy(col("id"))
   }
 
   /** Oracle: A6's datetime-overlap search over ALL items. */
@@ -2111,50 +2050,61 @@ object StacSearch {
       .orderBy(col("id"))
   }
 
-  // ---------------------- A85 spatially-sharded catalog + footer prune
-  @volatile private var a85Dir: String = "unset"
-
-  /** A85: the catalog completes into a SPATIAL INDEX — export with
-    * Z-BUCKET sharding (shard = level-6 z-cell bucket, so each file's
-    * exact footer bbox covers one compact region), then answer a bbox
-    * search by pruning FILES on their `geo` footers before any data
-    * I/O: the catalog-level analogue of row-group skipping, and the
-    * shape a 100 TB STAC store actually serves from (A63's manifest
-    * prune, but driven by the files' own spec'd metadata rather than a
-    * sidecar table). The prune MUST skip files (required at gate time)
-    * and MUST be lossless — the oracle scans EVERY file, so a footer
-    * bbox that under-covers its rows is a hash break, not a silent
-    * missing row.
+  // ------------------ the GeoParquet catalog behind the geocatalog scan
+  /** The spatially-sharded catalog: shard = level-6 z-cell bucket, so
+    * each file's exact footer bbox covers one compact region (A63, A85,
+    * A86, A87).
     */
-  private val a85Box = (-130.005, -60.005, -20.005, 10.005) // (W, S, E, N)
+  private def zCatalog(s: SparkSession, d: String): String =
+    graft.core.GeoParquet.export(s, d, 8, Some(zShard(8)), tag = "z")
 
-  def a85CatalogPrunedSearch(s: SparkSession, d: String): DataFrame = {
-    val zShards = 8 // level-6 z space (4096 cells) in 512-cell buckets
-    val shardCol = (zCellColumn.cast("long") * lit(zShards) / lit(4096)).cast("long")
-    val out = graft.core.GeoParquet.export(s, d, zShards, Some(shardCol), tag = "z")
-    a85Dir = out
-    val (w, so, e, n) = a85Box
-    val (df, total, read) = graft.core.GeoParquet.searchBboxPruned(s, out, w, so, e, n)
-    require(read < total,
-      s"footer prune skipped nothing ($read/$total files) — spatial sharding broken")
-    df.where(col("bbox.xmin") <= e && col("bbox.xmax") >= w &&
-        col("bbox.ymin") <= n && col("bbox.ymax") >= so)
-      .select(col("id"), col("collection"),
-        col("bbox.xmin").as("xmin"), col("bbox.ymin").as("ymin"),
-        col("bbox.xmax").as("xmax"), col("bbox.ymax").as("ymax"))
-      .orderBy(col("id"))
+  /** Level-6 z space (4096 cells) in `zShards` equal buckets. */
+  private def zShard(zShards: Int): Column =
+    (zCellColumn.cast("long") * lit(zShards) / lit(4096)).cast("long")
+
+  /** The time-sharded catalog: shard = day of month of the item's
+    * instant (start_datetime for interval items) — the (collection,
+    * time-bucket) layout production stores use (A64, A89).
+    */
+  private def tCatalog(s: SparkSession, d: String): String =
+    graft.core.GeoParquet.export(s, d, 31,
+      Some(dayofmonth(coalesce(col("datetime"), col("start_datetime")))), tag = "t")
+
+  /** The `geocatalog` DataSource V2 over an exported catalog: the scan
+    * prunes files at plan time from the pushed filters.
+    */
+  private def catalogScan(s: SparkSession, out: String): DataFrame =
+    s.read.format("graft.sources.GeoCatalogSource").load(out)
+
+  /** bbox overlap on the catalog's covering column — the four conjuncts
+    * the scan's footer prune answers.
+    */
+  private def bboxOverlaps(w: Double, so: Double, e: Double, n: Double): Column =
+    col("bbox.xmin") <= e && col("bbox.xmax") >= w &&
+      col("bbox.ymin") <= n && col("bbox.ymax") >= so
+
+  /** The reference's closed-range datetime overlap (A6's predicate) over
+    * the catalog's NTZ columns. NTZ literals keep the pushed filters bare
+    * attribute comparisons (a TIMESTAMP literal would wrap the NTZ column
+    * in a cast and kill the pushdown).
+    */
+  private def catalogDtRange(lo: String, hi: String): Column = {
+    def tsn(t: String): Column = lit(t).cast("timestamp_ntz")
+    (col("datetime") >= tsn(lo) && col("datetime") <= tsn(hi)) ||
+      (col("datetime").isNull &&
+        col("start_datetime") <= tsn(hi) && col("end_datetime") >= tsn(lo))
   }
 
-  def a85Sql: String = {
-    val (w, so, e, n) = a85Box
-    s"""SELECT id, collection,
-       |  bbox.xmin AS xmin, bbox.ymin AS ymin,
-       |  bbox.xmax AS xmax, bbox.ymax AS ymax
-       |FROM read_parquet('$a85Dir/*.parquet')
-       |WHERE bbox.xmin <= $e AND bbox.xmax >= $w
-       |  AND bbox.ymin <= $n AND bbox.ymax >= $so
-       |ORDER BY id""".stripMargin
-  }
+  /** `cols` of a catalog frame, its NTZ instants cast to the items view's
+    * TIMESTAMP.
+    */
+  private def asItemsView(df: DataFrame, cols: Seq[String]): DataFrame =
+    df.select(cols.map { c =>
+      df.schema(c).dataType match {
+        case org.apache.spark.sql.types.TimestampNTZType => col(c).cast("timestamp").as(c)
+        case _ => col(c)
+      }
+    }: _*)
 
   /** The catalog gates' skip requirement: some file must be
     * footer-pruned, or sharding or pushdown is broken. Read off the scan's
@@ -2171,35 +2121,53 @@ object StacSearch {
       require(m.exists(g => g.group(1).toInt < g.group(2).toInt), s"$failure:\n$plan")
     }
 
-  // ------------- A87 catalog DataSource V2: plan-time footer prune
+  // ------------- A85/A87 bbox search with the plan-time footer prune
+  @volatile private var a85Dir: String = "unset"
   @volatile private var a87Dir: String = "unset"
 
-  /** A87: the A85 footer prune moved INTO THE PLANNER — the catalog read
-    * as a DataSource V2 (`graft.sources.GeoCatalogSource`): the SAME
-    * bbox predicates, written as ordinary `where` clauses, push into the
-    * scan, and the scan itself drops files whose `geo` footer bbox
-    * cannot contain a match before any data I/O. A85 proves the prune's
-    * set algebra with an explicit two-step; A87 proves the ENGINE path a
-    * user actually runs (`spark.read.format(…).load(dir).where(…)`),
-    * with the skip REQUIRED at gate time (read off the scan's own
-    * accounting) and the oracle scanning EVERY file — a lossy prune is a
-    * hash break, not a silent missing row.
+  /** A85/A87: the catalog as a SPATIAL INDEX — a bbox search over the
+    * z-sharded catalog through the `geocatalog` DataSource V2: the bbox
+    * predicates, written as ordinary `where` clauses, push into the scan,
+    * and the scan drops files whose `geo` footer bbox cannot contain a
+    * match before any data I/O — the catalog-level analogue of row-group
+    * skipping, and the shape a 100 TB STAC store serves from. The skip is
+    * REQUIRED at gate time (read off the scan's own accounting) and the
+    * oracle scans EVERY file, so a footer bbox that under-covers its rows
+    * is a hash break, not a silent missing row. Both gate names run this
+    * one search.
     */
-  def a87CatalogSource(s: SparkSession, d: String): DataFrame = {
-    val zShards = 8
-    val shardCol = (zCellColumn.cast("long") * lit(zShards) / lit(4096)).cast("long")
-    val out = graft.core.GeoParquet.export(s, d, zShards, Some(shardCol), tag = "z")
-    a87Dir = out
+  private val a85Box = (-130.005, -60.005, -20.005, 10.005) // (W, S, E, N)
+
+  private def zBboxSearch(s: SparkSession, out: String): DataFrame = {
     val (w, so, e, n) = a85Box
-    val df = s.read.format("graft.sources.GeoCatalogSource").load(out)
-      .where(col("bbox.xmin") <= e && col("bbox.xmax") >= w &&
-        col("bbox.ymin") <= n && col("bbox.ymax") >= so)
-    requirePruned(s, "a87", out, df,
+    val df = catalogScan(s, out).where(bboxOverlaps(w, so, e, n))
+    requirePruned(s, "zbbox", out, df,
       "planner prune skipped nothing — spatial sharding or pushdown broken")
     df.select(col("id"), col("collection"),
         col("bbox.xmin").as("xmin"), col("bbox.ymin").as("ymin"),
         col("bbox.xmax").as("xmax"), col("bbox.ymax").as("ymax"))
       .orderBy(col("id"))
+  }
+
+  def a85CatalogPrunedSearch(s: SparkSession, d: String): DataFrame = {
+    a85Dir = zCatalog(s, d)
+    zBboxSearch(s, a85Dir)
+  }
+
+  def a85Sql: String = {
+    val (w, so, e, n) = a85Box
+    s"""SELECT id, collection,
+       |  bbox.xmin AS xmin, bbox.ymin AS ymin,
+       |  bbox.xmax AS xmax, bbox.ymax AS ymax
+       |FROM read_parquet('$a85Dir/*.parquet')
+       |WHERE bbox.xmin <= $e AND bbox.xmax >= $w
+       |  AND bbox.ymin <= $n AND bbox.ymax >= $so
+       |ORDER BY id""".stripMargin
+  }
+
+  def a87CatalogSource(s: SparkSession, d: String): DataFrame = {
+    a87Dir = zCatalog(s, d)
+    zBboxSearch(s, a87Dir)
   }
 
   def a87Sql: String = {
@@ -2228,35 +2196,21 @@ object StacSearch {
     * OR (datetime IS NULL AND interval overlaps)` — into a sound
     * file-level constraint (And prunes on translatable conjuncts; Or
     * requires both branches; absent metadata answers true). The catalog
-    * here is TIME-SHARDED (shard = day-of-month of the item instant —
-    * the (collection, time-bucket) layout every production store uses),
-    * so the gate's 4-day/2-collection search provably skips files: the
-    * skip is REQUIRED at gate time off the scan's explain accounting,
-    * and the oracle scans EVERY file — a lossy prune is a hash break.
+    * here is TIME-SHARDED ([[tCatalog]]), so the gate's
+    * 4-day/2-collection search provably skips files: the skip is
+    * REQUIRED at gate time off the scan's explain accounting, and the
+    * oracle scans EVERY file — a lossy prune is a hash break.
     */
   private val a89Lo = "2024-01-08 00:00:00"
   private val a89Hi = "2024-01-12 00:00:00"
 
   def a89CatalogColdtPrune(s: SparkSession, d: String): DataFrame = {
-    val shardCol = dayofmonth(coalesce(col("datetime"), col("start_datetime")))
-    val out = graft.core.GeoParquet.export(s, d, 31, Some(shardCol), tag = "t")
+    val out = tCatalog(s, d)
     a89Dir = out
-    // NTZ literals so the pushed filters stay bare attribute comparisons
-    // (a TIMESTAMP literal would wrap the NTZ column in a cast and kill
-    // the pushdown)
-    def tsn(t: String): Column = lit(t).cast("timestamp_ntz")
-    val dtPred =
-      (col("datetime") >= tsn(a89Lo) && col("datetime") <= tsn(a89Hi)) ||
-        (col("datetime").isNull &&
-          col("start_datetime") <= tsn(a89Hi) && col("end_datetime") >= tsn(a89Lo))
-    val df = s.read.format("graft.sources.GeoCatalogSource").load(out)
-      .where(col("collection").isin("click", "view") && dtPred)
+    val df = catalogScan(s, out)
+      .where(col("collection").isin("click", "view") && catalogDtRange(a89Lo, a89Hi))
     requirePruned(s, "a89", out, df, "collection+datetime prune skipped nothing")
-    df.select(col("id"), col("collection"),
-        col("datetime").cast("timestamp").as("datetime"),
-        col("start_datetime").cast("timestamp").as("start_datetime"),
-        col("end_datetime").cast("timestamp").as("end_datetime"))
-      .orderBy(col("id"))
+    asItemsView(df, dtProj).orderBy(col("id"))
   }
 
   def a89Sql: String =
@@ -2282,20 +2236,17 @@ object StacSearch {
     * min/max) — so a compaction that drops, duplicates, or mutates any
     * row, or writes an inexact footer, is a hash break.
     */
-  private def a86Shard(zShards: Int): Column =
-    (zCellColumn.cast("long") * lit(zShards) / lit(4096)).cast("long")
-
   def a86CatalogCompact(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val src = graft.core.GeoParquet.export(s, d, 8, Some(a86Shard(8)), tag = "z")
-    val out = graft.core.GeoParquet.compact(s, src, d, 2, a86Shard(2))
+    val src = zCatalog(s, d)
+    val out = graft.core.GeoParquet.compact(s, src, d, 2, zShard(2))
     a86SrcDir = src; a86Dir = out
     val fDf = graft.core.GeoParquet.footerBboxes(out).toSeq.map { case (stem, b) =>
       val cut = stem.lastIndexOf('-')
       (stem.substring(0, cut), stem.substring(cut + 1).toLong, b(0), b(1), b(2), b(3))
     }.toDF("collection", "shard", "f_xmin", "f_ymin", "f_xmax", "f_ymax")
     s.read.parquet(out)
-      .withColumn("shard", a86Shard(2))
+      .withColumn("shard", zShard(2))
       .join(broadcast(fDf), Seq("collection", "shard"))
       .select(col("id"), col("collection"), col("shard"),
         col("bbox.xmin").as("xmin"), col("bbox.ymin").as("ymin"),

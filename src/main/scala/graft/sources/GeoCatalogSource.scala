@@ -31,11 +31,9 @@ import graft.core.GeoParquet
 
 /** `geocatalog` — a DataSource V2 over the exported GeoParquet catalog
   * (core/GeoParquet.export) whose FILE PRUNE runs at PLANNING time from
-  * pushed filters: the explicit two-step the engine exposed until now
-  * (`searchBboxPruned`: read footers, pick files, read those) becomes
-  * `spark.read.format("geocatalog").load(dir).where(bbox ranges)` — the
-  * scan itself opens only files whose spec'd `geo` footer bbox can
-  * contain a matching row. This is the catalog-level analogue of parquet
+  * pushed filters: `spark.read.format("geocatalog").load(dir).where(…)`
+  * opens only files whose footers can contain a matching row. It is the
+  * one place a search over the catalog decides which files it reads. This is the catalog-level analogue of parquet
   * row-group skipping expressed in the engine's own planning: at 100 TB
   * the metadata plane is O(files) and the data plane shrinks to the
   * query's region before the first row is read.

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.core.Tables
 
@@ -14,10 +14,11 @@ import graft.core.Tables
   * against the DuckDB oracle, and EventsSpec runs the streaming form
   * (watermark + state) asserting stream ≡ batch on the same fixture.
   *
-  * Scale notes (SURVEY.md §5): watermarks bound state; sessionization state
-  * is per-key and evicted on timeout; the batch sessionizer shuffles ONCE on
-  * user_id — both window functions and the session groupBy reuse the same
-  * hash partitioning (no second exchange in the plan).
+  * Scale notes (SURVEY.md §5): watermarks bound state; session-window
+  * state is per-key and evicted by the watermark; the batch sessionizer
+  * shuffles ONCE on user_id — both window functions and the session
+  * groupBy reuse the same hash partitioning (no second exchange in the
+  * plan).
   */
 object Events {
 
@@ -327,100 +328,6 @@ object Events {
       s1.withWatermark("ts", "10 minutes"),
       s2.withWatermark("ts", "10 minutes"), "left_outer")
 
-  // ------------------------- D2/D3 streaming state machinery (unit-tested)
-  case class Ev(user_id: Long, ts: java.sql.Timestamp, event_id: Long)
-  case class SessionState(start: Long, end: Long, n: Long)
-  case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
-                        session_end: java.sql.Timestamp, n_events: Long, dur_us: Long)
-
-  /** Per-user session state fn for flatMapGroupsWithState: emits every
-    * CLOSED session; the open session lives in (bounded, per-key) state.
-    *
-    * Two modes, one merge loop:
-    *  - `streaming = true` (EventTimeTimeout + watermark): the open
-    *    session is `state.update`d and an event-time timeout is set at
-    *    session_end + gap — when the watermark passes it, no in-order
-    *    event can extend the session, so the timeout call emits it and
-    *    evicts the key. Sessions correctly span micro-batches.
-    *  - `streaming = false` (batch invocation, one call per key with all
-    *    data, NoTimeout): the trailing open session is flushed at the end,
-    *    matching [[sessionizeBatch]] exactly.
-    */
-  def sessionFlatMap(streaming: Boolean)(userId: Long, evs: Iterator[Ev],
-                     state: GroupState[SessionState]): Iterator[SessionOut] = {
-    val gapUs = gapMinutes * 60L * 1000000L
-    val gapMs = gapMinutes * 60L * 1000L
-    def us(t: java.sql.Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
-    def tstamp(us: Long): java.sql.Timestamp = {
-      val t = new java.sql.Timestamp(us / 1000)
-      t.setNanos(((us % 1000000) * 1000).toInt)
-      t
-    }
-    def emit(ss: SessionState): SessionOut =
-      SessionOut(userId, tstamp(ss.start), tstamp(ss.end), ss.n, ss.end - ss.start)
-
-    if (streaming && state.hasTimedOut) {
-      // watermark passed session_end + gap: nothing can extend it anymore
-      val closed = emit(state.get)
-      state.remove()
-      return Iterator.single(closed)
-    }
-
-    val sorted = evs.toSeq.sortBy(e => (us(e.ts), e.event_id))
-    val out = Seq.newBuilder[SessionOut]
-    var cur = state.getOption
-    sorted.foreach { e =>
-      val t = us(e.ts)
-      cur match {
-        case Some(ss) if t - ss.end <= gapUs =>
-          cur = Some(SessionState(math.min(ss.start, t), math.max(ss.end, t), ss.n + 1))
-        case Some(ss) =>
-          out += emit(ss)
-          cur = Some(SessionState(t, t, 1))
-        case None =>
-          cur = Some(SessionState(t, t, 1))
-      }
-    }
-    cur match {
-      case Some(ss) if streaming =>
-        state.update(ss)
-        // fire once the watermark proves the gap has elapsed (guard: a
-        // timeout may never be set at-or-before the current watermark)
-        state.setTimeoutTimestamp(
-          math.max(ss.end / 1000L + gapMs, state.getCurrentWatermarkMs() + 1L))
-      case Some(ss) =>
-        out += emit(ss)
-        state.remove()
-      case None => ()
-    }
-    out.result().iterator
-  }
-
-  /** Batch-mode invocation of the streaming state fn (one group call per
-    * key) — output must equal [[sessionizeBatch]]; asserted in EventsSpec.
-    */
-  def sessionizeWithState(s: SparkSession, e: DataFrame): Dataset[SessionOut] = {
-    import s.implicits._
-    e.select(col("user_id"), col("ts"), col("event_id")).as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        sessionFlatMap(streaming = false))
-  }
-
-  /** Streaming sessionization: watermarked event-time state, sessions span
-    * micro-batches, idle users evicted by EventTimeTimeout. Emits each
-    * session exactly once, when the watermark passes session_end + gap.
-    */
-  def sessionizeStream(s: SparkSession, stream: DataFrame,
-                       watermarkDelay: String = "10 minutes"): Dataset[SessionOut] = {
-    import s.implicits._
-    stream.withWatermark("ts", watermarkDelay)
-      .select(col("user_id"), col("ts"), col("event_id")).as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
-        sessionFlatMap(streaming = true))
-  }
-
   // ---------------------- D7 transformWithState running aggregates
   /** D7: per-user RUNNING totals on Spark 4's transformWithState API (the
     * successor to flatMapGroupsWithState: typed state handles, TTL,
@@ -613,14 +520,13 @@ object Events {
 
   // ---------------- D12 native session windows (D2 via session_window)
   /** D12: D2's sessionization through Spark's NATIVE `session_window`
-    * aggregation — the built-in merging-session state instead of D2's
-    * hand-rolled flatMapGroupsWithState machine. One expression serves
-    * batch and stream; in streaming mode the engine keeps per-key open
-    * sessions, merges them as events land, and append-mode emits each
-    * session once the watermark passes session_end + gap — semantically
-    * the machine D2 implements by hand, but with state merging,
-    * eviction, and output timing owned by the engine (and RocksDB-
-    * backable like any streaming aggregate).
+    * aggregation — the built-in merging-session state, and the streaming
+    * sessionizer of this object. One expression serves batch and stream;
+    * in streaming mode the engine keeps per-key open sessions, merges
+    * them as events land, and append-mode emits each session once the
+    * watermark passes session_end + gap, with state merging, eviction,
+    * and output timing owned by the engine (and RocksDB-backable like any
+    * streaming aggregate).
     *
     * session_window's window.end is last_ts + gap, so session_end is the
     * aggregate max(ts), not the window bound. Gap semantics match D2's

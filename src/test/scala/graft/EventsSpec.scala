@@ -22,64 +22,6 @@ class EventsSpec extends AnyFunSuite {
   private val s = TestSpark.spark
   private val sf = TestSpark.sf
 
-  test("flatMapGroupsWithState sessionizer ≡ batch gaps-and-islands") {
-    val e = Tables.events(s, sf)
-    val batch = Events.sessionizeBatch(e)
-      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-        r.getLong(3), r.getLong(4))).toSet
-    val stateful = Events.sessionizeWithState(s, e)
-      .collect().map(o => (o.user_id, o.session_start, o.session_end,
-        o.n_events, o.dur_us)).toSet
-    assert(stateful == batch)
-    assert(batch.nonEmpty)
-  }
-
-  test("streaming sessionization: sessions span micro-batches, idle users evicted by event-time timeout") {
-    import s.implicits._
-    def t(hhmm: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $hhmm:00")
-    val mem = MemoryStream[EvJ](s)
-    val q = Events.sessionizeStream(s, mem.toDF())
-      .writeStream.format("memory").queryName("d2_stream")
-      .outputMode("append").start()
-    try {
-      // batch 1: user 1's session opens; user 2 has a single event
-      mem.addData(EvJ(1, t("00:00"), 1), EvJ(1, t("00:10"), 2), EvJ(2, t("00:05"), 3))
-      q.processAllAvailable()
-      // batch 2: user 1's OPEN session extends ACROSS the micro-batch
-      // boundary; user 3 appears late enough to advance the watermark past
-      // users 1+2's (end + gap)
-      mem.addData(EvJ(1, t("00:20"), 4), EvJ(3, t("01:30"), 5))
-      q.processAllAvailable()
-      // nothing may be emitted before the watermark passes end+gap
-      // batch 3: advances watermark → users 1 and 2 time out and emit
-      mem.addData(EvJ(4, t("03:00"), 6))
-      q.processAllAvailable()
-      // (processAllAvailable runs an extra trigger after the watermark
-      // update, so user 3 may also have timed out already — assert the
-      // users whose timeout the new watermark must have fired)
-      val afterB3 = s.table("d2_stream").as[graft.streaming.Events.SessionOut].collect()
-      assert(Set(1L, 2L).subsetOf(afterB3.map(_.user_id).toSet), afterB3.mkString(","))
-      // user 1's session merged events from two micro-batches into ONE session
-      val u1 = afterB3.find(_.user_id == 1L).get
-      assert(u1.session_start == t("00:00") && u1.session_end == t("00:20") && u1.n_events == 3L, u1)
-      // batch 4 (sentinel user 999): watermark passes users 3+4 → evicted
-      mem.addData(EvJ(999, t("05:00"), 7))
-      q.processAllAvailable()
-      val got = s.table("d2_stream").as[graft.streaming.Events.SessionOut].collect()
-        .map(o => (o.user_id, o.session_start, o.session_end, o.n_events, o.dur_us)).toSet
-      // stream output ≡ batch sessionization of everything except the
-      // sentinel (whose session is the only one still open)
-      val allButSentinel = Seq(
-        (1L, t("00:00"), 1L), (1L, t("00:10"), 2L), (2L, t("00:05"), 3L),
-        (1L, t("00:20"), 4L), (3L, t("01:30"), 5L), (4L, t("03:00"), 6L))
-        .toDF("user_id", "ts", "event_id")
-      val batchExpected = Events.sessionizeBatch(allButSentinel)
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
-          r.getLong(3), r.getLong(4))).toSet
-      assert(got == batchExpected, s"got=$got expected=$batchExpected")
-    } finally q.stop()
-  }
-
   test("D12 native session_window stream: sessions merge across micro-batches, " +
       "append output ≡ batch sessionization") {
     import s.implicits._

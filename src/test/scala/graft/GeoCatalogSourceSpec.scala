@@ -58,6 +58,17 @@ class GeoCatalogSourceSpec extends AnyFunSuite {
     assert(canon(df) == canon(filtered(viaParquet)))
   }
 
+  test("a bbox that misses every footprint prunes every file at plan time") {
+    val df = viaCatalog.where(col("bbox.xmin") <= 201.0 && col("bbox.xmax") >= 200.0 &&
+      col("bbox.ymin") <= 92.0 && col("bbox.ymax") >= 91.0)
+    val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val m = """footer-pruned files (\d+)/(\d+)""".r.findFirstMatchIn(plan)
+    assert(m.isDefined, plan)
+    val files = new java.io.File(cat).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(m.get.group(1).toInt == 0 && m.get.group(2).toInt == files && files > 0, plan)
+    assert(df.count() == 0)
+  }
+
   test("non-prunable filters stay conservative: no file skipped, rows exact") {
     val df = viaCatalog.where(col("bbox.xmin") >= -60.0) // footer can't decide
     val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))

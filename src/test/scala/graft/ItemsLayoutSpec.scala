@@ -87,95 +87,30 @@ class ItemsLayoutSpec extends AnyFunSuite {
     }
   }
 
-  test("A63 covering-index manifest: one row per file, and the bbox prune SKIPS files") {
-    import graft.search.StacSearch
-    val s = TestSpark.spark
-    // the a63 query path materializes layout+manifest (idempotent) itself;
-    // audit the manifest against the layout it indexes
-    val a63 = StacSearch.a63CoveringIndex(s, TestSpark.sf)
-    val n = a63.count() // forces materialization of both state tables
-    assert(n > 0, "a63 gate bbox matched nothing — widen it")
-    // audit the EXACT dirs production resolved (a63Paths) — re-deriving
-    // the key here would silently inspect the wrong dir if key inputs
-    // or prefixes ever changed (r11 ADVICE)
-    val lp = new java.io.File(StacSearch.a63Paths(s, TestSpark.sf)._1)
-    val allFiles = lp.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    val manifest = ItemsLayout.coveringManifest(s, lp.getAbsolutePath)
-    assert(manifest.count() == allFiles.size, "manifest must carry exactly one row per data file")
-    // the compact gate bbox must actually skip files — otherwise the
-    // manifest proves nothing about pruning
-    val candidates = StacSearch.a63CandidateFiles(s, TestSpark.sf,
-      -175.0, -20.0, -120.0, 25.0)
-    assert(candidates.nonEmpty && candidates.size < allFiles.size,
-      s"no pruning: ${candidates.size} of ${allFiles.size} files selected")
+  /** (kept, total) files of the `geocatalog` scan under `df`, read off
+    * the scan's own explain accounting.
+    */
+  private def footerPruned(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val m = """footer-pruned files (\d+)/(\d+)""".r.findFirstMatchIn(plan)
+    assert(m.isDefined, plan)
+    (m.get.group(1).toInt, m.get.group(2).toInt)
   }
 
-  test("A64 temporal manifest: the datetime window SKIPS files on the time-sorted layout") {
+  test("A63 z-sharded catalog search: the gate's own scan SKIPS files at plan time") {
     import graft.search.StacSearch
-    val s = TestSpark.spark
-    val n = StacSearch.a64ManifestDatetime(s, TestSpark.sf).count()
-    assert(n > 0, "a64 datetime window matched nothing")
-    val lp = new java.io.File(StacSearch.a64Paths(s, TestSpark.sf)._1)
-    val allFiles = lp.listFiles().filter(_.getName.endsWith(".parquet")).length
-    val candidates = StacSearch.a64CandidateFiles(s, TestSpark.sf,
-      "2024-01-10 00:00:00", "2024-01-20 00:00:00")
-    assert(candidates.nonEmpty && candidates.size < allFiles,
-      s"no pruning: ${candidates.size} of $allFiles files selected")
+    val a63 = StacSearch.a63CoveringIndex(s, sf)
+    assert(a63.count() > 0, "a63 gate bbox matched nothing — widen it")
+    val (kept, total) = footerPruned(a63)
+    assert(kept > 0 && kept < total, s"no pruning: $kept of $total files kept")
   }
 
-  test("D29 streaming manifest maintenance: per-batch appends keep manifest ≡ recompute, pruned search ≡ full scan") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import s.implicits._
-    val lTmp = java.nio.file.Files.createTempDirectory("graft_d29_layout").toString
-    val mTmp = java.nio.file.Files.createTempDirectory("graft_d29_manifest").toString
-    try {
-      // live item feed: (id, collection, datetime, start, end, lon, lat)
-      val rows = Tables.items(s, sf)
-        .select("id", "collection", "datetime", "start_datetime",
-          "end_datetime", "lon", "lat")
-        .collect().map(r => (r.getString(0), r.getString(1),
-          Option(r.getTimestamp(2)), Option(r.getTimestamp(3)),
-          Option(r.getTimestamp(4)), r.getDouble(5), r.getDouble(6)))
-      val mem = MemoryStream[(String, String, Option[java.sql.Timestamp],
-        Option[java.sql.Timestamp], Option[java.sql.Timestamp], Double, Double)](s)
-      val q = mem.toDF()
-        .toDF("id", "collection", "datetime", "start_datetime",
-          "end_datetime", "lon", "lat")
-        .writeStream
-        .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-          ItemsLayout.appendBatchWithManifest(b, lTmp, mTmp))
-        .start()
-      rows.grouped(400).foreach { g => mem.addData(g.toSeq); q.processAllAvailable() }
-      q.stop()
-
-      // invariant 1: the maintained manifest ≡ a from-scratch recompute
-      val maintained = s.read.parquet(mTmp).collect()
-        .map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
-      val recomputed = ItemsLayout.coveringManifest(s, lTmp).collect()
-        .map(r => r.getString(0) -> r.toSeq.drop(1)).toMap
-      assert(maintained == recomputed)
-      assert(maintained.size >= 3, s"expected ≥3 files, got ${maintained.size}")
-
-      // invariant 2: manifest-pruned bbox search over the streamed layout
-      // ≡ the full scan (soundness of pruning on a live-built table)
-      val (w, so, e, n) = (-175.0, -20.0, -120.0, 25.0)
-      val keep = s.read.parquet(mTmp)
-        .where(col("xmin") <= e && col("xmax") >= w &&
-          col("ymin") <= n && col("ymax") >= so)
-        .select("file").collect().map(_.getString(0))
-      val prunedIds = s.read.parquet(keep: _*)
-        .where(col("lon") >= w && col("lon") <= e &&
-          col("lat") >= so && col("lat") <= n)
-        .select("id").collect().map(_.getString(0)).toSet
-      val fullIds = s.read.parquet(lTmp)
-        .where(col("lon") >= w && col("lon") <= e &&
-          col("lat") >= so && col("lat") <= n)
-        .select("id").collect().map(_.getString(0)).toSet
-      assert(prunedIds == fullIds)
-    } finally {
-      new scala.reflect.io.Directory(new java.io.File(lTmp)).deleteRecursively()
-      new scala.reflect.io.Directory(new java.io.File(mTmp)).deleteRecursively()
-    }
+  test("A64 time-sharded catalog search: the gate's own scan SKIPS files at plan time") {
+    import graft.search.StacSearch
+    val a64 = StacSearch.a64ManifestDatetime(s, sf)
+    assert(a64.count() > 0, "a64 datetime window matched nothing")
+    val (kept, total) = footerPruned(a64)
+    assert(kept > 0 && kept < total, s"no pruning: $kept of $total files kept")
   }
 
   test("GeoParquet 1.1: geo footer metadata round-trips, covering column " +
@@ -268,38 +203,5 @@ class ItemsLayoutSpec extends AnyFunSuite {
     assert(GeoParquet.export(s, TestSpark.sf, shards = 2) == out)
     val after = new java.io.File(out).listFiles().map(f => f.getName -> f.lastModified).toMap
     assert(before == after, "re-export must be a metadata no-op")
-  }
-
-  test("A85 footer prune: lossless vs the full catalog scan, actually " +
-      "skips files, and a miss-everything box reads ZERO files") {
-    import graft.core.GeoParquet
-    import org.apache.spark.sql.functions._
-    val s = TestSpark.spark
-    val zShards = 8
-    val shardCol = (graft.search.StacSearch.zCellColumn.cast("long") *
-      lit(zShards) / lit(4096)).cast("long")
-    val out = GeoParquet.export(s, TestSpark.sf, zShards, Some(shardCol), tag = "z")
-    val (w, so, e, n) = (-130.005, -60.005, -20.005, 10.005)
-    def hits(df: org.apache.spark.sql.DataFrame) =
-      df.where(col("bbox.xmin") <= e && col("bbox.xmax") >= w &&
-          col("bbox.ymin") <= n && col("bbox.ymax") >= so)
-        .select("id").collect().map(_.getString(0)).toSet
-    val (pruned, total, read) = GeoParquet.searchBboxPruned(s, out, w, so, e, n)
-    assert(read < total, s"no files pruned ($read/$total)")
-    assert(read > 0)
-    // lossless: pruned scan finds exactly the full scan's matches
-    assert(hits(pruned) == hits(s.read.parquet(out)))
-    // every SKIPPED file really has no matching row (prune ≡ row truth)
-    val footers = GeoParquet.footerBboxes(out)
-    val keptStems = footers.collect {
-      case (k, b) if b(0) <= e && b(2) >= w && b(1) <= n && b(3) >= so => k
-    }.toSet
-    footers.keys.filterNot(keptStems).foreach { stem =>
-      assert(hits(s.read.parquet(s"$out/$stem.parquet")).isEmpty,
-        s"pruned file $stem contained a matching row")
-    }
-    // a box over open ocean far from every footprint reads zero files
-    val (_, t2, r2) = GeoParquet.searchBboxPruned(s, out, 200.0, 91.0, 201.0, 92.0)
-    assert(t2 == total && r2 == 0)
   }
 }

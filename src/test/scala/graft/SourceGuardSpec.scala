@@ -22,6 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Spatial predicates have one kernel per geometry target: the
   *    Catalyst expressions in `spatial/Geo.scala` are the point, box and
   *    WKB relation kernels, intersects included.
+  *  - A search's file set has one decider: the `geocatalog` scan's
+  *    footer prune. No main source reads a hand-listed parquet file set,
+  *    except catalog maintenance, which reads the files it compacts.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val forbidden = Seq("\"_SUCCESS\"", "\"_DONE\"", "java.io.tmpdir",
@@ -111,8 +114,7 @@ class SourceGuardSpec extends AnyFunSuite {
       "a23_keyset_paginate" -> ("pins the pushable id_num keyset; the server's keyset " +
         "ends in the derived id = CAST(event_id AS STRING), which cannot push"),
       "a24_zcurve_cells" -> layout, "a29_envelope_overlap" -> layout,
-      "a30_zrange_scan" -> layout, "a63_covering_index" -> layout,
-      "a64_manifest_datetime" -> layout,
+      "a30_zrange_scan" -> layout,
       "a35_footprint_intersects" -> footprint, "a39_footprint_cql" -> footprint,
       "a41_footprint_shapes" -> footprint, "a52_cql2_arrays" -> footprint,
       "a73_cql2_s_within" -> footprint, "a78_within_concave" -> footprint,
@@ -127,6 +129,7 @@ class SourceGuardSpec extends AnyFunSuite {
       "a42_wkb_roundtrip" -> ingest, "a43_item_ingest" -> ingest,
       "a57_tolerant_ingest" -> ingest, "a75_geoparquet_ingest" -> ingest,
       "a82_geoparquet_export" -> ingest, "a96_mercator_ingest" -> ingest,
+      "a63_covering_index" -> catalog, "a64_manifest_datetime" -> catalog,
       "a85_catalog_pruned_search" -> catalog, "a86_catalog_compact" -> catalog,
       "a87_catalog_source" -> catalog, "a89_catalog_coldt_prune" -> catalog,
       "a56_upsert_search" -> state, "a60_time_travel" -> state,
@@ -210,5 +213,22 @@ class SourceGuardSpec extends AnyFunSuite {
     val kernels = decl.findAllMatchIn(lines(f).mkString("\n")).map(_.group(1)).toVector
     assert(kernels.toSet == Set("PointRelShape", "BoxRelShape", "WkbRelShape") &&
       kernels.size == 3, kernels)
+  }
+
+  test("src/main reads no hand-listed parquet file set") {
+    val files = sources(new File("src/main"))
+    assert(files.exists(_.getPath.endsWith("core/GeoParquet.scala")), "not run from the repo root")
+    val listed = """\bread\.parquet\(\s*\w+\s*:\s*_\*\s*\)""".r
+    // the enclosing member: a def at an object's member indent
+    val enclosing = """^  (?:private(?:\[\w+\])? )?def\s+(\w+)""".r
+    val hits = for {
+      f <- files
+      ls = lines(f)
+      (line, n) <- ls.zipWithIndex if listed.findFirstIn(line).isDefined
+      owner = ls.take(n + 1).reverseIterator.flatMap(enclosing.findFirstMatchIn(_))
+        .map(_.group(1)).nextOption().getOrElse("")
+      if !(f.getPath.endsWith("core/GeoParquet.scala") && owner == "maintainBatch")
+    } yield s"${f.getPath}:${n + 1}: in $owner: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

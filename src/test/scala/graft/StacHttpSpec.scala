@@ -475,12 +475,33 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // POST /search members of the wrong JSON type: a string where an
     // array belongs, a non-array include list, sortby entries with no
-    // field or not in an array
+    // field or not in an array, a limit outside Int or not integral
+    // (GET's `limit=4294967306` is a 400 too)
+    assert(get("/search?limit=4294967306")._1 == 400)
     Seq("""{"collections":"click"}""", """{"ids":"5"}""",
       """{"fields":{"include":"id"}}""", """{"sortby":[{"direction":"desc"}]}""",
-      """{"sortby":{"field":"value"}}""").foreach { body =>
+      """{"sortby":{"field":"value"}}""", """{"limit":4294967306}""",
+      """{"limit":2.5}""").foreach { body =>
       val (c, e) = post("/search", body)
       assert(c == 400 && e.get("code").asText == "BadRequest", s"$body: $e")
+    }
+  }
+
+  test("a malformed datetime is a 400 BadRequest naming the value; the valid " +
+      "forms, a trailing Z included, keep their answers") {
+    Seq(get("/search?datetime=garbage") -> "garbage",
+      get("/collections/click/items?datetime=2024-13-45") -> "2024-13-45",
+      post("/search", """{"datetime":"x/.."}""") -> "x").foreach { case ((c, e), bad) =>
+      assert(c == 400 && e.get("code").asText == "BadRequest", e)
+      assert(e.get("description").asText.contains(s"'$bad'"), e)
+    }
+    val (lo, hi) = ("2024-01-10 00:00:00", "2024-01-20 00:00:00")
+    val typed = StacApi.search(s, sf, SearchParams(datetime = Some(s"$lo/$hi"))).numMatched
+    assert(typed > 0)
+    Seq(s"$lo/$hi", "2024-01-10T00:00:00Z/2024-01-20T00:00:00Z",
+      "2024-01-10/2024-01-20 00:00:00").foreach { dt =>
+      val (c, doc) = get("/search?datetime=" + URLEncoder.encode(dt, UTF_8))
+      assert(c == 200 && doc.get("numberMatched").asLong == typed, s"$dt: $doc")
     }
   }
 
