@@ -1,39 +1,54 @@
 package graft.core
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.example.GroupWriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.spatial.{Shape, Wkb}
 
-/** REAL GeoParquet 1.1 ingestion — the reference's literal data plane.
+/** GeoParquet 1.1, the reference's data plane, written and read.
   *
   * The reference's every search is `read_parquet(<geoparquet url>)` over
   * files with a WKB `geometry` column and a `geo` footer metadata key
   * (database_logic.py:171, 401, 441; geoparquet/download_geoparquet.py
-  * materializes them). Until r10 every graft gate DERIVED items from the
-  * fixture parquet; this module closes the loop: a genuine GeoParquet
-  * file is written at fixture-build time (WKB geometry, a `bbox`
-  * covering struct column, and the spec'd `geo` footer JSON with
-  * version / primary_column / encoding / geometry_types / PROJJSON crs /
-  * bbox / covering), then ingested by FIRST reading the footer metadata
-  * (metadata-plane, one file open) and routing the declared primary
-  * column through the A42 codegen'd WKB decode expressions.
+  * materializes them).
   *
-  * Scale note: the WRITER is fixture tooling (driver-side, bounded by
-  * the fixture size — the reference's downloader is the same shape); the
-  * INGEST path is the production plane: footer read is O(1), the scan is
-  * a normal distributed parquet scan, and decode is codegen'd per row.
+  * WRITE: one writer, [[CatalogFileWriter]], produces every file of the
+  * catalog schema — the single-file fixtures ([[stage]], [[stageUtm]],
+  * [[stageMercator]]), the per-collection catalog ([[export]],
+  * [[compact]]), streaming ingest ([[appendBatch]], [[maintainBatch]])
+  * and the `geocatalog` write target. It renders each catalog-schema
+  * `InternalRow` and folds, in the same pass, the two footer keys it
+  * writes at close:
+  *  - `geo`: version, primary column, WKB encoding, geometry types, the
+  *    PROJJSON id of the file's [[Crs]], the exact file bbox and the 1.1
+  *    covering block pointing at the `bbox` struct column;
+  *  - `graft`: the file's one collection, its datetime extremes, and its
+  *    id_num order and range — what the `geocatalog` scan prunes on.
+  * Files land under a `.tmp` name; [[publish]] renames them into view.
+  *
+  * READ: footer first. [[footerInfo]] and [[readGeoMeta]] parse the
+  * footers (metadata plane, one open per file); [[ingestFile]] routes the
+  * declared primary column through the codegen'd WKB decode, re-projecting
+  * UTM and EPSG:3857 geometry to CRS84 on the way.
   */
 object GeoParquet {
 
@@ -78,6 +93,24 @@ object GeoParquet {
         */
       idRange: Option[(Long, Long)] = None)
 
+  /** The coordinate reference systems graft writes and ingests: OGC:CRS84
+    * natively, UTM WGS84 zones (EPSG:326zz/327zz) and EPSG:3857
+    * re-projected. Every other CRS is a typed refusal at ingest.
+    */
+  private[graft] sealed trait Crs
+  private[graft] object Crs {
+    case object Crs84 extends Crs
+    final case class Utm(zone: Int, south: Boolean) extends Crs
+    case object PseudoMercator extends Crs
+  }
+
+  /** A CRS84 WKB geometry re-expressed in `crs`. */
+  private def fromCrs84(crs: Crs, wkb: Array[Byte]): Array[Byte] = crs match {
+    case Crs.Crs84 => wkb
+    case Crs.Utm(zone, south) => graft.spatial.Utm.wkbFromCrs84(wkb, zone, south)
+    case Crs.PseudoMercator => graft.spatial.Mercator3857.wkbFromCrs84(wkb)
+  }
+
   /** Deterministic footprint half-extents — the SAME formula as the
     * items-view envelope columns (StacSearch.envelopeSqlCols), so the
     * oracle can re-derive every envelope WKB-free from (lon, lat,
@@ -86,21 +119,21 @@ object GeoParquet {
   private def halfW(userId: Long): Double = (userId % 10).toDouble / 10.0 + 0.1
   private def halfH(idNum: Long): Double = (idNum % 7).toDouble / 10.0 + 0.1
 
-  /** Timestamp → NTZ micros for the parquet writers (null-passing) —
-    * ONE definition shared by every row renderer so the physical
-    * timestamp convention cannot silently diverge between writers.
-    */
-  private def micros(t: java.sql.Timestamp): java.lang.Long =
-    if (t == null) null else t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
-
   private val mapper = new ObjectMapper()
 
   /** The `geo` footer JSON (GeoParquet 1.1): primary geometry column in
-    * WKB, mixed Point/Polygon types, PROJJSON CRS (OGC:CRS84), the
-    * file-level bbox, and the covering block pointing at the `bbox`
-    * struct column.
+    * WKB, mixed Point/Polygon types, the PROJJSON id of `crs`, the
+    * file-level bbox (in `crs` units), and the covering block pointing
+    * at the `bbox` struct column.
     */
-  private def geoJson(bbox: (Double, Double, Double, Double)): String = {
+  private def geoJson(bbox: (Double, Double, Double, Double), crs: Crs): String = {
+    val (kind, name, authority, code) = crs match {
+      case Crs.Crs84 => ("GeographicCRS", "WGS 84 (CRS84)", "OGC", "CRS84")
+      case Crs.Utm(zone, south) =>
+        ("ProjectedCRS", s"WGS 84 / UTM zone $zone${if (south) "S" else "N"}", "EPSG",
+          graft.spatial.Utm.epsgOf(zone, south).toString)
+      case Crs.PseudoMercator => ("ProjectedCRS", "WGS 84 / Pseudo-Mercator", "EPSG", "3857")
+    }
     val root = mapper.createObjectNode()
     root.put("version", "1.1.0")
     root.put("primary_column", "geometry")
@@ -109,11 +142,11 @@ object GeoParquet {
     g.put("encoding", "WKB")
     val types = g.putArray("geometry_types")
     types.add("Point"); types.add("Polygon")
-    val crs = g.putObject("crs")
-    crs.put("type", "GeographicCRS")
-    crs.put("name", "WGS 84 (CRS84)")
-    val crsId = crs.putObject("id")
-    crsId.put("authority", "OGC"); crsId.put("code", "CRS84")
+    val crsNode = g.putObject("crs")
+    crsNode.put("type", kind)
+    crsNode.put("name", name)
+    val crsId = crsNode.putObject("id")
+    crsId.put("authority", authority); crsId.put("code", code)
     val bb = g.putArray("bbox")
     bb.add(bbox._1); bb.add(bbox._2); bb.add(bbox._3); bb.add(bbox._4)
     val covering = g.putObject("covering")
@@ -151,84 +184,23 @@ object GeoParquet {
       .named("geoparquet_items")
   }
 
-  /** Stage the GeoParquet file for a fixture dir.
-    * Geometry: even id_num → WKB Point(lon, lat); odd → WKB Polygon of
-    * the deterministic footprint box (exercising both decode branches).
-    * Returns the file path.
-    */
-  def stage(spark: SparkSession, dir: String): String = synchronized {
-    stageFile(spark, dir, "geoparquet", "items.parquet", lit(true), { r =>
-      val (shape, (x0, y0, x1, y1)) =
-        rowGeom(r.getLong(1), r.getLong(7), r.getDouble(8), r.getDouble(9))
-      (Wkb.encode(shape), Array(x0, y0, x1, y1))
-    }, geoJson)
-  }
+  // ------------------------------------------------------------- writer
 
-  /** Stage a single-file GeoParquet fixture `file` under the [[Staged]]
-    * dir `name`: the items matching `keep` in id_num order, each row's
-    * WKB geometry and envelope rendered by `geom`, the `geo` footer by
-    * `geo` from the file bbox. Driver-side fixture tooling, so the
-    * footer bbox is folded over every envelope before the writer opens
-    * (the DISTRIBUTED writer in [[export]] folds it single-pass via
-    * finalizeWrite instead). Returns the file path.
+  /** Renders catalog-schema rows (the 12 fields of [[schema]], in order;
+    * timestamps as micros) into parquet-mr Groups, folding the footer
+    * keys as they pass; emits `geo` (in `crs`) and `graft` when
+    * parquet-mr closes the file, so the exact file bbox needs no second
+    * scan.
     */
-  private def stageFile(spark: SparkSession, dir: String, name: String, file: String,
-      keep: org.apache.spark.sql.Column,
-      geom: org.apache.spark.sql.Row => (Array[Byte], Array[Double]),
-      geo: ((Double, Double, Double, Double)) => String): String =
-    Staged(name, 1, dir, "events") { p =>
-      val rows = Tables.items(spark, dir)
-        .select(col("id"), col("id_num"), col("collection"), col("datetime"),
-          col("start_datetime"), col("end_datetime"), col("value"),
-          col("user_id"), col("lon"), col("lat"))
-        .where(keep)
-        .orderBy(col("id_num"))
-        .collect()
-      require(rows.nonEmpty, s"no fixture items for $file")
-      val shapes = rows.map(geom)
-      var (w, s, e, n) = (Double.MaxValue, Double.MaxValue, Double.MinValue, Double.MinValue)
-      shapes.foreach { case (_, env) =>
-        w = math.min(w, env(0)); s = math.min(s, env(1))
-        e = math.max(e, env(2)); n = math.max(n, env(3))
-      }
-      val real = ExampleParquetWriter.builder(new Path(s"$p/$file"))
-        .withType(schema)
-        .withExtraMetaData(java.util.Collections.singletonMap("geo", geo((w, s, e, n))))
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-      val factory = new SimpleGroupFactory(schema)
-      try rows.zip(shapes).foreach { case (r, (wkb, env)) =>
-        real.write(itemGroup(factory, r, wkb, env))
-      } finally real.close()
-    } + s"/$file"
-
-  // ------------------------------------------------------------- export
-  // The WRITE side of the reference's data plane: its corpus IS one
-  // GeoParquet file per collection (database_logic.py:831-853 plans a
-  // per-collection scan; download_geoparquet.py materializes the files).
-  // `export` produces exactly that layout DISTRIBUTED: rows shuffle once
-  // on (collection, shard), each task streams its run of rows into
-  // parquet-mr writers, and the spec'd `geo` footer (incl. the per-FILE
-  // bbox) is computed IN THE SAME PASS via WriteSupport.finalizeWrite —
-  // parquet writes footer metadata at close, so a running envelope needs
-  // no second scan. `shards` splits a hot collection across files (the
-  // 100 TB valve: one collection never pins one task); every shard file
-  // is independently valid GeoParquet with its own exact footer bbox.
-
-  /** Streams groups to a [[GroupWriteSupport]] while folding the running
-    * envelope of the `bbox` struct; emits the final `geo` footer (with
-    * the exact file-level bbox) when parquet-mr closes the file.
-    */
-  private class GeoWriteSupport(schema: MessageType)
-      extends org.apache.parquet.hadoop.api.WriteSupport[org.apache.parquet.example.data.Group] {
-    import org.apache.parquet.hadoop.api.WriteSupport
-    private val inner = new org.apache.parquet.hadoop.example.GroupWriteSupport()
+  private class GeoWriteSupport(crs: Crs) extends WriteSupport[InternalRow] {
+    private val inner = new GroupWriteSupport()
+    private val factory = new SimpleGroupFactory(schema)
     private var w = Double.MaxValue; private var s = Double.MaxValue
     private var e = -Double.MaxValue; private var n = -Double.MaxValue
     // `graft` sidecar folds (same single pass as the bbox): the file's
     // one collection and its datetime extremes — the metadata the
     // collection/datetime FILE prune (GeoCatalogSource) reads
-    private var coll: String = null; private var mixed = false
+    private var coll: UTF8String = null; private var mixed = false
     private var dtMin = Long.MaxValue; private var dtMax = Long.MinValue
     private var sdMin = Long.MaxValue; private var edMax = Long.MinValue
     private var hasNullDt = false
@@ -241,39 +213,53 @@ object GeoParquet {
     private var prevId = Long.MinValue; private var sortedById = true
     private var idMin = Long.MaxValue; private var idMax = Long.MinValue
     override def init(conf: org.apache.hadoop.conf.Configuration): WriteSupport.WriteContext = {
-      org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
+      GroupWriteSupport.setSchema(schema, conf)
       inner.init(conf)
     }
     override def prepareForWrite(rc: org.apache.parquet.io.api.RecordConsumer): Unit =
       inner.prepareForWrite(rc)
-    override def write(g: org.apache.parquet.example.data.Group): Unit = {
-      val bb = g.getGroup("bbox", 0)
-      w = math.min(w, bb.getDouble("xmin", 0)); s = math.min(s, bb.getDouble("ymin", 0))
-      e = math.max(e, bb.getDouble("xmax", 0)); n = math.max(n, bb.getDouble("ymax", 0))
-      val c = g.getString("collection", 0)
-      if (coll == null) coll = c else if (coll != c) mixed = true
-      val idn = g.getLong("id_num", 0)
+    override def write(r: InternalRow): Unit = {
+      val bb = r.getStruct(10, 4)
+      w = math.min(w, bb.getDouble(0)); s = math.min(s, bb.getDouble(1))
+      e = math.max(e, bb.getDouble(2)); n = math.max(n, bb.getDouble(3))
+      val c = r.getUTF8String(2)
+      if (coll == null) coll = c.clone() else if (coll != c) mixed = true
+      val idn = r.getLong(1)
       if (idn <= prevId && prevId != Long.MinValue) sortedById = false
       prevId = idn
       if (idn < idMin) idMin = idn
       if (idn > idMax) idMax = idn
-      if (g.getFieldRepetitionCount("datetime") > 0) {
-        val v = g.getLong("datetime", 0)
+      if (!r.isNullAt(3)) {
+        val v = r.getLong(3)
         if (v < dtMin) dtMin = v; if (v > dtMax) dtMax = v
       } else hasNullDt = true
-      if (g.getFieldRepetitionCount("start_datetime") > 0) {
-        val v = g.getLong("start_datetime", 0)
-        if (v < sdMin) sdMin = v
-      }
-      if (g.getFieldRepetitionCount("end_datetime") > 0) {
-        val v = g.getLong("end_datetime", 0)
-        if (v > edMax) edMax = v
-      }
-      inner.write(g)
+      if (!r.isNullAt(4)) sdMin = math.min(sdMin, r.getLong(4))
+      if (!r.isNullAt(5)) edMax = math.max(edMax, r.getLong(5))
+      inner.write(render(r))
+    }
+    /** The one row renderer: a catalog-schema row → a Group of [[schema]]. */
+    private def render(r: InternalRow): Group = {
+      val g = factory.newGroup()
+      g.append("id", r.getUTF8String(0).toString)
+      g.append("id_num", r.getLong(1))
+      g.append("collection", r.getUTF8String(2).toString)
+      if (!r.isNullAt(3)) g.append("datetime", r.getLong(3))
+      if (!r.isNullAt(4)) g.append("start_datetime", r.getLong(4))
+      if (!r.isNullAt(5)) g.append("end_datetime", r.getLong(5))
+      g.append("value", r.getDouble(6))
+      g.append("user_id", r.getLong(7))
+      g.append("lon", r.getDouble(8))
+      g.append("lat", r.getDouble(9))
+      val b = r.getStruct(10, 4)
+      val bb = g.addGroup("bbox")
+      bb.append("xmin", b.getDouble(0)); bb.append("ymin", b.getDouble(1))
+      bb.append("xmax", b.getDouble(2)); bb.append("ymax", b.getDouble(3))
+      g.append("geometry", Binary.fromConstantByteArray(r.getBinary(11)))
+      g
     }
     override def finalizeWrite(): WriteSupport.FinalizedWriteContext = {
       val graft = mapper.createObjectNode()
-      if (coll != null && !mixed) graft.put("collection", coll)
+      if (coll != null && !mixed) graft.put("collection", coll.toString)
       if (dtMin != Long.MaxValue) { graft.put("dt_min", dtMin); graft.put("dt_max", dtMax) }
       if (sdMin != Long.MaxValue) graft.put("sd_min", sdMin)
       if (edMax != Long.MinValue) graft.put("ed_max", edMax)
@@ -283,22 +269,125 @@ object GeoParquet {
         graft.put("id_min", idMin); graft.put("id_max", idMax)
       }
       val kv = new java.util.HashMap[String, String]()
-      kv.put("geo", geoJson((w, s, e, n)))
+      kv.put("geo", geoJson((w, s, e, n), crs))
       kv.put("graft", mapper.writeValueAsString(graft))
       new WriteSupport.FinalizedWriteContext(kv)
     }
   }
 
-  private class GeoWriterBuilder(path: Path, schema: MessageType)
-      extends org.apache.parquet.hadoop.ParquetWriter.Builder[
-        org.apache.parquet.example.data.Group, GeoWriterBuilder](path) {
+  private class GeoWriterBuilder(path: Path, crs: Crs)
+      extends ParquetWriter.Builder[InternalRow, GeoWriterBuilder](path) {
     override def self(): GeoWriterBuilder = this
     override def getWriteSupport(conf: org.apache.hadoop.conf.Configuration) =
-      new GeoWriteSupport(schema)
+      new GeoWriteSupport(crs)
   }
 
-  /** Per-row geometry: even id_num → Point, odd → footprint Polygon (the
-    * stage() convention, so export and fixture file agree) + its envelope.
+  /** The one catalog-file writer: a parquet-mr writer over [[schema]]
+    * at `tmp`, rows from catalog-schema `InternalRow`s, `geo` (in `crs`)
+    * and `graft` footers folded at [[close]]. OVERWRITE: a retried task
+    * (a replayed streaming batch, a speculative attempt) rewrites its own
+    * tmp file instead of failing. [[publish]] makes the file visible.
+    */
+  private[graft] final class CatalogFileWriter(val tmp: String, crs: Crs) {
+    private val writer = new GeoWriterBuilder(new Path(tmp), crs)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    def write(r: InternalRow): Unit = writer.write(r)
+    def close(): Unit = writer.close()
+  }
+
+  /** The one publish step: a closed catalog file moves from `tmp` onto
+    * `fin` in one atomic rename. A concurrent reader (the D41
+    * subscription lists the directory and opens footers between
+    * micro-batches) never observes a half-written footer: `.tmp` names
+    * don't match the `.parquet` listing filters, and the rename is
+    * all-or-nothing. REPLACE_EXISTING keeps a replayed write idempotent.
+    */
+  private[graft] def publish(tmp: String, fin: String): Unit =
+    Files.move(Paths.get(tmp), Paths.get(fin),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+
+  /** Write `rows` (the [[catalogRows]] shape, each file's rows
+    * contiguous) into `out`, one file per name `fileOf(collection,
+    * shard)`: each task streams its rows through one
+    * [[CatalogFileWriter]] at a time, publishing a file when the next row
+    * names another. The name is asked for only when (collection, shard)
+    * changes.
+    */
+  private def write(rows: DataFrame, out: String, crs: Crs,
+                    fileOf: (String, Long) => String): Unit = {
+    new java.io.File(out).mkdirs()
+    val qe = rows.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("geoparquet write")) {
+      qe.toRdd.foreachPartition { (it: Iterator[InternalRow]) =>
+        var key: (UTF8String, Long) = null
+        var file: String = null
+        var writer: CatalogFileWriter = null
+        def publishOpen(): Unit = if (writer != null) {
+          writer.close()
+          publish(writer.tmp, s"$out/$file")
+          writer = null
+        }
+        try {
+          it.foreach { r =>
+            val c = r.getUTF8String(2)
+            val shard = r.getLong(12)
+            if (key == null || key._2 != shard || key._1 != c) {
+              key = (c.clone(), shard)
+              val f = fileOf(c.toString, shard)
+              if (f != file) {
+                publishOpen()
+                file = f
+                writer = new CatalogFileWriter(s"$out/$f.tmp", crs)
+              }
+            }
+            writer.write(r)
+          }
+          publishOpen()
+        } finally if (writer != null) writer.close() // error path: leave .tmp
+      }
+    }
+  }
+
+  /** [[write]] into the per-collection catalog: one file per
+    * (collection, shard), each id_num-sorted, so it advertises its order
+    * to the keyset TopN path.
+    */
+  private def writeCatalog(rows: DataFrame, out: String,
+                           fileOf: (String, Long) => String): Unit =
+    write(rows.repartition(col("collection"), col("shard"))
+      .sortWithinPartitions(col("collection"), col("shard"), col("id_num")),
+      out, Crs.Crs84, fileOf)
+
+  /** The writers' one input shape: the catalog columns in [[schema]]
+    * order, then the `shard` that keys the file.
+    */
+  private def catalogRows(df: DataFrame, shard: Column): DataFrame =
+    df.select(col("id"), col("id_num"), col("collection"), col("datetime"),
+      col("start_datetime"), col("end_datetime"), col("value"),
+      col("user_id"), col("lon"), col("lat"), col("bbox"), col("geometry"),
+      shard.cast("long").as("shard"))
+
+  private[core] final case class Bbox(xmin: Double, ymin: Double, xmax: Double, ymax: Double)
+  private[core] final case class Geometry(bbox: Bbox, geometry: Array[Byte])
+
+  /** Items-view rows with their catalog `bbox` and `geometry` in `crs`:
+    * the [[rowGeom]] shape forward-projected from CRS84, its envelope as
+    * the covering bbox.
+    */
+  private def withGeometry(items: DataFrame, crs: Crs): DataFrame = {
+    val geometry = udf { (idNum: Long, userId: Long, lon: Double, lat: Double) =>
+      val wkb = fromCrs84(crs, Wkb.encode(rowGeom(idNum, userId, lon, lat)._1))
+      val env = Wkb.envelope(wkb)
+      Geometry(Bbox(env(0), env(1), env(2), env(3)), wkb)
+    }
+    items.withColumn("g", geometry(col("id_num"), col("user_id"), col("lon"), col("lat")))
+      .withColumn("bbox", col("g.bbox")).withColumn("geometry", col("g.geometry"))
+  }
+
+  /** Per-row geometry: even id_num → Point, odd → footprint Polygon, with
+    * its envelope (CRS84).
     */
   private[graft] def rowGeom(idNum: Long, userId: Long, lon: Double, lat: Double)
       : (Shape, (Double, Double, Double, Double)) =
@@ -311,140 +400,95 @@ object GeoParquet {
         (lon - hw, lat - hh, lon + hw, lat + hh))
     }
 
-  /** One items-view row → one parquet-mr Group of [[schema]]. Runs on
-    * EXECUTORS (the task-side body of [[export]]).
+  // ------------------------------------------------------------- fixtures
+
+  /** Stage the GeoParquet fixture for a fixture dir: every item, CRS84.
+    * Geometry: even id_num → WKB Point(lon, lat); odd → WKB Polygon of
+    * the deterministic footprint box (exercising both decode branches).
+    * Returns the file path.
     */
-  private def rowGroup(factory: SimpleGroupFactory, r: org.apache.spark.sql.Row)
-      : org.apache.parquet.example.data.Group = {
-    val (shape, (x0, y0, x1, y1)) =
-      rowGeom(r.getLong(1), r.getLong(7), r.getDouble(8), r.getDouble(9))
-    itemGroup(factory, r, Wkb.encode(shape), Array(x0, y0, x1, y1))
+  def stage(spark: SparkSession, dir: String): String = synchronized {
+    stageFile(spark, dir, "geoparquet", "items.parquet", lit(true), Crs.Crs84)
   }
 
-  /** The items-view columns of `r` (id … lat, in the writers' select
-    * order) plus a WKB geometry and its envelope → one Group of [[schema]].
+  /** Stage a PROJECTED GeoParquet file: the fixture items inside `zone`'s
+    * 6° band, every geometry vertex FORWARD-projected to UTM metres
+    * ([[graft.spatial.Utm.forward]]), covering bbox in metres, PROJJSON
+    * EPSG:326zz — the file a real satellite archive hands the engine.
     */
-  private def itemGroup(factory: SimpleGroupFactory, r: org.apache.spark.sql.Row,
-                        wkb: Array[Byte], env: Array[Double])
-      : org.apache.parquet.example.data.Group = {
-    val g = factory.newGroup()
-    g.append("id", r.getString(0))
-    g.append("id_num", r.getLong(1))
-    g.append("collection", r.getString(2))
-    val dt = micros(r.getAs[java.sql.Timestamp](3))
-    if (dt != null) g.append("datetime", dt.longValue())
-    val sd = micros(r.getAs[java.sql.Timestamp](4))
-    if (sd != null) g.append("start_datetime", sd.longValue())
-    val ed = micros(r.getAs[java.sql.Timestamp](5))
-    if (ed != null) g.append("end_datetime", ed.longValue())
-    g.append("value", r.getDouble(6))
-    g.append("user_id", r.getLong(7))
-    g.append("lon", r.getDouble(8))
-    g.append("lat", r.getDouble(9))
-    val bb = g.addGroup("bbox")
-    bb.append("xmin", env(0)); bb.append("ymin", env(1))
-    bb.append("xmax", env(2)); bb.append("ymax", env(3))
-    g.append("geometry", org.apache.parquet.io.api.Binary.fromConstantByteArray(wkb))
-    g
+  def stageUtm(spark: SparkSession, dir: String, zone: Int = 33,
+               south: Boolean = false): String = synchronized {
+    val cm = graft.spatial.Utm.centralMeridian(zone)
+    val hemi = if (south) "s" else ""
+    // a SOUTH (327zz) file additionally windows to southern latitudes —
+    // the false-northing branch a real S-hemisphere archive exercises
+    stageFile(spark, dir, s"geoparquet_utm$zone$hemi", s"items_utm$zone$hemi.parquet",
+      col("lon") >= cm - 3.0 && col("lon") < cm + 3.0 &&
+        (if (south) col("lat") < -1.5 else lit(true)),
+      Crs.Utm(zone, south))
   }
+
+  /** Stage an EPSG:3857 GeoParquet file: every fixture item whose
+    * geometry fits the projection's ±85.05° validity band (a web-map
+    * pipeline clips its sources the same way; polygon half-height is
+    * ≤ 1.1°, so |lat| ≤ 83.9 keeps every vertex in band), geometry
+    * vertices forward-projected to Pseudo-Mercator metres
+    * ([[graft.spatial.Mercator3857.forward]]), covering bbox in metres,
+    * PROJJSON EPSG:3857 — the file every web-map tile pipeline hands
+    * the engine.
+    */
+  def stageMercator(spark: SparkSession, dir: String): String = synchronized {
+    stageFile(spark, dir, "geoparquet_3857", "items_3857.parquet", abs(col("lat")) <= 83.9,
+      Crs.PseudoMercator)
+  }
+
+  /** Stage a single-file GeoParquet fixture `file` under the [[Staged]]
+    * dir `name`: the items matching `keep`, in id_num order, geometry in
+    * `crs`, written by one task through the one writer — so the file
+    * carries the `graft` sidecar like every catalog file (its collection
+    * is omitted: the file mixes collections). Returns the file path.
+    */
+  // v2: the fixture gains the `graft` sidecar
+  private def stageFile(spark: SparkSession, dir: String, name: String, file: String,
+                        keep: Column, crs: Crs): String =
+    Staged(name, 2, dir, "events") { p =>
+      write(catalogRows(withGeometry(Tables.items(spark, dir).where(keep), crs), lit(0L))
+        .repartition(1).sortWithinPartitions(col("id_num")),
+        p, crs, (_, _) => file)
+      require(new java.io.File(s"$p/$file").exists(), s"no fixture items for $file")
+    } + s"/$file"
+
+  // ------------------------------------------------------------- catalog
+  // The WRITE side of the reference's data plane: its corpus IS one
+  // GeoParquet file per collection (database_logic.py:831-853 plans a
+  // per-collection scan; download_geoparquet.py materializes the files).
+  // Every catalog writer shuffles once on (collection, shard) and streams
+  // each task's sorted runs through the one writer ([[writeCatalog]]);
+  // `shards` splits a hot collection across files (the 100 TB valve: one
+  // collection never pins one task), and every shard file is
+  // independently valid GeoParquet with its own exact footer bbox.
 
   /** Write the per-collection GeoParquet catalog (the reference's layout)
-    * for a fixture dir, distributed: shuffle on (collection, shard), one
-    * file per (collection, shard) written by whichever task owns the run
-    * — single pass, footer bbox folded during the write. Staged per
-    * (fixture, tag, shards); `tag` distinguishes shard strategies ("s" =
-    * id-hash, "z" = spatial).
+    * for a fixture dir: one file `<collection>-<shard>.parquet` per
+    * (collection, shard). Staged per (fixture, tag, shards); `tag`
+    * distinguishes shard strategies ("s" = id-hash, "z" = spatial).
     */
   // layout v4: footers carry the `graft` sidecar (collection + datetime
   // extremes + detected id_num sortedness); v5 (r12): the sidecar also
   // carries per-file id_num extremes
   def export(spark: SparkSession, dir: String, shards: Int = 1,
-             shardCol: Option[org.apache.spark.sql.Column] = None,
+             shardCol: Option[Column] = None,
              tag: String = "s"): String = synchronized {
     require(shards >= 1, s"shards must be >= 1, got $shards")
     Staged(s"geoparquet_export_$tag$shards", 5, dir, "events") { out =>
-      new java.io.File(out).mkdirs()
       // default shard = id-hash (uniform); a spatial caller passes a
       // z-bucket column instead so each file's footprint (⇒ footer bbox)
       // stays TIGHT and the geocatalog scan prunes files on it
       val sc = shardCol.getOrElse(pmod(col("id_num"), lit(shards.toLong)))
-      Tables.items(spark, dir)
-        .select(col("id"), col("id_num"), col("collection"), col("datetime"),
-          col("start_datetime"), col("end_datetime"), col("value"),
-          col("user_id"), col("lon"), col("lat"),
-          sc.cast("long").as("shard"))
-        .repartition(col("collection"), col("shard"))
-        .sortWithinPartitions(col("collection"), col("shard"), col("id_num"))
-        .foreachPartition(writeShardRun(out, 10, rowGroup) _)
+      writeCatalog(catalogRows(withGeometry(Tables.items(spark, dir), Crs.Crs84), sc),
+        out, (c, sh) => s"$c-$sh.parquet")
     }
   }
-
-  /** Task body shared by [[export]] and [[compact]]: stream a sorted run
-    * of rows into one parquet-mr writer per (collection, shard) key,
-    * rolling the writer on key change. `shardIdx` is the shard column's
-    * position; `build` renders one row into a Group of [[schema]].
-    */
-  private def writeShardRun(outPath: String, shardIdx: Int,
-      build: (SimpleGroupFactory, org.apache.spark.sql.Row) => org.apache.parquet.example.data.Group,
-      nameOf: (String, Long) => String = (c, sh) => s"$c-$sh.parquet")
-      (it: Iterator[org.apache.spark.sql.Row]): Unit = {
-    val factory = new SimpleGroupFactory(schema)
-    var cur: (String, Long) = null
-    var writer: org.apache.parquet.hadoop.ParquetWriter[org.apache.parquet.example.data.Group] = null
-    var tmpName: String = null
-    var finalName: String = null
-    // Files land at `<name>.parquet.tmp` and ATOMICALLY rename on close:
-    // a concurrent reader (the D41 subscription lists the directory and
-    // opens footers between micro-batches) can never observe a
-    // half-written footer — `.tmp` names don't match the `.parquet`
-    // listing filters, and the rename is all-or-nothing. REPLACE_EXISTING
-    // keeps the retry idempotence (a replayed batch re-renames over its
-    // own completed file).
-    def closeAndPublish(): Unit = if (writer != null) {
-      writer.close()
-      writer = null
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmpName), java.nio.file.Paths.get(finalName),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    try {
-      it.foreach { r =>
-        val key = (r.getString(2), r.getLong(shardIdx))
-        if (key != cur) {
-          closeAndPublish()
-          finalName = s"$outPath/${nameOf(key._1, key._2)}"
-          tmpName = finalName + ".tmp"
-          writer = new GeoWriterBuilder(new Path(tmpName), schema)
-            .withCompressionCodec(CompressionCodecName.SNAPPY)
-            // OVERWRITE the tmp file: a retried streaming micro-batch
-            // (appendBatch names files by batchId) rewrites its own tmp
-            // after a mid-write crash instead of failing
-            .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
-            .build()
-          cur = key
-        }
-        writer.write(build(factory, r))
-      }
-      closeAndPublish()
-    } finally if (writer != null) writer.close() // error path: leave .tmp
-  }
-
-  /** One parquet-mr writer for a catalog file (the DSv2 SupportsWrite
-    * path) — the SAME schema and footer-folding WriteSupport as every
-    * other catalog writer, so `df.write.format("geocatalog")` files are
-    * indistinguishable from exported ones (exact `geo` bbox + `graft`
-    * sidecar at close).
-    */
-  def newCatalogWriter(tmpPath: String)
-      : org.apache.parquet.hadoop.ParquetWriter[org.apache.parquet.example.data.Group] =
-    new GeoWriterBuilder(new Path(tmpPath), schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
-      .build()
-
-  /** Group factory over the catalog schema (for [[newCatalogWriter]]). */
-  def catalogGroupFactory: SimpleGroupFactory = new SimpleGroupFactory(schema)
 
   /** Projection of the catalog schema to the named top-level fields, in
     * schema order (`parquet.read.schema` form) — the DSv2 reader hands
@@ -461,42 +505,33 @@ object GeoParquet {
 
   /** STREAMING catalog ingest (D40): land ONE micro-batch of items-shaped
     * rows as per-collection GeoParquet files
-    * `<collection>-<batchId>.parquet` through the SAME footer-folding
-    * writers as [[export]] — every batch file is independently valid
-    * GeoParquet 1.1 with an exact footer bbox the moment it closes, so
-    * the catalog is queryable (and footer-prunable) mid-stream; [[compact]]
-    * later merges the accumulated small batch files into canonical shards
-    * (A86's op — the batch/stream pair every file-backed store runs).
-    * Batch-id file naming + OVERWRITE writers make foreachBatch retries
-    * idempotent (a replayed batch rewrites its own files).
+    * `<collection>-<batchId>.parquet` through the one writer — every
+    * batch file is independently valid GeoParquet 1.1 with an exact
+    * footer bbox the moment it closes, so the catalog is queryable (and
+    * footer-prunable) mid-stream; [[compact]] later merges the
+    * accumulated small batch files into canonical shards (A86's op — the
+    * batch/stream pair every file-backed store runs). Batch-id file
+    * naming + OVERWRITE writers make foreachBatch retries idempotent (a
+    * replayed batch rewrites its own files).
     */
-  def appendBatch(batch: DataFrame, outDir: String, batchId: Long): Unit = {
-    new java.io.File(outDir).mkdirs()
-    val outPath = outDir
-    batch
-      .select(col("id"), col("id_num"), col("collection"), col("datetime"),
-        col("start_datetime"), col("end_datetime"), col("value"),
-        col("user_id"), col("lon"), col("lat"),
-        lit(batchId).cast("long").as("shard"))
-      .repartition(col("collection"))
-      .sortWithinPartitions(col("collection"), col("id_num"))
-      .foreachPartition(writeShardRun(outPath, 10, rowGroup) _)
-  }
+  def appendBatch(batch: DataFrame, outDir: String, batchId: Long): Unit =
+    writeCatalog(catalogRows(withGeometry(batch, Crs.Crs84), lit(batchId)),
+      outDir, (c, b) => s"$c-$b.parquet")
 
   /** STREAMING self-maintenance (D42): the foreachBatch companion of
     * [[appendBatch]] — after batch `gen` lands, any collection whose
     * small-file count (batch files + older generation files) exceeds
     * `maxSmallFiles` collapses them into ONE generation file
-    * `<collection>-g<gen>.parquet` through the same footer-folding
-    * writer, id_num-sorted so the merged file advertises its order for
-    * the keyset TopN path. The ingest stream self-maintains: file count
-    * per collection stays ≤ maxSmallFiles + 1 at every batch boundary
-    * instead of growing with the stream's lifetime.
+    * `<collection>-g<gen>.parquet` through the one writer, id_num-sorted
+    * so the merged file advertises its order for the keyset TopN path.
+    * The ingest stream self-maintains: file count per collection stays
+    * ≤ maxSmallFiles + 1 at every batch boundary instead of growing with
+    * the stream's lifetime.
     *
     * Crash safety (single writer — the owning foreachBatch):
-    *  - the merged file lands tmp+atomic-rename, THEN the inputs
-    *    delete: the directory never has a state with rows MISSING. A
-    *    reader that lists AND opens inside the rename→delete window can
+    *  - the merged file is published (tmp + atomic rename), THEN the
+    *    inputs delete: the directory never has a state with rows MISSING.
+    *    A reader that lists AND opens inside the rename→delete window can
     *    see a merged row twice; a reader that plans against a listing
     *    and opens later can hit a vanished input (the standard
     *    in-place-compaction caveat of every non-MVCC file store —
@@ -566,60 +601,28 @@ object GeoParquet {
     val toMerge = smallFiles().filter(_._2.size > maxSmallFiles)
     if (toMerge.isEmpty) return Seq.empty
     val paths = toMerge.values.flatten.map(_._1.getAbsolutePath).toSeq
-    val outPath = outDir
-    spark.read.parquet(paths: _*)
-      .select(col("id"), col("id_num"), col("collection"),
-        col("datetime").cast("timestamp").as("datetime"),
-        col("start_datetime").cast("timestamp").as("start_datetime"),
-        col("end_datetime").cast("timestamp").as("end_datetime"),
-        col("value"), col("user_id"), col("lon"), col("lat"),
-        col("bbox"), col("geometry"),
-        lit(gen).cast("long").as("shard"))
-      .repartition(col("collection"))
-      .sortWithinPartitions(col("collection"), col("id_num"))
-      .foreachPartition(
-        writeShardRun(outPath, 12, passGroup, (c, g) => s"$c-g$g.parquet") _)
+    writeCatalog(catalogRows(spark.read.parquet(paths: _*), lit(gen)),
+      outDir, (c, g) => s"$c-g$g.parquet")
     // renames are done; now the inputs go
     toMerge.values.flatten.foreach(_._1.delete())
     toMerge.keys.map(c => s"$outDir/$c-g$gen.parquet").toSeq
   }
 
-  /** One CATALOG row (as read back from exported files — geometry and
-    * bbox pass through untouched) → one Group. The compaction builder:
-    * no formula re-derivation, data plane only.
-    */
-  private def passGroup(factory: SimpleGroupFactory, r: org.apache.spark.sql.Row)
-      : org.apache.parquet.example.data.Group = {
-    val b = r.getStruct(10)
-    itemGroup(factory, r, r.getAs[Array[Byte]](11),
-      Array(b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3)))
-  }
-
   /** Catalog COMPACTION (the 100 TB maintenance op — many small shard
     * files merged into few): reads the CATALOG FILES (the source view is
-    * never consulted — pure data plane), re-shards on the caller's
-    * column, re-sorts, and rewrites through the same footer-folding
-    * writers, so every output file's `geo` bbox is exact by
-    * construction. Gated with the SOURCE catalog as the oracle side: a
+    * never consulted — pure data plane, geometry and bbox pass through
+    * untouched), re-shards on the caller's column, re-sorts, and rewrites
+    * through the one writer, so every output file's `geo` bbox is exact
+    * by construction. Gated with the SOURCE catalog as the oracle side: a
     * compaction that drops, duplicates, or mutates a row is a hash
     * break.
     */
   def compact(spark: SparkSession, inDir: String, dir: String, toShards: Int,
-              shardCol: org.apache.spark.sql.Column,
+              shardCol: Column,
               tag: String = "c"): String = synchronized {
     Staged(s"geoparquet_export_$tag$toShards", 5, dir, "events") { out =>
-      new java.io.File(out).mkdirs()
-      spark.read.parquet(inDir)
-        .select(col("id"), col("id_num"), col("collection"),
-          col("datetime").cast("timestamp").as("datetime"),
-          col("start_datetime").cast("timestamp").as("start_datetime"),
-          col("end_datetime").cast("timestamp").as("end_datetime"),
-          col("value"), col("user_id"), col("lon"), col("lat"),
-          col("bbox"), col("geometry"),
-          shardCol.cast("long").as("shard"))
-        .repartition(col("collection"), col("shard"))
-        .sortWithinPartitions(col("collection"), col("shard"), col("id_num"))
-        .foreachPartition(writeShardRun(out, 12, passGroup) _)
+      writeCatalog(catalogRows(spark.read.parquet(inDir), shardCol),
+        out, (c, sh) => s"$c-$sh.parquet")
     }
   }
 
@@ -768,9 +771,9 @@ object GeoParquet {
       s"unsupported GeoParquet encoding '${meta.encoding}' (only WKB)")
     val raw = col(meta.primaryColumn)
     val geom = ingestCrs(meta) match {
-      case IngestCrs.Crs84             => raw
-      case IngestCrs.Utm(zone, south)  => graft.spatial.UtmWkbToCrs84(raw, zone, south)
-      case IngestCrs.PseudoMercator    => graft.spatial.MercatorWkbToCrs84(raw)
+      case Crs.Crs84            => raw
+      case Crs.Utm(zone, south) => graft.spatial.UtmWkbToCrs84(raw, zone, south)
+      case Crs.PseudoMercator   => graft.spatial.MercatorWkbToCrs84(raw)
     }
     def coveringCol(field: String) =
       col(meta.covering(field).mkString("."))
@@ -787,113 +790,21 @@ object GeoParquet {
     (df, meta)
   }
 
-  /** The ingestable CRS set (A94 + r12 #3857): everything else refuses
-    * typed, never a silent planar misread.
-    */
-  private[graft] sealed trait IngestCrs
-  private[graft] object IngestCrs {
-    case object Crs84 extends IngestCrs
-    final case class Utm(zone: Int, south: Boolean) extends IngestCrs
-    case object PseudoMercator extends IngestCrs
-  }
-
   /** CRS dispatch for [[ingestFile]]: CRS84 passes through, UTM WGS84
     * and EPSG:3857 re-project at ingest, anything else a typed refusal
     * naming the supported set.
     */
-  private[graft] def ingestCrs(meta: GeoMeta): IngestCrs =
+  private[graft] def ingestCrs(meta: GeoMeta): Crs =
     (meta.crsAuthority, meta.crsCode) match {
-      case ("OGC", "CRS84") => IngestCrs.Crs84
-      case ("EPSG", "3857") => IngestCrs.PseudoMercator
+      case ("OGC", "CRS84") => Crs.Crs84
+      case ("EPSG", "3857") => Crs.PseudoMercator
       case ("EPSG", code) if code.forall(_.isDigit) && code.nonEmpty &&
           code.length <= 9 && graft.spatial.Utm.parseEpsg(code.toInt).isDefined =>
         val (zone, south) = graft.spatial.Utm.parseEpsg(code.toInt).get
-        IngestCrs.Utm(zone, south)
+        Crs.Utm(zone, south)
       case (auth, code) => throw new IllegalArgumentException(
         s"unsupported GeoParquet CRS $auth:$code — supported: OGC:CRS84 " +
           "(native), EPSG:326xx/327xx (UTM WGS84) and EPSG:3857 " +
           "(Pseudo-Mercator), both re-projected at ingest")
     }
-
-  // ---------------------- A94: PROJECTED (UTM) GeoParquet fixture
-  /** PROJJSON for a projected UTM WGS84 CRS (EPSG:326zz north / 327zz
-    * south); bbox in the file's own metres.
-    */
-  private def geoJsonUtm(bbox: (Double, Double, Double, Double),
-                         zone: Int, south: Boolean): String =
-    geoJsonProjected(bbox, s"WGS 84 / UTM zone $zone${if (south) "S" else "N"}",
-      graft.spatial.Utm.epsgOf(zone, south))
-
-  /** PROJJSON footer for any projected EPSG CRS; bbox in the file's own
-    * metres.
-    */
-  private def geoJsonProjected(bbox: (Double, Double, Double, Double),
-                               name: String, epsg: Int): String = {
-    val root = mapper.createObjectNode()
-    root.put("version", "1.1.0")
-    root.put("primary_column", "geometry")
-    val cols = root.putObject("columns")
-    val g = cols.putObject("geometry")
-    g.put("encoding", "WKB")
-    val types = g.putArray("geometry_types")
-    types.add("Point"); types.add("Polygon")
-    val crs = g.putObject("crs")
-    crs.put("type", "ProjectedCRS")
-    crs.put("name", name)
-    val crsId = crs.putObject("id")
-    crsId.put("authority", "EPSG")
-    crsId.put("code", epsg.toString)
-    val bb = g.putArray("bbox")
-    bb.add(bbox._1); bb.add(bbox._2); bb.add(bbox._3); bb.add(bbox._4)
-    val covering = g.putObject("covering")
-    val cbb = covering.putObject("bbox")
-    Seq("xmin", "ymin", "xmax", "ymax").foreach { f =>
-      val arr = cbb.putArray(f); arr.add("bbox"); arr.add(f)
-    }
-    mapper.writeValueAsString(root)
-  }
-
-  /** Stage a PROJECTED GeoParquet file: the fixture items inside `zone`'s
-    * 6° band, every geometry vertex FORWARD-projected to UTM metres
-    * ([[graft.spatial.Utm.forward]]), covering bbox in metres, PROJJSON
-    * EPSG:326zz — the file a real satellite archive hands the engine.
-    * Fixture-build time, staged like [[stage]].
-    */
-  def stageUtm(spark: SparkSession, dir: String, zone: Int = 33,
-               south: Boolean = false): String = synchronized {
-    val cm = graft.spatial.Utm.centralMeridian(zone)
-    val hemi = if (south) "s" else ""
-    // a SOUTH (327zz) file additionally windows to southern latitudes —
-    // the false-northing branch a real S-hemisphere archive exercises
-    stageFile(spark, dir, s"geoparquet_utm$zone$hemi", s"items_utm$zone$hemi.parquet",
-      col("lon") >= cm - 3.0 && col("lon") < cm + 3.0 &&
-        (if (south) col("lat") < -1.5 else lit(true)),
-      projected(graft.spatial.Utm.wkbFromCrs84(_, zone, south)),
-      geoJsonUtm(_, zone, south))
-  }
-
-  /** A row's CRS84 geometry forward-projected by `forward`, with the
-    * envelope in the projected metres.
-    */
-  private def projected(forward: Array[Byte] => Array[Byte])(r: org.apache.spark.sql.Row)
-      : (Array[Byte], Array[Double]) = {
-    val (shape, _) = rowGeom(r.getLong(1), r.getLong(7), r.getDouble(8), r.getDouble(9))
-    val wkb = forward(Wkb.encode(shape))
-    (wkb, Wkb.envelope(wkb))
-  }
-
-  /** Stage an EPSG:3857 GeoParquet file: every fixture item whose
-    * geometry fits the projection's ±85.05° validity band (a web-map
-    * pipeline clips its sources the same way; polygon half-height is
-    * ≤ 1.1°, so |lat| ≤ 83.9 keeps every vertex in band), geometry
-    * vertices forward-projected to Pseudo-Mercator metres
-    * ([[graft.spatial.Mercator3857.forward]]), covering bbox in metres,
-    * PROJJSON EPSG:3857 — the file every web-map tile pipeline hands
-    * the engine. Fixture-build time, staged like [[stage]].
-    */
-  def stageMercator(spark: SparkSession, dir: String): String = synchronized {
-    stageFile(spark, dir, "geoparquet_3857", "items_3857.parquet", abs(col("lat")) <= 83.9,
-      projected(graft.spatial.Mercator3857.wkbFromCrs84),
-      geoJsonProjected(_, "WGS 84 / Pseudo-Mercator", 3857))
-  }
 }

@@ -166,9 +166,12 @@ object Cql {
     nameVariants(name).find(schema.contains).getOrElse(nameVariants(name).last)
 
   /** Rewrite every property reference in the AST against `schema`. */
-  def resolve(e: Cql, schema: Seq[String]): Cql = {
+  def resolve(e: Cql, schema: Seq[String]): Cql = mapProps(e)(resolveProp(_, schema))
+
+  /** `e` with every property reference `n` renamed to `f(n)`. */
+  def mapProps(e: Cql)(f: String => String): Cql = {
     def ro(o: Operand): Operand = o match {
-      case Prop(n)  => Prop(resolveProp(n, schema))
+      case Prop(n)  => Prop(f(n))
       case CaseI(x) => CaseI(ro(x))
       case Accenti(x) => Accenti(ro(x))
       case Arith(op, l, r) => Arith(op, ro(l), ro(r))
@@ -176,9 +179,9 @@ object Cql {
       case other    => other
     }
     e match {
-      case And(xs) => And(xs.map(resolve(_, schema)))
-      case Or(xs)  => Or(xs.map(resolve(_, schema)))
-      case Not(x)  => Not(resolve(x, schema))
+      case And(xs) => And(xs.map(mapProps(_)(f)))
+      case Or(xs)  => Or(xs.map(mapProps(_)(f)))
+      case Not(x)  => Not(mapProps(x)(f))
       case Cmp(op, l, r)      => Cmp(op, ro(l), ro(r))
       case Like(l, p, ci)     => Like(ro(l), p, ci)
       case In(l, vs)          => In(ro(l), vs.map(ro))

@@ -201,20 +201,29 @@ object StacApi {
       df = df.where(Geo.pointRelShapeCol(col("lon"), col("lat"), shape, Geo.RelIntersects))
     }
     p.datetime.foreach { dt => df = df.where(datetimePredicate(dt)) }
-    // CQL2 property refs resolve properties.x / properties__x / x against
-    // the live schema (database_logic.py:640-644)
-    p.filter.foreach { json =>
-      df = df.where(Cql.resolve(Cql.parseJson(json), df.columns.toSeq).toColumn)
-    }
-    p.filterAst.foreach { ast =>
-      df = df.where(Cql.resolve(ast, df.columns.toSeq).toColumn)
-    }
+    p.filter.foreach { json => df = df.where(predicate(df, Cql.parseJson(json))) }
+    p.filterAst.foreach { ast => df = df.where(predicate(df, ast)) }
     // query-extension clauses translate into the same AST / same resolver
     // as CQL2, so both filter languages compile one predicate surface
-    p.query.foreach { json =>
-      df = df.where(Cql.resolve(Cql.parseStacQuery(json), df.columns.toSeq).toColumn)
-    }
+    p.query.foreach { json => df = df.where(predicate(df, Cql.parseStacQuery(json))) }
     df
+  }
+
+  /** A filter AST as a predicate over `df`: property refs resolve
+    * properties.x / properties__x / x against the frame's columns
+    * (database_logic.py:640-644), and a property the frame lacks is an
+    * `IllegalArgumentException` naming it — OGC API – Features Part 3
+    * treats an unknown queryable as a client error, not a failed plan.
+    */
+  private def predicate(df: DataFrame, ast: Cql): Column = {
+    val cols = df.columns.toSeq
+    Cql.mapProps(ast) { name =>
+      val resolved = Cql.resolveProp(name, cols)
+      // a nested reference (`struct.field`) is known by its column
+      if (!cols.exists(_.equalsIgnoreCase(resolved.takeWhile(_ != '.'))))
+        throw new IllegalArgumentException(s"unknown property '$name': not a queryable of the items")
+      resolved
+    }.toColumn
   }
 
   /** Fields extension: include/exclude → a computed PLAN-level projection

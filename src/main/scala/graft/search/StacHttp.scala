@@ -215,7 +215,12 @@ object StacHttp {
       case e: TxnConflict => error(ex, 409, "ConflictError", e.getMessage)
       case e: TxnMissing => error(ex, 404, "NotFoundError", e.getMessage)
       case e: IllegalArgumentException => error(ex, 400, "BadRequest", e.getMessage)
-      case e: Exception => error(ex, 500, "InternalServerError", String.valueOf(e))
+      case e: Exception =>
+        // the cause goes to the operator, never to the client: Spark's
+        // messages carry error classes, SQLSTATEs, call sites and paths
+        System.err.println(s"[graft] ${ex.getRequestMethod} ${ex.getRequestURI} failed")
+        e.printStackTrace()
+        error(ex, 500, "InternalServerError", "internal server error")
     } finally ex.close()
 
   // ------------------------------------------------- request parsing

@@ -902,33 +902,48 @@ object StacSearch {
     */
   private val zLevel = 4 // 16x16 grid
 
-  private def interleave(ix: Int, iy: Int): Int =
-    (0 until zLevel).map(k => (((ix >> k) & 1) << (2 * k + 1)) | (((iy >> k) & 1) << (2 * k))).sum
+  /** The Morton code of grid cell (ix, iy) at `level`: x in the high bit
+    * of each interleaved pair, y in the low.
+    */
+  private def interleave(level: Int)(ix: Int, iy: Int): Int =
+    (0 until level).map(k => (((ix >> k) & 1) << (2 * k + 1)) | (((iy >> k) & 1) << (2 * k))).sum
+
+  /** The clamped grid-cell span (ix0, ix1, iy0, iy1) of a bbox on the
+    * `level` grid over lon [-180, 180] × lat [-90, 90].
+    */
+  private def cellSpan(level: Int, w: Double, s: Double, e: Double, n: Double)
+      : (Int, Int, Int, Int) = {
+    val size = 1 << level
+    def clamp(i: Int) = math.min(math.max(i, 0), size - 1)
+    (clamp(math.floor((w + 180.0) / 360.0 * size).toInt),
+      clamp(math.floor((e + 180.0) / 360.0 * size).toInt),
+      clamp(math.floor((s + 90.0) / 180.0 * size).toInt),
+      clamp(math.floor((n + 90.0) / 180.0 * size).toInt))
+  }
 
   /** Cells covering a bbox (computed at plan time, driver-side). */
   private[search] def zCover(w: Double, s: Double, e: Double, n: Double): Seq[Int] = {
-    def clamp(i: Int) = math.min(math.max(i, 0), (1 << zLevel) - 1)
-    val ix0 = clamp(math.floor((w + 180.0) / 360.0 * (1 << zLevel)).toInt)
-    val ix1 = clamp(math.floor((e + 180.0) / 360.0 * (1 << zLevel)).toInt)
-    val iy0 = clamp(math.floor((s + 90.0) / 180.0 * (1 << zLevel)).toInt)
-    val iy1 = clamp(math.floor((n + 90.0) / 180.0 * (1 << zLevel)).toInt)
-    for (ix <- ix0 to ix1; iy <- iy0 to iy1) yield interleave(ix, iy)
+    val (ix0, ix1, iy0, iy1) = cellSpan(zLevel, w, s, e, n)
+    for (ix <- ix0 to ix1; iy <- iy0 to iy1) yield interleave(zLevel)(ix, iy)
   }
 
   def a24ZcurveCells(s: SparkSession, d: String): DataFrame = {
     val cover = zCover(bbox._1, bbox._2, bbox._3, bbox._4)
     items(s, d)
-      .withColumn("zcell", expr(s"(${zCellBitsExpr})"))
+      .withColumn("zcell", expr(s"(${zCellExpr(zLevel)})"))
       .where(col("zcell").isin(cover: _*)) // at scale: partition prune
       .where(Geo.bboxContains(col("lon"), col("lat"), bbox._1, bbox._2, bbox._3, bbox._4))
       .select(projCols: _*).orderBy(col("id"))
   }
 
-  /** Flat (non-subquery) form of [[zCellExpr]] for Catalyst. */
-  private def zCellBitsExpr: String = {
-    val ix = s"CAST(least(greatest(floor((lon + 180.0) / 360.0 * ${1 << zLevel}.0), 0.0), ${(1 << zLevel) - 1}.0) AS INT)"
-    val iy = s"CAST(least(greatest(floor((lat + 90.0) / 180.0 * ${1 << zLevel}.0), 0.0), ${(1 << zLevel) - 1}.0) AS INT)"
-    (0 until zLevel).map(k =>
+  /** The Spark SQL form of [[interleave]] over the row's clamped
+    * (lon, lat) cell at `level`.
+    */
+  private def zCellExpr(level: Int): String = {
+    val size = 1 << level
+    val ix = s"CAST(least(greatest(floor((lon + 180.0) / 360.0 * $size.0), 0.0), ${size - 1}.0) AS INT)"
+    val iy = s"CAST(least(greatest(floor((lat + 90.0) / 180.0 * $size.0), 0.0), ${size - 1}.0) AS INT)"
+    (0 until level).map(k =>
       s"(shiftleft(shiftright($ix, $k) & 1, ${2 * k + 1}) + shiftleft(shiftright($iy, $k) & 1, ${2 * k}))")
       .mkString(" + ")
   }
@@ -947,21 +962,13 @@ object StacSearch {
     */
   private val zrLevel = 6
 
-  private def interleaveL(level: Int)(ix: Int, iy: Int): Int =
-    (0 until level).map(k => (((ix >> k) & 1) << (2 * k + 1)) | (((iy >> k) & 1) << (2 * k))).sum
-
   /** Merged contiguous z-ranges covering a bbox at `zrLevel` (reference
     * enumerate+merge form; [[zRangesSplit]] is the scale path).
     */
   def zRanges(w: Double, s: Double, e: Double, n: Double): Seq[(Int, Int)] = {
-    val size = 1 << zrLevel
-    def clamp(i: Int) = math.min(math.max(i, 0), size - 1)
-    val ix0 = clamp(math.floor((w + 180.0) / 360.0 * size).toInt)
-    val ix1 = clamp(math.floor((e + 180.0) / 360.0 * size).toInt)
-    val iy0 = clamp(math.floor((s + 90.0) / 180.0 * size).toInt)
-    val iy1 = clamp(math.floor((n + 90.0) / 180.0 * size).toInt)
+    val (ix0, ix1, iy0, iy1) = cellSpan(zrLevel, w, s, e, n)
     val cells = (for (ix <- ix0 to ix1; iy <- iy0 to iy1)
-      yield interleaveL(zrLevel)(ix, iy)).sorted
+      yield interleave(zrLevel)(ix, iy)).sorted
     // merge consecutive codes into ranges
     cells.foldLeft(List.empty[(Int, Int)]) {
       case ((a, b) :: rest, c) if c == b + 1 => (a, c) :: rest
@@ -969,19 +976,10 @@ object StacSearch {
     }.reverse
   }
 
-  private def zrCellExpr: String = {
-    val size = 1 << zrLevel
-    val ix = s"CAST(least(greatest(floor((lon + 180.0) / 360.0 * $size.0), 0.0), ${size - 1}.0) AS INT)"
-    val iy = s"CAST(least(greatest(floor((lat + 90.0) / 180.0 * $size.0), 0.0), ${size - 1}.0) AS INT)"
-    (0 until zrLevel).map(k =>
-      s"(shiftleft(shiftright($ix, $k) & 1, ${2 * k + 1}) + shiftleft(shiftright($iy, $k) & 1, ${2 * k}))")
-      .mkString(" + ")
-  }
-
   /** Level-6 Z-cell as a Column — the stored layout column for
     * [[graft.core.ItemsLayout.materializeZOrdered]].
     */
-  def zCellColumn: Column = expr(s"($zrCellExpr)")
+  def zCellColumn: Column = expr(s"(${zCellExpr(zrLevel)})")
 
   /** BIGMIN/LITMAX-style range derivation (Tropf–Herzog): recursive
     * quadtree descent emits a z-range per maximal fully-covered square and
@@ -992,11 +990,7 @@ object StacSearch {
     */
   def zRangesSplit(w: Double, s: Double, e: Double, n: Double): Seq[(Int, Int)] = {
     val size = 1 << zrLevel
-    def clamp(i: Int) = math.min(math.max(i, 0), size - 1)
-    val ix0 = clamp(math.floor((w + 180.0) / 360.0 * size).toInt)
-    val ix1 = clamp(math.floor((e + 180.0) / 360.0 * size).toInt)
-    val iy0 = clamp(math.floor((s + 90.0) / 180.0 * size).toInt)
-    val iy1 = clamp(math.floor((n + 90.0) / 180.0 * size).toInt)
+    val (ix0, ix1, iy0, iy1) = cellSpan(zrLevel, w, s, e, n)
     // square of side `sz` at cell (x0, y0) spans z-codes [z, z + sz²)
     def rec(x0: Int, y0: Int, sz: Int, z: Int): List[(Int, Int)] = {
       val x1 = x0 + sz - 1; val y1 = y0 + sz - 1
@@ -1032,7 +1026,7 @@ object StacSearch {
     val cover = zRangesSplit(bbox._1, bbox._2, bbox._3, bbox._4)
       .flatMap { case (a, b) => a to b }
     items(s, d)
-      .withColumn("zcell", expr(s"($zrCellExpr)"))
+      .withColumn("zcell", zCellColumn)
       .where(col("zcell").isin(cover: _*))
       .where(Geo.bboxContains(col("lon"), col("lat"), bbox._1, bbox._2, bbox._3, bbox._4))
       .select(projCols: _*).orderBy(col("id"))
@@ -2059,7 +2053,7 @@ object StacSearch {
     graft.core.GeoParquet.export(s, d, 8, Some(zShard(8)), tag = "z")
 
   /** Level-6 z space (4096 cells) in `zShards` equal buckets. */
-  private def zShard(zShards: Int): Column =
+  private[graft] def zShard(zShards: Int): Column =
     (zCellColumn.cast("long") * lit(zShards) / lit(4096)).cast("long")
 
   /** The time-sharded catalog: shard = day of month of the item's
@@ -2722,7 +2716,7 @@ object StacSearch {
       .orderBy(col("zcell"))
 
   /** DuckDB rendering of the level-6 Morton cell (same bit math as
-    * [[zrCellExpr]], `<<`/`>>`/`&` operator syntax).
+    * [[zCellExpr]], `<<`/`>>`/`&` operator syntax).
     */
   private def zrCellSqlDuck: String = {
     val size = 1 << zrLevel

@@ -107,16 +107,17 @@ private class GeoCatalogTable(path: String) extends Table
 
 // ===================== SupportsWrite: the catalog as a write TARGET ====
 // `df.write.format("geocatalog").mode(append|overwrite).save(dir)` (and
-// `writeTo` against a registered table) through the SAME footer-folding
-// parquet-mr writers as the export/compaction/streaming paths — every
-// committed file is independently valid GeoParquet 1.1 with an exact
-// `geo` bbox and the `graft` collection/datetime sidecar, so A85/A87/A89
-// pruning works on written catalogs unchanged. Tasks write one file per
-// collection seen (`<collection>-w<partition>-<job>.parquet`) at a
-// task-unique `.tmp` name; the driver commit renames atomically (and
-// clears the directory first under overwrite), aborts delete the tmps —
-// a failed or speculative attempt can never surface a half-written
-// footer to a concurrent reader.
+// `writeTo` against a registered table) through the one catalog file
+// writer the export/compaction/streaming paths use
+// (GeoParquet.CatalogFileWriter) — every committed file is independently
+// valid GeoParquet 1.1 with an exact `geo` bbox and the `graft`
+// collection/datetime sidecar, so A85/A87/A89 pruning works on written
+// catalogs unchanged. Tasks write one file per collection seen
+// (`<collection>-w<partition>-<job>.parquet`) at a task-unique `.tmp`
+// name; the driver commit publishes each one (GeoParquet.publish, after
+// clearing the directory under overwrite), aborts delete the tmps — a
+// failed or speculative attempt can never surface a half-written footer
+// to a concurrent reader.
 
 private class GeoCatalogWriteBuilder(path: String, schema: StructType,
                                      queryId: String)
@@ -171,12 +172,7 @@ private class GeoCatalogBatchWrite(path: String, truncate: Boolean,
     }
     messages.foreach {
       case GeoCatalogCommitMsg(pairs) =>
-        pairs.foreach { case (tmp, fin) =>
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(fin),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
+        pairs.foreach { case (tmp, fin) => GeoParquet.publish(tmp, fin) }
       case _ => ()
     }
   }
@@ -196,22 +192,20 @@ private class GeoCatalogWriterFactory(path: String, job: String)
     new GeoCatalogDataWriter(path, job, partitionId, taskId)
 }
 
-/** One task's writer: parquet-mr writer per collection seen (rolled into
-  * a map — catalog partitionings co-locate collections, so this is
-  * near-always one), rows rendered straight from InternalRow.
+/** One task's writer: one catalog file writer per collection seen
+  * (catalog partitionings co-locate collections, so this is near-always
+  * one), rows handed over as Spark gives them — the catalog schema is
+  * the writer's row shape.
   */
 private class GeoCatalogDataWriter(path: String, job: String,
                                    partitionId: Int, taskId: Long)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.Group
-
-  private val factory = GeoParquet.catalogGroupFactory
   private val open = scala.collection.mutable.LinkedHashMap.empty[
-    String, (org.apache.parquet.hadoop.ParquetWriter[Group], String, String)]
+    String, (GeoParquet.CatalogFileWriter, String)]
 
   override def write(row: InternalRow): Unit = {
     val coll = row.getUTF8String(2).toString
-    val (w, _, _) = open.getOrElseUpdate(coll, {
+    val (w, _) = open.getOrElseUpdate(coll, {
       // the collection value becomes part of a file NAME: refuse path
       // separators and control characters outright (typed, at the write
       // boundary) rather than writing outside the catalog directory
@@ -220,41 +214,17 @@ private class GeoCatalogDataWriter(path: String, job: String,
         s"collection '$coll' cannot name a catalog file " +
           "(empty, path separator, or control character)")
       val fin = s"$path/$coll-w$partitionId-$job.parquet"
-      val tmp = fin + s".tmp$taskId"
-      (GeoParquet.newCatalogWriter(tmp), tmp, fin)
+      (new GeoParquet.CatalogFileWriter(fin + s".tmp$taskId", GeoParquet.Crs.Crs84), fin)
     })
-    w.write(group(row))
+    w.write(row)
   }
 
-  private def group(r: InternalRow): Group = {
-    val g = factory.newGroup()
-    g.append("id", r.getUTF8String(0).toString)
-    g.append("id_num", r.getLong(1))
-    g.append("collection", r.getUTF8String(2).toString)
-    if (!r.isNullAt(3)) g.append("datetime", r.getLong(3))
-    if (!r.isNullAt(4)) g.append("start_datetime", r.getLong(4))
-    if (!r.isNullAt(5)) g.append("end_datetime", r.getLong(5))
-    g.append("value", r.getDouble(6))
-    g.append("user_id", r.getLong(7))
-    g.append("lon", r.getDouble(8))
-    g.append("lat", r.getDouble(9))
-    val b = r.getStruct(10, 4)
-    val bb = g.addGroup("bbox")
-    bb.append("xmin", b.getDouble(0)); bb.append("ymin", b.getDouble(1))
-    bb.append("xmax", b.getDouble(2)); bb.append("ymax", b.getDouble(3))
-    g.append("geometry",
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(r.getBinary(11)))
-    g
-  }
+  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage =
+    GeoCatalogCommitMsg(open.values.map { case (w, fin) => w.close(); (w.tmp, fin) }.toSeq)
 
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    val pairs = open.values.map { case (w, tmp, fin) => w.close(); (tmp, fin) }.toSeq
-    GeoCatalogCommitMsg(pairs)
-  }
-
-  override def abort(): Unit = open.values.foreach { case (w, tmp, _) =>
+  override def abort(): Unit = open.values.foreach { case (w, _) =>
     try w.close() catch { case _: Exception => () }
-    new java.io.File(tmp).delete()
+    new java.io.File(w.tmp).delete()
   }
 
   override def close(): Unit = ()
@@ -488,18 +458,12 @@ private class GeoCatalogScan(path: String, pushed: Array[Filter],
   override def filter(filters: Array[Filter]): Unit =
     runtimeCs = filters.flatMap(GeoCatalogScan.constraintOf)
 
+  // (file path, footer) of every file the plan reads, off ONE listing:
+  // statistics and the runtime filter read the footers kept here
   private lazy val (kept, total) = {
     val footers = GeoParquet.footerInfo(path).toSeq.sortBy(_._1)
     val cs = pushed.flatMap(GeoCatalogScan.constraintOf)
-    // pushed footer constraints AND the consumed keyset predicates
-    // against the sidecar's per-file id_num extremes (r12). Files
-    // without the extremes (older layouts) always survive: absent
-    // metadata can only DISABLE a prune, never lose a row.
-    val surviving = footers.filter { case (_, g) =>
-      cs.forall(_(g)) &&
-        rowPreds.forall(p => g.idRange.forall { case (lo, hi) =>
-          p.canMatchIn(lo, hi) })
-    }
+    val surviving = footers.filter { case (_, g) => GeoCatalogScan.admits(g, cs, rowPreds) }
     val ordered = GeoCatalogScan.orderPrune(surviving, rowPreds, topN, limit)
     // LIMIT-only cut: a bare `LIMIT k` (no order, no filters of any
     // kind — a pushed filter or consumed predicate means footer rows
@@ -516,9 +480,7 @@ private class GeoCatalogScan(path: String, pushed: Array[Filter],
           val need = cum < limit; cum += g.rows; need
         }
       }
-    val keep = limited
-      .map { case (name, g) => (s"$path/$name.parquet", g.sortedById) }
-    (keep, footers.size)
+    (limited.map { case (name, g) => (s"$path/$name.parquet", g) }, footers.size)
   }
 
   /** Post-prune statistics off the footers (record counts) and the
@@ -528,10 +490,7 @@ private class GeoCatalogScan(path: String, pushed: Array[Filter],
     * broadcasts.
     */
   override def estimateStatistics(): Statistics = {
-    val counts = GeoParquet.footerInfo(path)
-    val rows = kept.map { case (f, _) =>
-      counts.get(new java.io.File(f).getName.stripSuffix(".parquet"))
-        .map(_.rows).getOrElse(0L) }.sum
+    val rows = kept.map(_._2.rows).sum
     val bytes = kept.map { case (f, _) => new java.io.File(f).length() }.sum
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
@@ -560,17 +519,9 @@ private class GeoCatalogScan(path: String, pushed: Array[Filter],
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = org.apache.spark.sql.internal.SQLConf.get
     val openCost = conf.filesOpenCostInBytes
-    val live =
-      if (runtimeCs.isEmpty) kept
-      else {
-        val footers = GeoParquet.footerInfo(path)
-        kept.filter { case (f, _) =>
-          val stem = new java.io.File(f).getName.stripSuffix(".parquet")
-          footers.get(stem).forall(g => runtimeCs.forall(_(g)))
-        }
-      }
-    val sized = live.map { case (f, sorted) =>
-      (f, sorted, new java.io.File(f).length() + openCost) }
+    val live = kept.filter { case (_, g) => GeoCatalogScan.admits(g, runtimeCs, Array.empty) }
+    val sized = live.map { case (f, g) =>
+      (f, g.sortedById, new java.io.File(f).length() + openCost) }
     val minParts = math.max(1, org.apache.spark.sql.SparkSession.active
       .sparkContext.defaultParallelism)
     val target = math.max(openCost,
@@ -639,7 +590,7 @@ private class GeoCatalogMicroBatchStream(path: String, required: StructType,
         val footers = GeoParquet.footerInfo(path)
         fresh.filter { f =>
           footers.get(f.stripSuffix(".parquet"))
-            .forall(g => constraints.forall(_(g)))
+            .forall(GeoCatalogScan.admits(_, constraints, Array.empty))
         }
       }
     kept.map(f => GeoCatalogPartition(Seq(s"$path/$f" -> false))
@@ -772,6 +723,16 @@ private object GeoCatalogScan {
     }
     override def toString: String = s"id_num $op $v"
   }
+
+  /** Can file `g` hold a row that passes every footer constraint `cs`
+    * and every consumed id_num predicate? The sidecar's id_num extremes
+    * answer the predicates (r12); a file without them (an older layout)
+    * survives — absent metadata can only DISABLE a prune, never lose a
+    * row.
+    */
+  def admits(g: GeoFooter, cs: Array[GeoFooter => Boolean], preds: Array[IdNumPred]): Boolean =
+    cs.forall(_(g)) &&
+      preds.forall(p => g.idRange.forall { case (lo, hi) => p.canMatchIn(lo, hi) })
 
   /** Translate a filter into a consumed id_num predicate (None = leave
     * it residual).

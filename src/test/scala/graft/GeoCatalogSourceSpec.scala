@@ -19,11 +19,8 @@ class GeoCatalogSourceSpec extends AnyFunSuite {
 
   // the spatially-sharded catalog (A85's layout): z-bucket shards keep
   // each file's footer bbox tight so a bbox query CAN skip files
-  private lazy val cat: String = {
-    val shardCol = (StacSearch.zCellColumn.cast("long") * lit(8) / lit(4096))
-      .cast("long")
-    GeoParquet.export(s, sf, 8, Some(shardCol), tag = "z")
-  }
+  private lazy val cat: String =
+    GeoParquet.export(s, sf, 8, Some(StacSearch.zShard(8)), tag = "z")
 
   private def viaCatalog: DataFrame = s.read.format(fmt).load(cat)
   private def viaParquet: DataFrame = s.read.parquet(cat)

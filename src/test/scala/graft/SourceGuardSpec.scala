@@ -25,6 +25,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - A search's file set has one decider: the `geocatalog` scan's
   *    footer prune. No main source reads a hand-listed parquet file set,
   *    except catalog maintenance, which reads the files it compacts.
+  *  - GeoParquet has one catalog writer: a parquet-mr writer is built
+  *    only inside `GeoParquet.CatalogFileWriter`, and a file is made
+  *    visible only by `GeoParquet.publish` (staged state aside).
   */
 class SourceGuardSpec extends AnyFunSuite {
   private val forbidden = Seq("\"_SUCCESS\"", "\"_DONE\"", "java.io.tmpdir",
@@ -230,5 +233,30 @@ class SourceGuardSpec extends AnyFunSuite {
       if !(f.getPath.endsWith("core/GeoParquet.scala") && owner == "maintainBatch")
     } yield s"${f.getPath}:${n + 1}: in $owner: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("one catalog writer: one parquet-mr writer construction, one publish step") {
+    val files = sources(new File("src/main"))
+    val home = "core/GeoParquet.scala"
+    assert(files.exists(_.getPath.endsWith(home)), "not run from the repo root")
+    val build = """\bnew\s+(GeoWriterBuilder|ParquetWriter)\b|ParquetWriter\.builder\b|ExampleParquetWriter""".r
+    // the enclosing member: a def, val or class at an object's member indent
+    val enclosing = """^  (?:private(?:\[\w+\])? )?(?:final )?(?:def|val|class)\s+(\w+)""".r
+    def sites(token: scala.util.matching.Regex): Seq[(File, Int, String)] = for {
+      f <- files
+      ls = lines(f)
+      (line, n) <- ls.zipWithIndex if token.findFirstIn(line).isDefined
+      owner = ls.take(n + 1).reverseIterator.flatMap(enclosing.findFirstMatchIn(_))
+        .map(_.group(1)).nextOption().getOrElse("")
+    } yield (f, n + 1, owner)
+    def at(f: File, owner: String) = s"${f.getPath} in $owner"
+    val writers = sites(build)
+    assert(writers.map { case (f, _, o) => at(f, o) } ==
+      Seq(at(new File(s"src/main/scala/graft/$home"), "CatalogFileWriter")),
+      writers.map { case (f, n, o) => s"${f.getPath}:$n: in $o" }.mkString("\n"))
+    val moves = sites("""\bATOMIC_MOVE\b""".r).filterNot { case (f, _, o) =>
+      (f.getPath.endsWith(home) && o == "publish") || f.getPath.endsWith("core/Staged.scala")
+    }
+    assert(moves.isEmpty, moves.map { case (f, n, o) => s"${f.getPath}:$n: in $o" }.mkString("\n"))
   }
 }

@@ -505,6 +505,31 @@ class StacHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("an unknown filter or query property is a 400 BadRequest naming it") {
+    val json = """{"op":"=","args":[{"property":"nosuch"},1]}"""
+    Seq(get("/search?filter=" + URLEncoder.encode("nosuch = 1", UTF_8)),
+      get("/search?filter-lang=cql2-json&filter=" + URLEncoder.encode(json, UTF_8)),
+      post("/search", """{"query":{"nosuch":{"eq":1}}}""")).foreach { case (c, e) =>
+      assert(c == 400 && e.get("code").asText == "BadRequest", e)
+      assert(e.get("description").asText.contains("nosuch"), e)
+    }
+  }
+
+  test("a server-side failure is a 500 whose body names no Spark error, exception or path") {
+    val missing = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_no_fixture_${java.util.UUID.randomUUID()}").getPath
+    val srv = StacHttp.start(s, missing)
+    try {
+      val r = client.send(HttpRequest.newBuilder(URI.create(srv.base + "/search")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 500, r.body())
+      assert(mapper.readTree(r.body()).get("code").asText == "InternalServerError", r.body())
+      Seq("PATH_NOT_FOUND", "Exception", missing).foreach { leak =>
+        assert(!r.body().contains(leak), r.body())
+      }
+    } finally srv.stop()
+  }
+
   test("/collections/{id}/items runs ONE Spark job once the collection set " +
       "is filled; an unknown collection is a 404 with no job") {
     assert(get("/collections/view/items?limit=3")._1 == 200) // fills the set

@@ -889,9 +889,8 @@ class StreamDedupSpec extends AnyFunSuite {
     assert(got == want && got.nonEmpty)
     // compaction merges the small batch files into 2 z-shards: rows and
     // footer exactness both survive
-    val shard2 = (graft.search.StacSearch.zCellColumn.cast("long") * lit(2) / lit(4096))
-      .cast("long")
-    val compacted = graft.core.GeoParquet.compact(s, dir, sf, 2, shard2, tag = "d40")
+    val compacted = graft.core.GeoParquet.compact(s, dir, sf, 2,
+      graft.search.StacSearch.zShard(2), tag = "d40")
     assert(canon(s.read.parquet(compacted)) == got)
     graft.core.GeoParquet.footerBboxes(compacted).foreach { case (stem, b) =>
       val f = s.read.parquet(s"$compacted/$stem.parquet")

@@ -127,7 +127,7 @@ class UtmSpec extends AnyFunSuite {
     val (df, meta) = graft.core.GeoParquet.ingestFile(s, file)
     assert(meta.crsAuthority == "EPSG" && meta.crsCode == "32633")
     assert(graft.core.GeoParquet.ingestCrs(meta) ==
-      graft.core.GeoParquet.IngestCrs.Utm(33, false))
+      graft.core.GeoParquet.Crs.Utm(33, false))
     // every decoded envelope matches the CRS84 formulas the fixture was
     // authored from (forward ∘ inverse must land back on the source)
     val got = df.select(col("id"), col("gtype"),
@@ -157,7 +157,7 @@ class UtmSpec extends AnyFunSuite {
     // unsupported CRS is a typed refusal naming the supported set
     // 3857 is now a SUPPORTED re-projection (a96), not a refusal
     assert(graft.core.GeoParquet.ingestCrs(meta.copy(crsCode = "3857")) ==
-      graft.core.GeoParquet.IngestCrs.PseudoMercator)
+      graft.core.GeoParquet.Crs.PseudoMercator)
     val e = intercept[IllegalArgumentException] {
       graft.core.GeoParquet.ingestCrs(meta.copy(crsCode = "2154")) // Lambert-93
     }
